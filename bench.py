@@ -50,7 +50,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 FLOOR_SF_DIR = os.environ.get(
     "SPARK_GRAFT_FLOOR_SF_DIR", "/root/testdata/sf0.001"
 )
@@ -77,53 +76,59 @@ HEADLINE = [
 RATIO_EXCLUDE = {"dedup_minhash_lsh"}
 
 
-def run_spark(spark, queries, sf_dir, names, warmups=2, iters=5,
-              with_median=False):
-    """Best-of-N end-to-end times. Warm-ups run every plan at the SAME
-    sf so JVM/JIT codegen (C2 needs repeat executions), Python/Arrow
-    worker startup, and page cache don't land in the timed run —
-    steady-state is what a long-lived cluster sees. Best-of-N because
-    this VM shares a noisy host; the minimum is the engine's actual
-    cost (the standard defense against neighbor noise). With
-    ``with_median`` also returns the per-query MEDIAN of the same N
-    iterations (r13 verdict #8: ship the median next to the best so
-    run-selection concerns are answerable from one artifact).
+def run_spark(spark, queries, sf_dir, names, warmups=2, iters=5, eager=None):
+    """The one Spark timing loop: end-to-end noop-write times of
+    ``queries[name](spark, sf_dir)`` for each name, returned as
+    ``(best, median, runs)`` dicts keyed by name.
 
-    r14 measurement-honesty note: every persist in the package is now
-    registered with ranks.track_persisted, so the unpersist_all below
-    releases ALL plan-internal caches between iterations — previously
-    raw persists (tfidf counts, minhash shingles) survived and Spark's
-    plan-canonicalized cache lookup served them to iterations 2..N,
-    silently excluding those subtrees from the timing."""
+    Warm-ups run every plan at the SAME sf so JVM/JIT codegen (C2 needs
+    repeat executions), Python/Arrow worker startup, and page cache
+    don't land in the timed run — steady-state is what a long-lived
+    cluster sees. Iterations interleave across names (a,b,a,b,...), so
+    a noisy window on a shared host lands on every name alike
+    instead of on whichever ran during it. Best-of-N is the engine's
+    actual cost (the standard defense against neighbor noise); the
+    median of the same N ships beside it so run selection is
+    answerable from one artifact.
+
+    Names in ``eager`` (default: ``registry.eager_queries()``) run Spark
+    jobs while the DataFrame is CONSTRUCTED, so their timer starts
+    before construction; for lazy names construction (plan building,
+    ms) stays outside the window.
+
+    Every persist in the package is registered with
+    ranks.track_persisted, so the unpersist_all after each run releases
+    ALL plan-internal caches — otherwise Spark's plan-canonicalized
+    cache lookup would serve run 1's cached subtrees to runs 2..N and
+    silently exclude them from the timing."""
     import statistics
 
+    from wikipedia_data_pipeline_spark import registry
     from wikipedia_data_pipeline_spark.operators import ranks
+
+    if eager is None:
+        eager = registry.eager_queries()
+
+    def once(name):
+        t0 = time.perf_counter()
+        df = queries[name](spark, sf_dir)
+        if name not in eager:
+            t0 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        dt = time.perf_counter() - t0
+        ranks.unpersist_all()
+        return dt
 
     for _ in range(warmups):
         for name in names:
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            ranks.unpersist_all()
-    timings: dict[str, float] = {}
-    medians: dict[str, float] = {}
-    for name in names:
-        runs = []
-        for _ in range(iters):
-            df = queries[name](spark, sf_dir)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            # release plan-internal caches (ordered_scan/semantic_dedup
-            # persist per plan INSTANCE, and each iteration builds a
-            # fresh plan — without this the loop accumulates one cached
-            # relation per iteration for the session lifetime)
-            ranks.unpersist_all()
-        timings[name] = round(min(runs), 3)
-        medians[name] = round(statistics.median(runs), 3)
-    if with_median:
-        return timings, medians
-    return timings
+            once(name)
+    runs: dict[str, list[float]] = {name: [] for name in names}
+    for _ in range(iters):
+        for name in names:
+            runs[name].append(round(once(name), 3))
+    best = {name: min(r) for name, r in runs.items()}
+    median = {name: round(statistics.median(r), 3) for name, r in runs.items()}
+    return best, median, runs
 
 
 def run_duckdb(oracles, sf_dir, names, warmups=1, iters=5):
@@ -186,31 +191,12 @@ def _ratio(spark_t, duck_t, names):
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from wikipedia_data_pipeline_spark.session import get_spark
 
-    # Same engine configs as session.get_spark: the bench must measure
-    # the plans the engine actually ships (notably the 64 MB broadcast
-    # threshold — the default 10 MB would silently shuffle-join mid-size
-    # dims at sf>=0.1 and bench a plan no user of the engine would run).
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("wikipedia-data-pipeline-spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # single-file testdata: 4 MB splits keep scans as wide as the
-        # cores (cf. session.get_spark — same knob, same rationale)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("WDP_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    # The engine's own session (session.get_spark): the bench measures
+    # the configs the engine ships — 4 MB splits, the 64 MB broadcast
+    # threshold, Arrow — not a look-alike copy that drifts from them.
+    spark = get_spark("wikipedia-data-pipeline-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     from wikipedia_data_pipeline_spark import registry
@@ -223,9 +209,7 @@ def main() -> None:
 
     out: dict = {"metric": "headline_queries_total", "unit": "sec"}
     ticks0 = _cpu_ticks()
-    timings, medians = run_spark(
-        spark, queries, SF_DIR, HEADLINE, with_median=True
-    )
+    timings, medians, _ = run_spark(spark, queries, SF_DIR, HEADLINE)
     out["queries"] = timings
     out["value"] = round(sum(timings.values()), 3)
     # additions-only fields (r13 verdict #8): median of the same 5
@@ -246,7 +230,7 @@ def main() -> None:
         # pure fixed overhead (scheduling, codegen, parse) in each
         # engine; subtracting each engine's own floor isolates the
         # data-dependent plan time the 2x bar is about.
-        floor_s = run_spark(
+        floor_s, _, _ = run_spark(
             spark, queries, FLOOR_SF_DIR, twin_names, warmups=1, iters=3
         )
         floor_d = run_duckdb(oracles, FLOOR_SF_DIR, twin_names, iters=3)
@@ -264,7 +248,7 @@ def main() -> None:
                          "benchdata", "sf1r"),
             10,
         )
-        sc_spark = run_spark(
+        sc_spark, _, _ = run_spark(
             spark, queries, scaled_dir, HEADLINE, warmups=1, iters=3
         )
         scaled: dict = {
@@ -301,7 +285,7 @@ def main() -> None:
             "events_hourly_rollup",
             "tfidf_full",
         ]
-        sc100_spark = run_spark(
+        sc100_spark, _, _ = run_spark(
             spark, queries, dir100, names100, warmups=1, iters=2
         )
         block: dict = {

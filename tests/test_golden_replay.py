@@ -42,7 +42,6 @@ outputs:
 from __future__ import annotations
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
 from pathlib import Path
 
 import pytest
@@ -60,15 +59,6 @@ pytestmark = pytest.mark.skipif(
 def round_half_up_2(x: float) -> float:
     """Java ``Math.round(x*100d)/100d`` for the non-negative values here."""
     return math.floor(x * 100 + 0.5) / 100
-
-
-def spark_round_2(x: float) -> float:
-    """Emulate Spark's ``F.round(x, 2)`` on DoubleType: Java
-    ``BigDecimal.valueOf(x)`` (shortest round-trip repr, which Python's
-    ``repr`` matches) then ``setScale(2, HALF_UP)``.  Differs from Java
-    ``Math.round(x*100)/100`` in a handful of last-bit cases, so the
-    solvers must use THIS to predict what the DataFrame will emit."""
-    return float(Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
 
 
 def load_golden() -> dict[str, list[tuple[str, int, float, float]]]:
@@ -95,7 +85,7 @@ def solve_idf(docs: dict[str, list[tuple[str, int, float, float]]]) -> dict[str,
             v
             for v in (k / 100 for k in range(1, 301))
             if v in df_form
-            and all(spark_round_2(tf * v) == ti for tf, ti in ps)
+            and all(round_half_up_2(tf * v) == ti for tf, ti in ps)
         ]
         assert cands, f"no reference-form idf consistent with golden data for {w!r}"
         solved[w] = cands[0]
@@ -111,7 +101,7 @@ def solve_raw_token_count(rows: list[tuple[str, int, float, float]]) -> int | No
         if tf > 0.005:
             hi = min(hi, math.floor(c / (tf - 0.005)))
     for raw in range(lo, hi + 1):
-        if all(spark_round_2(c / raw) == tf for _, c, tf, _ in rows):
+        if all(round_half_up_2(c / raw) == tf for _, c, tf, _ in rows):
             return raw
     return None
 

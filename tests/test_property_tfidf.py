@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import math
 import re
-from decimal import ROUND_HALF_UP, Decimal
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -23,10 +22,9 @@ ALPHABET = "ab zB.,1-  "  # few letters → frequent cross-doc collisions
 
 
 def round2(x: float) -> float:
-    """Half-up to 2 decimals on the shortest decimal repr of the double —
-    the same base both Spark (BigDecimal.valueOf) and the engine's
-    formulas use for positive values."""
-    return float(Decimal(repr(x)).quantize(Decimal("0.01"), ROUND_HALF_UP))
+    """The reference's ``Math.round(x*100)/100`` for the non-negative
+    values here: scale the double, then round half-up."""
+    return math.floor(x * 100 + 0.5) / 100
 
 
 def reference_tfidf(texts: list[str]) -> set[tuple]:

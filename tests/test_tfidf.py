@@ -65,6 +65,19 @@ def test_tfidf_join_drops_zero_idf_words(spark):
     assert row[(2, "banana")] == round(0.5 * 0.18, 2) == 0.09
 
 
+def test_tfidf_rounds_like_the_reference_at_binary_near_ties(spark):
+    """0.05 * 2.3 is the double 0.11499999999999999; the reference's
+    Math.round(x*100)/100 (and DuckDB's round) scale it to 11.5 and give
+    0.12, where rounding its decimal expansion gives 0.11."""
+    doc_tf = spark.createDataFrame(
+        [(1, "w", 1, 0.05)], "doc_id long, word string, count long, tf double"
+    )
+    idf = spark.createDataFrame([("w", 2.3)], "word string, idf double")
+    (row,) = T.tfidf_join(doc_tf, idf).collect()
+    assert 0.05 * 2.3 == 0.11499999999999999
+    assert row.tf_idf == 0.12
+
+
 def test_task1_dictionary_rank_and_upper(spark):
     d = T.task1_dictionary(fixture_corpus(spark)).collect()
     by_rank = {r.rank: (r.word, r["count"]) for r in d}

@@ -1,0 +1,76 @@
+"""Guards for the one-session, one-timing-loop design of bench.py and
+tools/: every script gets its SparkSession from ``session.get_spark``,
+and every A/B experiment declares pairs that tools/ab.py can check.
+Needs no 100x replica."""
+
+from __future__ import annotations
+
+import glob
+import importlib
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from wikipedia_data_pipeline_spark import registry
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SESSION_PY = os.path.join(ROOT, "wikipedia_data_pipeline_spark", "session.py")
+BUILDER = "SparkSession" + ".builder"  # split so this file does not match
+
+
+def _python_files():
+    for sub in ("wikipedia_data_pipeline_spark", "tools", "tests"):
+        yield from glob.glob(os.path.join(ROOT, sub, "**", "*.py"), recursive=True)
+    yield os.path.join(ROOT, "bench.py")
+
+
+def _experiments():
+    return sorted(
+        os.path.basename(p)[len("ab_"):-len(".py")]
+        for p in glob.glob(os.path.join(ROOT, "tools", "ab_*.py"))
+    )
+
+
+def test_only_session_py_builds_a_spark_session():
+    offenders = []
+    for path in _python_files():
+        with open(path, encoding="utf-8") as f:
+            if path != SESSION_PY and BUILDER in f.read():
+                offenders.append(os.path.relpath(path, ROOT))
+    assert not offenders, offenders
+
+
+def test_ab_experiments_are_found():
+    assert _experiments()
+
+
+@pytest.mark.parametrize("name", _experiments())
+def test_ab_experiment_pairs_name_registered_queries(name):
+    exp = importlib.import_module(f"tools.ab_{name}")
+    queries = registry.spark_queries()
+    assert exp.ARTIFACT.startswith("AB_") and exp.ARTIFACT.endswith(".json")
+    assert exp.PAIRS
+    for registered, variant in exp.PAIRS:
+        assert registered in queries, registered
+        assert callable(variant)
+
+
+def test_ab_equivalence_accepts_a_real_pair_and_rejects_a_wrong_variant(
+    spark, sf_dir
+):
+    from tools import ab
+    from tools.ab_hourly_twostep import hourly_twostep
+
+    registered = registry.spark_queries()["events_hourly_rollup"]
+    ok = ab.check_pair(spark, registered, hourly_twostep, sf_dir)
+    assert ok["equivalent"] and ok["rows"] > 0
+
+    def one_event_too_many(spark, sf_dir):
+        return hourly_twostep(spark, sf_dir).withColumn(
+            "n_events", F.col("n_events") + 1
+        )
+
+    assert not ab.check_pair(spark, registered, one_event_too_many, sf_dir)[
+        "equivalent"
+    ]

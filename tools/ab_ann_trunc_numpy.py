@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered ann_dim_truncation_recall vs an
 Arrow-batched NumPy kernel (guide §4.2, the chrF/BLEU flip family).
 
@@ -24,18 +23,11 @@ The 5 query vectors are collected at construction (bounded by the
 literal IN-list — the HL class of driver-sized collect); the variant
 is therefore EAGER and the timer starts before construction.
 
-Usage: python tools/ab_ann_trunc_numpy.py [rounds]  (default 3)
-Writes AB_ANN_TRUNC_NUMPY_r13.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py ann_trunc_numpy [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -151,99 +143,5 @@ def ann_trunc_numpy_variant(spark, sf_dir):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-ann-trunc-numpy")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["ann_dim_truncation_recall"]
-
-    for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        a, b = _rows(reg(spark, sf)), _rows(ann_trunc_numpy_variant(spark, sf))
-        ranks.unpersist_all()
-        assert a == b, f"variant diverges at {sf}:\n{a}\nvs\n{b}"
-        print(f"equivalence at {sf}: OK (exact, {len(a)} rows)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn, eager):
-        if eager:
-            t0 = time.perf_counter()
-            df = fn(spark, dir100)
-        else:
-            df = fn(spark, dir100)
-            t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    timed(ann_trunc_numpy_variant, True)
-    timed(reg, False)  # warmups
-    times: dict[str, list] = {"registered": [], "numpy_topk_partials": []}
-    for _ in range(rounds):
-        times["registered"].append(timed(reg, False))
-        times["numpy_topk_partials"].append(
-            timed(ann_trunc_numpy_variant, True)
-        )
-        print("round:", times, flush=True)
-
-    out = {
-        "metric": "ab_ann_trunc_numpy_100x_r13",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-        "note": (
-            "Candidate timer includes construction (the 5-row query "
-            "collect) - the eager convention."
-        ),
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_ANN_TRUNC_NUMPY_r13.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_ANN_TRUNC_NUMPY_r13.json"
+PAIRS = [("ann_dim_truncation_recall", ann_trunc_numpy_variant)]

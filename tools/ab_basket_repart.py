@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Companion to ab_recs_repart.py: the SAME repartition-before-distinct
 flip applies to the other two consumers of the basket `op` relation
 (market_basket_pairs, recs_item_item_cosine — identical distinct +
@@ -7,18 +6,10 @@ no repartition, distinct exchanges on both columns) against the
 flipped registered form, with exact-equality assertions, so each
 touched query has its own before/after numbers.
 
-Usage: python tools/ab_basket_repart.py [rounds]  (default 3)
-Writes AB_BASKET_REPART_r14.json.
+Usage: python tools/ab.py basket_repart [rounds]
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -92,110 +83,8 @@ def recs_item_item_cosine_old(spark, sf_dir):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-basket-repart")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    pairs = {
-        "market_basket_pairs": (
-            queries["market_basket_pairs"],
-            market_basket_pairs_old,
-        ),
-        "recs_item_item_cosine": (
-            queries["recs_item_item_cosine"],
-            recs_item_item_cosine_old,
-        ),
-    }
-
-    for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        for name, (new, old) in pairs.items():
-            a, b = _rows(old(spark, sf)), _rows(new(spark, sf))
-            ranks.unpersist_all()
-            assert a == b, f"{name} diverges at {sf}"
-            print(f"equivalence {name} at {sf}: OK ({len(a)} rows)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    times: dict[str, dict[str, list]] = {}
-    for name, (new, old) in pairs.items():
-        timed(old)
-        timed(new)  # warmups
-        t = {"before_flip": [], "after_flip": []}
-        for _ in range(rounds):
-            t["before_flip"].append(timed(old))
-            t["after_flip"].append(timed(new))
-            print(name, t, flush=True)
-        times[name] = t
-
-    out = {
-        "metric": "ab_basket_repart_100x_r14",
-        "times": times,
-        "best": {
-            name: {k: min(v) for k, v in t.items()}
-            for name, t in times.items()
-        },
-        "note": (
-            "same mechanism as AB_RECS_REPART_r14 (repartition before "
-            "distinct -> cached hash(orderkey) layout feeds the basket "
-            "self-join with zero op exchanges), timed per consumer"
-        ),
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_BASKET_REPART_r14.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_BASKET_REPART_r14.json"
+PAIRS = [
+    ("market_basket_pairs", market_basket_pairs_old),
+    ("recs_item_item_cosine", recs_item_item_cosine_old),
+]

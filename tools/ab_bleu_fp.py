@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: ml_eval_bleu_corpus with xxhash64 gram
 fingerprints (registered, round 12) vs the round-11 string-gram form
 (r11 verdict item #5).
@@ -13,24 +12,20 @@ forms F,S,F,S,F,S in ONE process after warming both, per the
 AB_KMV_r11 discipline. Decision rule: keep the fingerprint form iff
 its best-of-3 beats the string form by more than the 20% noise band.
 
-Usage: python tools/ab_bleu_fp.py [out_json]
+Both forms end in the same one-row brevity-penalty / BLEU-4 tail
+(ab_bleu_numpy.bleu_scores), so they return the same rows.
+
+Usage: python tools/ab.py bleu_fp [rounds]
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
 
-from tools.scale_probe import SRC_SF
+from tools.ab_bleu_numpy import bleu_scores
 
 
-def _bleu_stringgram_baseline(spark, sf_dir):
+def bleu_stringgram_baseline(spark, sf_dir):
     """Round-11 registered form: gram key = concat_ws string (kept
     here only as the A/B baseline; same output, same oracle)."""
     from wikipedia_data_pipeline_spark.sources.tables import fan_out, load_table
@@ -106,83 +101,8 @@ def _bleu_stringgram_baseline(spark, sf_dir):
             for n in ns
         ]
     )
-    return mp.crossJoin(F.broadcast(tot))
+    return bleu_scores(mp.crossJoin(F.broadcast(tot)))
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "AB_BLEU_r12.json"
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-
-    dir100 = ensure(
-        SRC_SF,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-bleu-fp")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    registered = registry.spark_queries()["ml_eval_bleu_corpus"]
-    forms = {
-        "fingerprint_registered": registered,
-        "stringgram_baseline": _bleu_stringgram_baseline,
-    }
-
-    def run_once(fn) -> float:
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    spark.read.parquet(os.path.join(dir100, "documents.parquet")).count()
-    for fn in forms.values():
-        run_once(fn)
-
-    runs: dict[str, list[float]] = {k: [] for k in forms}
-    for _ in range(3):
-        for k in ("fingerprint_registered", "stringgram_baseline"):
-            runs[k].append(round(run_once(forms[k]), 3))
-            print(f"{k}: {runs[k][-1]}s", flush=True)
-
-    best = {k: min(v) for k, v in runs.items()}
-    keep = best["fingerprint_registered"] < 0.8 * best["stringgram_baseline"]
-    out = {
-        "metric": "bleu_gram_fingerprint_interleaved_ab",
-        "unit": "sec",
-        "dir": "100x replica (500k documents)",
-        "runs": runs,
-        "best_of_3": best,
-        "noise_band": 0.2,
-        "decision_keep_fingerprint_form": keep,
-        "history": {"r11_probe_stringgram_sequential": 68.0},
-    }
-    with open(out_path, "w") as fh:
-        fh.write(json.dumps(out, indent=1))
-    print(json.dumps(out["best_of_3"]), "keep:", keep)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_BLEU_r12.json"
+PAIRS = [("ml_eval_bleu_corpus", bleu_stringgram_baseline)]

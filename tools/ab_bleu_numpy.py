@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered BLEU-4 / ROUGE-N (one explode of
 xxhash64 token-gram fingerprints + one (doc, n, gram) hash agg) vs the
 chrF numpy-partials pattern applied to TOKEN grams: an Arrow-batched
@@ -15,18 +14,11 @@ is ~12x corpus CHARS. The BLEU/ROUGE stream is ~8x/4x corpus TOKENS
 (~6x smaller), so the expected win is smaller — this A/B prices it.
 SCALE_PROBE_r13: ml_eval_bleu_corpus 10.09 s, ml_eval_rouge_n 5.0 s.
 
-Usage: python tools/ab_bleu_numpy.py [rounds]  (default 3)
-Writes AB_BLEU_NUMPY_r13.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py bleu_numpy [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -145,6 +137,13 @@ def bleu_numpy_variant(spark, sf_dir):
         .cast("long")
         .alias("ref_tokens"),
     )
+    return bleu_scores(wide)
+
+
+def bleu_scores(wide):
+    """The registered BLEU tail over one row of (m1..m4, t1..t4,
+    cand_tokens, ref_tokens): brevity penalty and BLEU-4, both
+    quantized to nano-units."""
     c_d = F.col("cand_tokens").cast("double")
     r_d = F.col("ref_tokens").cast("double")
     bp = F.when(
@@ -187,93 +186,8 @@ def rouge_numpy_variant(spark, sf_dir):
     ).orderBy("n")
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-bleu-numpy")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    pairs = [
-        ("ml_eval_bleu_corpus", queries["ml_eval_bleu_corpus"], bleu_numpy_variant),
-        ("ml_eval_rouge_n", queries["ml_eval_rouge_n"], rouge_numpy_variant),
-    ]
-
-    sf001 = "/root/testdata/sf0.01"
-    for name, reg, var in pairs:
-        a, b = _rows(reg(spark, sf001)), _rows(var(spark, sf001))
-        assert a == b, f"{name} variant diverges at sf0.01:\n{a}\nvs\n{b}"
-        print(f"equivalence at sf0.01 ({name}): OK (exact)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    out: dict = {"metric": "ab_bleu_rouge_numpy_100x_r13", "queries": {}}
-    for name, reg, var in pairs:
-        timed(var)
-        timed(reg)  # warmups
-        times: dict[str, list] = {"registered": [], "numpy_partials": []}
-        for _ in range(rounds):
-            times["registered"].append(timed(reg))
-            times["numpy_partials"].append(timed(var))
-        out["queries"][name] = {
-            "times": times,
-            "best": {k: min(v) for k, v in times.items()},
-        }
-        print(name, out["queries"][name]["best"], flush=True)
-
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_BLEU_NUMPY_r13.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_BLEU_NUMPY_r13.json"
+PAIRS = [
+    ("ml_eval_bleu_corpus", bleu_numpy_variant),
+    ("ml_eval_rouge_n", rouge_numpy_variant),
+]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered dedup_connected_components vs a
 group-linear "star" edge generation (guide §1.2 — fix the algorithm).
 
@@ -26,18 +25,11 @@ The candidate also materializes the edge relation (persist + count)
 before connected_components' undirected union, so the LSH verify
 lineage runs once, not once per union branch.
 
-Usage: python tools/ab_cc_star.py [rounds]  (default 3)
-Writes AB_CC_STAR_r13.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py cc_star [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -66,10 +58,11 @@ def cc_quadratic(spark, sf_dir):
 def cc_star_variant(spark, sf_dir):
     from wikipedia_data_pipeline_spark.operators import dedup as D
     from wikipedia_data_pipeline_spark.operators import graph as G
+    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    groups = (
+    groups = track_persisted(
         docs.groupBy("text")
         .agg(
             F.min("doc_id").alias("doc_id"),
@@ -78,7 +71,7 @@ def cc_star_variant(spark, sf_dir):
         .persist()
     )
     reps = groups.select("doc_id", "text")
-    sh = D.hashed_shingles(reps).persist()
+    sh = track_persisted(D.hashed_shingles(reps).persist())
     cands = D.lsh_candidate_pairs(sh)
     rep_pairs = D.verify_pairs_jaccard(cands, sh, _THRESHOLD).select(
         "doc_a", "doc_b"
@@ -94,9 +87,8 @@ def cc_star_variant(spark, sf_dir):
         )
         .filter(F.col("doc_a") != F.col("doc_b"))
     )
-    # groups/sh stay persisted like the registered form leaves them
-    # (plan-canonicalized cache reuse across best-of-N runs must be
-    # symmetric between the two arms).
+    # groups/sh are tracked like the registered operator's, so the
+    # timing loop releases both arms' caches alike between runs.
     edges = rep_pairs.unionByName(stars).persist()
     edges.count()  # materialize once: CC's undirected union reads cache
     cc = G.connected_components(edges, src="doc_a", dst="doc_b")
@@ -109,122 +101,8 @@ def cc_star_variant(spark, sf_dir):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-cc-star")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    registry.spark_queries()  # import side effects only
-    reg = cc_quadratic
-
-    if os.environ.get("SPARK_GRAFT_AB_SKIP_EQUIV") != "1":
-        for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-            a, b = _rows(reg(spark, sf)), _rows(cc_star_variant(spark, sf))
-            ranks.unpersist_all()
-            assert (
-                a == b
-            ), f"variant diverges at {sf}: {len(a)} vs {len(b)} rows"
-            print(f"equivalence at {sf}: OK (exact, {len(a)} rows)", flush=True)
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn, cold):
-        # Two protocols. COLD clears the cache so every run pays its
-        # true end-to-end cost (connected_components leaves persisted
-        # relations that plan-canonicalized cache lookup would hand to
-        # the NEXT identical run) — but then both arms are dominated
-        # by the SHARED cold shingling/LSH head of the 500k-doc
-        # corpus. WARM leaves the head's groups/sh caches in place
-        # (exactly what the shipped probe protocol does), isolating
-        # the tail this A/B actually changes: the edge relation and
-        # the propagation over it.
-        if cold:
-            spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        df = fn(spark, dir100)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        # connected_components registers its persisted result with
-        # track_persisted (r13), so this releases each run's own CC
-        # cache while the warm protocol keeps the raw-persisted
-        # groups/sh head in place.
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    times: dict[str, dict] = {
-        "cold": {"quadratic": [], "star_edges": []},
-        "warm": {"quadratic": [], "star_edges": []},
-    }
-    # COLD protocol first.
-    for _ in range(rounds):
-        times["cold"]["quadratic"].append(timed(reg, cold=True))
-        times["cold"]["star_edges"].append(timed(cc_star_variant, cold=True))
-        print("round cold:", times["cold"], flush=True)
-    # WARM protocol: one unmeasured warmup per arm re-warms the head
-    # (and leaves each arm's plan-canonical caches populated, the same
-    # steady state the probe's best-of-3 reaches).
-    spark.catalog.clearCache()
-    timed(reg, cold=False)
-    timed(cc_star_variant, cold=False)
-    for _ in range(rounds):
-        times["warm"]["quadratic"].append(timed(reg, cold=False))
-        times["warm"]["star_edges"].append(timed(cc_star_variant, cold=False))
-        print("round warm:", times["warm"], flush=True)
-
-    out = {
-        "metric": "ab_cc_star_100x_r13",
-        "times": times,
-        "best": {
-            proto: {k: min(v) for k, v in arms.items()}
-            for proto, arms in times.items()
-        },
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_CC_STAR_r13.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_CC_STAR_r13.json"
+PAIRS = [
+    ("dedup_connected_components", cc_quadratic),
+    ("dedup_connected_components", cc_star_variant),
+]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered chrF (explode + doc-scoped hash agg)
 vs an explode-free variant that computes each doc's clipped per-n
 match count INSIDE a row expression — sort the candidate+reference
@@ -12,16 +11,10 @@ doc_id pre-partition removed its post-explode shuffle — the cost is
 CPU+row overhead on the ~1.6 B exploded gram stream, which this
 variant never materializes as rows.
 
-Usage: python tools/ab_chrf_merge.py [rounds]   (default 3, interleaved)
+Usage: python tools/ab.py chrf_merge [rounds]
 """
 
 from __future__ import annotations
-
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -150,57 +143,5 @@ def chrf_merge_variant(spark, sf_dir):
     return pn.crossJoin(F.broadcast(avgf))
 
 
-def main():
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-chrf")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = registry.spark_queries()
-
-    # equivalence check at sf0.01 first
-    small = "/root/testdata/sf0.01"
-    a = {tuple(r) for r in qs["ml_eval_chrf"](spark, small).collect()}
-    b = {tuple(r) for r in chrf_merge_variant(spark, small).collect()}
-    print("equivalent at sf0.01:", a == b)
-    if a != b:
-        print("A", sorted(a)[:3])
-        print("B", sorted(b)[:3])
-        return
-
-    times = {"registered": [], "merge_variant": []}
-    for _ in range(rounds):
-        for name, fn in (
-            ("registered", qs["ml_eval_chrf"]),
-            ("merge_variant", chrf_merge_variant),
-        ):
-            df = fn(spark, dir100)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            times[name].append(round(time.perf_counter() - t0, 2))
-            print(name, times[name][-1], flush=True)
-    print({k: min(v) for k, v in times.items()})
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_CHRF_MERGE_r13.json"
+PAIRS = [("ml_eval_chrf", chrf_merge_variant)]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered chrF (explode + doc-scoped hash agg) vs
 an Arrow-batched NumPy kernel over ``mapInPandas`` that computes each
 doc's clipped per-n char-gram overlap inside the Python worker and
@@ -18,8 +17,7 @@ equality, strictly stronger than the registered form's xxhash64
 no-collision assumption. Wider alphabets fall back to a 64-bit odd
 multiplier (same collision class as xxhash64).
 
-Usage: python tools/ab_chrf_numpy.py [rounds]   (default 3, interleaved)
-Writes AB_CHRF_NUMPY_r13.json.
+Usage: python tools/ab.py chrf_numpy [rounds]
 
 NOTE: this A/B ran against the PRE-flip registered explode form and
 decided the flip (301 s vs 13.1 s round 1 — 23x, decisive).
@@ -29,13 +27,6 @@ this script compares the new registered form against this inline copy
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -174,89 +165,5 @@ def chrf_numpy_variant(spark, sf_dir):
     return pn.crossJoin(F.broadcast(avgf))
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-chrf-numpy")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["ml_eval_chrf"]
-
-    # equivalence first, at sf0.01 (exact rows, incl. float bits)
-    sf001 = "/root/testdata/sf0.01"
-    a = _rows(reg(spark, sf001))
-    b = _rows(chrf_numpy_variant(spark, sf001))
-    assert a == b, f"variant diverges at sf0.01:\n{a}\nvs\n{b}"
-    print("equivalence at sf0.01: OK (exact)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    # one warmup each (page cache + codegen + Python worker pool)
-    timed(chrf_numpy_variant)
-    times: dict[str, list] = {"registered": [], "numpy_partials": []}
-    for _ in range(rounds):
-        times["registered"].append(timed(reg))
-        times["numpy_partials"].append(timed(chrf_numpy_variant))
-        print("round:", times, flush=True)
-
-    out = {
-        "metric": "ab_chrf_numpy_100x_r13",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_CHRF_NUMPY_r13.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_CHRF_NUMPY_r13.json"
+PAIRS = [("ml_eval_chrf", chrf_numpy_variant)]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: ml_eval_chrf's (n, g, is_c) STRUCT gram stream vs
 a PACKED-LONG variant (v = xxhash64(gram) << 4 | n << 1 | is_c).
 
@@ -13,32 +12,24 @@ groups candidate and reference occurrences of the same (n, gram)
 together, bit 0 separates the sides inside the aggregate, and
 n = (v >> 1) & 7 recovers the per-n split afterwards.
 
-Correctness: the variant's full output is asserted EQUAL to the
+Correctness: tools/ab.py checks the variant's full output EQUAL to the
 registered query's before any timing. Interleaved P,S,P,S,P,S after
 warming both (AB_KMV_r11 discipline); keep the packed form iff its
 best-of-3 beats the struct form by more than the 20% noise band.
 
-Usage: python tools/ab_chrf_packed.py [out_json]
+Usage: python tools/ab.py chrf_packed [rounds]
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
 
-from tools.scale_probe import SRC_SF
 
 _NS = (1, 2, 3, 4, 5, 6)
 _BETA_SQ = 4
 
 
-def _chrf_packed(spark, sf_dir):
+def chrf_packed(spark, sf_dir):
     """Packed-long gram-stream variant of ml_eval_chrf (same output)."""
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -145,85 +136,5 @@ def _chrf_packed(spark, sf_dir):
     return pn.crossJoin(F.broadcast(avgf))
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "AB_CHRF_PACKED_r12.json"
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-
-    dir100 = ensure(
-        SRC_SF,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-chrf-packed")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    registered = registry.spark_queries()["ml_eval_chrf"]
-
-    # correctness first: identical output at sf0.01 (cheap) AND on the
-    # 100x replica (the scale under test)
-    for check_dir in ("/root/testdata/sf0.01", dir100):
-        a = sorted(map(tuple, registered(spark, check_dir).collect()))
-        b = sorted(map(tuple, _chrf_packed(spark, check_dir).collect()))
-        assert a == b, f"variant output differs at {check_dir}"
-        print(f"output equal at {check_dir}", flush=True)
-
-    forms = {"packed_variant": _chrf_packed, "struct_registered": registered}
-
-    def run_once(fn) -> float:
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    runs: dict[str, list[float]] = {k: [] for k in forms}
-    for _ in range(3):
-        for k in ("packed_variant", "struct_registered"):
-            runs[k].append(round(run_once(forms[k]), 3))
-            print(f"{k}: {runs[k][-1]}s", flush=True)
-
-    best = {k: min(v) for k, v in runs.items()}
-    keep = best["packed_variant"] < 0.8 * best["struct_registered"]
-    out = {
-        "metric": "chrf_packed_long_interleaved_ab",
-        "unit": "sec",
-        "dir": "100x replica (500k documents)",
-        "runs": runs,
-        "best_of_3": best,
-        "noise_band": 0.2,
-        "decision_adopt_packed_form": keep,
-        "history": {
-            "r12s5_probe_pre_repartition": 231.98,
-            "r12s6_probe_struct_form": 177.41,
-        },
-    }
-    with open(out_path, "w") as fh:
-        fh.write(json.dumps(out, indent=1))
-    print(json.dumps(out["best_of_3"]), "adopt:", keep)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_CHRF_PACKED_r12.json"
+PAIRS = [("ml_eval_chrf", chrf_packed)]

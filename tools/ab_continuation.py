@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered dedup_doc_continuation vs two rewrites.
 
 The first honest probe of this query (r14 sweep) read 37.9 s at 100x —
@@ -17,18 +16,11 @@ now the heaviest non-timeout row. Two independent causes:
 
 Variants: `persist_only` isolates (1); `persist_single_regex` adds (2).
 
-Usage: python tools/ab_continuation.py [rounds]  (default 3)
-Writes AB_CONTINUATION_r14.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py continuation [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -104,98 +96,8 @@ def continuation_single_regex(spark, sf_dir):
     return _finish(_persisted(hk))
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-continuation")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["dedup_doc_continuation"]
-
-    variants = {
-        "persist_only": continuation_persist_only,
-        "persist_single_regex": continuation_single_regex,
-    }
-    for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        a = _rows(reg(spark, sf))
-        for name, fn in variants.items():
-            b = _rows(fn(spark, sf))
-            ranks.unpersist_all()
-            assert a == b, f"{name} diverges at {sf}"
-        print(f"equivalence at {sf}: OK (exact, {len(a)} rows)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    for fn in (reg, *variants.values()):  # warmup
-        timed(fn)
-    times: dict[str, list] = {
-        "registered": [], "persist_only": [], "persist_single_regex": []
-    }
-    for _ in range(rounds):
-        times["registered"].append(timed(reg))
-        for name, fn in variants.items():
-            times[name].append(timed(fn))
-        print("round:", times, flush=True)
-
-    out = {
-        "metric": "ab_continuation_100x_r14",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_CONTINUATION_r14.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_CONTINUATION_r14.json"
+PAIRS = [
+    ("dedup_doc_continuation", continuation_persist_only),
+    ("dedup_doc_continuation", continuation_single_regex),
+]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered curation_coreset_facility_location vs a
 precomputed-similarity-matrix form (guide §4.2 + §5, r13 verdict #4).
 
@@ -21,18 +20,11 @@ quantized cosine vector (q_0..q_{m-1}), so
    cov) - cov) — all-integer, same values as the registered step, so
    the argmax (gain DESC, cid ASC) walks the identical greedy path.
 
-Usage: python tools/ab_coreset_matrix.py [rounds]  (default 3)
-Writes AB_CORESET_MATRIX_r14.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py coreset_matrix [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -128,96 +120,5 @@ def coreset_matrix_variant(spark, sf_dir):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-coreset-matrix")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["curation_coreset_facility_location"]
-
-    for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        a, b = _rows(reg(spark, sf)), _rows(coreset_matrix_variant(spark, sf))
-        ranks.unpersist_all()
-        assert a == b, f"variant diverges at {sf}:\n{a}\nvs\n{b}"
-        print(f"equivalence at {sf}: OK (exact, {len(a)} rows)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        # both forms are EAGER (greedy jobs at construction): the timer
-        # starts before construction
-        t0 = time.perf_counter()
-        df = fn(spark, dir100)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    timed(coreset_matrix_variant)
-    timed(reg)  # warmups
-    times: dict[str, list] = {"registered": [], "matrix_one_pass": []}
-    for _ in range(rounds):
-        times["registered"].append(timed(reg))
-        times["matrix_one_pass"].append(timed(coreset_matrix_variant))
-        print("round:", times, flush=True)
-
-    out = {
-        "metric": "ab_coreset_matrix_100x_r14",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-        "note": (
-            "both arms eager (timer includes construction = the greedy "
-            "jobs); post-r14 persist tracking, so every iteration is "
-            "honest-cold"
-        ),
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_CORESET_MATRIX_r14.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_CORESET_MATRIX_r14.json"
+PAIRS = [("curation_coreset_facility_location", coreset_matrix_variant)]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered events_hourly_rollup (countDistinct →
 Spark's Expand-based two-phase distinct, which doubles the map-side
 row stream) vs a two-step aggregation — pre-aggregate per (bucket,
@@ -13,20 +12,12 @@ at the 100x replica, and it is a HEADLINE query. The Expand node emits
 shuffles at most one row per distinct (bucket, type, user) triple and
 never widens the stream.
 
-Usage: python tools/ab_hourly_twostep.py [rounds]  (default 3)
-Writes AB_HOURLY_TWOSTEP_r13.json. Flip iff best-of-N beats the
-registered best-of-N by >20% at the 100x replica (the pre-registered
-noise band) and sf0.1 does not regress.
+Usage: python tools/ab.py hourly_twostep [rounds]
+Flip iff best-of-N beats the registered best-of-N by >20% at the 100x
+replica (the pre-registered noise band) and sf0.1 does not regress.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -58,89 +49,5 @@ def hourly_twostep(spark, sf_dir):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-hourly-twostep")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["events_hourly_rollup"]
-
-    sf001 = "/root/testdata/sf0.01"
-    a = _rows(reg(spark, sf001))
-    b = _rows(hourly_twostep(spark, sf001))
-    assert a == b, "two-step variant diverges at sf0.01"
-    print("equivalence at sf0.01: OK (exact)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn, d):
-        df = fn(spark, d)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 3)
-
-    out: dict = {"metric": "ab_hourly_twostep_r13", "scales": {}}
-    for label, d in (("100x", dir100), ("sf0.1", "/root/testdata/sf0.1")):
-        timed(reg, d)
-        timed(hourly_twostep, d)  # warmups
-        times: dict[str, list] = {"registered": [], "twostep": []}
-        for _ in range(rounds):
-            times["registered"].append(timed(reg, d))
-            times["twostep"].append(timed(hourly_twostep, d))
-        out["scales"][label] = {
-            "times": times,
-            "best": {k: min(v) for k, v in times.items()},
-        }
-        print(label, out["scales"][label]["best"], flush=True)
-
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_HOURLY_TWOSTEP_r13.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_HOURLY_TWOSTEP_r13.json"
+PAIRS = [("events_hourly_rollup", hourly_twostep)]

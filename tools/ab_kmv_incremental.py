@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: incremental_distinct_users_kmv registered two-slice
 form (scans events twice, one kmv_min_hashes per slice) vs a
 single-scan variant (ONE distinct over (slice, day, h), composite-group
@@ -12,24 +11,16 @@ shuffle. Same discipline as tools/ab_kmv_shared.py: warm both, then
 interleave R,V,R,V,R,V in one process; flip iff the variant's best-of-3
 beats the registered best-of-3 by more than the 20% noise band.
 
-Usage: python tools/ab_kmv_incremental.py [out_json]
+Usage: python tools/ab.py kmv_incremental [rounds]
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.scale_probe import SRC_SF
 
 SPLIT_US = 1_705_276_800_000_000
 
 
-def _incremental_kmv_singlescan(spark, sf_dir):
+def incremental_kmv_singlescan(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -64,95 +55,5 @@ def _incremental_kmv_singlescan(spark, sf_dir):
     )
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "AB_KMV_INCR_r12.json"
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    dir100 = ensure(
-        SRC_SF,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-kmv-incremental")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    registered = registry.spark_queries()["incremental_distinct_users_kmv"]
-    forms = {
-        "registered": registered,
-        "singlescan_variant": _incremental_kmv_singlescan,
-    }
-
-    def run_once(fn) -> float:
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return dt
-
-    # result-equality check first (same relation, not just same shape)
-    a = {
-        tuple(r)
-        for r in forms["registered"](spark, dir100).collect()
-    }
-    b = {
-        tuple(r)
-        for r in forms["singlescan_variant"](spark, dir100).collect()
-    }
-    assert a == b, f"variant diverges: {len(a ^ b)} differing rows"
-
-    spark.read.parquet(os.path.join(dir100, "events.parquet")).count()
-    for fn in forms.values():
-        run_once(fn)
-
-    runs: dict[str, list[float]] = {k: [] for k in forms}
-    for _ in range(3):
-        for k in ("registered", "singlescan_variant"):
-            runs[k].append(round(run_once(forms[k]), 3))
-            print(f"{k}: {runs[k][-1]}s", flush=True)
-
-    best = {k: min(v) for k, v in runs.items()}
-    flip = best["singlescan_variant"] < 0.8 * best["registered"]
-    out = {
-        "metric": "kmv_incremental_singlescan_interleaved_ab",
-        "unit": "sec",
-        "dir": "100x replica (10M events)",
-        "results_identical": True,
-        "runs": runs,
-        "best_of_3": best,
-        "noise_band": 0.2,
-        "decision_flip_registered_to_singlescan": flip,
-    }
-    with open(out_path, "w") as fh:
-        fh.write(json.dumps(out, indent=1))
-    print(json.dumps(out["best_of_3"]), "flip:", flip)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_KMV_INCR_r12.json"
+PAIRS = [("incremental_distinct_users_kmv", incremental_kmv_singlescan)]

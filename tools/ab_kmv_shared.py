@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: sketch_kmv_distinct_users registered multipass form
 vs the shared-distinct variant (r11 verdict item #1).
 
@@ -11,109 +10,18 @@ winner. Decision rule: flip the registered query iff the variant's
 best-of-3 beats the registered best-of-3 by more than the measured
 run-to-run noise band (20%, BENCH_full_r10.rerun_back_to_back).
 
-Usage: python tools/ab_kmv_shared.py [out_json]
+AB_KMV_r11.json was produced BEFORE the flip, when the registered
+query was still the multipass form. Since the flip the registered
+query IS the shared form, and the variant is the multipass baseline
+kept in tools/scale_probe.py.
+
+Usage: python tools/ab.py kmv_shared [rounds]
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.scale_probe import SRC_SF, _kmv_distinct_multipass_baseline
+from tools.scale_probe import _kmv_distinct_multipass_baseline
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "AB_KMV_r11.json"
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    dir100 = ensure(
-        SRC_SF,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-kmv-shared")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # NOTE: AB_KMV_r11.json was produced BEFORE the flip, when the
-    # registered query was still the multipass form ("registered" =
-    # multipass, "shared_variant" = the now-registered shared form).
-    # Post-flip, this runner keeps both sides measurable: "registered"
-    # is the shared form; the multipass baseline rides the probe fn.
-    registered = registry.spark_queries()["sketch_kmv_distinct_users"]
-    forms = {
-        "registered": registered,
-        "multipass_baseline": _kmv_distinct_multipass_baseline,
-    }
-
-    def run_once(fn) -> float:
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return dt
-
-    # warm page cache + codegen for BOTH forms before any timed run
-    spark.read.parquet(os.path.join(dir100, "events.parquet")).count()
-    for fn in forms.values():
-        run_once(fn)
-
-    runs: dict[str, list[float]] = {k: [] for k in forms}
-    for _ in range(3):
-        for k in ("registered", "multipass_baseline"):
-            runs[k].append(round(run_once(forms[k]), 3))
-            print(f"{k}: {runs[k][-1]}s", flush=True)
-
-    best = {k: min(v) for k, v in runs.items()}
-    # post-flip: "flip back" iff the multipass baseline now wins by >20%
-    flip = best["multipass_baseline"] < 0.8 * best["registered"]
-    out = {
-        "metric": "kmv_shared_distinct_interleaved_ab",
-        "unit": "sec",
-        "dir": "100x replica (10M events)",
-        "runs": runs,
-        "best_of_3": best,
-        "noise_band": 0.2,
-        "decision_flip_registered_back_to_multipass": flip,
-        "history": {
-            "r9_sequential": {"registered": 3.45, "shared_variant": 3.85},
-            "r10_sequential": {"registered": 3.08, "shared_variant": 1.98},
-        },
-    }
-    with open(out_path, "w") as fh:
-        fh.write(json.dumps(out, indent=1))
-    print(json.dumps(out["best_of_3"]), "flip:", flip)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_KMV_r11.json"
+PAIRS = [("sketch_kmv_distinct_users", _kmv_distinct_multipass_baseline)]

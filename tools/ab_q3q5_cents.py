@@ -1,24 +1,17 @@
-#!/usr/bin/env python
 """Isolated A/B: q3/q5 revenue aggregate as DECIMAL vs BIGINT-cents vs
 integer-products (q1_cents form) on the 100x replica — diagnosis for
-the round-9 probe's q3/q5 slowdown after the cents flip. Prints
-best-of-3 warm times per variant plus the physical-plan agg expression
-so the cost can be attributed (Round(double) codegen routes through
-BigDecimal.valueOf, which may exceed the DECIMAL cast it replaced).
+the round-9 probe's q3/q5 slowdown after the cents flip (Round(double)
+codegen routes through BigDecimal.valueOf, which may exceed the DECIMAL
+cast it replaced). The registered q3/q5 ARE the BIGINT-cents arm since
+that flip; the variants rebuild the same plan with the DECIMAL and the
+integer-products revenue aggregate.
 
-Usage: python tools/ab_q3q5_cents.py [out_json]
+Usage: python tools/ab.py q3q5_cents [rounds]
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import functions as F
 
 
 def q3_variant(spark, sf_dir, agg):
@@ -69,75 +62,43 @@ def q5_variant(spark, sf_dir, agg):
     )
 
 
-def aggs():
-    from wikipedia_data_pipeline_spark.functions import cents_sum, dec_sum
+def _dec():
+    from wikipedia_data_pipeline_spark.functions import dec_sum
 
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue")
+
+
+def _intprod():
     # integer-products form (q1_cents style): two cheap rounds on the
     # SOURCE columns (cent / percent quanta), then a pure long product
     price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
     disc_b = F.round(F.col("l_discount") * 100).cast("long")
-    intprod = (
+    return (
         (F.sum(price_c * (100 - disc_b)).cast("double") / 10_000)
         .alias("revenue")
     )
-    return {
-        "dec": dec_sum(disc_price, "revenue"),
-        "cents": cents_sum(disc_price, "revenue"),
-        "intprod": intprod,
-    }
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/ab_q3q5.json"
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata", "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-q3q5-cents")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm page cache + codegen
-    for t in ("lineitem", "orders", "customer"):
-        spark.read.parquet(os.path.join(dir100, f"{t}.parquet")).count()
-
-    out: dict = {}
-    for qname, builder in (("q3", q3_variant), ("q5", q5_variant)):
-        for aname, agg in aggs().items():
-            df = builder(spark, dir100, agg)
-            df.write.format("noop").mode("overwrite").save()  # warm
-            best = float("inf")
-            for _ in range(3):
-                df = builder(spark, dir100, agg)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            out[f"{qname}_{aname}"] = round(best, 2)
-            print(f"{qname}_{aname}: {out[f'{qname}_{aname}']}s", flush=True)
-    with open(out_path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    spark.stop()
+def q3_dec(spark, sf_dir):
+    return q3_variant(spark, sf_dir, _dec())
 
 
-if __name__ == "__main__":
-    main()
+def q3_intprod(spark, sf_dir):
+    return q3_variant(spark, sf_dir, _intprod())
+
+
+def q5_dec(spark, sf_dir):
+    return q5_variant(spark, sf_dir, _dec())
+
+
+def q5_intprod(spark, sf_dir):
+    return q5_variant(spark, sf_dir, _intprod())
+
+
+ARTIFACT = "AB_Q3Q5_CENTS.json"
+PAIRS = [
+    ("q3_shipping_priority", q3_dec),
+    ("q3_shipping_priority", q3_intprod),
+    ("q5_region_revenue", q5_dec),
+    ("q5_region_revenue", q5_intprod),
+]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered sketch_quantile_summary_events vs the
 summary-derived-N form (r13 verdict #7 — carried two rounds "on
 watch" at 6.49 s / 3.17x).
@@ -21,18 +20,11 @@ est_value/est_id rows are whichever summary points straddle the
 target ranks — a different compaction keeps different points and
 returns different estimates. Not an optimization, a different query.
 
-Usage: python tools/ab_quantile_nrel.py [rounds]  (default 3)
-Writes AB_QUANTILE_NREL_r14.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py quantile_nrel [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -106,95 +98,5 @@ def quantile_nrel_variant(spark, sf_dir):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-quantile-nrel")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["sketch_quantile_summary_events"]
-
-    for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        a, b = _rows(reg(spark, sf)), _rows(quantile_nrel_variant(spark, sf))
-        ranks.unpersist_all()
-        assert a == b, f"variant diverges at {sf}:\n{a}\nvs\n{b}"
-        print(f"equivalence at {sf}: OK (exact, {len(a)} rows)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    timed(quantile_nrel_variant)
-    timed(reg)  # warmups
-    times: dict[str, list] = {"registered": [], "nrel_from_summary": []}
-    for _ in range(rounds):
-        times["registered"].append(timed(reg))
-        times["nrel_from_summary"].append(timed(quantile_nrel_variant))
-        print("round:", times, flush=True)
-
-    out = {
-        "metric": "ab_quantile_nrel_100x_r14",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-        "note": (
-            "GK/KLL merge-tree ruled out structurally: the output's "
-            "est_value/est_id rows are summary points of THIS "
-            "striding (oracle-replayed); a different compaction "
-            "returns different estimates - a different query."
-        ),
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_QUANTILE_NREL_r14.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_QUANTILE_NREL_r14.json"
+PAIRS = [("sketch_quantile_summary_events", quantile_nrel_variant)]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/Bs for the two rank-striding probe-watch items
 (r11 verdict item #8): sketch_quantile_summary_events (6.5 s, 3.17x at
 100x) and ml_eval_pinball_loss (3.16x).
@@ -17,26 +16,18 @@ Candidates, one each per the AB_KMV_r11 discipline:
 Decision rule per query: flip iff candidate best-of-3 beats the
 registered best-of-3 by more than the 20% noise band.
 
-Usage: python tools/ab_quantile_pinball.py [out_json]
+Usage: python tools/ab.py quantile_pinball [rounds]
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
 
-from tools.scale_probe import SRC_SF
 
 _US_PER_DAY = 86_400_000_000
 
 
-def _quantile_summary_shared_n(spark, sf_dir):
+def quantile_summary_shared_n(spark, sf_dir):
     """Candidate: N from the summary's total weight, not a 2nd scan."""
     from wikipedia_data_pipeline_spark.operators import profiling as P
     from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
@@ -97,7 +88,7 @@ def _quantile_summary_shared_n(spark, sf_dir):
     )
 
 
-def _pinball_persisted_ev(spark, sf_dir):
+def pinball_persisted_ev(spark, sf_dir):
     """Candidate: persist the projected ev so train+test share a scan."""
     from wikipedia_data_pipeline_spark.operators.ranks import (
         grouped_exact_quantiles,
@@ -145,83 +136,8 @@ def _pinball_persisted_ev(spark, sf_dir):
     )
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "AB_QP_r12.json"
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    dir100 = ensure(
-        SRC_SF,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-quantile-pinball")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    qs = registry.spark_queries()
-    pairs = {
-        "quantile_summary": {
-            "registered": qs["sketch_quantile_summary_events"],
-            "candidate_shared_n": _quantile_summary_shared_n,
-        },
-        "pinball": {
-            "registered": qs["ml_eval_pinball_loss"],
-            "candidate_persisted_ev": _pinball_persisted_ev,
-        },
-    }
-
-    def run_once(fn) -> float:
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        spark.catalog.clearCache()
-        return dt
-
-    spark.read.parquet(os.path.join(dir100, "events.parquet")).count()
-    out: dict = {"unit": "sec", "dir": "100x replica (10M events)",
-                 "noise_band": 0.2, "pairs": {}}
-    for name, forms in pairs.items():
-        for fn in forms.values():
-            run_once(fn)  # warm both
-        runs: dict[str, list[float]] = {k: [] for k in forms}
-        for _ in range(3):
-            for k in forms:
-                runs[k].append(round(run_once(forms[k]), 3))
-                print(f"{name}/{k}: {runs[k][-1]}s", flush=True)
-        best = {k: min(v) for k, v in runs.items()}
-        ks = list(forms)
-        flip = best[ks[1]] < 0.8 * best[ks[0]]
-        out["pairs"][name] = {"runs": runs, "best_of_3": best,
-                              "decision_flip_to_candidate": flip}
-    with open(out_path, "w") as fh:
-        fh.write(json.dumps(out, indent=1))
-    print(json.dumps({k: v["best_of_3"] for k, v in out["pairs"].items()}))
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_QP_r12.json"
+PAIRS = [
+    ("sketch_quantile_summary_events", quantile_summary_shared_n),
+    ("ml_eval_pinball_loss", pinball_persisted_ev),
+]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered text_rake_keywords vs a phrase-explode
 restructure.
 
@@ -18,18 +17,11 @@ touched twice total (stopword scan + segmentation) and the persisted
 phrase relation (one row per candidate phrase, ~tokens/3 rows) serving
 everything downstream.
 
-Usage: python tools/ab_rake_phrase.py [rounds]  (default 3)
-Writes AB_RAKE_PHRASE_r13.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py rake_phrase [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -114,89 +106,5 @@ def rake_phrase_variant(spark, sf_dir):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-rake-phrase")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["text_rake_keywords"]
-
-    sf001 = "/root/testdata/sf0.01"
-    a, b = _rows(reg(spark, sf001)), _rows(rake_phrase_variant(spark, sf001))
-    ranks.unpersist_all()
-    assert a == b, f"variant diverges at sf0.01:\n{a}\nvs\n{b}"
-    print("equivalence at sf0.01: OK (exact)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    timed(rake_phrase_variant)
-    timed(reg)  # warmups
-    times: dict[str, list] = {"registered": [], "phrase_explode": []}
-    for _ in range(rounds):
-        times["registered"].append(timed(reg))
-        times["phrase_explode"].append(timed(rake_phrase_variant))
-        print("round:", times, flush=True)
-
-    out = {
-        "metric": "ab_rake_phrase_100x_r13",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_RAKE_PHRASE_r13.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_RAKE_PHRASE_r13.json"
+PAIRS = [("text_rake_keywords", rake_phrase_variant)]

@@ -1,8 +1,7 @@
-#!/usr/bin/env python
 """Interleaved A/B: recs_catalog_coverage half-pair + symmetrize
-(registered, round 12) vs the round-11 pa ≠ pb self-join form, plus
-the missing DuckDB twin timing (r11 verdict item #4 — the 21.4 s probe
-row was the only expensive query with a one-sided measurement).
+(registered, round 12) vs the round-11 pa ≠ pb self-join form (r11
+verdict item #4 — the 21.4 s probe row). The DuckDB twin of this query
+is timed by tools/scale_probe.py.
 
 Cosine is symmetric, so the r12 form aggregates per-basket pairs once
 per UNORDERED pair (pa < pb) and emits both orientations from the
@@ -11,31 +10,28 @@ Interleaved N,O,N,O,N,O in one process after warming both, per the
 AB_KMV_r11 discipline; decision rule: keep iff best-of-3 beats the old
 form by more than the 20% noise band.
 
-Usage: python tools/ab_recs_coverage.py [out_json]
+Both forms end in the same one-row coverage / popularity-lift tail
+(ab_recs_repart.coverage_panel), so they return the same rows.
+
+Usage: python tools/ab.py recs_coverage [rounds]
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
 
-from tools.scale_probe import SRC_SF, duck_time
+from tools.ab_recs_repart import coverage_panel
 
 
-def _coverage_unordered_baseline(spark, sf_dir):
+def coverage_unordered_baseline(spark, sf_dir):
     """Round-11 registered form (pa ≠ pb basket self-join; both
     orientations shuffled into the pair agg) — A/B baseline only."""
     from pyspark.sql import Window
 
+    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
-    op = (
+    op = track_persisted(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
@@ -86,90 +82,8 @@ def _coverage_unordered_baseline(spark, sf_dir):
         F.sum("f").cast("long").alias("rec_slots"),
         F.max("f").cast("long").alias("max_item_freq"),
     )
-    return rec.crossJoin(F.broadcast(n_items))
+    return coverage_panel(rec, n_items)
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "AB_RECS_r12.json"
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-
-    dir100 = ensure(
-        SRC_SF,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-recs-coverage")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    registered = registry.spark_queries()["recs_catalog_coverage"]
-    forms = {
-        "half_pair_registered": registered,
-        "unordered_baseline": _coverage_unordered_baseline,
-    }
-
-    def run_once(fn) -> float:
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        spark.catalog.clearCache()  # both forms persist the op relation
-        return dt
-
-    spark.read.parquet(os.path.join(dir100, "lineitem.parquet")).count()
-    for fn in forms.values():
-        run_once(fn)
-
-    runs: dict[str, list[float]] = {k: [] for k in forms}
-    for _ in range(3):
-        for k in ("half_pair_registered", "unordered_baseline"):
-            runs[k].append(round(run_once(forms[k]), 3))
-            print(f"{k}: {runs[k][-1]}s", flush=True)
-
-    best = {k: min(v) for k, v in runs.items()}
-    keep = best["half_pair_registered"] < 0.8 * best["unordered_baseline"]
-
-    # the missing two-sided row: time the DuckDB oracle twin once
-    duck = duck_time(registry.oracle_queries()["recs_catalog_coverage"], dir100)
-
-    out = {
-        "metric": "recs_coverage_half_pair_interleaved_ab",
-        "unit": "sec",
-        "dir": "100x replica (60M lineitem)",
-        "runs": runs,
-        "best_of_3": best,
-        "duckdb_twin": duck,
-        "noise_band": 0.2,
-        "decision_keep_half_pair_form": keep,
-        "history": {"r11_probe_unordered_sequential": 21.4},
-    }
-    with open(out_path, "w") as fh:
-        fh.write(json.dumps(out, indent=1))
-    print(json.dumps(out["best_of_3"]), "duck:", duck, "keep:", keep)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_RECS_r12.json"
+PAIRS = [("recs_catalog_coverage", coverage_unordered_baseline)]

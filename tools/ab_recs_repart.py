@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered recs_catalog_coverage vs an
 orderkey-pre-partitioned form (guide §2.4, r13 verdict #3).
 
@@ -19,18 +18,11 @@ the join exchanges above the cache are UNCHANGED — Spark 4 applies
 AQE inside cached plans and does not expose their partitioning to the
 outer join). Same relation, same rows.
 
-Usage: python tools/ab_recs_repart.py [rounds]  (default 3)
-Writes AB_RECS_REPART_r14.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py recs_repart [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -110,6 +102,12 @@ def recs_repart_variant(spark, sf_dir):
         F.sum("f").cast("long").alias("rec_slots"),
         F.max("f").cast("long").alias("max_item_freq"),
     )
+    return coverage_panel(rec, n_items)
+
+
+def coverage_panel(rec, n_items):
+    """The registered tail: one row of coverage and popularity-bias
+    ratios from the recommended-item and catalog aggregates."""
     avg_rec = F.col("pop_rec_w").cast("double") / F.col("rec_slots").cast(
         "double"
     )
@@ -134,94 +132,5 @@ def recs_repart_variant(spark, sf_dir):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-recs-repart")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["recs_catalog_coverage"]
-
-    for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        a, b = _rows(reg(spark, sf)), _rows(recs_repart_variant(spark, sf))
-        ranks.unpersist_all()
-        assert a == b, f"variant diverges at {sf}:\n{a}\nvs\n{b}"
-        print(f"equivalence at {sf}: OK (exact, {len(a)} rows)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    timed(recs_repart_variant)
-    timed(reg)  # warmups
-    times: dict[str, list] = {"registered": [], "repart_orderkey": []}
-    for _ in range(rounds):
-        times["registered"].append(timed(reg))
-        times["repart_orderkey"].append(timed(recs_repart_variant))
-        print("round:", times, flush=True)
-
-    out = {
-        "metric": "ab_recs_repart_100x_r14",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-        "note": (
-            "post-r14 persist tracking: both arms honest-cold per "
-            "iteration (the r13 21.4 s probe row was partially "
-            "cache-served)"
-        ),
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_RECS_REPART_r14.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_RECS_REPART_r14.json"
+PAIRS = [("recs_catalog_coverage", recs_repart_variant)]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered text_span_dedup_stats vs two rewrites
 (r13 verdict #2 — the heaviest non-timeout probe row, 23 s at 100x).
 
@@ -24,21 +23,14 @@ token's bytes are hashed ONCE instead of once per covering gram
 (8x less string hashing; the rotation spacing keeps permuted grams
 distinct). The fingerprint is internal to the plan (the oracle
 recomputes on raw gram strings), so any injective-on-this-corpus
-fingerprint yields identical output — proven by the exact-equality
-assertions below and the oracle gate.
+fingerprint yields identical output — proven by tools/ab.py's
+exact-equality check and the oracle gate.
 
-Usage: python tools/ab_span_stats.py [rounds]  (default 3)
-Writes AB_SPAN_STATS_r14.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py span_stats [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -121,97 +113,8 @@ def span_stats_tokenhash_variant(spark, sf_dir):
     return _finish(occ)
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-span-stats")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["text_span_dedup_stats"]
-
-    variants = {
-        "window": span_stats_window_variant,
-        "window_tokenhash": span_stats_tokenhash_variant,
-    }
-    for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        a = _rows(reg(spark, sf))
-        for name, fn in variants.items():
-            b = _rows(fn(spark, sf))
-            assert a == b, f"{name} diverges at {sf}"
-        ranks.unpersist_all()
-        print(f"equivalence at {sf}: OK (exact, {len(a)} rows)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    for fn in (reg, *variants.values()):  # warmup
-        timed(fn)
-    times: dict[str, list] = {"registered": [], "window": [],
-                              "window_tokenhash": []}
-    for _ in range(rounds):
-        times["registered"].append(timed(reg))
-        for name, fn in variants.items():
-            times[name].append(timed(fn))
-        print("round:", times, flush=True)
-
-    out = {
-        "metric": "ab_span_stats_100x_r14",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_SPAN_STATS_r14.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_SPAN_STATS_r14.json"
+PAIRS = [
+    ("text_span_dedup_stats", span_stats_window_variant),
+    ("text_span_dedup_stats", span_stats_tokenhash_variant),
+]

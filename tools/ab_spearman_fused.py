@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: ml_eval_spearman_rho registered (two independent
 rank scans + event_id join) vs a FUSED form that chains the second
 ordered_scan over the first scan's output, carrying r1 through — no
@@ -8,24 +7,15 @@ rank join at all (r11 verdict perf-weak list: 9.6 s / 3.2x at 100x,
 Same output, same oracle. Decision rule: flip iff the fused best-of-3
 beats the registered best-of-3 by more than the 20% noise band.
 
-Usage: python tools/ab_spearman_fused.py [out_json]
+Usage: python tools/ab.py spearman_fused [rounds]
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
 
-from tools.scale_probe import SRC_SF
 
-
-def _spearman_fused(spark, sf_dir):
+def spearman_fused(spark, sf_dir):
     """Candidate: r2's scan rides r1's output — join-free."""
     from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
     from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -60,79 +50,5 @@ def _spearman_fused(spark, sf_dir):
     )
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "AB_SPEARMAN_r12.json"
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    dir100 = ensure(
-        SRC_SF,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-spearman-fused")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    registered = registry.spark_queries()["ml_eval_spearman_rho"]
-    forms = {"registered_join": registered, "fused_chain": _spearman_fused}
-
-    def run_once(fn) -> float:
-        df = fn(spark, dir100)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return dt
-
-    spark.read.parquet(os.path.join(dir100, "events.parquet")).count()
-    for fn in forms.values():
-        run_once(fn)
-
-    runs: dict[str, list[float]] = {k: [] for k in forms}
-    for _ in range(3):
-        for k in ("registered_join", "fused_chain"):
-            runs[k].append(round(run_once(forms[k]), 3))
-            print(f"{k}: {runs[k][-1]}s", flush=True)
-
-    best = {k: min(v) for k, v in runs.items()}
-    flip = best["fused_chain"] < 0.8 * best["registered_join"]
-    out = {
-        "metric": "spearman_fused_chain_interleaved_ab",
-        "unit": "sec",
-        "dir": "100x replica (10M events)",
-        "runs": runs,
-        "best_of_3": best,
-        "noise_band": 0.2,
-        "decision_flip_to_fused": flip,
-        "history": {"r11_probe_registered_sequential": 9.6},
-    }
-    with open(out_path, "w") as fh:
-        fh.write(json.dumps(out, indent=1))
-    print(json.dumps(out["best_of_3"]), "flip:", flip)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_SPEARMAN_r12.json"
+PAIRS = [("ml_eval_spearman_rho", spearman_fused)]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B pricing the DECIMAL exactness tax on the Welch t
 moments (r13; floor_adjusted adjudicated the row plan_bound at 2.5 s
 data-dependent cost on the 100x replica).
@@ -7,20 +6,14 @@ Registered form: per-row c*c products summed as DECIMAL(38,0) — the
 scale-safe convention (at 100 TB row counts an int64 sum of c^2 <=
 3.6e9-sized products overflows). Variant: identical plan with the
 moment sums in BIGINT, exact AT THIS REPLICA's scale (10M rows x
-3.6e9 <= 3.6e16 << 2^63; asserted) — so any timing gap is purely the
+3.6e9 <= 3.6e16 << 2^63; under ANSI mode an overflow raises instead
+of wrapping) — so any timing gap is purely the
 decimal arithmetic, and the outputs must be bit-identical.
 
-Usage: python tools/ab_welch_decimal.py [rounds]   (default 3)
+Usage: python tools/ab.py welch_decimal [rounds]
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -89,68 +82,5 @@ def welch_int64_variant(spark, sf_dir):
     )
 
 
-def main():
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata", "sf10r",
-        ),
-        100,
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-welch-decimal")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = registry.spark_queries()
-
-    # exactness guard + bit-identical outputs at the replica scale
-    a = qs["stats_welch_ttest"](spark, dir100).collect()
-    b = welch_int64_variant(spark, dir100).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b], (a, b)
-    n_rows = a[0]["n_a"] + a[0]["n_b"]
-    assert n_rows * (60_000 ** 2) < 2 ** 62, "int64 bound violated"
-
-    times = {"registered_decimal": [], "int64_moments": []}
-    for _ in range(rounds):
-        for name, fn in (
-            ("registered_decimal", qs["stats_welch_ttest"]),
-            ("int64_moments", welch_int64_variant),
-        ):
-            df = fn(spark, dir100)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            times[name].append(round(time.perf_counter() - t0, 2))
-    out = {
-        "metric": "ab_welch_decimal_tax_100x",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-        "outputs_bit_identical": True,
-        "note": (
-            "int64 variant exact only up to ~2.5e9 rows of <=60000-cent "
-            "values; registered form keeps DECIMAL(38,0) moments as the "
-            "100-TB-safe convention. The gap prices that convention on "
-            "this replica (same decimal-tax class as q1_pricing_summary)."
-        ),
-    }
-    print(json.dumps(out))
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "AB_WELCH_r13.json"), "w") as f:
-        json.dump(out, f, indent=1)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_WELCH_r13.json"
+PAIRS = [("stats_welch_ttest", welch_int64_variant)]

@@ -1,4 +1,3 @@
-#!/usr/bin/env python
 """Interleaved A/B: registered ml_eval_wer (per-row JVM levenshtein)
 vs a batched NumPy two-row DP in mapInPandas (r13 verdict #5 — "run
 ONE A/B; ship or commit the measured rejection").
@@ -15,18 +14,11 @@ Integer DP — exactly the levenshtein recurrence, so distances are
 bit-identical; the question is purely whether batched NumPy beats the
 JVM's per-row char loop + the Arrow boundary cost.
 
-Usage: python tools/ab_wer_numpy.py [rounds]  (default 3)
-Writes AB_WER_NUMPY_r14.json. Flip iff >20% at the 100x replica.
+Usage: python tools/ab.py wer_numpy [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -156,90 +148,5 @@ def wer_numpy_variant(spark, sf_dir):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-
-    from pyspark.sql import SparkSession
-
-    from tools.make_benchdata import ensure
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-wer-numpy")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = registry.spark_queries()
-    reg = queries["ml_eval_wer"]
-
-    for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        a, b = _rows(reg(spark, sf)), _rows(wer_numpy_variant(spark, sf))
-        ranks.unpersist_all()
-        assert a == b, f"variant diverges at {sf}"
-        print(f"equivalence at {sf}: OK (exact, {len(a)} rows)")
-
-    dir100 = ensure(
-        "/root/testdata/sf0.1",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "benchdata",
-            "sf10r",
-        ),
-        100,
-    )
-
-    def timed(fn):
-        # both arms eager-class (the vocab collect runs at construction)
-        t0 = time.perf_counter()
-        df = fn(spark, dir100)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        ranks.unpersist_all()
-        return round(dt, 2)
-
-    timed(wer_numpy_variant)
-    timed(reg)  # warmups
-    times: dict[str, list] = {"registered_jvm": [], "numpy_batched_dp": []}
-    for _ in range(rounds):
-        times["registered_jvm"].append(timed(reg))
-        times["numpy_batched_dp"].append(timed(wer_numpy_variant))
-        print("round:", times, flush=True)
-
-    out = {
-        "metric": "ab_wer_numpy_100x_r14",
-        "times": times,
-        "best": {k: min(v) for k, v in times.items()},
-    }
-    print(json.dumps(out))
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "AB_WER_NUMPY_r14.json",
-        ),
-        "w",
-    ) as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()
+ARTIFACT = "AB_WER_NUMPY_r14.json"
+PAIRS = [("ml_eval_wer", wer_numpy_variant)]

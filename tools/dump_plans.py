@@ -1,16 +1,27 @@
 #!/usr/bin/env python
-"""Render PLANS.md: the executed physical-plan summary of every bench
-headline query at $SPARK_GRAFT_SF_DIR — shuffle counts, join strategies,
-top-k physical ops, and per-scan pushdown/pruning evidence.
+"""Plan evidence at $SPARK_GRAFT_SF_DIR, in two modes.
 
-This is the ".explain() and iterate" loop frozen as a reviewable
-artifact: regenerate after plan-affecting changes with
+Default: render PLANS.md, the executed physical-plan summary of every
+bench headline query — shuffle counts, join strategies, top-k physical
+ops, and per-scan pushdown/pruning evidence. This is the ".explain()
+and iterate" loop frozen as a reviewable artifact: regenerate after
+plan-affecting changes with
 
     python tools/dump_plans.py > PLANS.md
+
+Per query: write ``explain("formatted")`` plus the AQE-final executed
+plan of each named query to DIR/<query>_<S>.txt
+
+    python tools/dump_plans.py --out plans/r14 --suffix after QUERY...
+
+Run it once in a checkout of the commit before a plan change (suffix
+``before``) and once after it (suffix ``after``), so plan claims can be
+checked against the two files.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -180,14 +191,36 @@ EXTRA = [
 ]
 
 
-def main() -> None:
-    import bench
-    from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.plans import plan_summary
-    from wikipedia_data_pipeline_spark.session import get_spark
+def dump_query_plans(spark, queries, names, out_dir, suffix) -> None:
+    jvm = spark._jvm
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        if name not in queries:
+            print(f"SKIP {name}: not registered")
+            continue
+        df = queries[name](spark, SF_DIR)
+        formatted = jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        # Execute so AQE re-planning settles (isFinalPlan=true), then
+        # append the final plan — the initial formatted plan alone shows
+        # only AQE's first guess at join strategies/partition counts.
+        df.write.format("noop").mode("overwrite").save()
+        final = df._jdf.queryExecution().executedPlan().toString()
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(f"== {name} @ {suffix} (sf dir: {SF_DIR}) ==\n")
+            f.write("\n-- explain('formatted'), pre-execution --\n")
+            f.write(formatted)
+            f.write("\n-- AQE final executed plan (after noop write) --\n")
+            f.write(final)
+            f.write("\n")
+        print(f"WROTE {path}")
 
-    spark = get_spark("plan-dump")
-    queries = registry.spark_queries()
+
+def print_plans_md(spark, queries) -> None:
+    import bench
+    from wikipedia_data_pipeline_spark.plans import plan_summary
 
     print("# Physical-plan evidence (headline queries)")
     print()
@@ -223,6 +256,28 @@ def main() -> None:
             if s["pushed_filters"] and s["pushed_filters"] != "[]":
                 print(f"  - pushed: `{s['pushed_filters']}`")
         print()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description="Dump query plans.")
+    ap.add_argument("--out", help="per-query mode: directory to write")
+    ap.add_argument("--suffix", help="per-query mode: file-name suffix")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.out and not (args.suffix and args.queries):
+        ap.error("--out needs --suffix and at least one QUERY")
+    if not args.out and (args.suffix or args.queries):
+        ap.error("--suffix and QUERY need --out")
+
+    from wikipedia_data_pipeline_spark import registry
+    from wikipedia_data_pipeline_spark.session import get_spark
+
+    spark = get_spark("plan-dump")
+    queries = registry.spark_queries()
+    if args.out:
+        dump_query_plans(spark, queries, args.queries, args.out, args.suffix)
+    else:
+        print_plans_md(spark, queries)
     spark.stop()
 
 

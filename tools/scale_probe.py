@@ -1130,11 +1130,10 @@ def main() -> None:
         else BASELINES
     )
 
-    from pyspark.sql import SparkSession
-
+    from bench import run_spark
     from tools.make_benchdata import ensure
     from wikipedia_data_pipeline_spark import registry
-    from wikipedia_data_pipeline_spark.operators import ranks
+    from wikipedia_data_pipeline_spark.session import get_spark
 
     dir100 = ensure(
         SRC_SF,
@@ -1142,22 +1141,7 @@ def main() -> None:
                      "benchdata", "sf10r"),
         100,
     )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-probe-100x")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .getOrCreate()
-    )
+    spark = get_spark("scale-probe-100x")
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = registry.spark_queries()
@@ -1176,25 +1160,11 @@ def main() -> None:
     spark_t: dict[str, float] = {}
     duck_t: dict = {}
 
-    eager = registry.eager_queries()
-
-    def time_spark(fn, name=None):
-        """Best-of-3 noop-write time. EAGER queries run their jobs at
-        CONSTRUCTION, so for those the timer starts before fn() — the
-        lazy default keeps construction (plan building, ms) outside
-        the window to stay comparable with prior rounds' artifacts."""
-        best = float("inf")
-        for _ in range(3):
-            if name in eager:
-                t0 = time.perf_counter()
-                df = fn(spark, dir100)
-            else:
-                df = fn(spark, dir100)
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            ranks.unpersist_all()
-        return round(best, 2)
+    def best_of_3(fns, name, sf_dir=dir100):
+        """Best-of-3 noop-write time through the shared loop; the global
+        warmup above stands in for per-query warm-ups."""
+        best, _, _ = run_spark(spark, fns, sf_dir, [name], warmups=0, iters=3)
+        return best[name]
 
     # merge-resume: carry prior results for names not re-probed, and
     # any extra top-level sections (manual A/B notes) verbatim
@@ -1207,13 +1177,13 @@ def main() -> None:
             duck_t.update(prior.get("duckdb", {}))
 
     for name in probe:
-        spark_t[name] = time_spark(queries[name], name)
+        spark_t[name] = best_of_3(queries, name)
         print(f"spark  {name}: {spark_t[name]}s", flush=True)
         if name in oracles and name not in DUCK_SKIP:
             duck_t[name] = duck_time(oracles[name], dir100)
             print(f"duckdb {name}: {duck_t[name]}", flush=True)
-    for name, fn in baselines.items():
-        spark_t[name] = time_spark(fn)
+    for name in baselines:
+        spark_t[name] = best_of_3(baselines, name)
         print(f"spark  {name}: {spark_t[name]}s", flush=True)
 
     # floor-adjusted ratios for the worst sub-3s rows (r12 verdict #6);
@@ -1226,14 +1196,8 @@ def main() -> None:
             d100 = duck_t.get(name)
             if not isinstance(s100, (int, float)):
                 continue
-            fs = float("inf")
-            for _ in range(3):
-                df = queries[name](spark, FLOOR_SF)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                fs = min(fs, time.perf_counter() - t0)
-                ranks.unpersist_all()
-            row = {"spark_100x": s100, "spark_floor": round(fs, 2),
+            fs = best_of_3(queries, name, FLOOR_SF)
+            row = {"spark_100x": s100, "spark_floor": fs,
                    "spark_adj": round(max(s100 - fs, 0.0), 2)}
             if isinstance(d100, (int, float)):
                 fd = duck_time(oracles[name], FLOOR_SF)
@@ -1300,7 +1264,7 @@ def main() -> None:
             "global_ntile consumers (measured slower at this scale; "
             "registered queries keep the hierarchical rank form)."
             % (
-                cpus,
+                spark.sparkContext.defaultParallelism,
                 int(DUCK_BUDGET_S),
                 round(
                     spark_t["q1_pricing_summary"]

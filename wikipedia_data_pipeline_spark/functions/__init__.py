@@ -99,6 +99,17 @@ def sql_dec_avg(expr: str, alias: str) -> str:
     )
 
 
+def round2(col: Column) -> Column:
+    """Two-decimal rounding as the reference computes it,
+    ``Math.round(x * 100) / 100`` (DuckDB's ``round(x, 2)`` agrees):
+    scale the double first, then round half-up. ``F.round(x, 2)``
+    instead rounds the decimal expansion of x itself, so at binary
+    near-ties it lands one cent lower: 0.05 * 2.3 = 0.11499999999999999
+    gives 0.11 there, while the scaled 11.5 rounds to the reference's
+    0.12."""
+    return F.round(col * 100, 0) / 100
+
+
 def ts_us(col: str = "ts") -> Column:
     """events.ts in the engine's event-time domain: BIGINT µs since the
     epoch. ``sources.tables.load_table`` / ``streaming.pipeline.read_events_stream``

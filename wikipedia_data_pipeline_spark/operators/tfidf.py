@@ -26,6 +26,10 @@ Both aggs partial-aggregate map-side before shuffling. The idf relation
 is |distinct vocab| rows (~millions at web scale, a few MB–GB) —
 broadcastable; if vocabulary ever outgrows broadcast, drop the hint and
 AQE picks sort-merge on the same plan. No driver-side state anywhere.
+
+Every 2-decimal round is ``functions.round2``, the reference's
+``Math.round(x * 100) / 100`` — not ``F.round(x, 2)``, which differs
+from it at binary near-ties.
 """
 
 from __future__ import annotations
@@ -33,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.functions import round2
 from wikipedia_data_pipeline_spark.operators.text import tokenize, with_raw_token_count
 
 PER_DOC_VOCAB_CAP = 20000  # DocInfo.java:39
@@ -74,7 +79,7 @@ def doc_tf(
         .filter(F.col("rn") <= cap)
         .drop("rn")
         .join(denom, "doc_id")
-        .withColumn("tf", F.round(F.col("count") / F.col("raw_token_count"), 2))
+        .withColumn("tf", round2(F.col("count") / F.col("raw_token_count")))
         .filter(F.col("tf") > 0)
         .select("doc_id", "word", "count", "tf")
     )
@@ -99,7 +104,7 @@ def idf(documents: DataFrame, counts: DataFrame | None = None) -> DataFrame:
     return (
         df_counts.crossJoin(F.broadcast(n_docs))
         .withColumn(
-            "idf", F.round(F.log10(F.col("n_docs").cast("double") / F.col("df")), 2)
+            "idf", round2(F.log10(F.col("n_docs").cast("double") / F.col("df")))
         )
         .filter(F.col("idf") > 0)
         .select("word", "idf")
@@ -115,7 +120,7 @@ def tfidf_join(doc_tf_rel: DataFrame, idf_rel: DataFrame) -> DataFrame:
     """
     return (
         doc_tf_rel.join(F.broadcast(idf_rel), "word", "inner")
-        .withColumn("tf_idf", F.round(F.col("tf") * F.col("idf"), 2))
+        .withColumn("tf_idf", round2(F.col("tf") * F.col("idf")))
         .select("doc_id", "word", "count", "tf", "tf_idf")
     )
 
@@ -190,7 +195,7 @@ def tfidf_with_df(
         df_counts.crossJoin(F.broadcast(n_docs))
         .withColumn(
             "idf",
-            F.round(F.log10(F.col("n_docs").cast("double") / F.col("df")), 2),
+            round2(F.log10(F.col("n_docs").cast("double") / F.col("df"))),
         )
         .where(F.col("idf") > 0)
     )
@@ -202,6 +207,6 @@ def tfidf_with_df(
     return (
         doc_tf(documents, counts=counts)
         .join(F.broadcast(idf_rel), "word", "inner")
-        .withColumn("tf_idf", F.round(F.col("tf") * F.col("idf"), 2))
+        .withColumn("tf_idf", round2(F.col("tf") * F.col("idf")))
         .select("doc_id", "word", "count", "tf", "tf_idf", "df")
     )

@@ -1119,7 +1119,7 @@ def stats_hodges_lehmann(spark, sf_dir):
     EAGER; exactly one scan of the fact, no iterative jobs (the
     collect itself runs as <= 3 scheduler jobs under AQE — measured
     via statusTracker, recorded in _HL_LAST_COUNT_JOBS, pinned in
-    tests/test_round13.py)."""
+    tests/test_round14.py::test_hl_job_count_is_measured)."""
     global _HL_LAST_COUNT_JOBS, _HL_GROUP_SEQ
     import numpy as np
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.functions import round2
 from wikipedia_data_pipeline_spark.operators import tfidf as T
 from wikipedia_data_pipeline_spark.operators.text import tokenize
 from wikipedia_data_pipeline_spark.registry import register
@@ -279,18 +280,14 @@ def tfidf_incremental_idf_refresh(spark, sf_dir):
         .alias("df_full"),
         F.when(
             F.col("df_base_raw").isNotNull(),
-            F.round(
-                F.log10(
-                    F.col("n_base").cast("double") / F.col("df_base_raw")
-                ),
-                2,
+            round2(
+                F.log10(F.col("n_base").cast("double") / F.col("df_base_raw"))
             ),
         ).alias("idf_old"),
-        F.round(
+        round2(
             F.log10(
                 (F.col("n_base") + F.col("n_delta")).cast("double")
                 / (F.coalesce("df_base_raw", F.lit(0)) + F.col("df_delta"))
-            ),
-            2,
+            )
         ).alias("idf_new"),
     )
