@@ -96,8 +96,8 @@ def run_spark(spark, queries, sf_dir, names, warmups=2, iters=5, eager=None):
     before construction; for lazy names construction (plan building,
     ms) stays outside the window.
 
-    Every persist in the package is registered with
-    ranks.track_persisted, so the unpersist_all after each run releases
+    Every cache in the package that outlives its function is made with
+    ranks.pin, so the unpersist_all after each run releases
     ALL plan-internal caches — otherwise Spark's plan-canonicalized
     cache lookup would serve run 1's cached subtrees to runs 2..N and
     silently exclude them from the timing."""
@@ -176,12 +176,23 @@ def _cpu_ticks():
         return None, None
 
 
-def _steal_pct(t0, t1):
+def steal_guard(t0, t1) -> dict:
+    """CPU steal between two ``_cpu_ticks()`` samples as
+    ``{"steal_pct": pct}``, plus ``"contaminated": True`` above
+    $SPARK_GRAFT_STEAL_MAX% (default 2.0): a neighbor VM then ate a
+    material slice of this host's CPU, so the timings measure
+    contention, not the engine. Empty where /proc/stat is unavailable.
+    bench.py, tools/ab.py and tools/scale_probe.py all mark their
+    artifacts with it."""
     s0, tot0 = t0
     s1, tot1 = t1
     if s0 is None or s1 is None or tot1 <= tot0:
-        return None
-    return round(100.0 * (s1 - s0) / (tot1 - tot0), 3)
+        return {}
+    steal = round(100.0 * (s1 - s0) / (tot1 - tot0), 3)
+    out = {"steal_pct": steal}
+    if steal > float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "2.0")):
+        out["contaminated"] = True
+    return out
 
 
 def _ratio(spark_t, duck_t, names):
@@ -311,17 +322,10 @@ def main() -> None:
             }
         out["scaled100"] = block
 
-    # Steal guard: the pct covers the whole measured span (every timed
-    # block above). >SPARK_GRAFT_STEAL_MAX% means a neighbor VM ate a
-    # material slice of this host's CPU during the run — the numbers
-    # measure contention, not the engine, so mark the artifact and keep
-    # it away from BENCH_full_latest.json.
-    steal = _steal_pct(ticks0, _cpu_ticks())
-    steal_max = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "2.0"))
-    if steal is not None:
-        out["steal_pct"] = steal
-        if steal > steal_max:
-            out["contaminated"] = True
+    # The steal covers the whole measured span (every timed block
+    # above); a contaminated artifact is kept away from
+    # BENCH_full_latest.json below.
+    out.update(steal_guard(ticks0, _cpu_ticks()))
 
     print(json.dumps(out))
     # The driver captures only a 2,000-char tail of stdout, which has

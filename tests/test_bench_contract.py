@@ -51,3 +51,15 @@ def test_scaled100_block_names_are_registered_oracle_twins():
     oracles = registry.oracle_queries()
     assert {"q1_pricing_summary", "q1_pricing_summary_cents"} <= set(names)
     assert all(n in oracles for n in names), [n for n in names if n not in oracles]
+
+
+def test_steal_guard_marks_runs_above_the_limit(monkeypatch):
+    """(steal, total) jiffy pairs as _cpu_ticks reads them from the
+    aggregate cpu line of /proc/stat: 1% steal passes, 5% is marked."""
+    monkeypatch.delenv("SPARK_GRAFT_STEAL_MAX", raising=False)
+    assert bench.steal_guard((100, 10_000), (110, 11_000)) == {"steal_pct": 1.0}
+    assert bench.steal_guard((100, 10_000), (150, 11_000)) == {
+        "steal_pct": 5.0,
+        "contaminated": True,
+    }
+    assert bench.steal_guard((None, None), (None, None)) == {}

@@ -1,147 +1,13 @@
-"""Round-14 optimization-round tests.
-
-1. Persist hygiene (r13 verdict #1): every ``.persist()``/``.cache()``
-   in the package must either be registered with
-   ``ranks.track_persisted`` IN THE SAME EXPRESSION or live in a
-   function on the explicit allowlist below (each entry is a function
-   that provably releases its persists before returning, or tracks the
-   result via a separate statement). A raw persist is worse than a
-   leak: Spark's CacheManager matches relations by canonicalized
-   logical plan, so an identical re-run silently reads the prior run's
-   cache — best-of-N timing then measures a partially-cached plan
-   (this is how tfidf_full's and dedup_minhash_lsh's r13 headline
-   numbers skipped tokenize/shingle work on iterations 2..N).
-
-2. Hodges-Lehmann job-count instrumentation (r13 verdict #6): the
-   count is now MEASURED via statusTracker around the collect, not
-   hardcoded.
+"""Round-14 tests: the measured Hodges-Lehmann job count (r13 verdict
+#6) and the operator-internal equivalences the r14 rewrites rely on.
+The persist guard lives with the cache owner, in tests/test_ranks.py.
 """
 
 from __future__ import annotations
 
-import ast
-import os
-
 import pytest
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "wikipedia_data_pipeline_spark")
-
-# (relative path, enclosing function) -> why a raw persist is OK there.
-# Every entry must ALSO release or track in-body (asserted below via a
-# textual release-marker check), so the allowlist cannot rot into a
-# loophole.
-ALLOWED = {
-    # iterative operators: in-loop persists are unpersisted inside the
-    # function; the returned relation is registered via a separate
-    # track_persisted(...) statement
-    ("operators/graph.py", "pagerank_fixed_point"),
-    ("operators/graph.py", "label_propagation"),
-    ("operators/graph.py", "triangle_stats"),
-    ("operators/graph.py", "kcore_peel"),
-    ("operators/graph.py", "bfs_hops"),
-    ("operators/graph.py", "connected_components"),
-    # edges persisted for the label loop, released before returning
-    ("operators/dedup.py", "near_dup_clusters"),
-    # persist -> write index -> unpersist, all within the function
-    ("operators/similarity.py", "build_pq_index"),
-    ("operators/similarity.py", "build_ivf_index"),
-    # persist + count to materialize the edge relation once, explicitly
-    # unpersisted after connected_components consumes it
-    ("queries/dedup_queries.py", "dedup_connected_components"),
-    # streaming result cache: tracked via a separate statement (the
-    # cache is load-bearing against a removed temp store)
-    ("streaming/pipeline.py", "run_foreach_batch_compaction"),
-}
-_RELEASE_MARKERS = ("track_persisted", ".unpersist()")
-
-
-def _persist_sites():
-    """Yield (relpath, funcname, lineno, tracked_inline) for every
-    .persist()/.cache() call in the package."""
-    for root, _dirs, files in os.walk(PKG):
-        for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(root, fn)
-            rel = os.path.relpath(path, PKG)
-            with open(path) as fh:
-                src = fh.read()
-            tree = ast.parse(src)
-            # map each node to its enclosing function name
-            func_of: dict[ast.AST, str] = {}
-
-            def visit(node, fname, funcs):
-                for child in ast.iter_child_nodes(node):
-                    nf = fname
-                    if isinstance(child, (ast.FunctionDef,
-                                          ast.AsyncFunctionDef)):
-                        nf = child.name
-                        funcs[child.name] = child
-                    func_of[child] = nf
-                    visit(child, nf, funcs)
-
-            funcs: dict[str, ast.AST] = {}
-            func_of[tree] = "<module>"
-            visit(tree, "<module>", funcs)
-
-            # inline-tracked detection: persist call has a
-            # track_persisted(...) call among its ancestors — compute
-            # ancestor chains
-            parents: dict[ast.AST, ast.AST] = {}
-            for node in ast.walk(tree):
-                for child in ast.iter_child_nodes(node):
-                    parents[child] = node
-
-            for node in ast.walk(tree):
-                if not (isinstance(node, ast.Call)
-                        and isinstance(node.func, ast.Attribute)
-                        and node.func.attr in ("persist", "cache")):
-                    continue
-                tracked = False
-                p = parents.get(node)
-                while p is not None:
-                    if (isinstance(p, ast.Call)
-                            and isinstance(p.func, ast.Name)
-                            and p.func.id == "track_persisted"):
-                        tracked = True
-                        break
-                    p = parents.get(p)
-                yield rel, func_of.get(node, "<module>"), node.lineno, \
-                    tracked, src, funcs
-
-
-def test_no_untracked_persists():
-    bad = []
-    for rel, fname, lineno, tracked, src, funcs in _persist_sites():
-        if tracked:
-            continue
-        if (rel, fname) in ALLOWED:
-            # the allowlisted function must visibly release or track —
-            # otherwise the allowlist has rotted
-            fnode = funcs.get(fname)
-            body = ast.get_source_segment(src, fnode) if fnode else ""
-            assert any(m in body for m in _RELEASE_MARKERS), (
-                f"{rel}:{fname} is allowlisted but contains no release "
-                f"marker ({_RELEASE_MARKERS})"
-            )
-            continue
-        bad.append(f"{rel}:{lineno} in {fname}")
-    assert not bad, (
-        "raw (untracked, un-allowlisted) persist/cache sites — wrap in "
-        "ranks.track_persisted or release in-function and allowlist:\n  "
-        + "\n  ".join(bad)
-    )
-
-
-def test_allowlist_entries_exist():
-    """Every allowlist entry must match a real function that still
-    persists — stale entries get removed, not accumulated."""
-    live = {(rel, fname)
-            for rel, fname, _l, tracked, _s, _f in _persist_sites()
-            if not tracked}
-    stale = ALLOWED - live
-    assert not stale, f"stale allowlist entries: {sorted(stale)}"
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 
 
 def test_hl_job_count_is_measured(spark, sf_dir):
@@ -233,11 +99,9 @@ def test_coreset_matrix_walks_identical_greedy_path(spark, sf_dir):
     the r13 per-step greedy loop (Catalyst fold + per-step persist) —
     pinning both the NumPy/accumulate cosine bit-identity and the
     argmax path."""
-    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from wikipedia_data_pipeline_spark.functions import cosine_similarity
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.queries.similarity_queries import (
         _FL_CAND_MAX,
         _FL_K,
@@ -253,10 +117,9 @@ def test_coreset_matrix_walks_identical_greedy_path(spark, sf_dir):
         cosine_similarity(F.col("cemb"), F.col("embedding"))
         * 1_000_000_000.0
     ).cast("long")
-    cover = track_persisted(
+    cover = pin(
         fan_out(emb)
         .select("vec_id", "embedding", F.lit(0).cast("long").alias("cov"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     selected: list = []
     out = []
@@ -282,14 +145,13 @@ def test_coreset_matrix_walks_identical_greedy_path(spark, sf_dir):
         out.append((step, int(best.cid), int(best.gain), total))
         if step < _FL_K:
             ch = cand.filter(F.col("cid") == int(best.cid)).select("cemb")
-            cover = track_persisted(
+            cover = pin(
                 cover.crossJoin(F.broadcast(ch))
                 .select(
                     "vec_id",
                     "embedding",
                     F.greatest(F.col("cov"), simq).alias("cov"),
                 )
-                .persist(StorageLevel.MEMORY_AND_DISK)
             )
     got = sorted(
         tuple(r)

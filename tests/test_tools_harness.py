@@ -1,6 +1,7 @@
 """Guards for the one-session, one-timing-loop design of bench.py and
 tools/: every script gets its SparkSession from ``session.get_spark``,
-and every A/B experiment declares pairs that tools/ab.py can check.
+imports the engine of its own checkout, and every A/B experiment
+declares pairs that tools/ab.py can check.
 Needs no 100x replica."""
 
 from __future__ import annotations
@@ -32,12 +33,26 @@ def _experiments():
     )
 
 
-def test_only_session_py_builds_a_spark_session():
-    offenders = []
+def _files_containing(literal: str) -> list[str]:
+    found = []
     for path in _python_files():
         with open(path, encoding="utf-8") as f:
-            if path != SESSION_PY and BUILDER in f.read():
-                offenders.append(os.path.relpath(path, ROOT))
+            if literal in f.read():
+                found.append(os.path.relpath(path, ROOT))
+    return found
+
+
+def test_only_session_py_builds_a_spark_session():
+    offenders = _files_containing(BUILDER)
+    assert offenders == [os.path.relpath(SESSION_PY, ROOT)], offenders
+
+
+def test_no_file_names_a_fixed_checkout():
+    """Scripts and tests put their own checkout on sys.path, derived
+    from __file__, so a copy of the repo imports its own engine: no file
+    names this checkout's absolute path or puts a literal on sys.path."""
+    literal = "sys.path.insert(0" + ', "'  # split so this file does not match
+    offenders = _files_containing(ROOT) + _files_containing(literal)
     assert not offenders, offenders
 
 

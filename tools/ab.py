@@ -16,8 +16,9 @@ runner owns everything else:
    ``bench.run_spark`` at the 100x replica (tools/make_benchdata.py)
    and at sf0.1, on the engine's own session (``session.get_spark``);
 3. the artifact — per-form runs, best, median and quartile spread per
-   scale, the host's CPU steal over the timed span, and the session's
-   effective cores, split size and driver memory.
+   scale, the host's CPU steal over the timed span (marked
+   ``contaminated`` above the bench's limit, ``bench.steal_guard``),
+   and the session's effective cores, split size and driver memory.
 """
 
 from __future__ import annotations
@@ -124,7 +125,7 @@ def main() -> None:
         "rounds": rounds,
         "pairs": pairs,
         "scales": scales,
-        "steal_pct": bench._steal_pct(ticks0, bench._cpu_ticks()),
+        **bench.steal_guard(ticks0, bench._cpu_ticks()),
         "session": session_info(spark),
     }
     print(json.dumps(out))

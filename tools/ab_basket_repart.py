@@ -13,16 +13,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 
 def _op_old(spark, sf_dir):
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
-    return track_persisted(
+    return pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .persist()
     )
 
 

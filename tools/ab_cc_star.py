@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 _THRESHOLD = 0.5
 
 
@@ -58,20 +60,18 @@ def cc_quadratic(spark, sf_dir):
 def cc_star_variant(spark, sf_dir):
     from wikipedia_data_pipeline_spark.operators import dedup as D
     from wikipedia_data_pipeline_spark.operators import graph as G
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    groups = track_persisted(
+    groups = pin(
         docs.groupBy("text")
         .agg(
             F.min("doc_id").alias("doc_id"),
             F.sort_array(F.collect_list("doc_id")).alias("members"),
         )
-        .persist()
     )
     reps = groups.select("doc_id", "text")
-    sh = track_persisted(D.hashed_shingles(reps).persist())
+    sh = pin(D.hashed_shingles(reps))
     cands = D.lsh_candidate_pairs(sh)
     rep_pairs = D.verify_pairs_jaccard(cands, sh, _THRESHOLD).select(
         "doc_a", "doc_b"
@@ -87,7 +87,7 @@ def cc_star_variant(spark, sf_dir):
         )
         .filter(F.col("doc_a") != F.col("doc_b"))
     )
-    # groups/sh are tracked like the registered operator's, so the
+    # groups/sh are pinned like the registered operator's, so the
     # timing loop releases both arms' caches alike between runs.
     edges = rep_pairs.unionByName(stars).persist()
     edges.count()  # materialize once: CC's undirected union reads cache

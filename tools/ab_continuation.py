@@ -5,7 +5,7 @@ now the heaviest non-timeout row. Two independent causes:
 
 1. the boundary-key relation `hk` feeds BOTH sides of the tail=head
    self-join with no persist, so the full normalization pass runs
-   TWICE (Spark does no cross-subtree CSE) — fix: persist (tracked);
+   TWICE (Spark does no cross-subtree CSE) — fix: pin it (``ranks.pin``);
 2. normalization is a PER-TOKEN regexp_replace inside a transform
    lambda (~|tokens| regex invocations per document) — fix: one
    whole-text regex that keeps letters AND the single-space delimiter
@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 _K = 3
 
 
@@ -37,14 +39,6 @@ def _finish(hk):
         .filter(F.col("tail_doc") != F.col("head_doc"))
         .select("tail_doc", "head_doc", "overlap")
     )
-
-
-def _persisted(hk):
-    from pyspark import StorageLevel
-
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    return track_persisted(hk.persist(StorageLevel.MEMORY_AND_DISK))
 
 
 def continuation_persist_only(spark, sf_dir):
@@ -71,7 +65,7 @@ def continuation_persist_only(spark, sf_dir):
             F.concat_ws(" ", F.slice("toks", -_K, _K)).alias("tail"),
         )
     )
-    return _finish(_persisted(hk))
+    return _finish(pin(hk))
 
 
 def continuation_single_regex(spark, sf_dir):
@@ -93,7 +87,7 @@ def continuation_single_regex(spark, sf_dir):
             F.concat_ws(" ", F.slice("toks", -_K, _K)).alias("tail"),
         )
     )
-    return _finish(_persisted(hk))
+    return _finish(pin(hk))
 
 
 ARTIFACT = "AB_CONTINUATION_r14.json"

@@ -14,7 +14,7 @@ quantized cosine vector (q_0..q_{m-1}), so
    bit-identical to the registered ``F.aggregate`` left fold; the
    ann_dim_truncation_recall precedent) — and the JVM applies the
    registered quantization ``round(cos * 1e9) AS BIGINT`` unchanged;
-2. the (vec_id, q_0..q_{m-1}) relation is persisted (tracked);
+2. the (vec_id, q_0..q_{m-1}) relation is pinned;
 3. each greedy step is ONE tiny aggregate over the cached matrix:
    cov = greatest(0, q_selected...) per row, gain_c = sum(greatest(q_c,
    cov) - cov) — all-integer, same values as the registered step, so
@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 _K = 4
 _CAND_MAX = 16
 _UNIT = 1_000_000_000.0
@@ -35,9 +37,7 @@ _UNIT = 1_000_000_000.0
 
 def coreset_matrix_variant(spark, sf_dir):
     import numpy as np
-    from pyspark import StorageLevel
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import fan_out, load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -80,14 +80,14 @@ def coreset_matrix_variant(spark, sf_dir):
     smat = (
         fan_out(emb).select("vec_id", "embedding").mapInPandas(kernel, schema)
     )
-    qmat = track_persisted(
+    qmat = pin(
         smat.select(
             "vec_id",
             *[
                 F.round(F.col(f"s{j}") * _UNIT).cast("long").alias(f"q{j}")
                 for j in range(m)
             ],
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
 
     sel_idx: list[int] = []

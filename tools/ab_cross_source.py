@@ -12,8 +12,8 @@ text-collapse work runs up to 8 times per execution (Spark does no
 cross-subtree CSE).
 
 Candidate:
-1. persist (tracked) `tmap` — text-count-sized, no text payload;
-2. persist (tracked) the GROUPED matrix (≤ |sources|² rows) and
+1. pin `tmap` — text-count-sized, no text payload;
+2. pin the GROUPED matrix (≤ |sources|² rows) and
    derive n_total = Σ n_pairs from it (the quantile-summary N trick),
    so `lab` — and the prefix-filter pair join under it — runs once.
 
@@ -27,14 +27,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 _J = 0.5
 
 
 def cross_source_pinned(spark, sf_dir):
-    from pyspark import StorageLevel
-
     from wikipedia_data_pipeline_spark.operators import dedup as D
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.queries.dedup_queries import (
         JACCARD_THRESHOLD,
     )
@@ -49,13 +48,12 @@ def cross_source_pinned(spark, sf_dir):
     pairs = D.prefix_filter_pairs(
         reps.select("doc_id", "text"), JACCARD_THRESHOLD
     )
-    tmap = track_persisted(
+    tmap = pin(
         reps.join(ts, "text")
         .select(
             F.col("doc_id").alias("t_id"), "source", "cnt",
             has_sh.alias("ok"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     a = tmap.select(
         F.col("t_id").alias("doc_a"),
@@ -105,7 +103,7 @@ def cross_source_pinned(spark, sf_dir):
         .filter(F.col("w") > 0)
     )
     lab = cross_text.unionByName(within)
-    grouped = track_persisted(
+    grouped = pin(
         lab.groupBy("source_lo", "source_hi", "cross_source")
         .agg(
             F.sum("w").cast("long").alias("n_pairs"),
@@ -113,7 +111,6 @@ def cross_source_pinned(spark, sf_dir):
             .cast("long")
             .alias("j_nano_sum"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     tot = grouped.agg(F.sum("n_pairs").cast("long").alias("n_total"))
     return (

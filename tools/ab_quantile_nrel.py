@@ -7,8 +7,8 @@ per-block sort + stride that builds the summary, (2) nrel =
 ev.count() for the target ranks, (3) the true-rank audit BNLJ. But
 the summary's weights sum to the EXACT row count by construction
 (every stride row carries s, the block's last row carries m % s), so
-nrel can be read off the summary for free. Candidate: persist the
-summary (tracked) and derive n = sum(weight) from it — 3 fact passes
+nrel can be read off the summary for free. Candidate: pin the
+summary and derive n = sum(weight) from it — 3 fact passes
 become 2; the per-block sort (the irreducible, result-pinned cost:
 any change to blocking/striding changes the registered rows) and the
 audit scan remain.
@@ -28,23 +28,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 
 def quantile_nrel_variant(spark, sf_dir):
-    from pyspark import StorageLevel
-
     from wikipedia_data_pipeline_spark.operators import profiling as P
-    from wikipedia_data_pipeline_spark.operators.ranks import (
-        ordered_scan,
-        track_persisted,
-    )
+    from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    summary = track_persisted(
-        P.quantile_summary(
-            ev, "value", "event_id", blocks=32, eps=0.02
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    summary = pin(P.quantile_summary(ev, "value", "event_id", blocks=32, eps=0.02))
     scan = ordered_scan(
         summary, ["value", "event_id"], running=[("cum", "weight", "sum")]
     )

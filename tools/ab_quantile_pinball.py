@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 
 _US_PER_DAY = 86_400_000_000
 
@@ -90,15 +92,12 @@ def quantile_summary_shared_n(spark, sf_dir):
 
 def pinball_persisted_ev(spark, sf_dir):
     """Candidate: persist the projected ev so train+test share a scan."""
-    from wikipedia_data_pipeline_spark.operators.ranks import (
-        grouped_exact_quantiles,
-        track_persisted,
-    )
+    from wikipedia_data_pipeline_spark.operators.ranks import grouped_exact_quantiles
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
     ev0 = load_table(spark, sf_dir, "events")
     t0 = ev0.agg(F.min("ts").alias("ts0"))
-    ev = track_persisted(
+    ev = pin(
         ev0.crossJoin(F.broadcast(t0))
         .select(
             "event_type",
@@ -106,7 +105,6 @@ def pinball_persisted_ev(spark, sf_dir):
             F.round(F.col("value") * 1_000_000).cast("long").alias("v_u"),
             (F.expr(f"(ts - ts0) div {_US_PER_DAY}") < 24).alias("is_train"),
         )
-        .persist()
     )
     trn = ev.filter(F.col("is_train")).select("event_type", "v_u", "event_id")
     fc = grouped_exact_quantiles(

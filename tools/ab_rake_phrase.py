@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 _RAKE_K_STOP = 20
 _RAKE_TOPK = 20
 
@@ -32,7 +34,6 @@ _RAKE_TOPK = 20
 def rake_phrase_variant(spark, sf_dir):
     from pyspark.sql import Window
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import fan_out, load_table
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -51,7 +52,7 @@ def rake_phrase_variant(spark, sf_dir):
         tok.join(F.broadcast(stop), "w", "left_anti")
         .withColumn("grp", F.col("p") - F.row_number().over(w_doc))
     )
-    phrase = track_persisted(
+    phrase = pin(
         nons.groupBy("doc_id", "grp")
         .agg(
             F.concat_ws(
@@ -65,7 +66,6 @@ def rake_phrase_variant(spark, sf_dir):
             ).alias("ptext"),
             F.count(F.lit(1)).cast("long").alias("plen"),
         )
-        .persist()
     )
     pw = phrase.select(
         "doc_id",

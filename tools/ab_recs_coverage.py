@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tools.ab_recs_repart import coverage_panel
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 
 
 def coverage_unordered_baseline(spark, sf_dir):
@@ -28,14 +29,12 @@ def coverage_unordered_baseline(spark, sf_dir):
     orientations shuffled into the pair agg) — A/B baseline only."""
     from pyspark.sql import Window
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
-    op = track_persisted(
+    op = pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .persist()
     )
     ic = op.groupBy("l_partkey").agg(F.count(F.lit(1)).cast("long").alias("n"))
     a, b = op.alias("a"), op.alias("b")

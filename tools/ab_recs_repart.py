@@ -26,19 +26,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 
 def recs_repart_variant(spark, sf_dir):
     from pyspark.sql import Window
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
-    op = track_persisted(
+    op = pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .repartition("l_orderkey")
         .distinct()
-        .persist()
     )
     ic = op.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("long").alias("n")

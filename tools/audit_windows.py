@@ -28,10 +28,11 @@ Usage: python tools/audit_windows.py [sf_dir]   # default sf0.001
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # value/score/v cover the distinct-VALUE lineage (KS/MWU/Cliff's/
 # DeLong): a per-distinct-score relation is fact-sized when the score

@@ -30,6 +30,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin  # noqa: E402
+
 SRC_SF = "/root/testdata/sf0.1"
 DUCK_BUDGET_S = 120.0
 
@@ -460,14 +462,10 @@ def _ntile_rfm_variant(spark, sf_dir):
     count (count + slim range exchange + boundary window + broadcast
     back) dominates when the entity-sized relation block-sorts
     cheaply; kept here so the A/B stays in SCALE_PROBE artifacts."""
-    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from wikipedia_data_pipeline_spark.functions import cents_sum
-    from wikipedia_data_pipeline_spark.operators.ranks import (
-        ntile_by_cuts,
-        track_persisted,
-    )
+    from wikipedia_data_pipeline_spark.operators.ranks import ntile_by_cuts
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
@@ -476,7 +474,7 @@ def _ntile_rfm_variant(spark, sf_dir):
         F.count(F.lit(1)).alias("frequency"),
         cents_sum("o_totalprice", "monetary"),
     )
-    agg = track_persisted(agg.persist(StorageLevel.MEMORY_AND_DISK))
+    agg = pin(agg)
     seg = ntile_by_cuts(
         agg,
         [("last_order", "desc"), ("o_custkey", "asc")],
@@ -506,21 +504,17 @@ def _ntile_deciles_variant(spark, sf_dir):
     measured and REJECTED (100× probe: 1.71 s vs 0.87 s for the
     registered global_ntile form; same reasoning as
     _ntile_rfm_variant)."""
-    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from wikipedia_data_pipeline_spark.functions import UNIT, cents_units
-    from wikipedia_data_pipeline_spark.operators.ranks import (
-        ntile_by_cuts,
-        track_persisted,
-    )
+    from wikipedia_data_pipeline_spark.operators.ranks import ntile_by_cuts
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
     cust = orders.groupBy("o_custkey").agg(
         F.sum(cents_units("o_totalprice")).alias("rev_u")
     )
-    cust = track_persisted(cust.persist(StorageLevel.MEMORY_AND_DISK))
+    cust = pin(cust)
     dec = ntile_by_cuts(
         cust, [("rev_u", "desc"), ("o_custkey", "asc")], 10, "decile"
     )
@@ -652,7 +646,6 @@ def _kmv_distinct_multipass_baseline(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from wikipedia_data_pipeline_spark.operators import profiling as P
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.operators.sampling import det_hash
     from wikipedia_data_pipeline_spark.queries.sketch_queries import _KMV_K
     from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -660,9 +653,7 @@ def _kmv_distinct_multipass_baseline(spark, sf_dir):
     K, MOD = _KMV_K, (1 << 31) - 1
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     hsh = ev.select("event_type", det_hash("user_id").alias("h"))
-    sk = track_persisted(
-        P.kmv_min_hashes(hsh, "event_type", "h", k=K).cache()
-    )
+    sk = pin(P.kmv_min_hashes(hsh, "event_type", "h", k=K))
     pertype = sk.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"), F.max("h").alias("hk")
     )
@@ -1130,7 +1121,7 @@ def main() -> None:
         else BASELINES
     )
 
-    from bench import run_spark
+    from bench import _cpu_ticks, run_spark, steal_guard
     from tools.make_benchdata import ensure
     from wikipedia_data_pipeline_spark import registry
     from wikipedia_data_pipeline_spark.session import get_spark
@@ -1159,6 +1150,7 @@ def main() -> None:
 
     spark_t: dict[str, float] = {}
     duck_t: dict = {}
+    ticks0 = _cpu_ticks()  # the steal span covers every timed section
 
     def best_of_3(fns, name, sf_dir=dir100):
         """Best-of-3 noop-write time through the shared loop; the global
@@ -1175,6 +1167,8 @@ def main() -> None:
         if only:  # resume: carry prior timings for names not re-probed
             spark_t.update(prior.get("queries", {}))
             duck_t.update(prior.get("duckdb", {}))
+        else:  # a full run does not inherit a prior run's mark
+            prior.pop("contaminated", None)
 
     for name in probe:
         spark_t[name] = best_of_3(queries, name)
@@ -1282,6 +1276,7 @@ def main() -> None:
         out["skew_join_ab"] = skew_section
     if bucket_section is not None:
         out["bucketed_join_ab"] = bucket_section
+    out.update(steal_guard(ticks0, _cpu_ticks()))
     for k, v in prior.items():
         out.setdefault(k, v)
     with open(out_path, "w") as fh:

@@ -32,6 +32,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
 MERSENNE_61 = (1 << 61) - 1
 MINHASH_K = 128
 LSH_BANDS = 32  # 32 bands x 4 rows
@@ -253,27 +255,21 @@ def _collapsed_rep_pairs(
     """Shared head of the collapsed MinHash-LSH pipeline: byte-identical
     texts grouped (rep = min doc_id), shingles hashed for the reps only,
     LSH candidates verified at exact Jaccard ≥ threshold. Returns
-    (groups, sh, rep_pairs); groups and sh are persisted (see
-    minhash_lsh_pairs' docstring for why) and registered with
-    ``ranks.track_persisted`` (r14) so ``unpersist_all()`` releases
-    them — raw persists here put dedup_minhash_lsh's best-of-N bench
-    numbers on plan-canonicalized cache reuse (r13 verdict #1) and
-    leaked one cached relation per invocation. Consumed by
+    (groups, sh, rep_pairs); groups and sh are pinned (see
+    minhash_lsh_pairs' docstring for why), so ``unpersist_all()``
+    releases them. Consumed by
     minhash_lsh_pairs (quadratic pair expansion — the declared pair
     CONTRACT) and minhash_lsh_component_edges (group-linear star edges
     — everything connectivity-only callers need)."""
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    groups = track_persisted(
+    groups = pin(
         documents.groupBy("text")
         .agg(
             F.min("doc_id").alias("doc_id"),
             F.sort_array(F.collect_list("doc_id")).alias("members"),
         )
-        .persist()
     )
     reps = groups.select("doc_id", "text")
-    sh = track_persisted(hashed_shingles(reps).persist())
+    sh = pin(hashed_shingles(reps))
     cands = lsh_candidate_pairs(sh)
     rep_pairs = verify_pairs_jaccard(cands, sh, threshold)
     return groups, sh, rep_pairs
@@ -387,10 +383,8 @@ def incremental_lsh_pairs(
     (band, bhash)), so per-batch cost is batch-sized, not corpus-sized.
     Returns (doc_new, doc_old, jaccard).
     """
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    sh_new = track_persisted(hashed_shingles(batch).persist())
-    sh_old = track_persisted(hashed_shingles(corpus).persist())
+    sh_new = pin(hashed_shingles(batch))
+    sh_old = pin(hashed_shingles(corpus))
     b_new = _band_buckets(sh_new).select(
         F.col("doc_id").alias("doc_new"), "band", "bhash"
     )
@@ -426,10 +420,8 @@ def _band_buckets(
 def brute_force_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
     """All-pairs n-gram Jaccard (the exact path; O(n²) — test scale /
     final verify only)."""
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    # referenced by both join sides; tracked so unpersist_all releases it
-    sh = track_persisted(shingles(documents).persist())
+    # referenced by both join sides
+    sh = pin(shingles(documents))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     return (
@@ -535,10 +527,8 @@ def simhash_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
     """SimHash-blocked near-dup pairs with exact-Jaccard verification.
     Persisted intermediates for the same multi-reference reason as
     ``minhash_lsh_pairs``."""
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    sh = track_persisted(hashed_shingles(documents).persist())
-    signed = track_persisted(simhash_signatures(sh).persist())
+    sh = pin(hashed_shingles(documents))
+    signed = pin(simhash_signatures(sh))
     cands = simhash_candidate_pairs(signed)
     return verify_pairs_jaccard(cands, sh, threshold)
 
@@ -808,9 +798,7 @@ def prefix_filter_pairs(
     """
     from pyspark.sql import Window
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    sh = track_persisted(hashed_shingles(documents).persist())
+    sh = pin(hashed_shingles(documents))
     toks = sh.select(
         "doc_id", F.size("hsh").alias("sz"), F.explode("hsh").alias("h")
     )
@@ -862,9 +850,7 @@ def containment_pairs(
     """
     from pyspark.sql import Window
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    sh = track_persisted(hashed_shingles(documents).persist())
+    sh = pin(hashed_shingles(documents))
     toks = sh.select(
         "doc_id", F.size("hsh").alias("sz"), F.explode("hsh").alias("h")
     )

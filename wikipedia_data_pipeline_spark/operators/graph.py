@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 
 DEFAULT_SCALE = 1_000_000  # rank 1.0 in fixed-point units
 DEFAULT_DAMPING_PCT = 85  # 0.85 damping as an integer percentage
@@ -81,7 +81,7 @@ def pagerank_fixed_point(
     # One shuffle up front: co-locate edges with their out-degree and
     # keep them partitioned by src so every iteration's rank join is a
     # local (no re-shuffle of the big side) hash join under AQE.
-    e = (
+    e = pin(
         edges.join(outdeg, src)
         .select(
             F.col(src).alias("src"),
@@ -90,12 +90,7 @@ def pagerank_fixed_point(
             "outdeg",
         )
         .repartition("src")
-        .persist()
     )
-    # tracked (r14): released by ranks.unpersist_all — a raw persist
-    # here leaked per invocation and let plan-canonicalized cache reuse
-    # serve a prior run's edges to best-of-N timings
-    e = track_persisted(e)
 
     ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
     for _ in range(iterations):
@@ -165,14 +160,12 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    und = (
+    und = pin(
         edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
         .union(edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
         .distinct()
         .repartition("nbr")
-        .persist()
     )
-    und = track_persisted(und)  # r14: released by unpersist_all
     nodes = und.select("node").distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
     w = Window.partitionBy("node").orderBy(F.desc("n"), F.asc("label"))
@@ -207,13 +200,11 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     key. Wedges come from the degree aggregate alone (Σ d·(d−1)/2),
     never enumerated.
     """
-    e = (
+    e = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") < F.col("b"))
         .distinct()
-        .persist()
     )
-    e = track_persisted(e)  # r14: released by unpersist_all
     deg = (
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
@@ -310,9 +301,7 @@ def kcore_peel(
         if cnt == prev_cnt:
             break
         prev_cnt = cnt
-    out = track_persisted(
-        alive.groupBy("node").agg(F.count(F.lit(1)).alias("degree")).persist()
-    )
+    out = pin(alive.groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
     out.count()
     # The result is materialized from the cached chain; release it all
     # so nothing but the node-sized answer stays pinned.
@@ -380,7 +369,7 @@ def bfs_hops(
             nxt.select("node", F.lit(level).alias("hops"))
         )
         frontier = nxt
-    out = track_persisted(visited.persist())
+    out = pin(visited)
     out.count()
     # Materialized: release the edge view and every level frontier so
     # deep traversals / repeated calls don't pin executor storage.
@@ -420,11 +409,7 @@ def connected_components(
     recomputation and detects the fixpoint). The returned (node, comp)
     relation is persisted and materialized; intermediates are released
     before returning. Callers may ``unpersist()`` the result; it is
-    also registered with ``ranks.track_persisted`` (r13) so
-    ``unpersist_all()`` releases it — without that, every invocation
-    in a long session leaked one cached relation AND
-    plan-canonicalized cache lookup silently served a prior run's
-    result to any identical re-run (contaminating best-of-N timing).
+    also pinned (``ranks.pin``), so ``unpersist_all()`` releases it.
     """
     und = (
         edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
@@ -470,6 +455,8 @@ def connected_components(
         labels = nxt
         if changed == 0:
             break
-    out = track_persisted(labels)
+    # `labels` is already cached by the loop; pin registers it (a
+    # repeat persist at the same level is a no-op in Spark).
+    out = pin(labels)
     und.unpersist()
     return out

@@ -37,6 +37,7 @@ feeds the blocks-relation window ABOVE a per-block aggregate.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,34 +47,43 @@ __all__ = [
     "ntile_by_cuts",
     "exact_quantiles",
     "grouped_exact_quantiles",
-    "track_persisted",
+    "pin",
     "unpersist_all",
 ]
 
-# Every ordered_scan pins one blocked+ranked relation (see the persist
-# comment in ordered_scan for why that persist is load-bearing).
-# MEMORY_AND_DISK storage is evicted LRU under executor memory pressure
-# and dropped at session shutdown, so leaving them cached degrades
-# gracefully — but a long-lived service that builds many scans can
-# release them deterministically here.
+# Every pinned relation, oldest first, until unpersist_all releases it.
 _PERSISTED: list[DataFrame] = []
 
 
-def track_persisted(df: DataFrame) -> DataFrame:
-    """Register an operator-persisted relation for ``unpersist_all`` —
-    the engine's SINGLE release point for plan-internal caches. Every
-    ``.persist()``/``.cache()`` in the package must route through here
-    (or release explicitly in-function) — enforced by
-    tests/test_round14.py::test_no_untracked_persists. A raw persist is
-    worse than a leak: Spark's CacheManager matches relations by
-    canonicalized logical plan, so an identical re-run silently reads
-    the prior run's cache, corrupting best-of-N timing (r13 verdict #1)."""
-    _PERSISTED.append(df)
+def pin(df: DataFrame) -> DataFrame:
+    """Cache ``df`` and register it for ``unpersist_all`` — the one way
+    engine and tool code caches a relation that outlives the function
+    building it (a ``.persist()`` released in the same function is the
+    only other form; tests/test_ranks.py::test_no_unpinned_persists
+    enforces both). Returns ``df``, now persisted.
+
+    Level: Spark's DataFrame default, MEMORY_AND_DISK_DESER — evicted
+    LRU under executor memory pressure and dropped at session shutdown.
+    PySpark's ``StorageLevel.MEMORY_AND_DISK`` is the *serialized*
+    level (Scala's constant of that name is not), so it is not used.
+
+    Why a registry and not a raw persist: Spark's CacheManager matches
+    relations by canonicalized logical plan, so an identical re-run of
+    a query silently reads the prior run's cache, and best-of-N timing
+    measures a partly cached plan. ``unpersist_all`` after each run
+    releases every pinned relation.
+
+    Release contract: a pinned relation whose lineage reads a temp
+    store deleted before the building function returns (the streaming
+    results in streaming/pipeline.py) cannot be recomputed. Consume it
+    fully before ``unpersist_all()``, or the recompute raises
+    FileNotFound."""
+    _PERSISTED.append(df.persist(StorageLevel.MEMORY_AND_DISK_DESER))
     return df
 
 
 def unpersist_all() -> int:
-    """Release every relation ordered_scan has persisted this session.
+    """Release every relation ``pin`` has cached this session.
     Safe while results are still referenced — Spark recomputes evicted
     cache partitions from lineage (same bounds: the RDD's partitioner
     is fixed at materialization). Returns the number released."""
@@ -178,11 +188,9 @@ def ordered_scan(
     # a fact-sized input (events_lateness_audit) the persist roughly
     # doubles that stage's disk footprint rather than adding a new cost
     # class; it is the distributed analogue of checkpointing between
-    # stages. MEMORY_AND_DISK spills/evicts LRU; release explicitly via
-    # ``unpersist_all()``.
-    from pyspark import StorageLevel
-
-    local = track_persisted(local.persist(StorageLevel.MEMORY_AND_DISK))
+    # stages. The cache spills/evicts LRU; ``unpersist_all()`` releases
+    # it.
+    local = pin(local)
 
     # (3) blocks relation: one row per block. Its exclusive prefix runs
     # single-partition BY DESIGN — ~num_partitions rows, driver-sized.
@@ -340,8 +348,6 @@ def exact_quantiles(
     counts and offsets are integers; the local sort uses the same total
     order, so the selected rows are identical to the rank-everything
     route."""
-    from pyspark import StorageLevel
-
     if "k" not in ranks_rel.columns:
         raise ValueError("exact_quantiles: ranks_rel must have a 'k' column")
     if "k" in df.columns:
@@ -365,10 +371,10 @@ def exact_quantiles(
     part = df.repartitionByRange(num_partitions, *sort).withColumn(
         _PID, F.spark_partition_id()
     )
-    part = track_persisted(part.persist(StorageLevel.MEMORY_AND_DISK))
+    part = pin(part)
     # pin the probe relation too: it feeds two subtrees (ks_unique and
     # the payload join), which must see ONE materialization
-    ranks_rel = track_persisted(ranks_rel.persist(StorageLevel.MEMORY_AND_DISK))
+    ranks_rel = pin(ranks_rel)
 
     blk = part.groupBy(_PID).agg(F.count(F.lit(1)).alias("_cnt"))
     bw = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
@@ -459,8 +465,6 @@ def grouped_exact_quantiles(
     identical to the window formulation's rank-match rows (asserted in
     tests/test_ranks.py::test_grouped_exact_quantiles_matches_window).
     """
-    from pyspark import StorageLevel
-
     if not group_cols:
         raise ValueError("grouped_exact_quantiles: group_cols is empty")
     if tag_col in df.columns:
@@ -511,7 +515,7 @@ def grouped_exact_quantiles(
     part = df.repartitionByRange(num_partitions, *gcols, *sort).withColumn(
         _PID, F.spark_partition_id()
     )
-    part = track_persisted(part.persist(StorageLevel.MEMORY_AND_DISK))
+    part = pin(part)
 
     blk = part.groupBy(_PID, *group_cols).agg(F.count(F.lit(1)).alias("_cnt"))
     bw = (

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.functions import cosine_similarity
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 
 # Bucket count is 2^planes; tune to corpus size (buckets ≈ n/avg_bucket).
 # 4 planes → 16 buckets suits the 500-2000-vector testdata; a web-scale
@@ -550,10 +551,7 @@ def pq_codebooks(
             {"subspace": [key[0]], "code": [key[1]], "c_sub": [mean.tolist()]}
         )
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    # tracked (r14): released by ranks.unpersist_all
-    sub_rows = track_persisted(_subspace_rows(embeddings, dim, m).persist())
+    sub_rows = pin(_subspace_rows(embeddings, dim, m))
     w_seed = Window.partitionBy("subspace").orderBy("h", "vec_id")
     cb = (
         sub_rows.withColumn("h", F.xxhash64("vec_id", "subspace"))
@@ -626,15 +624,10 @@ def ann_pq_topk(
     Output: (query_id, vec_id, cos, rnk) — same interface as the other
     ANN paths.
     """
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
     cb = (
         codebooks
         if codebooks is not None
-        # tracked (r14): released by ranks.unpersist_all
-        else track_persisted(
-            pq_codebooks(embeddings, dim, m, kcode, iters).persist()
-        )
+        else pin(pq_codebooks(embeddings, dim, m, kcode, iters))
     )
     if codes is None:
         codes = pq_encode(embeddings, cb, dim, m)
@@ -736,18 +729,13 @@ def semantic_dedup(
             F.col("vec_id").alias("centroid_id"),
             F.col("embedding").alias("c_emb"),
         )
-    from pyspark import StorageLevel
-
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
 
     # Persisted: `cells` feeds both sides of the pair join — without a
     # shared materialization each branch re-runs the assignment scan
-    # (the expensive pass) over the whole corpus. Tracked for
-    # ranks.unpersist_all, like every plan-internal cache.
-    cells = track_persisted(
+    # (the expensive pass) over the whole corpus.
+    cells = pin(
         _nearest_centroids(embeddings, centroids, 1, "cell")
         .select("vec_id", "embedding", "cell")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     seniors = cells.select(
         F.col("vec_id").alias("b_id"),

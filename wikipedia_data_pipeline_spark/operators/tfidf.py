@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.functions import round2
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.operators.text import tokenize, with_raw_token_count
 
 PER_DOC_VOCAB_CAP = 20000  # DocInfo.java:39
@@ -135,16 +136,11 @@ def tfidf(documents: DataFrame) -> DataFrame:
     branch; a pushed-down join-key null filter makes the two subtrees
     non-identical, so Spark's ReusedExchange does NOT unify them —
     persist the counts once instead (the cluster-scale equivalent is
-    checkpointing the term-count relation between stages). Registered
-    with ``ranks.track_persisted`` (r14): a RAW persist here survived
-    ``unpersist_all()``, so best-of-N timing of tfidf_full silently
-    re-read run 1's cached counts on runs 2..N via Spark's
-    plan-canonicalized cache lookup — skipping tokenize+count from the
-    measurement (r13 verdict #1).
+    checkpointing the term-count relation between stages). Pinned with
+    ``ranks.pin``, so ``unpersist_all()`` releases it between timed
+    runs.
     """
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    counts = track_persisted(doc_term_counts(documents).persist())
+    counts = pin(doc_term_counts(documents))
     return tfidf_join(
         doc_tf(documents, counts=counts), idf(documents, counts=counts)
     )
@@ -186,9 +182,7 @@ def tfidf_with_df(
     ``df * k <= n_docs`` (keep words in at most 1/k of documents) on
     the WORD-level relation — |vocab| rows — so the cap costs nothing
     and the big doc_tf side joins an already-pruned broadcast."""
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    counts = track_persisted(doc_term_counts(documents).persist())
+    counts = pin(doc_term_counts(documents))
     df_counts = counts.groupBy("word").agg(F.count("*").alias("df"))
     n_docs = documents.select(F.count("*").alias("n_docs"))
     idf_rel = (

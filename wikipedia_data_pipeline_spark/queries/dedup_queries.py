@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators import dedup as D
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -453,17 +454,14 @@ def dedup_doc_continuation(spark, sf_dir):
         ),
         lambda w: F.length(w) > 0,
     )
-    from pyspark import StorageLevel
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    # persist (tracked) the boundary-key relation: it feeds BOTH sides
+    # pin the boundary-key relation: it feeds BOTH sides
     # of the tail=head self-join and Spark does no cross-subtree CSE,
     # so the per-token normalization pass (the query's whole cost)
     # otherwise runs twice (r14, AB_CONTINUATION_r14: 12.16 -> 6.74 s
     # best-of-3 at 100x; a single whole-text-regex variant measured
     # 2.7x SLOWER and is kept in the tool as a rejection)
-    hk = track_persisted(
+    hk = pin(
         docs.select("doc_id", toks.alias("toks"))
         .filter(F.size("toks") >= 2 * _CONT_K)
         .select(
@@ -473,7 +471,6 @@ def dedup_doc_continuation(spark, sf_dir):
                 "tail"
             ),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     a = hk.select(
         F.col("doc_id").alias("tail_doc"), F.col("tail").alias("overlap")

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 from wikipedia_data_pipeline_spark.operators import profiling as P
@@ -374,15 +375,11 @@ def features_stump_information_gain(spark, sf_dir):
 
     Scale shape: scan -> 24*k-row cell hash agg -> bounded-grid
     arithmetic. Nothing after the first agg depends on data size."""
-    from pyspark import StorageLevel
-
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
     ev = load_table(spark, sf_dir, "events")
     cell = ev.groupBy(
         (F.expr(f"ts div {_US_PER_HOUR}") % 24).alias("hod"), "event_type"
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    cell = track_persisted(cell.persist(StorageLevel.MEMORY_AND_DISK))
+    cell = pin(cell)
     fh = cell.groupBy("hod").agg(F.sum("n").cast("long").alias("n_h"))
     fy = cell.groupBy("event_type").agg(F.sum("n").cast("long").alias("n_y"))
     tot = cell.agg(F.sum("n").cast("long").alias("nn"))

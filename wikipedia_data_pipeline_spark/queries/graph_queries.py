@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators import dedup as D
 from wikipedia_data_pipeline_spark.operators import profiling as P
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -36,18 +37,15 @@ def market_basket_pairs(spark, sf_dir):
     on the order key with an ordered-pair predicate — per-order
     fan-out is bounded by basket size squared, so the join scales with
     orders, not parts. Top-100 by support via TakeOrdered."""
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
     # the same repartition-before-distinct flip that ships on
     # recs_catalog_coverage (AB_RECS_REPART_r14) measured 18-19% here
     # (AB_BASKET_REPART_r14) - inside the pre-registered 20% band, so
     # the registered form is kept (the rejected variant stays in the
     # A/B tool)
-    op = track_persisted(
+    op = pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .persist()
     )
     a = op.alias("a")
     b = op.alias("b")
@@ -447,18 +445,15 @@ def recs_item_item_cosine(spark, sf_dir):
     prunes noise pairs BEFORE ranking. Integer counts + one
     correctly-rounded sqrt/divide ⇒ bit-portable scores; top-100 by
     TakeOrdered."""
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
     # the same repartition-before-distinct flip that ships on
     # recs_catalog_coverage (AB_RECS_REPART_r14) measured 18-19% here
     # (AB_BASKET_REPART_r14) - inside the pre-registered 20% band, so
     # the registered form is kept (the rejected variant stays in the
     # A/B tool)
-    op = track_persisted(
+    op = pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .persist()
     )
     ic = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
     a = op.alias("a")
@@ -655,16 +650,13 @@ def graph_sssp_3hop(spark, sf_dir):
     # persist: three relaxation levels each join against edges, and
     # Spark does no cross-subtree CSE — without the pin the lineitem
     # scan + distinct re-runs per level (100x probe: 16.6 -> ~7 s)
-    from pyspark import StorageLevel
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    edges = track_persisted(
+    edges = pin(
         e0.unionByName(
             e0.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
             )
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
     d = load_table(spark, sf_dir, "region").limit(1).select(
         F.lit("p:1").alias("node"), F.lit(0).cast("long").alias("d")
@@ -757,8 +749,6 @@ def recs_catalog_coverage(spark, sf_dir):
     window over per-item sim lists and item-sized aggregates only."""
     from pyspark.sql import Window
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
     # repartition BEFORE the distinct (r14, AB_RECS_REPART_r14:
     # 49.7 -> 13.5 s best-of-3 at 100x). Mechanism (verified in
     # plans/r14/recs_catalog_coverage_{before,after}100x.txt): the
@@ -771,12 +761,11 @@ def recs_catalog_coverage(spark, sf_dir):
     # on a subset of the group keys - no second exchange). Guide
     # S2.3's partial-agg rule inverted: pre-aggregation only pays
     # when it reduces rows. Same rows, same oracle.
-    op = track_persisted(
+    op = pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .repartition("l_orderkey")
         .distinct()
-        .persist()
     )
     ic = op.groupBy("l_partkey").agg(F.count(F.lit(1)).cast("long").alias("n"))
     a, b = op.alias("a"), op.alias("b")
@@ -911,15 +900,10 @@ def graph_hits_scores(spark, sf_dir):
     on alternating keys; each half-round is one equi-join + hash agg
     against the node-sized score relation. Top-20 per side via
     TakeOrderedAndProject — no global sort."""
-    from pyspark import StorageLevel
-
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
     li = load_table(spark, sf_dir, "lineitem")
-    e = track_persisted(
+    e = pin(
         li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     a = e.groupBy("p").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("a")
@@ -1105,11 +1089,8 @@ def market_basket_rules(spark, sf_dir):
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    from pyspark import StorageLevel
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    op = track_persisted(op.persist(StorageLevel.MEMORY_AND_DISK))
+    op = pin(op)
     nn = op.agg(
         F.countDistinct("l_orderkey").cast("long").alias("nn")
     )

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
@@ -101,16 +102,12 @@ def ml_eval_bradley_terry(spark, sf_dir):
     ranking run on that driver-tiny relation (broadcast joins only).
     The per-user counts and the matrix are persisted because two plan
     branches consume each."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type")
-    c = track_persisted(
+    c = pin(
         ev.groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     a, b = c.alias("a"), c.alias("b")
     obs = (
@@ -136,7 +133,7 @@ def ml_eval_bradley_terry(spark, sf_dir):
     spine = types.select(F.col("event_type").alias("i")).crossJoin(
         types.select(F.col("event_type").alias("j"))
     ).filter(F.col("i") != F.col("j"))
-    m = track_persisted(
+    m = pin(
         spine.join(obs, ["i", "j"], "left")
         .select(
             "i",
@@ -144,7 +141,6 @@ def ml_eval_bradley_terry(spark, sf_dir):
             (F.coalesce("n_obs", F.lit(0)) + 2).cast("long").alias("n_ij"),
             (F.coalesce("w_obs", F.lit(0)) + 1).cast("long").alias("w_ij"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     it1 = m.groupBy("i").agg(
         F.sum(
@@ -452,9 +448,6 @@ def ml_eval_cuped_ab(spark, sf_dir):
     broadcast the 1-row theta onto the arms. At 1000 executors the
     user relation is the natural experiment-analysis table; nothing
     else grows with the event count."""
-    from pyspark import StorageLevel
-
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.operators.sampling import det_hash
 
     ev = load_table(spark, sf_dir, "events")
@@ -462,7 +455,7 @@ def ml_eval_cuped_ab(spark, sf_dir):
     # TIMESTAMP '2024-01-16' UTC — the same instant the oracle names
     pre = F.col("ts") < F.lit(1705363200000000)
     cents = F.round(F.col("value") * 100).cast("long")
-    u = track_persisted(
+    u = pin(
         ev.groupBy("user_id")
         .agg(
             F.sum(F.when(pre, cents).otherwise(0)).cast("long").alias("x"),
@@ -471,7 +464,6 @@ def ml_eval_cuped_ab(spark, sf_dir):
         .select(
             (det_hash("user_id") % 2).cast("long").alias("arm"), "x", "y"
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     dec = "decimal(18,0)"
     g = u.agg(
@@ -1145,9 +1137,6 @@ def ml_eval_weighted_kappa(spark, sf_dir):
     matrix; marginals and the 9-term chance products are driver-tiny;
     both kappas are single fixed double divisions over exact DECIMAL
     integers."""
-    from pyspark import StorageLevel
-
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.operators.sampling import det_hash
 
     ev = load_table(spark, sf_dir, "events")
@@ -1172,7 +1161,7 @@ def ml_eval_weighted_kappa(spark, sf_dir):
     )
     # 9-row confusion matrix consumed by three branches — persist so
     # the fact agg runs once, not per branch
-    cells = track_persisted(cells.persist(StorageLevel.MEMORY_AND_DISK))
+    cells = pin(cells)
     m1 = cells.groupBy(F.col("r1").alias("k")).agg(
         F.sum("n_cell").cast("long").alias("n1")
     )
@@ -1450,10 +1439,7 @@ def ml_eval_rbo_rankings(spark, sf_dir):
     the <= D surviving rows (the task1_dictionary W1/W3 pattern); then
     a D^2-free overlap count via max(rank) bucketing and a
     driver-sized final row."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
-
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
 
     ev = load_table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("long")
@@ -1466,7 +1452,7 @@ def ml_eval_rbo_rankings(spark, sf_dir):
         .alias("cb"),
     )
     # one fact agg feeds both rankings — persist the entity relation
-    u = track_persisted(u.persist(StorageLevel.MEMORY_AND_DISK))
+    u = pin(u)
 
     def top_rank(col: str, out: str):
         # TakeOrderedAndProject + rank window over <= D rows
@@ -1565,9 +1551,6 @@ def ml_eval_mcc_multiclass(spark, sf_dir):
 
     Scale shape: scan -> 16-row confusion hash agg; marginals and
     the K-term products are driver-tiny."""
-    from pyspark import StorageLevel
-
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.operators.sampling import det_hash
 
     ev = load_table(spark, sf_dir, "events")
@@ -1590,7 +1573,7 @@ def ml_eval_mcc_multiclass(spark, sf_dir):
         .groupBy("y", "p")
         .agg(F.count(F.lit(1)).cast("long").alias("n_cell"))
     )
-    cells = track_persisted(cells.persist(StorageLevel.MEMORY_AND_DISK))
+    cells = pin(cells)
     t = cells.groupBy(F.col("y").alias("k")).agg(
         F.sum("n_cell").cast("long").alias("t_k")
     )

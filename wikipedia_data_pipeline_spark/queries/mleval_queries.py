@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
@@ -393,11 +394,8 @@ def ml_eval_calibration_bins(spark, sf_dir):
     )
     # <=10 rows consumed by two branches (total + final) — persist so
     # the fact agg above runs once, not per branch
-    from pyspark import StorageLevel
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    per = track_persisted(per.persist(StorageLevel.MEMORY_AND_DISK))
+    per = pin(per)
     tot = per.agg(F.sum("n").cast("long").alias("nn"))
     mean_label = F.col("n_pos").cast("double") / F.col("n")
     mean_score = (
@@ -505,11 +503,8 @@ def ml_eval_rater_kappa(spark, sf_dir):
     # 9-row confusion matrix consumed by FOUR branches (two marginals,
     # the chance product, the agree total) — persist so the fact agg
     # runs once, not per branch
-    from pyspark import StorageLevel
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    cells = track_persisted(cells.persist(StorageLevel.MEMORY_AND_DISK))
+    cells = pin(cells)
     m1 = cells.groupBy(F.col("r1").alias("k")).agg(
         F.sum("n_cell").cast("long").alias("n1")
     )

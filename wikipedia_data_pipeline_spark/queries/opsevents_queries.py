@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -269,13 +270,7 @@ def events_rolling_active_users(spark, sf_dir):
 
 
 def _rolling_active(ev):
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    # tracked (r14): this distinct-(day,user) persist was raw and never
-    # unpersisted — every invocation (two registered keys) leaked one
-    # fact-derived cached relation and contaminated best-of-N timing
-    # (r13 verdict #2)
-    du = track_persisted(
+    du = pin(
         ev.select(
             F.date_trunc("day", F.timestamp_micros(F.col("ts")))
             .cast("date")
@@ -283,7 +278,6 @@ def _rolling_active(ev):
             "user_id",
         )
         .distinct()
-        .persist()
     )
     days = du.select("day").distinct()
     u = du.select(F.col("day").alias("u_day"), "user_id")

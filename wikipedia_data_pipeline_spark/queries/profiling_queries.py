@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators import dedup as D
 from wikipedia_data_pipeline_spark.operators import profiling as P
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.queries.dedup_queries import SHINGLE_PAIRS_SQL
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -300,13 +301,11 @@ def source_wikidoc_roundtrip(spark, sf_dir):
         ).alias("value")
     ).write.mode("overwrite").text(out)
     register_wikidoc(spark)
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
 
-    parsed = track_persisted(
+    parsed = pin(
         spark.read.format("wikidoc")
         .load(out)
         .select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-        .cache()
     )
     parsed.count()  # materialize before the temp dir is removed
     shutil.rmtree(tmp, ignore_errors=True)
@@ -1027,11 +1026,8 @@ def curation_mixture_weights(spark, sf_dir):
     )
     # |sources| rows consumed by three branches (total, weights, the
     # renormalizer) — persist so the corpus agg runs once
-    from pyspark import StorageLevel
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    per = track_persisted(per.persist(StorageLevel.MEMORY_AND_DISK))
+    per = pin(per)
     tot = per.agg(
         F.sum("chars_s").cast("long").alias("total"),
         F.count(F.lit(1)).cast("long").alias("nsrc"),

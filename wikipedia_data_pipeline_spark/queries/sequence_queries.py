@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -645,10 +646,6 @@ def events_conditional_entropy(spark, sf_dir):
     Scale shape: one per-user ordered window pass to pairs (the
     events_markov_transitions lineage), one k^2-row hash agg, then
     bounded-grid arithmetic."""
-    from pyspark import StorageLevel
-
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -659,7 +656,7 @@ def events_conditional_entropy(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n")
     )
     # k^2-row cell relation feeds three branches — persist it
-    c = track_persisted(c.persist(StorageLevel.MEMORY_AND_DISK))
+    c = pin(c)
     marg_a = c.groupBy("prev_type").agg(F.sum("n").cast("long").alias("n_a"))
     marg_b = c.groupBy("cur_type").agg(F.sum("n").cast("long").alias("m_b"))
     tot = c.agg(F.sum("n").cast("long").alias("nn"))

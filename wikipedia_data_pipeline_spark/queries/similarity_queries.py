@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators import similarity as S
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -617,7 +618,7 @@ def curation_coreset_facility_location(spark, sf_dir):
     ann_dim_truncation_recall precedent, pinned in
     tests/test_round14.py) — and the JVM applies the registered
     quantization ``round(cos·1e9) AS BIGINT`` unchanged. The
-    (vec_id, q_0..q_{m-1}) relation is persisted (tracked); each
+    (vec_id, q_0..q_{m-1}) relation is pinned; each
     greedy step is then one tiny integer aggregate over the cached
     matrix: cov = greatest(0, q_selected…) per row, gain_c =
     Σ (greatest(q_c, cov) − cov) — the same integers the r13
@@ -631,9 +632,7 @@ def curation_coreset_facility_location(spark, sf_dir):
     null cosine that ``greatest`` then skipped (gain contribution 0);
     the fixture has none."""
     import numpy as np
-    from pyspark import StorageLevel
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -680,7 +679,7 @@ def curation_coreset_facility_location(spark, sf_dir):
     smat = (
         fan_out(emb).select("vec_id", "embedding").mapInPandas(kernel, schema)
     )
-    qmat = track_persisted(
+    qmat = pin(
         smat.select(
             "vec_id",
             *[
@@ -689,7 +688,7 @@ def curation_coreset_facility_location(spark, sf_dir):
                 .alias(f"q{j}")
                 for j in range(m)
             ],
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
 
     sel_idx: list[int] = []

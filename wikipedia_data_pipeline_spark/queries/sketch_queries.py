@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators import dedup as D
 from wikipedia_data_pipeline_spark.operators import profiling as P
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -226,19 +227,10 @@ def sketch_quantile_summary_events(spark, sf_dir):
     output's est_value/est_id rows are summary points of THIS
     striding (oracle-replayed); a different compaction returns
     different estimates — a different query, not an optimization."""
-    from pyspark import StorageLevel
-
-    from wikipedia_data_pipeline_spark.operators.ranks import (
-        ordered_scan,
-        track_persisted,
-    )
+    from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    summary = track_persisted(
-        P.quantile_summary(
-            ev, "value", "event_id", blocks=32, eps=0.02
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    summary = pin(P.quantile_summary(ev, "value", "event_id", blocks=32, eps=0.02))
     scan = ordered_scan(
         summary, ["value", "event_id"], running=[("cum", "weight", "sum")]
     )
@@ -384,26 +376,18 @@ def sketch_kmv_distinct_users(spark, sf_dir):
     20% noise band) after r9 and r10 sequential probes disagreed; the
     multipass form stays probed as
     sketch_kmv_distinct_users__multipass_baseline."""
-    from pyspark import StorageLevel
-
     from wikipedia_data_pipeline_spark.operators.sampling import det_hash
 
     K, MOD = _KMV_K, (1 << 31) - 1
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
 
     # ONE distinct over the (type, user) pairs — the only fact-sized
     # exchange in the query; every audit and the sketch read it.
-    d = track_persisted(
-        ev.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    d = pin(ev.distinct())
     hsh = d.select("event_type", det_hash("user_id").alias("h"))
     # Persisted: the sketch feeds five downstream branches (per-type
-    # agg, union bottom-k, two thetas, the overlap join) — tracked so
-    # ranks.unpersist_all releases it like every plan-internal cache.
-    sk = track_persisted(
-        P.kmv_min_hashes(hsh, "event_type", "h", k=K).cache()
-    )
+    # agg, union bottom-k, two thetas, the overlap join).
+    sk = pin(P.kmv_min_hashes(hsh, "event_type", "h", k=K))
     pertype = sk.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"), F.max("h").alias("hk")
     )
@@ -434,14 +418,14 @@ def sketch_kmv_distinct_users(spark, sf_dir):
         F.max((F.col("event_type") == "view").cast("int")).alias("v"),
         F.max((F.col("event_type") == "click").cast("int")).alias("c"),
     )
-    audits = track_persisted(
+    audits = pin(
         flags.agg(
             F.count(F.lit(1)).alias("n_union"),
             F.sum(F.col("v") * F.col("c")).cast("long").alias("n_vc"),
             F.sum(F.col("v") * (1 - F.col("c")))
             .cast("long")
             .alias("n_vnc"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
     u_row = (
         usk.crossJoin(F.broadcast(audits))
@@ -981,11 +965,8 @@ def sketch_kmv_jaccard_matrix(spark, sf_dir):
         .distinct()
     )
     hsh = ev.select("event_type", det_hash("user_id").alias("h"))
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
 
-    sk = track_persisted(
-        P.kmv_min_hashes(hsh, "event_type", "h", k=K).cache()
-    )
+    sk = pin(P.kmv_min_hashes(hsh, "event_type", "h", k=K))
     pertype = sk.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"), F.max("h").alias("hk")
     ).withColumn(

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators import dedup as D
 from wikipedia_data_pipeline_spark.operators import profiling as P
-from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -100,7 +100,7 @@ def layout_zorder_pruning_report(spark, sf_dir):
             tmp,
             n_files=16,
         )
-        report = track_persisted(report.cache())
+        report = pin(report)
         report.count()  # materialize before the temp files are removed
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -284,11 +284,7 @@ def spatial_moran_i_events(spark, sf_dir):
     # Persist the grid-bounded relation (≤ lattice cells, not events)
     # so the fact is scanned once — the same multiply-referenced-
     # intermediate rule as the Cramér's V cube (statsparam_queries).
-    cells = track_persisted(
-        pts.groupBy("cx", "cy")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()
-    )
+    cells = pin(pts.groupBy("cx", "cy").agg(F.count(F.lit(1)).cast("long").alias("c")))
     tot = cells.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("c").cast("long").alias("s"),

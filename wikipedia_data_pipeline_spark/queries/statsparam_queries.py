@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -608,9 +609,13 @@ def events_cramers_v_matrix(spark, sf_dir):
         % 7
     )
     hod6 = (F.expr("(ts div 3600000000) % 24") / 6).cast("long")
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
 
-    cube = track_persisted(
+    # three union branches re-aggregate this <=140-row cube; Spark
+    # does no cross-subtree CSE and exchange reuse does not fire
+    # across the union, so pin the cube to make the fact scan
+    # genuinely happen once (the multiply-referenced-intermediate
+    # rule from the TF-IDF/minhash pipelines)
+    cube = pin(
         ev.select(
             F.col("event_type").alias("t"),
             dow.cast("string").alias("d"),
@@ -618,13 +623,6 @@ def events_cramers_v_matrix(spark, sf_dir):
         )
         .groupBy("t", "d", "h")
         .agg(F.count(F.lit(1)).alias("o3"))
-        # three union branches re-aggregate this <=140-row cube; Spark
-        # does no cross-subtree CSE and exchange reuse does not fire
-        # across the union, so persist the cube to make the fact scan
-        # genuinely happen once (the multiply-referenced-intermediate
-        # rule from the TF-IDF/minhash pipelines); tracked (r14) so
-        # unpersist_all releases it
-        .persist()
     )
 
     def block(name, ca, cb):

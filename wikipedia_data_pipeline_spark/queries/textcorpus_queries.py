@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators import profiling as P
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -218,13 +219,7 @@ def text_word_cooccurrence(spark, sf_dir):
     (prefix filter) the similarity join uses."""
     from wikipedia_data_pipeline_spark.operators import text as T3
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    dw = track_persisted(
-        T3.tokenize(load_table(spark, sf_dir, "documents"))
-        .distinct()
-        .persist()
-    )
+    dw = pin(T3.tokenize(load_table(spark, sf_dir, "documents")).distinct())
     a = dw.alias("a")
     b = dw.alias("b")
     return (

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -674,7 +675,6 @@ def text_rake_keywords(spark, sf_dir):
     the nano-quantized score construction."""
     from pyspark.sql import Window
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -693,7 +693,7 @@ def text_rake_keywords(spark, sf_dir):
         tok.join(F.broadcast(stop), "w", "left_anti")
         .withColumn("grp", F.col("p") - F.row_number().over(w_doc))
     )
-    phrase = track_persisted(
+    phrase = pin(
         nons.groupBy("doc_id", "grp")
         .agg(
             F.concat_ws(
@@ -707,7 +707,6 @@ def text_rake_keywords(spark, sf_dir):
             ).alias("ptext"),
             F.count(F.lit(1)).cast("long").alias("plen"),
         )
-        .persist()
     )
     # re-explode the persisted phrase text: split(' ') recovers each
     # phrase's exact word multiset (words cannot contain spaces), so

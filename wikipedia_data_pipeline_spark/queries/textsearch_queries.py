@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators import profiling as P
+from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.queries.tfidf_queries import TOKS_CTE
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -97,12 +98,10 @@ def doc_similarity_tfidf(spark, sf_dir):
     # relation is the rare-word postings only (corpus-proportional
     # but a small fraction; the cluster equivalent is checkpointing
     # the vector table between stages).
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
 
-    vec = track_persisted(
+    vec = pin(
         TT.tfidf_with_df(docs, df_times_le_ndocs=10)
         .select("doc_id", "word", "tf_idf")
-        .persist()
     )
     a = vec.alias("a")
     b = vec.alias("b")
@@ -612,14 +611,10 @@ def curation_dsir_importance_weights(spark, sf_dir):
     # re-ran the explode + 8-char polynomial key per consumer (Spark
     # does no cross-subtree CSE): 3 fact-wide token passes; this is 1.
     # Probed at the 100x replica: 13.4 -> ~7 s.
-    from pyspark import StorageLevel
 
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    fc = track_persisted(
+    fc = pin(
         f.groupBy("doc_id", "lang", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     buckets = fc.groupBy("b").agg(
         F.sum("n").cast("long").alias("cr"),

@@ -29,13 +29,6 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
-
 # Event time is normalized to ONE engine-wide domain at scan time:
 # BIGINT microseconds since the epoch. Everything downstream (window
 # frames, sessionization, streaming buckets, as-of joins) does exact

@@ -35,6 +35,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from wikipedia_data_pipeline_spark.operators.ranks import pin
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event stream with ``ts`` normalized to BIGINT epoch-µs.
 
@@ -499,7 +502,10 @@ def run_foreach_batch_compaction(
         if d.startswith("v")
         and os.path.exists(os.path.join(store_dir, d, "_SUCCESS"))
     )
-    out = (
+    # The cache is load-bearing: its lineage reads the temp store,
+    # which is removed below. Consume the result fully before
+    # ranks.unpersist_all(), or the recompute raises FileNotFound.
+    out = pin(
         spark.read.parquet(os.path.join(store_dir, f"v{versions[-1]}"))
         .select(
             "user_id",
@@ -508,14 +514,7 @@ def run_foreach_batch_compaction(
             F.col("ts").alias("last_ts"),
             F.col("value").alias("last_value"),
         )
-        .cache()
     )
-    # tracked (r14): released by ranks.unpersist_all; the cache is
-    # load-bearing against the removed temp store, and each bench/test
-    # invocation builds a fresh store, so releasing between runs is safe
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    out = track_persisted(out)
     out.count()  # materialize before the temp store can be cleaned up
     if owned:
         shutil.rmtree(store_dir, ignore_errors=True)
@@ -674,15 +673,13 @@ def run_streaming_mv(
         if d.startswith("v")
         and os.path.exists(os.path.join(store_dir, d, "_SUCCESS"))
     )
-    from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
-
-    # tracked (r14): same load-bearing-cache + fresh-store-per-run note
-    # as run_foreach_batch_compaction above
-    out = track_persisted(
+    # Same contract as run_foreach_batch_compaction: the temp store is
+    # removed below, so consume the result before ranks.unpersist_all().
+    out = pin(
         I.finalize(
             spark.read.parquet(os.path.join(store_dir, f"v{versions[-1]}")),
             keys,
-        ).cache()
+        )
     )
     out.count()
     if owned:
