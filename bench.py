@@ -137,17 +137,9 @@ def run_duckdb(oracles, sf_dir, names, warmups=1, iters=5):
     on the same machine with all cores. Results are fetched (DuckDB has
     no noop sink); the result sets here are small aggregates, so fetch
     cost is negligible either way."""
-    import duckdb
+    from wikipedia_data_pipeline_spark.sources.tables import duckdb_catalog
 
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duckdb_catalog(sf_dir)
     timings: dict[str, float] = {}
     for name in names:
         sql = oracles[name]

@@ -54,13 +54,12 @@ def cdc_case(draw):
 
 @given(cdc_case())
 @settings(max_examples=12, deadline=None)
-def test_merge_upsert_matches_dict_model(spark_session_holder, case):
+def test_merge_upsert_matches_dict_model(spark, case):
     """merge_upsert(order_by=[seq]) ≡ apply updates in seq order (max
     seq wins; among equal seqs the winner is stable but unspecified —
     model only checks keys where seqs are unambiguous)."""
     from wikipedia_data_pipeline_spark.operators.upsert import merge_upsert
 
-    spark = spark_session_holder
     base, ups = case
     base_df = spark.createDataFrame(
         [(k, v, -1) for k, v in base.items()] or [(99, 0, -1)],

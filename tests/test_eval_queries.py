@@ -7,15 +7,6 @@ while both engines still agree with each other."""
 
 from __future__ import annotations
 
-import pytest
-
-from wikipedia_data_pipeline_spark import registry
-
-
-@pytest.fixture(scope="module")
-def queries():
-    return registry.spark_queries()
-
 
 def test_rater_kappa_fixed_point(spark, sf_dir, queries):
     row = queries["ml_eval_rater_kappa"](spark, sf_dir).collect()[0]

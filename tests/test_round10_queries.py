@@ -11,17 +11,11 @@ import re
 from collections import Counter
 
 import duckdb
-import pytest
 
-from wikipedia_data_pipeline_spark import registry
+from conftest import det_hash_py
 
-KNUTH = 2654435761
 PRE_MOD = 1_000_003
 HASH_MOD = (1 << 31) - 1
-
-
-def det_hash_py(x: int) -> int:
-    return ((x % PRE_MOD) * KNUTH + 12345) % HASH_MOD
 
 
 def tokens_py(text: str) -> list[str]:
@@ -30,11 +24,6 @@ def tokens_py(text: str) -> list[str]:
         for w in (re.sub("[^a-zA-Z]", "", t).lower() for t in text.split(" "))
         if w
     ]
-
-
-@pytest.fixture()
-def queries():
-    return registry.spark_queries()
 
 
 def _docs(sf_dir):

@@ -7,19 +7,8 @@ test_round10_queries discipline)."""
 from __future__ import annotations
 
 import duckdb
-import pytest
 
-from wikipedia_data_pipeline_spark import registry
-from wikipedia_data_pipeline_spark.operators.sampling import PRE_MOD
-
-
-def det_hash_py(x: int) -> int:
-    return ((x % PRE_MOD) * 2654435761 + 12345) % 2147483647
-
-
-@pytest.fixture(scope="module")
-def queries():
-    return registry.spark_queries()
+from conftest import det_hash_py
 
 
 def _shingle_sets(sf_dir):

@@ -10,25 +10,14 @@ import math
 from collections import Counter, defaultdict
 
 import duckdb
-import pytest
 
-from wikipedia_data_pipeline_spark import registry
-from wikipedia_data_pipeline_spark.operators.sampling import PRE_MOD
-
-
-def det_hash_py(x: int) -> int:
-    return ((x % PRE_MOD) * 2654435761 + 12345) % 2147483647
+from conftest import det_hash_py
 
 
 def round_half_up_nano(x: float) -> int:
     # Spark F.round / DuckDB round: half away from zero; inputs here
     # are non-negative so floor(x+0.5) matches
     return math.floor(x * 1e9 + 0.5)
-
-
-@pytest.fixture(scope="module")
-def queries():
-    return registry.spark_queries()
 
 
 def test_t_closeness_matches_python(spark, sf_dir, queries):

@@ -12,14 +12,8 @@ from collections import Counter, defaultdict
 import duckdb
 import pytest
 
-from wikipedia_data_pipeline_spark import registry
 
 US_PER_HOUR = 3_600_000_000
-
-
-@pytest.fixture(scope="module")
-def queries():
-    return registry.spark_queries()
 
 
 def _approx(a, b, rel=1e-6):

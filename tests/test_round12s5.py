@@ -11,19 +11,10 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from wikipedia_data_pipeline_spark import registry
 from wikipedia_data_pipeline_spark.operators.sampling import PRE_MOD
+from conftest import det_hash_py
 
 US_PER_DAY = 86_400_000_000
-
-
-def det_hash_py(x: int) -> int:
-    return ((x % PRE_MOD) * 2654435761 + 12345) % 2147483647
-
-
-@pytest.fixture(scope="module")
-def queries():
-    return registry.spark_queries()
 
 
 def _events(sf_dir):

@@ -9,15 +9,9 @@ from collections import Counter
 import pandas as pd
 import pytest
 
-from wikipedia_data_pipeline_spark import registry
 from wikipedia_data_pipeline_spark.queries.generation_queries import (
     _chrf_partials_kernel,
 )
-
-
-@pytest.fixture(scope="module")
-def queries():
-    return registry.spark_queries()
 
 
 def _brute_partials(pairs):

@@ -16,15 +16,9 @@ import duckdb
 import numpy as np
 import pytest
 
-from wikipedia_data_pipeline_spark import registry
 
 US_PER_DAY = 86_400_000_000
 US_PER_HOUR = 3_600_000_000
-
-
-@pytest.fixture(scope="module")
-def queries():
-    return registry.spark_queries()
 
 
 def _events(sf_dir):

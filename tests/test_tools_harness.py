@@ -9,6 +9,7 @@ from __future__ import annotations
 import glob
 import importlib
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,7 +17,8 @@ from pyspark.sql import functions as F
 from wikipedia_data_pipeline_spark import registry
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SESSION_PY = os.path.join(ROOT, "wikipedia_data_pipeline_spark", "session.py")
+PACKAGE = os.path.join(ROOT, "wikipedia_data_pipeline_spark")
+SESSION_PY = os.path.join(PACKAGE, "session.py")
 BUILDER = "SparkSession" + ".builder"  # split so this file does not match
 
 
@@ -40,6 +42,53 @@ def _files_containing(literal: str) -> list[str]:
             if literal in f.read():
                 found.append(os.path.relpath(path, ROOT))
     return found
+
+
+# A line that carries no decision on its own: blank, a comment, a lone
+# bracket or a docstring fence.
+_NOISE_LINE = re.compile(r'^(#.*|[()\[\]{}]|"""|)$')
+CLONE_MIN_LINES = 12
+
+
+def _normalized_lines(path: str) -> list[tuple[int, str]]:
+    with open(path, encoding="utf-8") as f:
+        stripped = [(i, line.strip()) for i, line in enumerate(f, 1)]
+    return [(i, s) for i, s in stripped if not _NOISE_LINE.match(s)]
+
+
+def _repeated_regions(paths, n: int) -> list[str]:
+    """Each maximal run of normalized lines, n or more long, whose every
+    n-line window already appeared earlier in ``paths``."""
+    first_seen: dict[tuple[str, ...], tuple[str, int]] = {}
+    regions: list[str] = []
+    for path in paths:
+        lines = _normalized_lines(path)
+        run_end = -1
+        for k in range(len(lines) - n + 1):
+            window = tuple(s for _, s in lines[k : k + n])
+            where = first_seen.setdefault(window, (path, k))
+            if where == (path, k):
+                continue
+            if k != run_end + 1:
+                src, at = where
+                regions.append(
+                    f"{os.path.relpath(path, ROOT)}:{lines[k][0]} repeats "
+                    f"{os.path.relpath(src, ROOT)}:{_normalized_lines(src)[at][0]}"
+                )
+            run_end = k
+    return regions
+
+
+def test_no_block_of_package_code_is_written_twice():
+    """Each shared relation, SQL fragment or helper has one definition:
+    no run of CLONE_MIN_LINES normalized lines appears twice in the
+    package. tools/ is not scanned: its A/B baselines copy registered
+    code on purpose."""
+    package_files = sorted(
+        p for p in _python_files() if p.startswith(PACKAGE + os.sep)
+    )
+    regions = _repeated_regions(package_files, CLONE_MIN_LINES)
+    assert not regions, f"{len(regions)} repeated regions: {regions}"
 
 
 def test_only_session_py_builds_a_spark_session():

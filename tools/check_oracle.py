@@ -46,24 +46,16 @@ def rows_to_multiset(cols, rows):
 
 
 def main():
-    import duckdb
-
     import __spark_entry__ as entry_mod
     from wikipedia_data_pipeline_spark.operators import ranks
     from wikipedia_data_pipeline_spark.session import get_spark
+    from wikipedia_data_pipeline_spark.sources.tables import duckdb_catalog
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duckdb_catalog(sf_dir)
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()

@@ -770,6 +770,30 @@ def duplicate_spans_extract(documents: DataFrame, n: int = 8) -> DataFrame:
     )
 
 
+def _rarity_prefixes(documents: DataFrame, threshold: float):
+    """The prefix-filter setup shared by ``prefix_filter_pairs`` and
+    ``containment_pairs``: the pinned shingle sets ``sh``, their
+    exploded (doc_id, sz, h) postings ``toks``, and each document's
+    |x| - ceil(t*|x|) + 1 globally-rarest postings (df asc, then hash)
+    as ``prefix``, ranked by a doc-partitioned window."""
+    from pyspark.sql import Window
+
+    sh = pin(hashed_shingles(documents))
+    toks = sh.select(
+        "doc_id", F.size("hsh").alias("sz"), F.explode("hsh").alias("h")
+    )
+    dfreq = toks.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+    ranked = toks.join(dfreq, "h")
+    w = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("h"))
+    prefix_len = (
+        F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
+    ).cast("int")
+    prefix = ranked.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= prefix_len
+    )
+    return sh, toks, prefix
+
+
 def prefix_filter_pairs(
     documents: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
@@ -796,23 +820,8 @@ def prefix_filter_pairs(
     candidates. All shuffles are key-partitioned — the construction
     scales with prefix-token postings, not corpus².
     """
-    from pyspark.sql import Window
-
-    sh = pin(hashed_shingles(documents))
-    toks = sh.select(
-        "doc_id", F.size("hsh").alias("sz"), F.explode("hsh").alias("h")
-    )
-    dfreq = toks.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    ranked = toks.join(dfreq, "h")
-    w = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("h"))
-    prefix_len = (
-        F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    ).cast("int")
-    prefix = (
-        ranked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= prefix_len)
-        .select("doc_id", "sz", "h")
-    )
+    sh, _, prefix = _rarity_prefixes(documents, threshold)
+    prefix = prefix.select("doc_id", "sz", "h")
     a = prefix.select(
         F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"), "h"
     )
@@ -848,22 +857,9 @@ def containment_pairs(
     fan-out is bounded by rare-shingle document frequency. The |B| ≥
     t·|A| size bound (|A∩B| ≤ |B|) prunes before verification.
     """
-    from pyspark.sql import Window
-
-    sh = pin(hashed_shingles(documents))
-    toks = sh.select(
-        "doc_id", F.size("hsh").alias("sz"), F.explode("hsh").alias("h")
-    )
-    dfreq = toks.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    ranked = toks.join(dfreq, "h")
-    w = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("h"))
-    prefix_len = (
-        F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    ).cast("int")
-    a = (
-        ranked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= prefix_len)
-        .select(F.col("doc_id").alias("doc_sub"), F.col("sz").alias("sz_a"), "h")
+    sh, toks, prefix = _rarity_prefixes(documents, threshold)
+    a = prefix.select(
+        F.col("doc_id").alias("doc_sub"), F.col("sz").alias("sz_a"), "h"
     )
     b = toks.select(
         F.col("doc_id").alias("doc_super"), F.col("sz").alias("sz_b"), "h"

@@ -19,10 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wikipedia_data_pipeline_spark.operators.text import (
-    NORMALIZE_PATTERN,
-    TOKEN_DELIMITER,
-)
+from wikipedia_data_pipeline_spark.operators.text import token_array
 
 
 def positional_postings(
@@ -34,13 +31,7 @@ def positional_postings(
     tokens). posexplode keeps it one narrow projection, no shuffle."""
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
-    toks = F.filter(
-        F.transform(
-            F.split(F.col(text_col), TOKEN_DELIMITER),
-            lambda w: F.lower(F.regexp_replace(w, NORMALIZE_PATTERN, "")),
-        ),
-        lambda w: F.length(w) > 0,
-    )
+    toks = token_array(text_col)
     return (
         fan_out(documents)
         .select(F.col(id_col).alias("doc_id"), F.posexplode(toks))

@@ -266,18 +266,9 @@ def token_mask(
     array and the target list in one pass; no UDF, no shuffle.
     Output: (doc_id, n_tokens, n_masked, masked_text, targets).
     """
-    from wikipedia_data_pipeline_spark.operators.text import (
-        NORMALIZE_PATTERN,
-        TOKEN_DELIMITER,
-    )
+    from wikipedia_data_pipeline_spark.operators.text import token_array
 
-    toks = F.filter(
-        F.transform(
-            F.split(F.col(text_col), TOKEN_DELIMITER),
-            lambda w: F.lower(F.regexp_replace(w, NORMALIZE_PATTERN, "")),
-        ),
-        lambda w: F.length(w) > 0,
-    )
+    toks = token_array(text_col)
 
     def masked(doc_id: Column, i: Column) -> Column:
         h = (

@@ -27,6 +27,23 @@ from wikipedia_data_pipeline_spark.operators.ranks import pin
 ANN_PLANES = 4
 
 
+def _top_k_by_cosine(candidates: DataFrame, k: int) -> DataFrame:
+    """Exact rerank of (query_id, q_emb) x (vec_id, embedding) candidate
+    rows: self excluded, cosine scored, top-k per query in the order
+    (cos desc, vec_id). Output: (query_id, vec_id, cos, rnk)."""
+    scored = candidates.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        "vec_id",
+        cosine_similarity(F.col("q_emb"), F.col("embedding")).alias("cos"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "vec_id", "cos", "rnk")
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame, query_ids: list[int], k: int = 10
 ) -> DataFrame:
@@ -42,21 +59,7 @@ def cosine_topk(
     q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    scored = (
-        fan_out(embeddings).crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("q_emb"), F.col("embedding")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "cos", "rnk")
-    )
+    return _top_k_by_cosine(fan_out(embeddings).crossJoin(F.broadcast(q)), k)
 
 
 def _bucket_expr(emb_col, dim: int, planes: int = ANN_PLANES):
@@ -128,22 +131,11 @@ def ann_lsh_topk(
             ).alias("q_bucket"),
         )
     )
-    scored = (
+    return _top_k_by_cosine(
         with_bucket.join(
             F.broadcast(q), F.col("bucket") == F.col("q_bucket"), "inner"
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("q_emb"), F.col("embedding")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "cos", "rnk")
+        ),
+        k,
     )
 
 
@@ -347,21 +339,7 @@ def ann_ivf_topk(
         F.col("embedding").alias("q_emb"),
         "cell",
     )
-    scored = (
-        corpus.join(F.broadcast(queries), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("q_emb"), F.col("embedding")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "cos", "rnk")
-    )
+    return _top_k_by_cosine(corpus.join(F.broadcast(queries), "cell"), k)
 
 
 def ann_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
@@ -845,21 +823,7 @@ def ann_ivf_topk_indexed(
         F.col("embedding").alias("q_emb"),
         "cell",
     )
-    scored = (
-        cells.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("q_emb"), F.col("embedding")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "cos", "rnk")
-    )
+    return _top_k_by_cosine(cells.join(F.broadcast(probes), "cell"), k)
 
 
 # --- Distributed PCA -----------------------------------------------------

@@ -26,6 +26,16 @@ def normalize_word(col: Column) -> Column:
     return F.lower(F.regexp_replace(col, NORMALIZE_PATTERN, ""))
 
 
+def token_array(text_col: str = "text") -> Column:
+    """The document's tokens as an array column: split on
+    TOKEN_DELIMITER, each normalized by ``normalize_word``, empties
+    dropped."""
+    return F.filter(
+        F.transform(F.split(F.col(text_col), TOKEN_DELIMITER), normalize_word),
+        lambda w: F.length(w) > 0,
+    )
+
+
 def with_raw_token_count(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Add ``raw_token_count`` = whitespace-token count BEFORE normalization.
 
@@ -73,13 +83,7 @@ def ngrams(
     """
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
-    toks = F.filter(
-        F.transform(
-            F.split(F.col(text_col), TOKEN_DELIMITER),
-            lambda w: F.lower(F.regexp_replace(w, NORMALIZE_PATTERN, "")),
-        ),
-        lambda w: F.length(w) > 0,
-    )
+    toks = token_array(text_col)
     grams = F.transform(
         F.sequence(F.lit(1), F.size(F.col("toks")) - (n - 1)),
         lambda i: F.concat_ws(
@@ -154,13 +158,7 @@ def chunk_documents(
     Chunks preserve document order; the final chunk may be short.
     Empty documents produce no chunks.
     """
-    toks = F.filter(
-        F.transform(
-            F.split(F.col(text_col), TOKEN_DELIMITER),
-            lambda w: F.lower(F.regexp_replace(w, NORMALIZE_PATTERN, "")),
-        ),
-        lambda w: F.length(w) > 0,
-    )
+    toks = token_array(text_col)
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
     with_toks = fan_out(documents).select(

@@ -117,18 +117,9 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     so cost is O(n log n) per doc inside a narrow map and the corpus
     scan stays embarrassingly parallel at any size.
     """
-    from wikipedia_data_pipeline_spark.operators.text import (
-        NORMALIZE_PATTERN,
-        TOKEN_DELIMITER,
-    )
+    from wikipedia_data_pipeline_spark.operators.text import token_array
 
-    toks = F.filter(
-        F.transform(
-            F.split(F.col("text"), TOKEN_DELIMITER),
-            lambda w: F.lower(F.regexp_replace(w, NORMALIZE_PATTERN, "")),
-        ),
-        lambda w: F.length(w) > 0,
-    )
+    toks = token_array()
 
     def max_run(sorted_arr):
         """Longest run of equal adjacent values in a sorted array."""
@@ -586,10 +577,7 @@ def winnow_fingerprints(
     ~G/w rows per document. Documents with fewer than w + k - 1 tokens
     emit nothing.
     """
-    from wikipedia_data_pipeline_spark.operators.text import (
-        NORMALIZE_PATTERN,
-        TOKEN_DELIMITER,
-    )
+    from wikipedia_data_pipeline_spark.operators.text import token_array
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
     # the pipeline projects fixed intermediate names below; a caller
@@ -602,13 +590,7 @@ def winnow_fingerprints(
             "rename or drop them before calling"
         )
 
-    toks = F.filter(
-        F.transform(
-            F.split(F.col(text_col), TOKEN_DELIMITER),
-            lambda t: F.lower(F.regexp_replace(t, NORMALIZE_PATTERN, "")),
-        ),
-        lambda t: F.length(t) > 0,
-    )
+    toks = token_array(text_col)
     # word char-hashes once -> gram hashes fold k WORD hashes (each
     # character is hashed exactly once per document, instead of ~k
     # times through concatenated gram strings) -> per-window minima,

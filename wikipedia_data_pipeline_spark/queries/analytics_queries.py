@@ -23,8 +23,13 @@ from wikipedia_data_pipeline_spark.functions import (
     cents_sum,
     dec_sum,
     sql_cents_sum,
-    sql_dec_sum,
     ts_us,
+)
+from wikipedia_data_pipeline_spark.queries.relational_queries import (
+    Q3_ORACLE,
+    Q5_ORACLE,
+    q3_top_revenue,
+    q5_nation_revenue,
 )
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
@@ -111,9 +116,8 @@ def q13_customer_distribution(spark, sf_dir):
     return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
 
 
-@register(
-    "q18_large_orders",
-    oracle=f"""
+# TPC-H Q18, shared by the plain and the bucketed-twin registration.
+_Q18_ORACLE = f"""
 SELECT c_custkey, o_orderkey,
        CAST(o_totalprice AS DOUBLE) AS o_totalprice, total_qty
 FROM orders
@@ -123,16 +127,12 @@ JOIN (
   FROM lineitem GROUP BY l_orderkey
   HAVING sum(CAST(round(l_quantity * 1000000) AS BIGINT)) > 250000000
 ) big ON big.l_orderkey = o_orderkey
-""",
-)
-def q18_large_orders(spark, sf_dir):
-    """TPC-H Q18: orders whose total quantity exceeds a threshold,
-    joined back to their customers. The HAVING pre-aggregation shrinks
-    the fact side BEFORE the joins — the plan every large-order scan
-    wants at scale."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
+"""
+
+
+def _large_orders(c, o, li):
+    """Q18 over the given scans: the HAVING pre-aggregation shrinks the
+    fact side BEFORE the joins. ``c`` may carry a broadcast hint."""
     # cents_sum, not dec_sum: the fact-sized many-group pre-agg is this
     # query's cost center and the BIGINT buffer beats the boxed decimal
     # (100x A/B: 4.34 -> 3.14 s; l_quantity is micro-unit-quantized and
@@ -149,21 +149,20 @@ def q18_large_orders(spark, sf_dir):
     )
 
 
-@register(
-    "q18_bucketed_colocated",
-    oracle=f"""
-SELECT c_custkey, o_orderkey,
-       CAST(o_totalprice AS DOUBLE) AS o_totalprice, total_qty
-FROM orders
-JOIN customer ON c_custkey = o_custkey
-JOIN (
-  SELECT l_orderkey, {sql_cents_sum('l_quantity', 'total_qty')}
-  FROM lineitem GROUP BY l_orderkey
-  HAVING sum(CAST(round(l_quantity * 1000000) AS BIGINT)) > 250000000
-) big ON big.l_orderkey = o_orderkey
-""",
-    eager=True,
-)
+@register("q18_large_orders", oracle=_Q18_ORACLE)
+def q18_large_orders(spark, sf_dir):
+    """TPC-H Q18: orders whose total quantity exceeds a threshold,
+    joined back to their customers. The HAVING pre-aggregation shrinks
+    the fact side BEFORE the joins — the plan every large-order scan
+    wants at scale."""
+    return _large_orders(
+        load_table(spark, sf_dir, "customer"),
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "lineitem"),
+    )
+
+
+@register("q18_bucketed_colocated", oracle=_Q18_ORACLE, eager=True)
 def q18_bucketed_colocated(spark, sf_dir):
     """Q18 over the BUCKETED twin layout — the registered consumer of
     the measured 3x layout win (SCALE_PROBE_r10.bucketed_join_ab:
@@ -186,37 +185,14 @@ def q18_bucketed_colocated(spark, sf_dir):
     )
 
     twins = ensure_bucketed_twins(spark, sf_dir)
-    c = load_table(spark, sf_dir, "customer")
-    o = spark.table(twins["orders"])
-    li = spark.table(twins["lineitem"])
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(cents_sum("l_quantity", "total_qty"))
-        .filter(F.col("total_qty") > 250)
-    )
-    return (
-        o.join(big, o.o_orderkey == big.l_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .select("c_custkey", "o_orderkey", "o_totalprice", "total_qty")
+    return _large_orders(
+        F.broadcast(load_table(spark, sf_dir, "customer")),
+        spark.table(twins["orders"]),
+        spark.table(twins["lineitem"]),
     )
 
 
-@register(
-    "q3_bucketed_colocated",
-    oracle=f"""
-SELECT o_orderkey,
-       {sql_cents_sum('l_extendedprice * (1 - l_discount)', 'revenue')},
-       CAST(o_orderdate AS DATE) AS orderdate, o_orderpriority
-FROM customer JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-  AND l_shipdate > TIMESTAMP '1997-01-01'
-GROUP BY o_orderkey, CAST(o_orderdate AS DATE), o_orderpriority
-ORDER BY revenue DESC, o_orderkey LIMIT 10
-""",
-    eager=True,
-)
+@register("q3_bucketed_colocated", oracle=Q3_ORACLE, eager=True)
 def q3_bucketed_colocated(spark, sf_dir):
     """TPC-H Q3 over the BUCKETED twin layout — the second consumer of
     the maintenance path q18_bucketed_colocated pays for (one bucketed
@@ -238,50 +214,12 @@ def q3_bucketed_colocated(spark, sf_dir):
     )
 
     twins = ensure_bucketed_twins(spark, sf_dir)
-    c = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    o = spark.table(twins["orders"]).filter(
-        F.col("o_orderdate") < "1998-01-01"
-    )
-    li = spark.table(twins["lineitem"]).filter(
-        F.col("l_shipdate") > "1997-01-01"
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy(
-            "o_orderkey",
-            F.to_date("o_orderdate").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .agg(
-            cents_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                "revenue",
-            )
-        )
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
+    return q3_top_revenue(
+        spark, sf_dir, spark.table(twins["orders"]), spark.table(twins["lineitem"])
     )
 
 
-@register(
-    "q5_bucketed_colocated",
-    oracle=f"""
-SELECT r_name, n_name,
-       {sql_cents_sum('l_extendedprice * (1 - l_discount)', 'revenue')}
-FROM region
-JOIN nation ON n_regionkey = r_regionkey
-JOIN customer ON c_nationkey = n_nationkey
-JOIN orders ON o_custkey = c_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY r_name, n_name
-""",
-    eager=True,
-)
+@register("q5_bucketed_colocated", oracle=Q5_ORACLE, eager=True)
 def q5_bucketed_colocated(spark, sf_dir):
     """TPC-H Q5 over the BUCKETED twin layout — third consumer of the
     one orderkey layout (q18/q3 notes): the lineitem ⋈ orders fact
@@ -296,27 +234,8 @@ def q5_bucketed_colocated(spark, sf_dir):
     )
 
     twins = ensure_bucketed_twins(spark, sf_dir)
-    r = load_table(spark, sf_dir, "region")
-    n = load_table(spark, sf_dir, "nation")
-    c = load_table(spark, sf_dir, "customer")
-    o = spark.table(twins["orders"]).filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1997-01-01")
-    )
-    li = spark.table(twins["lineitem"])
-    dims = c.join(
-        F.broadcast(n), c.c_nationkey == n.n_nationkey
-    ).join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(dims), o.o_custkey == F.col("c_custkey"))
-        .groupBy("r_name", "n_name")
-        .agg(
-            cents_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                "revenue",
-            )
-        )
+    return q5_nation_revenue(
+        spark, sf_dir, spark.table(twins["orders"]), spark.table(twins["lineitem"])
     )
 
 

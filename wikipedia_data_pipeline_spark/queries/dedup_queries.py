@@ -19,8 +19,10 @@ from wikipedia_data_pipeline_spark.sources.tables import load_table
 
 JACCARD_THRESHOLD = 0.5
 
-SHINGLE_PAIRS_SQL = """
-WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+# Per-document 3-gram shingle sets, and the all-pairs shingle Jaccard
+# over them: the brute-force near-dup oracle's building blocks.
+_SHINGLE_SETS_CTES = """
+tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 sh AS (
   SELECT doc_id,
          CASE WHEN len(t) >= 3
@@ -28,13 +30,17 @@ sh AS (
                                  FOR i IN generate_series(1, len(t) - 2)])
               ELSE CAST([] AS VARCHAR[]) END AS s
   FROM tok
-),
+)"""
+_SHINGLE_JACCARD_CTES = f"""{_SHINGLE_SETS_CTES},
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
            / len(list_distinct(list_concat(a.s, b.s))) AS jaccard
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-)
+)"""
+
+SHINGLE_PAIRS_SQL = f"""
+WITH {_SHINGLE_JACCARD_CTES}
 SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.5
 """
 
@@ -124,16 +130,8 @@ def dedup_cluster_select(spark, sf_dir):
 
 _LSH_CFGS = [(8, 4), (16, 4), (32, 4), (8, 8), (16, 8), (32, 8)]
 
-_LSH_PLANNER_SQL = """
-WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3
-              THEN list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                 FOR i IN generate_series(1, len(t) - 2)])
-              ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM tok
-),
+_LSH_PLANNER_SQL = f"""
+WITH {_SHINGLE_SETS_CTES},
 pairs AS (
   SELECT CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
            / len(list_distinct(list_concat(a.s, b.s))) AS jaccard
@@ -238,22 +236,8 @@ def dedup_lsh_recall_planner(spark, sf_dir):
     )
 
 
-_CROSS_SOURCE_SQL = """
-WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3
-              THEN list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                 FOR i IN generate_series(1, len(t) - 2)])
-              ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM tok
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-           / len(list_distinct(list_concat(a.s, b.s))) AS jaccard
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-),
+_CROSS_SOURCE_SQL = f"""
+WITH {_SHINGLE_JACCARD_CTES},
 np AS (SELECT * FROM pairs WHERE jaccard >= 0.5),
 lab AS (
   SELECT least(da.source, db.source) AS source_lo,
@@ -441,19 +425,10 @@ def dedup_doc_continuation(spark, sf_dir):
     hash-partitioned short-string join, never all-pairs (boundary keys
     are near-unique, so the join output is match-sized). Exact oracle:
     both engines derive identical normalized boundary strings."""
-    from wikipedia_data_pipeline_spark.operators.text import (
-        NORMALIZE_PATTERN,
-        TOKEN_DELIMITER,
-    )
+    from wikipedia_data_pipeline_spark.operators.text import token_array
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.transform(
-            F.split(F.col("text"), TOKEN_DELIMITER),
-            lambda w: F.lower(F.regexp_replace(w, NORMALIZE_PATTERN, "")),
-        ),
-        lambda w: F.length(w) > 0,
-    )
+    toks = token_array()
 
     # pin the boundary-key relation: it feeds BOTH sides
     # of the tail=head self-join and Spark does no cross-subtree CSE,

@@ -8,23 +8,50 @@ from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
 from wikipedia_data_pipeline_spark.registry import register
+from wikipedia_data_pipeline_spark.queries.similarity_queries import COS_SQL
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
 
-
-from wikipedia_data_pipeline_spark.queries.similarity_queries import COS_SQL
-
-
-@register(
-    "embedding_centroid_distances",
-    oracle=f"""
-WITH comp AS (
+# Decimal-exact per-label centroid components (the label_centroids
+# construction), shared by the centroid-distance matrix, the label-
+# outlier screen and the simplified silhouette.
+_CENTROID_COMP_CTE = """
+comp AS (
   SELECT label, g - 1 AS pos,
          CAST(sum(CAST(CAST(embedding[g] AS DOUBLE) AS DECIMAL(18,6)))
               AS DOUBLE) / count(*) AS mean_x
   FROM embeddings, unnest(generate_series(1, len(embedding))) AS u(g)
   GROUP BY label, pos
-),
+)"""
+
+
+def _label_centroids(emb, key):
+    """One row per label, grouped by ``key`` (the label column or its
+    alias), with the ordered centroid array ``c``: the Spark side of
+    ``_CENTROID_COMP_CTE`` plus its ``list(mean_x ORDER BY pos)``."""
+    comp = (
+        emb.select("label", F.posexplode("embedding").alias("pos", "x"))
+        .groupBy("label", F.col("pos").cast("long").alias("pos"))
+        .agg(
+            (
+                F.sum(F.col("x").cast("double").cast("decimal(18,6)"))
+                .cast("double")
+                / F.count("*")
+            ).alias("mean_x")
+        )
+    )
+    return comp.groupBy(key).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "mean_x"))),
+            lambda s: s["mean_x"],
+        ).alias("c")
+    )
+
+
+@register(
+    "embedding_centroid_distances",
+    oracle=f"""
+WITH {_CENTROID_COMP_CTE},
 cent AS (
   SELECT label, list(mean_x ORDER BY pos) AS c FROM comp GROUP BY label
 )
@@ -43,23 +70,7 @@ def embedding_centroid_distances(spark, sf_dir):
     from wikipedia_data_pipeline_spark.functions import cosine_similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    comp = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "x"))
-        .groupBy("label", F.col("pos").cast("long").alias("pos"))
-        .agg(
-            (
-                F.sum(F.col("x").cast("double").cast("decimal(18,6)"))
-                .cast("double")
-                / F.count("*")
-            ).alias("mean_x")
-        )
-    )
-    cent = comp.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mean_x"))),
-            lambda s: s["mean_x"],
-        ).alias("c")
-    )
+    cent = _label_centroids(emb, "label")
     a = cent.select(
         F.col("label").alias("label_a"), F.col("c").alias("ca")
     )
@@ -140,16 +151,8 @@ def embedding_pca_project(spark, sf_dir):
 # Embedding label-outlier screen (mislabeled-data candidates)
 # ---------------------------------------------------------------------------
 
-from wikipedia_data_pipeline_spark.queries.similarity_queries import COS_SQL
-
 _LABEL_OUTLIER_ORACLE = f"""
-WITH comp AS (
-  SELECT label, g - 1 AS pos,
-         CAST(sum(CAST(CAST(embedding[g] AS DOUBLE) AS DECIMAL(18,6)))
-              AS DOUBLE) / count(*) AS mean_x
-  FROM embeddings, unnest(generate_series(1, len(embedding))) AS u(g)
-  GROUP BY label, pos
-),
+WITH {_CENTROID_COMP_CTE},
 cent AS (
   SELECT label, list(mean_x ORDER BY pos) AS c FROM comp GROUP BY label
 ),
@@ -187,23 +190,7 @@ def embedding_label_outliers(spark, sf_dir):
     from wikipedia_data_pipeline_spark.functions import cosine_similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    comp = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "x"))
-        .groupBy("label", F.col("pos").cast("long").alias("pos"))
-        .agg(
-            (
-                F.sum(F.col("x").cast("double").cast("decimal(18,6)"))
-                .cast("double")
-                / F.count("*")
-            ).alias("mean_x")
-        )
-    )
-    cent = comp.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mean_x"))),
-            lambda s: s["mean_x"],
-        ).alias("c")
-    )
+    cent = _label_centroids(emb, "label")
     scored = emb.join(F.broadcast(cent), "label").select(
         "vec_id",
         "label",
@@ -312,13 +299,7 @@ def embedding_cosine_pair_histogram(spark, sf_dir):
 # rides a DECIMAL(18,6) sum (order-independent).
 
 _SSIL_ORACLE = f"""
-WITH comp AS (
-  SELECT label, g - 1 AS pos,
-         CAST(sum(CAST(CAST(embedding[g] AS DOUBLE) AS DECIMAL(18,6)))
-              AS DOUBLE) / count(*) AS mean_x
-  FROM embeddings, unnest(generate_series(1, len(embedding))) AS u(g)
-  GROUP BY label, pos
-),
+WITH {_CENTROID_COMP_CTE},
 cent AS (
   SELECT label AS clabel, list(mean_x ORDER BY pos) AS c
   FROM comp GROUP BY label
@@ -360,23 +341,7 @@ def embedding_simplified_silhouette(spark, sf_dir):
     from wikipedia_data_pipeline_spark.functions import cosine_similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    comp = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "x"))
-        .groupBy("label", F.col("pos").cast("long").alias("pos"))
-        .agg(
-            (
-                F.sum(F.col("x").cast("double").cast("decimal(18,6)"))
-                .cast("double")
-                / F.count("*")
-            ).alias("mean_x")
-        )
-    )
-    cent = comp.groupBy(F.col("label").alias("clabel")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mean_x"))),
-            lambda s: s["mean_x"],
-        ).alias("c")
-    )
+    cent = _label_centroids(emb, F.col("label").alias("clabel"))
     cos = cosine_similarity(F.col("embedding"), F.col("c"))
     scored = (
         emb.crossJoin(F.broadcast(cent))

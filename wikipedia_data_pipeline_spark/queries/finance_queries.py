@@ -10,9 +10,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from wikipedia_data_pipeline_spark.operators import dedup as D
-from wikipedia_data_pipeline_spark.operators import profiling as P
-from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
+from wikipedia_data_pipeline_spark.queries.sequence_queries import ols_moments
+from wikipedia_data_pipeline_spark.queries.statsrank_queries import (
+    LIFETIME_RISK_CTES,
+    lifetime_risk,
+)
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -867,34 +869,8 @@ def nation_revenue_hhi(spark, sf_dir):
 # that makes every multiplicative statistic in this engine
 # partitioning-proof.
 
-_KM_ORACLE = """
-WITH cust AS (
-  SELECT o_custkey,
-         min(year(o_orderdate) * 12 + month(o_orderdate)) AS first_m,
-         max(year(o_orderdate) * 12 + month(o_orderdate)) AS last_m
-  FROM orders GROUP BY o_custkey
-),
-bounds AS (SELECT max(last_m) AS data_end FROM cust),
-obs AS (
-  SELECT last_m - first_m AS duration_m,
-         CASE WHEN data_end - last_m > 6 THEN 1 ELSE 0 END AS churned
-  FROM cust, bounds
-),
-at_t AS (
-  SELECT duration_m,
-         CAST(sum(churned) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM obs GROUP BY duration_m
-),
-risk AS (
-  SELECT duration_m, d,
-         CAST((SELECT count(*) FROM obs)
-           - coalesce(sum(c) OVER (ORDER BY duration_m
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND 1 PRECEDING), 0) AS BIGINT)
-           AS n_at_risk
-  FROM at_t
-),
+_KM_ORACLE = f"""
+WITH {LIFETIME_RISK_CTES},
 terms AS (
   SELECT duration_m, d, n_at_risk,
          CASE WHEN d < n_at_risk
@@ -941,33 +917,7 @@ def orders_survival_curve(spark, sf_dir):
     """
     from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
 
-    o = load_table(spark, sf_dir, "orders")
-    mth = F.year("o_orderdate") * 12 + F.month("o_orderdate")
-    cust = o.groupBy("o_custkey").agg(
-        F.min(mth).alias("first_m"), F.max(mth).alias("last_m")
-    )
-    bounds = cust.agg(F.max("last_m").alias("data_end"))
-    obs = cust.crossJoin(F.broadcast(bounds)).select(
-        (F.col("last_m") - F.col("first_m")).alias("duration_m"),
-        F.when(F.col("data_end") - F.col("last_m") > 6, 1)
-        .otherwise(0)
-        .alias("churned"),
-    )
-    n_total = obs.agg(F.count(F.lit(1)).alias("n_total"))
-    at_t = obs.groupBy("duration_m").agg(
-        F.sum("churned").cast("long").alias("d"),
-        F.count(F.lit(1)).cast("long").alias("c"),
-    )
-    scan1 = ordered_scan(
-        at_t, ["duration_m"], running=[("run_c", "c", "sum")]
-    )
-    risk = scan1.crossJoin(F.broadcast(n_total)).select(
-        "duration_m",
-        "d",
-        (F.col("n_total") - (F.col("run_c") - F.col("c"))).alias(
-            "n_at_risk"
-        ),
-    )
+    risk = lifetime_risk(spark, sf_dir)
     lg = F.when(
         F.col("d") < F.col("n_at_risk"),
         F.round(
@@ -1456,18 +1406,7 @@ def customer_spend_trend(spark, sf_dir):
         "x"
     )
     y = F.round(F.col("o_totalprice") * 100).cast("long").alias("y")
-    dec = "decimal(38,0)"
-    s = (
-        o.select("o_custkey", x, y)
-        .groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("x").cast(dec)).alias("sx"),
-            F.sum(F.col("y").cast(dec)).alias("sy"),
-            F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
-            F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
-        )
-    )
+    s = ols_moments(o.select("o_custkey", x, y), "o_custkey")
     nd = F.col("n").cast("double")
     sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
     sxy, sxx = F.col("sxy").cast("double"), F.col("sxx").cast("double")

@@ -10,10 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from wikipedia_data_pipeline_spark.operators import dedup as D
-from wikipedia_data_pipeline_spark.operators import profiling as P
 from wikipedia_data_pipeline_spark.operators.ranks import pin
-from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -74,14 +71,18 @@ _PR_EDGES_SQL = """
 """
 
 
-def _pagerank_oracle(iterations: int = 3) -> str:
-    """Unrolled-CTE DuckDB twin of operators.graph.pagerank_fixed_point
-    (scale 1e6, damping 85%). Kept programmatic so the Spark loop and
-    the SQL unrolling can't drift on iteration count."""
+def _pagerank_oracle(
+    edges_sql: str, outdeg_sql: str, share_sql: str, iterations: int = 3
+) -> str:
+    """Unrolled-CTE DuckDB twin of the fixed-point PageRank loops
+    (scale 1e6, damping 85%) over the edge relation ``edges_sql``:
+    ``outdeg_sql`` aggregates a source's out-weight, ``share_sql`` is
+    the mass one edge passes on. Kept programmatic so the Spark loop
+    and the SQL unrolling can't drift on iteration count."""
     ctes = [
-        f"edges AS ({_PR_EDGES_SQL})",
+        f"edges AS ({edges_sql})",
         "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
-        "outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src)",
+        f"outdeg AS (SELECT src, {outdeg_sql} AS outdeg FROM edges GROUP BY src)",
         "r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS pr FROM nodes)",
     ]
     for i in range(1, iterations + 1):
@@ -90,7 +91,7 @@ def _pagerank_oracle(iterations: int = 3) -> str:
   SELECT n.node,
          CAST(150000 + COALESCE((85 * s.mass) // 100, 0) AS BIGINT) AS pr
   FROM nodes n LEFT JOIN (
-    SELECT e.dst AS node, CAST(sum(r.pr // o.outdeg) AS BIGINT) AS mass
+    SELECT e.dst AS node, CAST(sum({share_sql}) AS BIGINT) AS mass
     FROM edges e
     JOIN r{i - 1} r ON e.src = r.node
     JOIN outdeg o ON e.src = o.src
@@ -106,7 +107,10 @@ def _pagerank_oracle(iterations: int = 3) -> str:
     )
 
 
-@register("graph_pagerank_partsupp", oracle=_pagerank_oracle(3))
+@register(
+    "graph_pagerank_partsupp",
+    oracle=_pagerank_oracle(_PR_EDGES_SQL, "count(*)", "r.pr // o.outdeg"),
+)
 def graph_pagerank_partsupp(spark, sf_dir):
     """Fixed-point PageRank (3 iterations, damping 0.85) over the
     directed part→supplier purchase graph distilled from lineitem.
@@ -264,38 +268,12 @@ _PR_WEDGES_SQL = """
 """
 
 
-def _pagerank_weighted_oracle(iterations: int = 3) -> str:
-    """Unrolled-CTE twin of the weighted fixed-point PageRank."""
-    ctes = [
-        f"edges AS ({_PR_WEDGES_SQL})",
-        "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
-        "outdeg AS (SELECT src, CAST(sum(w) AS BIGINT) AS outdeg"
-        " FROM edges GROUP BY src)",
-        "r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS pr FROM nodes)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"""r{i} AS (
-  SELECT n.node,
-         CAST(150000 + COALESCE((85 * s.mass) // 100, 0) AS BIGINT) AS pr
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst AS node, CAST(sum((r.pr * e.w) // o.outdeg) AS BIGINT) AS mass
-    FROM edges e
-    JOIN r{i - 1} r ON e.src = r.node
-    JOIN outdeg o ON e.src = o.src
-    GROUP BY e.dst
-  ) s ON n.node = s.node
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT node, pr AS pr_rank FROM r{iterations}"
-        "\nORDER BY pr_rank DESC, node ASC"
-    )
-
-
-@register("graph_pagerank_weighted", oracle=_pagerank_weighted_oracle(3))
+@register(
+    "graph_pagerank_weighted",
+    oracle=_pagerank_oracle(
+        _PR_WEDGES_SQL, "CAST(sum(w) AS BIGINT)", "(r.pr * e.w) // o.outdeg"
+    ),
+)
 def graph_pagerank_weighted(spark, sf_dir):
     """Weighted fixed-point PageRank: mass splits proportionally to the
     purchase count on each part→supplier edge ((rank·w) div Σw, still
@@ -416,6 +394,27 @@ def graph_bfs_reachability(spark, sf_dir):
 
 # --- Recommendations + count anomalies (round 5) ------------------------
 
+def _co_purchase_pairs(op):
+    """(pa, pb, c): co-purchase counts of part pairs pa < pb over the
+    distinct (l_orderkey, l_partkey) relation ``op``, from the
+    per-basket self-join (basket-size²-bounded, never catalog²), with
+    the support floor c >= 3 applied before any ranking."""
+    a, b = op.alias("a"), op.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(
+            F.col("a.l_partkey").alias("pa"),
+            F.col("b.l_partkey").alias("pb"),
+        )
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") >= 3)
+    )
+
+
 @register(
     "recs_item_item_cosine",
     oracle="""
@@ -456,21 +455,7 @@ def recs_item_item_cosine(spark, sf_dir):
         .distinct()
     )
     ic = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
-    a = op.alias("a")
-    b = op.alias("b")
-    co = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 3)
-    )
+    co = _co_purchase_pairs(op)
     ia = ic.select(F.col("l_partkey").alias("pa"), F.col("n").alias("na"))
     ib = ic.select(F.col("l_partkey").alias("pb"), F.col("n").alias("nb"))
     return (
@@ -768,20 +753,7 @@ def recs_catalog_coverage(spark, sf_dir):
         .distinct()
     )
     ic = op.groupBy("l_partkey").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    a, b = op.alias("a"), op.alias("b")
-    co = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 3)
-    )
+    co = _co_purchase_pairs(op)
     ia = ic.select(F.col("l_partkey").alias("pa"), F.col("n").alias("na"))
     ib = ic.select(F.col("l_partkey").alias("pb"), F.col("n").alias("nb"))
     half = (

@@ -8,6 +8,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators.ranks import pin
+from wikipedia_data_pipeline_spark.queries.mleval_queries import (
+    RATED2_CELLS_CTES,
+    SCORE_BINS_CTES,
+    rated2_cells,
+    score_bins,
+)
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
@@ -208,8 +214,13 @@ def ml_eval_bradley_terry(spark, sf_dir):
     )
 
 
-_FLEISS_ORACLE = f"""
-WITH rated AS (
+# The deterministic 3-rater panel over events, shared by Fleiss' kappa,
+# Krippendorff's alpha and Cronbach's alpha (mleval_reliability_queries):
+# rater 1 labels into 3 classes; rater 2 copies rater 1 on ~70% of items,
+# rater 3 on ~50%, re-drawing from independent hash streams otherwise.
+# Hash args are pre-reduced mod 1000003 so no key expression overflows.
+RATED3_CTE = f"""
+rated AS (
   SELECT r1,
          CASE WHEN flip2 < 7 THEN r1 ELSE alt2 END AS r2,
          CASE WHEN flip3 < 5 THEN r1 ELSE alt3 END AS r3
@@ -221,13 +232,42 @@ WITH rated AS (
            CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 53 + 29)")}) % 3 AS BIGINT) AS alt3
     FROM events
   )
-),
-agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_items,
-         CAST(sum(CASE WHEN r1 = r2 THEN 1 ELSE 0 END
-                  + CASE WHEN r1 = r3 THEN 1 ELSE 0 END
-                  + CASE WHEN r2 = r3 THEN 1 ELSE 0 END) AS BIGINT) AS agree_pairs,
-         CAST(sum(CASE WHEN r1 = 0 THEN 1 ELSE 0 END
+)"""
+
+
+def rated3(spark, sf_dir):
+    """(r1, r2, r3) per event: the Spark side of ``RATED3_CTE``."""
+    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
+
+    ev = load_table(spark, sf_dir, "events")
+    base = ev.select(
+        (det_hash("event_id") % 3).cast("long").alias("r1"),
+        (det_hash((F.col("event_id") % 1000003) * 13 + 5) % 10)
+        .cast("long")
+        .alias("flip2"),
+        (det_hash((F.col("event_id") % 1000003) * 31 + 11) % 3)
+        .cast("long")
+        .alias("alt2"),
+        (det_hash((F.col("event_id") % 1000003) * 43 + 17) % 10)
+        .cast("long")
+        .alias("flip3"),
+        (det_hash((F.col("event_id") % 1000003) * 53 + 29) % 3)
+        .cast("long")
+        .alias("alt3"),
+    )
+    return base.select(
+        "r1",
+        F.when(F.col("flip2") < 7, F.col("r1"))
+        .otherwise(F.col("alt2"))
+        .alias("r2"),
+        F.when(F.col("flip3") < 5, F.col("r1"))
+        .otherwise(F.col("alt3"))
+        .alias("r3"),
+    )
+
+
+# Ratings per class c0..c2 summed over the three raters (SQL select items).
+_RATED3_CLASS_TOTALS = """CAST(sum(CASE WHEN r1 = 0 THEN 1 ELSE 0 END
                   + CASE WHEN r2 = 0 THEN 1 ELSE 0 END
                   + CASE WHEN r3 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
          CAST(sum(CASE WHEN r1 = 1 THEN 1 ELSE 0 END
@@ -235,7 +275,17 @@ agg AS (
                   + CASE WHEN r3 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
          CAST(sum(CASE WHEN r1 = 2 THEN 1 ELSE 0 END
                   + CASE WHEN r2 = 2 THEN 1 ELSE 0 END
-                  + CASE WHEN r3 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS c2
+                  + CASE WHEN r3 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS c2"""
+
+
+_FLEISS_ORACLE = f"""
+WITH {RATED3_CTE},
+agg AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_items,
+         CAST(sum(CASE WHEN r1 = r2 THEN 1 ELSE 0 END
+                  + CASE WHEN r1 = r3 THEN 1 ELSE 0 END
+                  + CASE WHEN r2 = r3 THEN 1 ELSE 0 END) AS BIGINT) AS agree_pairs,
+         {_RATED3_CLASS_TOTALS}
   FROM rated
 ),
 d AS (
@@ -283,33 +333,7 @@ def ml_eval_fleiss_kappa(spark, sf_dir):
     expression cannot overflow BIGINT at any event_id.
 
     Scale shape: scan -> 1-row aggregate. Nothing else."""
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.select(
-        (det_hash("event_id") % 3).cast("long").alias("r1"),
-        (det_hash((F.col("event_id") % 1000003) * 13 + 5) % 10)
-        .cast("long")
-        .alias("flip2"),
-        (det_hash((F.col("event_id") % 1000003) * 31 + 11) % 3)
-        .cast("long")
-        .alias("alt2"),
-        (det_hash((F.col("event_id") % 1000003) * 43 + 17) % 10)
-        .cast("long")
-        .alias("flip3"),
-        (det_hash((F.col("event_id") % 1000003) * 53 + 29) % 3)
-        .cast("long")
-        .alias("alt3"),
-    )
-    rated = base.select(
-        "r1",
-        F.when(F.col("flip2") < 7, F.col("r1"))
-        .otherwise(F.col("alt2"))
-        .alias("r2"),
-        F.when(F.col("flip3") < 5, F.col("r1"))
-        .otherwise(F.col("alt3"))
-        .alias("r3"),
-    )
+    rated = rated3(spark, sf_dir)
 
     def eq(x, y):
         return F.when(F.col(x) == F.col(y), 1).otherwise(0)
@@ -518,20 +542,7 @@ def ml_eval_cuped_ab(spark, sf_dir):
 
 
 _BRIER_ORACLE = f"""
-WITH ev AS (
-  SELECT CAST(round(value * 1000000) AS BIGINT) AS v_u,
-         CAST(({SQL_DET_HASH.format(col="user_id")}) % 2 AS BIGINT) AS label
-  FROM events
-),
-rng AS (
-  SELECT CAST(min(v_u) AS BIGINT) AS lo, CAST(max(v_u) AS BIGINT) AS hi
-  FROM ev
-),
-binned AS (
-  SELECT least(9, ((ev.v_u - rng.lo) * 10) // (rng.hi - rng.lo + 1)) AS bin,
-         ev.v_u - rng.lo AS dv, ev.label, rng.hi - rng.lo AS rng_w
-  FROM ev, rng
-),
+WITH {SCORE_BINS_CTES},
 item AS (
   SELECT CAST(sum(CAST(round(
            (CAST(dv AS DOUBLE) / rng_w - label)
@@ -603,25 +614,7 @@ def ml_eval_brier_decomposition(spark, sf_dir):
     Scale shape: one events scan -> (bin) hash agg (10 groups) plus
     one 1-row item-level moment aggregate; the decomposition itself
     runs on the 10-row relation."""
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 1_000_000).cast("long").alias("v_u"),
-        (det_hash("user_id") % 2).cast("long").alias("label"),
-    )
-    rng = ev.agg(
-        F.min("v_u").cast("long").alias("lo"),
-        F.max("v_u").cast("long").alias("hi"),
-    )
-    binned = ev.crossJoin(F.broadcast(rng)).select(
-        F.least(
-            F.lit(9).cast("long"),
-            F.expr("((v_u - lo) * 10) div (hi - lo + 1)"),
-        ).alias("bin"),
-        (F.col("v_u") - F.col("lo")).alias("dv"),
-        "label",
-        (F.col("hi") - F.col("lo")).alias("rng_w"),
-    )
+    binned = score_bins(spark, sf_dir)
     f_item = F.col("dv").cast("double") / F.col("rng_w")
     item = binned.agg(
         F.sum(
@@ -796,33 +789,13 @@ def ml_eval_mcnemar_test(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _KRIPP_ORACLE = f"""
-WITH rated AS (
-  SELECT r1,
-         CASE WHEN flip2 < 7 THEN r1 ELSE alt2 END AS r2,
-         CASE WHEN flip3 < 5 THEN r1 ELSE alt3 END AS r3
-  FROM (
-    SELECT CAST(({SQL_DET_HASH.format(col="event_id")}) % 3 AS BIGINT) AS r1,
-           CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 13 + 5)")}) % 10 AS BIGINT) AS flip2,
-           CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 31 + 11)")}) % 3 AS BIGINT) AS alt2,
-           CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 43 + 17)")}) % 10 AS BIGINT) AS flip3,
-           CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 53 + 29)")}) % 3 AS BIGINT) AS alt3
-    FROM events
-  )
-),
+WITH {RATED3_CTE},
 agg AS (
   SELECT CAST(count(*) AS BIGINT) AS n_items,
          CAST(sum(CASE WHEN r1 = r2 THEN 1 ELSE 0 END
                   + CASE WHEN r1 = r3 THEN 1 ELSE 0 END
                   + CASE WHEN r2 = r3 THEN 1 ELSE 0 END) AS BIGINT) AS a,
-         CAST(sum(CASE WHEN r1 = 0 THEN 1 ELSE 0 END
-                  + CASE WHEN r2 = 0 THEN 1 ELSE 0 END
-                  + CASE WHEN r3 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
-         CAST(sum(CASE WHEN r1 = 1 THEN 1 ELSE 0 END
-                  + CASE WHEN r2 = 1 THEN 1 ELSE 0 END
-                  + CASE WHEN r3 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-         CAST(sum(CASE WHEN r1 = 2 THEN 1 ELSE 0 END
-                  + CASE WHEN r2 = 2 THEN 1 ELSE 0 END
-                  + CASE WHEN r3 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS c2
+         {_RATED3_CLASS_TOTALS}
   FROM rated
 ),
 d AS (
@@ -869,33 +842,7 @@ def ml_eval_krippendorff_alpha(spark, sf_dir):
 
     Scale shape: scan → ONE 1-row hash aggregate; no per-item grouping,
     no window, no UDF."""
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.select(
-        (det_hash("event_id") % 3).cast("long").alias("r1"),
-        (det_hash((F.col("event_id") % 1000003) * 13 + 5) % 10)
-        .cast("long")
-        .alias("flip2"),
-        (det_hash((F.col("event_id") % 1000003) * 31 + 11) % 3)
-        .cast("long")
-        .alias("alt2"),
-        (det_hash((F.col("event_id") % 1000003) * 43 + 17) % 10)
-        .cast("long")
-        .alias("flip3"),
-        (det_hash((F.col("event_id") % 1000003) * 53 + 29) % 3)
-        .cast("long")
-        .alias("alt3"),
-    )
-    rated = base.select(
-        "r1",
-        F.when(F.col("flip2") < 7, F.col("r1"))
-        .otherwise(F.col("alt2"))
-        .alias("r2"),
-        F.when(F.col("flip3") < 5, F.col("r1"))
-        .otherwise(F.col("alt3"))
-        .alias("r3"),
-    )
+    rated = rated3(spark, sf_dir)
 
     def cat_total(k):
         return sum(
@@ -1085,19 +1032,7 @@ def ml_eval_cochran_q(spark, sf_dir):
 # final double division per variant.
 
 _WKAPPA_ORACLE = f"""
-WITH rated AS (
-  SELECT CAST(({SQL_DET_HASH.format(col="event_id")}) % 3 AS BIGINT) AS r1,
-         CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 13 + 5)")}) % 10 AS BIGINT) AS flip,
-         CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 31 + 11)")}) % 3 AS BIGINT) AS alt
-  FROM events
-),
-cells AS (
-  SELECT r1, CASE WHEN flip < 7 THEN r1 ELSE alt END AS r2,
-         CAST(count(*) AS BIGINT) AS n_cell
-  FROM rated GROUP BY 1, 2
-),
-m1 AS (SELECT r1 AS k, CAST(sum(n_cell) AS BIGINT) AS n1 FROM cells GROUP BY 1),
-m2 AS (SELECT r2 AS k, CAST(sum(n_cell) AS BIGINT) AS n2 FROM cells GROUP BY 1),
+WITH {RATED2_CELLS_CTES},
 obs AS (
   SELECT CAST(sum(n_cell) AS BIGINT) AS n_items,
          CAST(sum(CAST(abs(r1 - r2) AS DECIMAL(18,0)) * n_cell)
@@ -1137,31 +1072,7 @@ def ml_eval_weighted_kappa(spark, sf_dir):
     matrix; marginals and the 9-term chance products are driver-tiny;
     both kappas are single fixed double divisions over exact DECIMAL
     integers."""
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-
-    ev = load_table(spark, sf_dir, "events")
-    rated = ev.select(
-        (det_hash("event_id") % 3).cast("long").alias("r1"),
-        (det_hash((F.col("event_id") % 1000003) * 13 + 5) % 10)
-        .cast("long")
-        .alias("flip"),
-        (det_hash((F.col("event_id") % 1000003) * 31 + 11) % 3)
-        .cast("long")
-        .alias("alt"),
-    )
-    cells = (
-        rated.select(
-            "r1",
-            F.when(F.col("flip") < 7, F.col("r1"))
-            .otherwise(F.col("alt"))
-            .alias("r2"),
-        )
-        .groupBy("r1", "r2")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_cell"))
-    )
-    # 9-row confusion matrix consumed by three branches — persist so
-    # the fact agg runs once, not per branch
-    cells = pin(cells)
+    cells = rated2_cells(spark, sf_dir)
     m1 = cells.groupBy(F.col("r1").alias("k")).agg(
         F.sum("n_cell").cast("long").alias("n1")
     )
@@ -1230,8 +1141,10 @@ def ml_eval_weighted_kappa(spark, sf_dir):
 # 2*TP/(2*TP+FP+FN); the macro mean is a fixed left-to-right 4-term
 # expression — no order-dependent reduction anywhere.
 
-_MACRO_F1_ORACLE = f"""
-WITH labeled AS (
+# The 16-cell confusion counts of that 4-class panel, shared with the
+# multi-class MCC below (Spark side: ``_confusion4_cells``).
+_CONFUSION4_CELLS_CTES = f"""
+labeled AS (
   SELECT CAST(({SQL_DET_HASH.format(col="event_id")}) % 4 AS BIGINT) AS y,
          CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 13 + 5)")}) % 20 AS BIGINT) AS flip,
          CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 31 + 11)")}) % 4 AS BIGINT) AS alt
@@ -1241,7 +1154,10 @@ cells AS (
   SELECT y, CASE WHEN flip < 13 THEN y ELSE alt END AS p,
          CAST(count(*) AS BIGINT) AS n_cell
   FROM labeled GROUP BY 1, 2
-),
+)"""
+
+_MACRO_F1_ORACLE = f"""
+WITH {_CONFUSION4_CELLS_CTES},
 per AS (
   SELECT CAST(sum(n_cell) AS BIGINT) AS n_items,
          CAST(sum(CASE WHEN y = p THEN n_cell ELSE 0 END) AS BIGINT)
@@ -1270,16 +1186,10 @@ FROM f
 """
 
 
-@register("ml_eval_macro_f1", oracle=_MACRO_F1_ORACLE)
-def ml_eval_macro_f1(spark, sf_dir):
-    """Multi-class classification report: per-class TP/FP/FN and F1,
-    macro-F1 (unweighted class mean) and micro-F1 (= accuracy in
-    single-label multi-class) over a deterministic 4-class
-    actual/predicted panel. See the section comment.
-
-    Scale shape: scan -> 16-row confusion hash agg -> fixed-width
-    single-row arithmetic. Nothing downstream of the agg depends on
-    data size."""
+def _confusion4_cells(spark, sf_dir):
+    """(y, p, n_cell): the 16-cell confusion counts of the deterministic
+    4-class actual/predicted panel shared by ml_eval_macro_f1 and
+    ml_eval_mcc_multiclass."""
     from wikipedia_data_pipeline_spark.operators.sampling import det_hash
 
     ev = load_table(spark, sf_dir, "events")
@@ -1292,7 +1202,7 @@ def ml_eval_macro_f1(spark, sf_dir):
         .cast("long")
         .alias("alt"),
     )
-    cells = (
+    return (
         labeled.select(
             "y",
             F.when(F.col("flip") < 13, F.col("y"))
@@ -1302,6 +1212,19 @@ def ml_eval_macro_f1(spark, sf_dir):
         .groupBy("y", "p")
         .agg(F.count(F.lit(1)).cast("long").alias("n_cell"))
     )
+
+
+@register("ml_eval_macro_f1", oracle=_MACRO_F1_ORACLE)
+def ml_eval_macro_f1(spark, sf_dir):
+    """Multi-class classification report: per-class TP/FP/FN and F1,
+    macro-F1 (unweighted class mean) and micro-F1 (= accuracy in
+    single-label multi-class) over a deterministic 4-class
+    actual/predicted panel. See the section comment.
+
+    Scale shape: scan -> 16-row confusion hash agg -> fixed-width
+    single-row arithmetic. Nothing downstream of the agg depends on
+    data size."""
+    cells = _confusion4_cells(spark, sf_dir)
     aggs = [
         F.sum("n_cell").cast("long").alias("n_items"),
         F.sum(F.when(F.col("y") == F.col("p"), F.col("n_cell")).otherwise(0))
@@ -1506,17 +1429,7 @@ def ml_eval_rbo_rankings(spark, sf_dir):
 # expression (two sqrts, one division).
 
 _MCC_ORACLE = f"""
-WITH labeled AS (
-  SELECT CAST(({SQL_DET_HASH.format(col="event_id")}) % 4 AS BIGINT) AS y,
-         CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 13 + 5)")}) % 20 AS BIGINT) AS flip,
-         CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 31 + 11)")}) % 4 AS BIGINT) AS alt
-  FROM events
-),
-cells AS (
-  SELECT y, CASE WHEN flip < 13 THEN y ELSE alt END AS p,
-         CAST(count(*) AS BIGINT) AS n_cell
-  FROM labeled GROUP BY 1, 2
-),
+WITH {_CONFUSION4_CELLS_CTES},
 t AS (SELECT y AS k, CAST(sum(n_cell) AS BIGINT) AS t_k FROM cells GROUP BY 1),
 pr AS (SELECT p AS k, CAST(sum(n_cell) AS BIGINT) AS p_k FROM cells GROUP BY 1),
 tot AS (
@@ -1551,28 +1464,7 @@ def ml_eval_mcc_multiclass(spark, sf_dir):
 
     Scale shape: scan -> 16-row confusion hash agg; marginals and
     the K-term products are driver-tiny."""
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-
-    ev = load_table(spark, sf_dir, "events")
-    labeled = ev.select(
-        (det_hash("event_id") % 4).cast("long").alias("y"),
-        (det_hash((F.col("event_id") % 1000003) * 13 + 5) % 20)
-        .cast("long")
-        .alias("flip"),
-        (det_hash((F.col("event_id") % 1000003) * 31 + 11) % 4)
-        .cast("long")
-        .alias("alt"),
-    )
-    cells = (
-        labeled.select(
-            "y",
-            F.when(F.col("flip") < 13, F.col("y"))
-            .otherwise(F.col("alt"))
-            .alias("p"),
-        )
-        .groupBy("y", "p")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_cell"))
-    )
+    cells = _confusion4_cells(spark, sf_dir)
     cells = pin(cells)
     t = cells.groupBy(F.col("y").alias("k")).agg(
         F.sum("n_cell").cast("long").alias("t_k")

@@ -310,10 +310,13 @@ def ml_eval_ndcg_events(spark, sf_dir):
 
 
 
-@register(
-    "ml_eval_calibration_bins",
-    oracle=f"""
-WITH ev AS (
+# The min-max 10-bin layout of a micro-unit score (events.value) against
+# a hash-parity label (det_hash(user_id) % 2), shared by
+# ml_eval_calibration_bins and ml_eval_brier_decomposition
+# (mleval_paired_queries). The bin id is integer arithmetic against the
+# global [lo, hi] range, so no float boundary can flip a row.
+SCORE_BINS_CTES = f"""
+ev AS (
   SELECT CAST(round(value * 1000000) AS BIGINT) AS v_u,
          CAST(({SQL_DET_HASH.format(col="user_id")}) % 2 AS BIGINT) AS label
   FROM events
@@ -326,7 +329,89 @@ binned AS (
   SELECT least(9, ((ev.v_u - rng.lo) * 10) // (rng.hi - rng.lo + 1)) AS bin,
          ev.v_u - rng.lo AS dv, ev.label, rng.hi - rng.lo AS rng_w
   FROM ev, rng
+)"""
+
+
+def score_bins(spark, sf_dir):
+    """(bin, dv, label, rng_w) per event: the Spark side of
+    ``SCORE_BINS_CTES``."""
+    from wikipedia_data_pipeline_spark.functions import cents_units
+    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
+
+    ev = load_table(spark, sf_dir, "events").select(
+        cents_units("value").alias("v_u"),
+        (det_hash("user_id") % 2).cast("long").alias("label"),
+    )
+    rng = ev.agg(
+        F.min("v_u").cast("long").alias("lo"),
+        F.max("v_u").cast("long").alias("hi"),
+    )
+    return ev.crossJoin(F.broadcast(rng)).select(
+        F.least(
+            F.lit(9).cast("long"),
+            F.expr("((v_u - lo) * 10) div (hi - lo + 1)"),
+        ).alias("bin"),
+        (F.col("v_u") - F.col("lo")).alias("dv"),
+        "label",
+        (F.col("hi") - F.col("lo")).alias("rng_w"),
+    )
+
+
+# Two deterministic pseudo-raters over events, shared by
+# ml_eval_rater_kappa and ml_eval_weighted_kappa (mleval_paired_queries):
+# rater 1 labels by event-id hash into 3 classes; rater 2 copies rater 1
+# on ~70% of items and re-draws from a third stream otherwise. The 3x3
+# confusion cells and both raters' marginals.
+RATED2_CELLS_CTES = f"""
+rated AS (
+  SELECT CAST(({SQL_DET_HASH.format(col="event_id")}) % 3 AS BIGINT) AS r1,
+         CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 13 + 5)")}) % 10 AS BIGINT) AS flip,
+         CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 31 + 11)")}) % 3 AS BIGINT) AS alt
+  FROM events
 ),
+cells AS (
+  SELECT r1, CASE WHEN flip < 7 THEN r1 ELSE alt END AS r2,
+         CAST(count(*) AS BIGINT) AS n_cell
+  FROM rated GROUP BY 1, 2
+),
+m1 AS (SELECT r1 AS k, CAST(sum(n_cell) AS BIGINT) AS n1 FROM cells GROUP BY 1),
+m2 AS (SELECT r2 AS k, CAST(sum(n_cell) AS BIGINT) AS n2 FROM cells GROUP BY 1)"""
+
+
+def rated2_cells(spark, sf_dir):
+    """(r1, r2, n_cell): the Spark side of the ``cells`` CTE in
+    ``RATED2_CELLS_CTES``, pinned: every caller reads the 9-row matrix
+    from several branches (marginals, chance product, agreement), so
+    the fact agg runs once, not per branch."""
+    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
+
+    ev = load_table(spark, sf_dir, "events")
+    rated = ev.select(
+        (det_hash("event_id") % 3).cast("long").alias("r1"),
+        (det_hash((F.col("event_id") % 1000003) * 13 + 5) % 10)
+        .cast("long")
+        .alias("flip"),
+        (det_hash((F.col("event_id") % 1000003) * 31 + 11) % 3)
+        .cast("long")
+        .alias("alt"),
+    )
+    cells = (
+        rated.select(
+            "r1",
+            F.when(F.col("flip") < 7, F.col("r1"))
+            .otherwise(F.col("alt"))
+            .alias("r2"),
+        )
+        .groupBy("r1", "r2")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_cell"))
+    )
+    return pin(cells)
+
+
+@register(
+    "ml_eval_calibration_bins",
+    oracle=f"""
+WITH {SCORE_BINS_CTES},
 per AS (
   SELECT bin, CAST(max(rng_w) AS BIGINT) AS rng_w,
          CAST(count(*) AS BIGINT) AS n,
@@ -366,26 +451,7 @@ def ml_eval_calibration_bins(spark, sf_dir):
     1-row range; sum_dv stays exact below 2^63 up to ~1.8e10 rows of
     full-range micro-unit scores (same 2^53-class bound family as
     cents_sum, documented there)."""
-    from wikipedia_data_pipeline_spark.functions import cents_units
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-
-    ev = load_table(spark, sf_dir, "events").select(
-        cents_units("value").alias("v_u"),
-        (det_hash("user_id") % 2).cast("long").alias("label"),
-    )
-    rng = ev.agg(
-        F.min("v_u").cast("long").alias("lo"),
-        F.max("v_u").cast("long").alias("hi"),
-    )
-    binned = ev.crossJoin(F.broadcast(rng)).select(
-        F.least(
-            F.lit(9).cast("long"),
-            F.expr("((v_u - lo) * 10) div (hi - lo + 1)"),
-        ).alias("bin"),
-        (F.col("v_u") - F.col("lo")).alias("dv"),
-        "label",
-        (F.col("hi") - F.col("lo")).alias("rng_w"),
-    )
+    binned = score_bins(spark, sf_dir)
     per = binned.groupBy("bin").agg(
         F.max("rng_w").cast("long").alias("rng_w"),
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -422,19 +488,7 @@ def ml_eval_calibration_bins(spark, sf_dir):
 @register(
     "ml_eval_rater_kappa",
     oracle=f"""
-WITH rated AS (
-  SELECT CAST(({SQL_DET_HASH.format(col="event_id")}) % 3 AS BIGINT) AS r1,
-         CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 13 + 5)")}) % 10 AS BIGINT) AS flip,
-         CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 31 + 11)")}) % 3 AS BIGINT) AS alt
-  FROM events
-),
-cells AS (
-  SELECT r1, CASE WHEN flip < 7 THEN r1 ELSE alt END AS r2,
-         CAST(count(*) AS BIGINT) AS n_cell
-  FROM rated GROUP BY 1, 2
-),
-m1 AS (SELECT r1 AS k, CAST(sum(n_cell) AS BIGINT) AS n1 FROM cells GROUP BY 1),
-m2 AS (SELECT r2 AS k, CAST(sum(n_cell) AS BIGINT) AS n2 FROM cells GROUP BY 1),
+WITH {RATED2_CELLS_CTES},
 s AS (
   SELECT CAST(sum(CAST(m1.n1 AS DECIMAL(18,0)) * CAST(m2.n2 AS DECIMAL(18,0)))
               AS DECIMAL(38,0)) AS chance
@@ -478,33 +532,7 @@ def ml_eval_rater_kappa(spark, sf_dir):
     driver-tiny. The hash arguments are pre-reduced mod 1000003 before
     the *13/*31 stretches so the key expression can't overflow BIGINT
     at any event_id (DuckDB errors on overflow where the JVM wraps)."""
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-
-    ev = load_table(spark, sf_dir, "events")
-    rated = ev.select(
-        (det_hash("event_id") % 3).cast("long").alias("r1"),
-        (det_hash((F.col("event_id") % 1000003) * 13 + 5) % 10)
-        .cast("long")
-        .alias("flip"),
-        (det_hash((F.col("event_id") % 1000003) * 31 + 11) % 3)
-        .cast("long")
-        .alias("alt"),
-    )
-    cells = (
-        rated.select(
-            "r1",
-            F.when(F.col("flip") < 7, F.col("r1"))
-            .otherwise(F.col("alt"))
-            .alias("r2"),
-        )
-        .groupBy("r1", "r2")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_cell"))
-    )
-    # 9-row confusion matrix consumed by FOUR branches (two marginals,
-    # the chance product, the agree total) — persist so the fact agg
-    # runs once, not per branch
-
-    cells = pin(cells)
+    cells = rated2_cells(spark, sf_dir)
     m1 = cells.groupBy(F.col("r1").alias("k")).agg(
         F.sum("n_cell").cast("long").alias("n1")
     )

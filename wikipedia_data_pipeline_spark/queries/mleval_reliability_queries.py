@@ -19,6 +19,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
+from wikipedia_data_pipeline_spark.queries.mleval_paired_queries import (
+    RATED3_CTE,
+    rated3,
+)
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -250,19 +254,7 @@ def ml_eval_hosmer_lemeshow(spark, sf_dir):
 # 0..6; no per-item relation, no pivot).
 
 _CRONBACH_ORACLE = f"""
-WITH rated AS (
-  SELECT r1,
-         CASE WHEN flip2 < 7 THEN r1 ELSE alt2 END AS r2,
-         CASE WHEN flip3 < 5 THEN r1 ELSE alt3 END AS r3
-  FROM (
-    SELECT CAST(({SQL_DET_HASH.format(col="event_id")}) % 3 AS BIGINT) AS r1,
-           CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 13 + 5)")}) % 10 AS BIGINT) AS flip2,
-           CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 31 + 11)")}) % 3 AS BIGINT) AS alt2,
-           CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 43 + 17)")}) % 10 AS BIGINT) AS flip3,
-           CAST(({SQL_DET_HASH.format(col="((event_id % 1000003) * 53 + 29)")}) % 3 AS BIGINT) AS alt3
-    FROM events
-  )
-),
+WITH {RATED3_CTE},
 agg AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
          CAST(sum(r1) AS BIGINT) AS s1, CAST(sum(r1 * r1) AS BIGINT) AS q1,
@@ -301,33 +293,7 @@ def ml_eval_cronbach_alpha(spark, sf_dir):
     internal-consistency reliability of the panel's total score. See
     the section comment: one fact-level aggregate of nine exact sums,
     every output one fixed expression over exact DECIMAL integers."""
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.select(
-        (det_hash("event_id") % 3).cast("long").alias("r1"),
-        (det_hash((F.col("event_id") % 1000003) * 13 + 5) % 10)
-        .cast("long")
-        .alias("flip2"),
-        (det_hash((F.col("event_id") % 1000003) * 31 + 11) % 3)
-        .cast("long")
-        .alias("alt2"),
-        (det_hash((F.col("event_id") % 1000003) * 43 + 17) % 10)
-        .cast("long")
-        .alias("flip3"),
-        (det_hash((F.col("event_id") % 1000003) * 53 + 29) % 3)
-        .cast("long")
-        .alias("alt3"),
-    )
-    rated = base.select(
-        "r1",
-        F.when(F.col("flip2") < 7, F.col("r1"))
-        .otherwise(F.col("alt2"))
-        .alias("r2"),
-        F.when(F.col("flip3") < 5, F.col("r1"))
-        .otherwise(F.col("alt3"))
-        .alias("r3"),
-    )
+    rated = rated3(spark, sf_dir)
     tot = F.col("r1") + F.col("r2") + F.col("r3")
     agg = rated.agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -210,10 +210,11 @@ def multimodal_wav_pcm_stats(spark, sf_dir):
     return MM.decode_wav_stats(MM.synth_wav_corpus(docs))
 
 
-@register(
-    "multimodal_video_frame_stats",
-    oracle="""
-WITH dims AS (
+# Every pixel i of every 2nd frame f of the synthetic per-document
+# video (nf frames of w x h), shared by the frame-stats and scene-cut
+# oracles.
+_VIDEO_PIXELS_CTES = """
+dims AS (
   SELECT doc_id, 1 + doc_id % 9 AS nf, 1 + doc_id % 8 AS w,
          1 + doc_id % 6 AS h
   FROM documents
@@ -225,7 +226,13 @@ fr AS (
 px AS (
   SELECT doc_id, nf, w, h, f, unnest(generate_series(0, w * h - 1)) AS i
   FROM fr
-)
+)"""
+
+
+@register(
+    "multimodal_video_frame_stats",
+    oracle=f"""
+WITH {_VIDEO_PIXELS_CTES}
 SELECT doc_id,
        CAST(max(nf) AS BIGINT) AS n_frames,
        CAST(f AS BIGINT) AS frame_idx,
@@ -250,20 +257,8 @@ def multimodal_video_frame_stats(spark, sf_dir):
 
 @register(
     "multimodal_video_scene_cuts",
-    oracle="""
-WITH dims AS (
-  SELECT doc_id, 1 + doc_id % 9 AS nf, 1 + doc_id % 8 AS w,
-         1 + doc_id % 6 AS h
-  FROM documents
-),
-fr AS (
-  SELECT doc_id, nf, w, h, unnest(generate_series(0, nf - 1, 2)) AS f
-  FROM dims
-),
-px AS (
-  SELECT doc_id, nf, w, h, f, unnest(generate_series(0, w * h - 1)) AS i
-  FROM fr
-),
+    oracle=f"""
+WITH {_VIDEO_PIXELS_CTES},
 stats AS (
   SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
          CAST(max(w) AS BIGINT) AS w, CAST(max(h) AS BIGINT) AS h,

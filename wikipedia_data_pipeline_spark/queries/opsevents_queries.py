@@ -241,9 +241,9 @@ def streaming_mv_maintenance(spark, sf_dir):
     return run_streaming_mv(spark, sf_dir)
 
 
-@register(
-    "events_rolling_active_users",
-    oracle="""
+# DAU and rolling 7-day WAU per day, shared by the plain and the
+# bucketed-twin query.
+_ROLLING_ACTIVE_ORACLE = """
 WITH du AS (
   SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
   FROM events
@@ -256,8 +256,10 @@ SELECT d.day,
 FROM days d JOIN du u
   ON u.day BETWEEN d.day - INTERVAL 6 DAY AND d.day
 GROUP BY d.day
-""",
-)
+"""
+
+
+@register("events_rolling_active_users", oracle=_ROLLING_ACTIVE_ORACLE)
 def events_rolling_active_users(spark, sf_dir):
     """DAU and rolling 7-day WAU per day — rolling DISTINCT counts,
     which no window frame can express exactly. Scale shape: collapse
@@ -299,20 +301,7 @@ def _rolling_active(ev):
 
 @register(
     "events_rolling_active_users_bucketed",
-    oracle="""
-WITH du AS (
-  SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
-  FROM events
-),
-days AS (SELECT DISTINCT day FROM du)
-SELECT d.day,
-       count(DISTINCT u.user_id) AS wau,
-       CAST(count(DISTINCT CASE WHEN u.day = d.day THEN u.user_id END)
-            AS BIGINT) AS dau
-FROM days d JOIN du u
-  ON u.day BETWEEN d.day - INTERVAL 6 DAY AND d.day
-GROUP BY d.day
-""",
+    oracle=_ROLLING_ACTIVE_ORACLE,
     eager=True,
 )
 def events_rolling_active_users_bucketed(spark, sf_dir):

@@ -276,9 +276,9 @@ def agg_approx_distinct(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "q3_shipping_priority",
-    oracle=f"""
+# TPC-H Q3 and Q5, shared with their bucketed-twin registrations
+# (analytics_queries): same oracle, same plan over different scans.
+Q3_ORACLE = f"""
 SELECT o_orderkey,
        {sql_cents_sum('l_extendedprice * (1 - l_discount)', 'revenue')},
        CAST(o_orderdate AS DATE) AS orderdate, o_orderpriority
@@ -289,27 +289,30 @@ WHERE c_mktsegment = 'BUILDING'
   AND l_shipdate > TIMESTAMP '1997-01-01'
 GROUP BY o_orderkey, CAST(o_orderdate AS DATE), o_orderpriority
 ORDER BY revenue DESC, o_orderkey LIMIT 10
-""",
-)
-def q3_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 shape: selective dim filter → fact join → agg → top-k.
-    customer (filtered) broadcasts; orderkey agg reuses the join key.
+"""
+Q5_ORACLE = f"""
+SELECT r_name, n_name,
+       {sql_cents_sum('l_extendedprice * (1 - l_discount)', 'revenue')}
+FROM region
+JOIN nation ON n_regionkey = r_regionkey
+JOIN customer ON c_nationkey = n_nationkey
+JOIN orders ON o_custkey = c_custkey
+JOIN lineitem ON l_orderkey = o_orderkey
+WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+  AND o_orderdate < TIMESTAMP '1997-01-01'
+GROUP BY r_name, n_name
+"""
 
-    Revenue sums by exact BIGINT micro-units (functions.cents_sum;
-    disc_price is 1e-4-quantized so round(x*1e6) is exact) instead of
-    DECIMAL — bit-identical per the cents_sum contract (groups here are
-    single orders, ~1e5 micro-dollar rows, nowhere near the 2^53
-    bound), minus the measured ~4x BigDecimal aggregation tax (r7
-    probe, BASELINE.md §d)."""
+
+def q3_top_revenue(spark, sf_dir, orders, lineitem):
+    """Q3's join, agg and top-10 over the ``orders`` and ``lineitem``
+    scans (plain or bucketed twins): the filtered customer dim
+    broadcasts."""
     c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < "1998-01-01"
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > "1997-01-01"
-    )
+    o = orders.filter(F.col("o_orderdate") < "1998-01-01")
+    li = lineitem.filter(F.col("l_shipdate") > "1997-01-01")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -328,21 +331,52 @@ def q3_shipping_priority(spark, sf_dir):
     )
 
 
-@register(
-    "q5_region_revenue",
-    oracle=f"""
-SELECT r_name, n_name,
-       {sql_cents_sum('l_extendedprice * (1 - l_discount)', 'revenue')}
-FROM region
-JOIN nation ON n_regionkey = r_regionkey
-JOIN customer ON c_nationkey = n_nationkey
-JOIN orders ON o_custkey = c_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY r_name, n_name
-""",
-)
+def q5_nation_revenue(spark, sf_dir, orders, lineitem):
+    """Q5's star join and (region, nation) revenue over the ``orders``
+    and ``lineitem`` scans (plain or bucketed twins): the dims
+    broadcast, the facts join on orderkey, orders are cut to 1996."""
+    r = load_table(spark, sf_dir, "region")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    o = orders.filter(
+        (F.col("o_orderdate") >= "1996-01-01")
+        & (F.col("o_orderdate") < "1997-01-01")
+    )
+    dims = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
+        F.broadcast(r), n.n_regionkey == r.r_regionkey
+    )
+    return (
+        lineitem.join(o, lineitem.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(dims), o.o_custkey == dims.c_custkey)
+        .groupBy("r_name", "n_name")
+        .agg(
+            cents_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"
+            )
+        )
+    )
+
+
+@register("q3_shipping_priority", oracle=Q3_ORACLE)
+def q3_shipping_priority(spark, sf_dir):
+    """TPC-H Q3 shape: selective dim filter → fact join → agg → top-k.
+    customer (filtered) broadcasts; orderkey agg reuses the join key.
+
+    Revenue sums by exact BIGINT micro-units (functions.cents_sum;
+    disc_price is 1e-4-quantized so round(x*1e6) is exact) instead of
+    DECIMAL — bit-identical per the cents_sum contract (groups here are
+    single orders, ~1e5 micro-dollar rows, nowhere near the 2^53
+    bound), minus the measured ~4x BigDecimal aggregation tax (r7
+    probe, BASELINE.md §d)."""
+    return q3_top_revenue(
+        spark,
+        sf_dir,
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "lineitem"),
+    )
+
+
+@register("q5_region_revenue", oracle=Q5_ORACLE)
 def q5_region_revenue(spark, sf_dir):
     """Multi-way star join: dims broadcast, facts join on their keys.
 
@@ -352,26 +386,11 @@ def q5_region_revenue(spark, sf_dir):
     through roughly SF 3k per nation-year; past that, sum the same
     rounded longs as DECIMAL(38,0) — still exact, still integer-cheap —
     per the cents_sum contract in functions/__init__.py."""
-    r = load_table(spark, sf_dir, "region")
-    n = load_table(spark, sf_dir, "nation")
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1997-01-01")
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    dims = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(dims), o.o_custkey == dims.c_custkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            cents_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"
-            )
-        )
+    return q5_nation_revenue(
+        spark,
+        sf_dir,
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -533,19 +533,10 @@ def sample_mixture_temperature(spark, sf_dir):
     rounded in BOTH engines, no transcendental quantization needed;
     the sqrt is micro-quantized once per source, shares divide two
     exact BIGINTs. Scale: one token-count agg to |sources| rows."""
-    from wikipedia_data_pipeline_spark.operators.text import (
-        NORMALIZE_PATTERN,
-        TOKEN_DELIMITER,
-    )
+    from wikipedia_data_pipeline_spark.operators.text import token_array
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.transform(
-            F.split(F.col("text"), TOKEN_DELIMITER),
-            lambda w: F.lower(F.regexp_replace(w, NORMALIZE_PATTERN, "")),
-        ),
-        lambda w: F.length(w) > 0,
-    )
+    toks = token_array()
     t = docs.groupBy("source").agg(
         F.sum(F.size(toks)).cast("long").alias("n_tokens")
     )

@@ -146,6 +146,20 @@ WHERE CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
 """
 
 
+def ols_moments(xy, key):
+    """Per ``key``: the row count n and the exact DECIMAL(38,0) moments
+    sx, sy, sxy, sxx of the integer columns x and y of ``xy`` — all a
+    least-squares slope needs before its one fixed IEEE finale."""
+    dec = "decimal(38,0)"
+    return xy.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("x").cast(dec)).alias("sx"),
+        F.sum(F.col("y").cast(dec)).alias("sy"),
+        F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
+        F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
+    )
+
+
 @register("events_linear_trend", oracle=_TREND_ORACLE)
 def events_linear_trend(spark, sf_dir):
     """Per-event-type OLS fit of value against event time — "is this
@@ -164,17 +178,8 @@ def events_linear_trend(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     x = (F.col("ts") / F.lit(1_000_000)).cast("long") - _X_BASE
     y = F.round(F.col("value") * _Y_SCALE).cast("long")
-    dec = "decimal(38,0)"
-    s = (
-        ev.select(x.alias("x"), y.alias("y"), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("x").cast(dec)).alias("sx"),
-            F.sum(F.col("y").cast(dec)).alias("sy"),
-            F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
-            F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
-        )
+    s = ols_moments(
+        ev.select(x.alias("x"), y.alias("y"), "event_type"), "event_type"
     )
     nd = F.col("n").cast("double")
     sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
@@ -193,8 +198,10 @@ def events_linear_trend(spark, sf_dir):
 # Markov transition matrix over event types
 # ---------------------------------------------------------------------------
 
-_MARKOV_ORACLE = """
-WITH seq AS (
+# Per-user (prev -> cur) event-type transition counts, shared with the
+# conditional-entropy oracle below.
+_TRANSITIONS_CTES = """
+seq AS (
   SELECT lag(event_type) OVER (PARTITION BY user_id
                                ORDER BY ts, event_id) AS prev_type,
          event_type AS cur_type
@@ -204,7 +211,10 @@ c AS (
   SELECT prev_type, cur_type, CAST(count(*) AS BIGINT) AS n
   FROM seq WHERE prev_type IS NOT NULL
   GROUP BY prev_type, cur_type
-)
+)"""
+
+_MARKOV_ORACLE = f"""
+WITH {_TRANSITIONS_CTES}
 SELECT prev_type, cur_type, n,
        CAST(n AS DOUBLE)
        / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE) AS prob
@@ -591,18 +601,8 @@ def orders_yoy_growth(spark, sf_dir):
 # one fixed double expression nano-quantized to BIGINT before the
 # (bounded) DECIMAL re-sum, so no float reduction order leaks.
 
-_CENT_ORACLE = """
-WITH seq AS (
-  SELECT lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev_type,
-         event_type AS cur_type
-  FROM events
-),
-c AS (
-  SELECT prev_type, cur_type, CAST(count(*) AS BIGINT) AS n
-  FROM seq WHERE prev_type IS NOT NULL
-  GROUP BY prev_type, cur_type
-),
+_CENT_ORACLE = f"""
+WITH {_TRANSITIONS_CTES},
 marg_a AS (
   SELECT prev_type, CAST(sum(n) AS BIGINT) AS n_a FROM c GROUP BY 1
 ),

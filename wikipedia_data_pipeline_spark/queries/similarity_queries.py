@@ -101,7 +101,9 @@ brute AS (
 )
 """
 
-IVF_CTES = f"""
+# The hash-sampled coarse quantizer (every 37th vector a centroid) and
+# each vector's nearest cell, shared by the IVF oracle and SemDeDup.
+_IVF_CELLS_CTES = f"""
 centroids AS (
   SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
   WHERE vec_id % {37} = 0
@@ -114,7 +116,10 @@ cells AS (
                                        c.centroid_id) AS c_rnk
     FROM embeddings e CROSS JOIN centroids c
   ) WHERE c_rnk = 1
-),
+)"""
+
+IVF_CTES = f"""
+{_IVF_CELLS_CTES},
 qcells AS (
   SELECT vec_id AS query_id, embedding AS q_emb, centroid_id AS cell FROM (
     SELECT e.vec_id, e.embedding, c.centroid_id,
@@ -191,19 +196,7 @@ def ann_cosine_topk_pq(spark, sf_dir):
 @register(
     "embedding_semdedup",
     oracle=f"""
-WITH centroids AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
-  WHERE vec_id % {37} = 0
-),
-cells AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT e.vec_id, e.embedding, c.centroid_id,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {COS_SQL.format(a='e.embedding', b='c.c_emb')} DESC,
-                                       c.centroid_id) AS c_rnk
-    FROM embeddings e CROSS JOIN centroids c
-  ) WHERE c_rnk = 1
-),
+WITH {_IVF_CELLS_CTES},
 drops AS (
   SELECT DISTINCT a.vec_id
   FROM cells a JOIN cells b ON a.cell = b.cell AND b.vec_id < a.vec_id

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from wikipedia_data_pipeline_spark.operators import dedup as D
 from wikipedia_data_pipeline_spark.operators import profiling as P
 from wikipedia_data_pipeline_spark.operators.ranks import pin
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
@@ -122,7 +121,6 @@ def incremental_distinct_users_hll(spark, sf_dir):
 # --- Count-Min sketch + TF-IDF text search (round 5) --------------------
 
 from wikipedia_data_pipeline_spark.queries.tfidf_queries import (  # noqa: E402
-    DOC_TF_CTES,
     TOKS_CTE,
 )
 
@@ -595,10 +593,10 @@ def sketch_ams_f2_users(spark, sf_dir):
     )
 
 
-@register(
-    "incremental_distinct_users_kmv",
-    oracle=f"""
-WITH ev AS (
+# The per-day KMV sketch: each day's 32 smallest distinct user hashes,
+# shared by the daily and the rolling 7-day distinct-user estimates.
+_DAILY_KMV_CTES = f"""
+ev AS (
   SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
          {SQL_DET_HASH.format(col="user_id")} AS h
   FROM events
@@ -606,7 +604,13 @@ WITH ev AS (
 dh AS (SELECT DISTINCT day, h FROM ev),
 rk AS (SELECT day, h, row_number() OVER (PARTITION BY day ORDER BY h) AS rk
        FROM dh),
-sk AS (SELECT day, h FROM rk WHERE rk <= 32),
+sk AS (SELECT day, h FROM rk WHERE rk <= 32)"""
+
+
+@register(
+    "incremental_distinct_users_kmv",
+    oracle=f"""
+WITH {_DAILY_KMV_CTES},
 agg AS (SELECT day, count(*) AS cnt, max(h) AS hk FROM sk GROUP BY day)
 SELECT day,
        CASE WHEN cnt < 32 THEN CAST(cnt AS DOUBLE)
@@ -803,15 +807,7 @@ def sketch_quantile_by_type_events(spark, sf_dir):
 @register(
     "events_rolling_distinct_kmv",
     oracle=f"""
-WITH ev AS (
-  SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-         {SQL_DET_HASH.format(col="user_id")} AS h
-  FROM events
-),
-dh AS (SELECT DISTINCT day, h FROM ev),
-rk AS (SELECT day, h, row_number() OVER (PARTITION BY day ORDER BY h) AS rk
-       FROM dh),
-sk AS (SELECT day, h FROM rk WHERE rk <= 32),
+WITH {_DAILY_KMV_CTES},
 days AS (SELECT DISTINCT day FROM ev),
 win AS (
   SELECT d.day, s.h

@@ -48,6 +48,23 @@ def histogram_event_values(spark, sf_dir):
     )
 
 
+def _type_p99(ev):
+    """(event_type, p99_v): each event type's DISCRETE p99 value (the
+    ceil(0.99 n)-th in (value, event_id) order) by grouped exact
+    selection, never a per-type window."""
+    from wikipedia_data_pipeline_spark.operators.ranks import (
+        grouped_exact_quantiles,
+    )
+
+    return grouped_exact_quantiles(
+        ev.select("event_type", "value", "event_id"),
+        ["event_type"],
+        [F.asc("value"), F.asc("event_id")],
+        [("p99", 99, 100)],
+        tag_col="_q",
+    ).select("event_type", F.col("value").alias("p99_v"))
+
+
 @register(
     "events_winsorized",
     oracle="""
@@ -82,18 +99,8 @@ def events_winsorized(spark, sf_dir):
     (type, value, id), counts blocks, and sorts only the <=5 blocks
     holding the p99 ranks; the capped projection is then a broadcast
     join of the 5-row threshold table against the raw scan."""
-    from wikipedia_data_pipeline_spark.operators.ranks import (
-        grouped_exact_quantiles,
-    )
-
     ev = load_table(spark, sf_dir, "events")
-    p99 = grouped_exact_quantiles(
-        ev.select("event_type", "value", "event_id"),
-        ["event_type"],
-        [F.asc("value"), F.asc("event_id")],
-        [("p99", 99, 100)],
-        tag_col="_q",
-    ).select("event_type", F.col("value").alias("p99_v"))
+    p99 = _type_p99(ev)
     return (
         ev.join(F.broadcast(p99), "event_type")
         .select(
@@ -703,25 +710,11 @@ def events_mean_excess_pot(spark, sf_dir):
     — the EVT tail screen (rising mean excess with threshold = GPD
     heavy tail). See the section comment for the selection-not-window
     threshold discipline."""
-    from wikipedia_data_pipeline_spark.operators.ranks import (
-        grouped_exact_quantiles,
-    )
-
     ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    p99 = (
-        grouped_exact_quantiles(
-            ev.select("event_type", "value", "event_id"),
-            ["event_type"],
-            [F.asc("value"), F.asc("event_id")],
-            [("p99", 99, 100)],
-            tag_col="_q",
-        )
-        .select("event_type", F.col("value").alias("p99_v"))
-        .join(counts, "event_type")
-    )
+    p99 = _type_p99(ev).join(counts, "event_type")
     cents = F.round(F.col("value") * 100).cast("long")
     ucents = F.round(F.col("p99_v") * 100).cast("long")
     exc = (
@@ -1016,18 +1009,8 @@ def events_gpd_moment_fit(spark, sf_dir):
     See the section comment; threshold selection rides the same
     grouped exact order statistics (never a per-type window), and the
     excess moments are one hash aggregate."""
-    from wikipedia_data_pipeline_spark.operators.ranks import (
-        grouped_exact_quantiles,
-    )
-
     ev = load_table(spark, sf_dir, "events")
-    p99 = grouped_exact_quantiles(
-        ev.select("event_type", "value", "event_id"),
-        ["event_type"],
-        [F.asc("value"), F.asc("event_id")],
-        [("p99", 99, 100)],
-        tag_col="_q",
-    ).select("event_type", F.col("value").alias("p99_v"))
+    p99 = _type_p99(ev)
     cents = F.round(F.col("value") * 100).cast("long")
     ucents = F.round(F.col("p99_v") * 100).cast("long")
     d = cents - ucents

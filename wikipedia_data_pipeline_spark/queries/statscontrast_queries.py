@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
+from wikipedia_data_pipeline_spark.queries.statstests_queries import type_dow_cells
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -518,21 +519,7 @@ def stats_g_test_type_dow(spark, sf_dir):
     windows over the driver-tiny cell relation."""
     from pyspark.sql import Window
 
-    cells = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            (
-                F.unix_date(
-                    F.date_trunc(
-                        "day", F.timestamp_micros(F.col("ts"))
-                    ).cast("date")
-                ).cast("long")
-                % 7
-            ).alias("dow"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("o"))
-    )
+    cells = type_dow_cells(spark, sf_dir)
     m = cells.select(
         "event_type",
         "dow",

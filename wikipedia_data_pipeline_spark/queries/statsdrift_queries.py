@@ -10,7 +10,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
+from wikipedia_data_pipeline_spark.queries.streaming_queries import (
+    SPRT_ORACLE,
+    sprt_decisions,
+)
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -785,16 +788,47 @@ def events_mann_kendall_trend(spark, sf_dir):
 # --- CUSUM change-point detection (round 7) -----------------------------
 
 
-@register(
-    "events_changepoint_value",
-    oracle=f"""
-WITH daily AS (
+# Per day since the first event: the event count n_t and the value sum
+# u_t in exact BIGINT micro-units (the cents_sum convention), shared by
+# the CUSUM change-point and the Page-Hinkley detector.
+_DAILY_UNITS_CTE = f"""
+daily AS (
   SELECT (epoch_us(ts) - (SELECT min(epoch_us(ts)) FROM events))
            // {_US_PER_DAY} AS day_idx,
          CAST(count(*) AS BIGINT) AS n_t,
          CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS u_t
   FROM events GROUP BY 1
-),
+)"""
+
+
+def _daily_units(spark, sf_dir):
+    """(day_idx, n_t, u_t): the Spark side of ``_DAILY_UNITS_CTE``, one
+    hash aggregate to the calendar-bounded day relation."""
+    ev = load_table(spark, sf_dir, "events")
+    t0 = ev.agg(F.min(F.col("ts").cast("long")).alias("t0"))
+    return (
+        ev.crossJoin(F.broadcast(t0))
+        .groupBy(
+            # exact integer floor division, matching the oracle's `//`
+            # (see statsparam_queries Grubbs note: float64 ulp > 1 us
+            # beyond ~128-day spans misbins boundary events)
+            F.expr(f"(cast(ts as long) - t0) div {_US_PER_DAY}")
+            .cast("long")
+            .alias("day_idx")
+        )
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_t"),
+            F.sum(F.round(F.col("value") * 1000000).cast("long"))
+            .cast("long")
+            .alias("u_t"),
+        )
+    )
+
+
+@register(
+    "events_changepoint_value",
+    oracle=f"""
+WITH {_DAILY_UNITS_CTE},
 cum AS (
   SELECT day_idx, n_t, u_t,
          CAST(sum(n_t) OVER w AS BIGINT) AS cum_n,
@@ -836,25 +870,7 @@ def events_changepoint_value(spark, sf_dir):
     the only fact-sized work is one hash aggregate."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    t0 = ev.agg(F.min(F.col("ts").cast("long")).alias("t0"))
-    daily = (
-        ev.crossJoin(F.broadcast(t0))
-        .groupBy(
-            # exact integer floor division, matching the oracle's `//`
-            # (see statsparam_queries Grubbs note: float64 ulp > 1 us
-            # beyond ~128-day spans misbins boundary events)
-            F.expr(f"(cast(ts as long) - t0) div {_US_PER_DAY}")
-            .cast("long")
-            .alias("day_idx")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_t"),
-            F.sum(F.round(F.col("value") * 1000000).cast("long"))
-            .cast("long")
-            .alias("u_t"),
-        )
-    )
+    daily = _daily_units(spark, sf_dir)
     w = Window.orderBy("day_idx").rowsBetween(Window.unboundedPreceding, 0)
     wa = Window.orderBy("day_idx").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -897,42 +913,7 @@ def events_changepoint_value(spark, sf_dir):
     )
 
 
-@register(
-    "events_sprt_ab",
-    oracle=f"""
-WITH obs AS (
-  SELECT epoch_us(ts) // 86400000000 AS day,
-         CAST(({SQL_DET_HASH.format(col="user_id")}) % 2 AS BIGINT) AS x
-  FROM events
-  WHERE CAST(({SQL_DET_HASH.format(col="((user_id % 1000003) * 23 + 7)")}) % 2 AS BIGINT) = 1
-),
-daily AS (
-  SELECT day, CAST(count(*) AS BIGINT) AS n_day,
-         CAST(sum(x) AS BIGINT) AS k_day
-  FROM obs GROUP BY day
-),
-cum AS (
-  SELECT day,
-         CAST(sum(n_day) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS n_cum,
-         CAST(sum(k_day) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS k_cum
-  FROM daily
-)
-SELECT CAST(day AS BIGINT) AS day, n_cum, k_cum,
-       CAST(k_cum * 95310180 + (n_cum - k_cum) * (-105360516) AS DOUBLE)
-         / 1000000000 AS llr,
-       CASE
-         WHEN k_cum * 95310180 + (n_cum - k_cum) * (-105360516)
-              >= 2944438979 THEN 'reject_h0'
-         WHEN k_cum * 95310180 + (n_cum - k_cum) * (-105360516)
-              <= -2944438979 THEN 'accept_h0'
-         ELSE 'continue'
-       END AS decision
-FROM cum
-ORDER BY day
-""",
-)
+@register("events_sprt_ab", oracle=SPRT_ORACLE)
 def events_sprt_ab(spark, sf_dir):
     """Wald sequential probability-ratio test (SPRT) — the always-valid
     sequential monitor an experimentation platform runs so it can stop
@@ -954,8 +935,6 @@ def events_sprt_ab(spark, sf_dir):
     Scale shape: scan -> per-day hash agg; the cumulative window runs
     over the day spine (date-keyed, bounded by the calendar — the
     audit_windows-safe class), never over events."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     # ts is epoch-us BIGINT after load_table's normalize_event_time
     obs = sprt_treated_daily_obs(ev)
@@ -963,25 +942,7 @@ def events_sprt_ab(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n_day"),
         F.sum("x").cast("long").alias("k_day"),
     )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cum = daily.select(
-        "day",
-        F.sum("n_day").over(w).cast("long").alias("n_cum"),
-        F.sum("k_day").over(w).cast("long").alias("k_cum"),
-    )
-    llr_nano = F.col("k_cum") * F.lit(95310180) + (
-        F.col("n_cum") - F.col("k_cum")
-    ) * F.lit(-105360516)
-    return cum.select(
-        "day",
-        "n_cum",
-        "k_cum",
-        (llr_nano.cast("double") / F.lit(1_000_000_000)).alias("llr"),
-        F.when(llr_nano >= 2944438979, F.lit("reject_h0"))
-        .when(llr_nano <= -2944438979, F.lit("accept_h0"))
-        .otherwise(F.lit("continue"))
-        .alias("decision"),
-    ).orderBy("day")
+    return sprt_decisions(daily)
 
 
 # --- Page-Hinkley mean-shift detection (round 12, session 6) -------------
@@ -1000,13 +961,7 @@ def events_sprt_ab(spark, sf_dir):
 @register(
     "events_page_hinkley",
     oracle=f"""
-WITH daily AS (
-  SELECT (epoch_us(ts) - (SELECT min(epoch_us(ts)) FROM events))
-           // {_US_PER_DAY} AS day_idx,
-         CAST(count(*) AS BIGINT) AS n_t,
-         CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS u_t
-  FROM events GROUP BY 1
-),
+WITH {_DAILY_UNITS_CTE},
 x AS (
   SELECT day_idx,
          CAST(row_number() OVER (ORDER BY day_idx) AS BIGINT) AS t,
@@ -1046,25 +1001,7 @@ def events_page_hinkley(spark, sf_dir):
     is one hash aggregate to the calendar-bounded day relation."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    t0 = ev.agg(F.min(F.col("ts").cast("long")).alias("t0"))
-    daily = (
-        ev.crossJoin(F.broadcast(t0))
-        .groupBy(
-            # exact integer floor division, matching the oracle's `//`
-            # (see statsparam_queries Grubbs note: float64 ulp > 1 us
-            # beyond ~128-day spans misbins boundary events)
-            F.expr(f"(cast(ts as long) - t0) div {_US_PER_DAY}")
-            .cast("long")
-            .alias("day_idx")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_t"),
-            F.sum(F.round(F.col("value") * 1000000).cast("long"))
-            .cast("long")
-            .alias("u_t"),
-        )
-    )
+    daily = _daily_units(spark, sf_dir)
     w_ord = Window.orderBy("day_idx")
     w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
     x = daily.select(

@@ -43,8 +43,10 @@ _US_PER_HOUR = 3_600_000_000
 # untied data it reduces to 12/(nk(k+1)) * sum (R_j - n(k+1)/2)^2).
 # No quantization anywhere - the only division is the final one.
 
-_FRIEDMAN_ORACLE = f"""
-WITH cell AS (
+# Complete days: the (day, event type) cells of the days on which every
+# event type occurs, shared by the Friedman test and Kendall's W.
+_TYPE_DAY_OBS_CTES = f"""
+cell AS (
   SELECT epoch_us(ts) // {_US_PER_DAY} AS d, event_type,
          CAST(count(*) AS BIGINT) AS x
   FROM events GROUP BY 1, 2
@@ -53,7 +55,10 @@ k AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS k_t FROM events),
 full_days AS (
   SELECT d FROM cell GROUP BY d HAVING count(*) = (SELECT k_t FROM k)
 ),
-obs AS (SELECT cell.* FROM cell JOIN full_days USING (d)),
+obs AS (SELECT cell.* FROM cell JOIN full_days USING (d))"""
+# Within-day doubled midranks s2 of each cell count x (ties share
+# 2*cum_before + t + 1), shared with Page's trend test.
+_DAY_MIDRANK_CTES = """
 tie AS (
   SELECT d, x, CAST(count(*) AS BIGINT) AS t FROM obs GROUP BY 1, 2
 ),
@@ -63,7 +68,50 @@ rk AS (
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
            + t + 1 AS s2
   FROM tie
-),
+)"""
+
+
+def _type_day_obs(spark, sf_dir):
+    """(k, full_days, obs): the Spark side of ``_TYPE_DAY_OBS_CTES`` —
+    the 1-row event-type count, the complete days, and their cells."""
+    ev = load_table(spark, sf_dir, "events")
+    cell = ev.groupBy(
+        F.expr(f"ts div {_US_PER_DAY}").alias("d"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("x"))
+    k = ev.agg(F.countDistinct("event_type").cast("long").alias("k_t"))
+    full_days = (
+        cell.groupBy("d")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_cells"))
+        .crossJoin(F.broadcast(k))
+        .filter(F.col("n_cells") == F.col("k_t"))
+        .select("d")
+    )
+    obs = cell.join(full_days, "d")
+    return k, full_days, obs
+
+
+def _day_midranks(obs):
+    """(d, x, s2) for the cells ``obs``: the Spark side of
+    ``_DAY_MIDRANK_CTES``. The prefix sum is partitioned BY DAY, never
+    global."""
+    tie = obs.groupBy("d", "x").agg(F.count(F.lit(1)).alias("t"))
+    wday = (
+        Window.partitionBy("d")
+        .orderBy("x")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return tie.select(
+        "d",
+        "x",
+        (2 * F.coalesce(F.sum("t").over(wday), F.lit(0)) + F.col("t") + 1)
+        .cast("long")
+        .alias("s2"),
+    )
+
+
+_FRIEDMAN_ORACLE = f"""
+WITH {_TYPE_DAY_OBS_CTES},
+{_DAY_MIDRANK_CTES},
 ranked AS (
   SELECT obs.d, obs.event_type, rk.s2
   FROM obs JOIN rk ON obs.d = rk.d AND obs.x = rk.x
@@ -111,33 +159,10 @@ def stats_friedman_test(spark, sf_dir):
     shape: one hash agg to (day, type) cells, within-day prefix sums
     partitioned BY DAY (never global), k-row arithmetic after; the
     blocks relation is calendar-bounded by construction."""
-    ev = load_table(spark, sf_dir, "events")
-    cell = ev.groupBy(
-        F.expr(f"ts div {_US_PER_DAY}").alias("d"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("x"))
-    k = ev.agg(F.countDistinct("event_type").cast("long").alias("k_t"))
-    full_days = (
-        cell.groupBy("d")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_cells"))
-        .crossJoin(F.broadcast(k))
-        .filter(F.col("n_cells") == F.col("k_t"))
-        .select("d")
+    k, _, obs = _type_day_obs(spark, sf_dir)
+    ranked = obs.join(_day_midranks(obs), ["d", "x"]).select(
+        "d", "event_type", "s2"
     )
-    obs = cell.join(full_days, "d")
-    tie = obs.groupBy("d", "x").agg(F.count(F.lit(1)).alias("t"))
-    wday = (
-        Window.partitionBy("d")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rk = tie.select(
-        "d",
-        "x",
-        (2 * F.coalesce(F.sum("t").over(wday), F.lit(0)) + F.col("t") + 1)
-        .cast("long")
-        .alias("s2"),
-    )
-    ranked = obs.join(rk, ["d", "x"]).select("d", "event_type", "s2")
     per_t = ranked.groupBy("event_type").agg(
         F.sum("s2").cast("long").alias("s2_sum"),
         F.count(F.lit(1)).cast("long").alias("n_blocks"),
@@ -522,15 +547,38 @@ def stats_wilcoxon_signed_rank(spark, sf_dir):
 # DOUBLED units: p2 = s2_pooled - s2_within (both from ONE
 # ordered_scan carrying pooled and per-group running sums).
 
-_BM_ORACLE = """
-WITH cv AS (
+# View (c1) and click (c2) counts per distinct value, shared by the
+# Brunner-Munzel and Ansari-Bradley tests.
+_VIEW_CLICK_CV_CTE = """
+cv AS (
   SELECT value,
          CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
               AS BIGINT) AS c1,
          CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
               AS BIGINT) AS c2
   FROM events WHERE event_type IN ('view', 'click') GROUP BY 1
-),
+)"""
+
+
+def _view_click_counts(spark, sf_dir):
+    """(value, c1, c2, t = c1 + c2): the Spark side of
+    ``_VIEW_CLICK_CV_CTE`` with the pooled count."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("view", "click")
+    )
+    cv = ev.groupBy("value").agg(
+        F.sum((F.col("event_type") == "view").cast("long"))
+        .cast("long")
+        .alias("c1"),
+        F.sum((F.col("event_type") == "click").cast("long"))
+        .cast("long")
+        .alias("c2"),
+    )
+    return cv.select("value", "c1", "c2", (F.col("c1") + F.col("c2")).alias("t"))
+
+
+_BM_ORACLE = f"""
+WITH {_VIEW_CLICK_CV_CTE},
 sc AS (
   SELECT c1, c2, c1 + c2 AS t,
          coalesce(sum(c1) OVER w, 0) AS cb1,
@@ -592,18 +640,7 @@ def stats_brunner_munzel(spark, sf_dir):
     BIGINT/DECIMAL sums."""
     from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
 
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "click")
-    )
-    cv = ev.groupBy("value").agg(
-        F.sum((F.col("event_type") == "view").cast("long"))
-        .cast("long")
-        .alias("c1"),
-        F.sum((F.col("event_type") == "click").cast("long"))
-        .cast("long")
-        .alias("c2"),
-    )
-    cvt = cv.select("value", "c1", "c2", (F.col("c1") + F.col("c2")).alias("t"))
+    cvt = _view_click_counts(spark, sf_dir)
     sc = ordered_scan(
         cvt,
         ["value"],
@@ -674,8 +711,11 @@ def stats_brunner_munzel(spark, sf_dir):
 # fixed double expression per distinct value, nano-quantized before
 # the (fact-sized) re-summation rides a DECIMAL sum.
 
-_AD_ORACLE = """
-WITH v AS (
+# Per-distinct-value A/B counts (variant = user_id % 2) with running and
+# total counts, shared by the Anderson-Darling and Cramer-von Mises
+# two-sample tests.
+_AB_VALUE_SCAN_CTES = """
+v AS (
   SELECT value,
          CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
               AS BIGINT) AS ma,
@@ -691,7 +731,34 @@ sc AS (
          sum(ma + mb) OVER () AS n
   FROM v
   WINDOW w AS (ORDER BY value ROWS UNBOUNDED PRECEDING)
-),
+)"""
+
+
+def _ab_value_scan(spark, sf_dir):
+    """(ma, mb, t, value, cum_a, cum_t, cum_a_total, cum_t_total): the
+    Spark side of ``_AB_VALUE_SCAN_CTES``, from ONE hierarchical
+    ``ordered_scan`` (near-unique DOUBLE domains never serialize)."""
+    from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
+
+    ev = load_table(spark, sf_dir, "events")
+    is_a = (F.col("user_id") % 2 == 0).cast("long")
+    v = ev.groupBy("value").agg(
+        F.sum(is_a).alias("ma"),
+        F.sum(1 - is_a).alias("mb"),
+    )
+    vt = v.select(
+        "ma", "mb", (F.col("ma") + F.col("mb")).alias("t"), "value"
+    )
+    return ordered_scan(
+        vt,
+        ["value"],
+        running=[("cum_a", "ma", "sum"), ("cum_t", "t", "sum")],
+        with_totals=True,
+    )
+
+
+_AD_ORACLE = f"""
+WITH {_AB_VALUE_SCAN_CTES},
 terms AS (
   SELECT n1, n - n1 AS n2, n,
          t, 2 * cum_t - t AS b2,
@@ -739,23 +806,7 @@ def stats_anderson_darling_2s(spark, sf_dir):
     sums + totals from ONE hierarchical `ordered_scan` (model-score
     lineage - near-unique DOUBLE domains never serialize), per-value
     fixed double expression nano-quantized into a DECIMAL sum."""
-    from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
-
-    ev = load_table(spark, sf_dir, "events")
-    is_a = (F.col("user_id") % 2 == 0).cast("long")
-    v = ev.groupBy("value").agg(
-        F.sum(is_a).alias("ma"),
-        F.sum(1 - is_a).alias("mb"),
-    )
-    vt = v.select(
-        "ma", "mb", (F.col("ma") + F.col("mb")).alias("t"), "value"
-    )
-    sc = ordered_scan(
-        vt,
-        ["value"],
-        running=[("cum_a", "ma", "sum"), ("cum_t", "t", "sum")],
-        with_totals=True,
-    )
+    sc = _ab_value_scan(spark, sf_dir)
     n1 = F.col("cum_a_total")
     n = F.col("cum_t_total")
     n2 = n - n1
@@ -825,16 +876,7 @@ WITH cell AS (
 ),
 full_days AS (SELECT d FROM cell GROUP BY d HAVING count(*) = 4),
 obs AS (SELECT cell.* FROM cell JOIN full_days USING (d)),
-tie AS (
-  SELECT d, x, CAST(count(*) AS BIGINT) AS t FROM obs GROUP BY 1, 2
-),
-rk AS (
-  SELECT d, x, t,
-         2 * coalesce(sum(t) OVER (PARTITION BY d ORDER BY x
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           + t + 1 AS s2
-  FROM tie
-),
+{_DAY_MIDRANK_CTES},
 ranked AS (
   SELECT obs.d, obs.score, rk.s2
   FROM obs JOIN rk ON obs.d = rk.d AND obs.x = rk.x
@@ -883,20 +925,9 @@ def stats_page_trend(spark, sf_dir):
         .select("d")
     )
     obs = cell.join(full_days, "d")
-    tie = obs.groupBy("d", "x").agg(F.count(F.lit(1)).alias("t"))
-    wday = (
-        Window.partitionBy("d")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    ranked = obs.join(_day_midranks(obs), ["d", "x"]).select(
+        "d", "score", "s2"
     )
-    rk = tie.select(
-        "d",
-        "x",
-        (2 * F.coalesce(F.sum("t").over(wday), F.lit(0)) + F.col("t") + 1)
-        .cast("long")
-        .alias("s2"),
-    )
-    ranked = obs.join(rk, ["d", "x"]).select("d", "score", "s2")
     s = ranked.agg(
         F.countDistinct("d").cast("long").alias("n"),
         F.sum(F.col("score") * F.col("s2")).cast("long").alias("l2"),
@@ -920,15 +951,8 @@ def stats_page_trend(spark, sf_dir):
 # mu = n1 Sa/N, sigma^2 = n1 n2 (N Saa - Sa^2) / (N^2 (N-1)), with Sa
 # and Saa integer sums over the pooled scores.
 
-_ANSARI_ORACLE = """
-WITH cv AS (
-  SELECT value,
-         CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-              AS BIGINT) AS c1,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS c2
-  FROM events WHERE event_type IN ('view', 'click') GROUP BY 1
-),
+_ANSARI_ORACLE = f"""
+WITH {_VIEW_CLICK_CV_CTE},
 sc AS (
   SELECT c1, c2, c1 + c2 AS t,
          coalesce(sum(c1 + c2) OVER (ORDER BY value
@@ -976,20 +1000,7 @@ def stats_ansari_bradley(spark, sf_dir):
     sum + totals from ONE hierarchical ordered_scan."""
     from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
 
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "click")
-    )
-    cv = ev.groupBy("value").agg(
-        F.sum((F.col("event_type") == "view").cast("long"))
-        .cast("long")
-        .alias("c1"),
-        F.sum((F.col("event_type") == "click").cast("long"))
-        .cast("long")
-        .alias("c2"),
-    )
-    cvt = cv.select(
-        "value", "c1", "c2", (F.col("c1") + F.col("c2")).alias("t")
-    )
+    cvt = _view_click_counts(spark, sf_dir)
     sc = ordered_scan(
         cvt, ["value"], running=[("cum_t", "t", "sum")], with_totals=True
     )
@@ -1207,26 +1218,8 @@ def stats_hodges_lehmann(spark, sf_dir):
 # it back to the Friedman statistic (its exact algebraic identity).
 
 _KENDALL_W_ORACLE = f"""
-WITH cell AS (
-  SELECT epoch_us(ts) // {_US_PER_DAY} AS d, event_type,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-),
-k AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS k_t FROM events),
-full_days AS (
-  SELECT d FROM cell GROUP BY d HAVING count(*) = (SELECT k_t FROM k)
-),
-obs AS (SELECT cell.* FROM cell JOIN full_days USING (d)),
-tie AS (
-  SELECT d, x, CAST(count(*) AS BIGINT) AS t FROM obs GROUP BY 1, 2
-),
-rk AS (
-  SELECT d, x, t,
-         2 * coalesce(sum(t) OVER (PARTITION BY d ORDER BY x
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           + t + 1 AS s2
-  FROM tie
-),
+WITH {_TYPE_DAY_OBS_CTES},
+{_DAY_MIDRANK_CTES},
 ranked AS (
   SELECT obs.d, obs.event_type, rk.s2
   FROM obs JOIN rk ON obs.d = rk.d AND obs.x = rk.x
@@ -1272,34 +1265,9 @@ def stats_kendall_w(spark, sf_dir):
     calendar-bounded (day, type) cells, within-day prefix sums
     partitioned BY DAY, then k-row arithmetic; nothing global is ever
     single-partition."""
-    ev = load_table(spark, sf_dir, "events")
-    cell = ev.groupBy(
-        F.expr(f"ts div {_US_PER_DAY}").alias("d"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("x"))
-    k = ev.agg(F.countDistinct("event_type").cast("long").alias("k_t"))
-    full_days = (
-        cell.groupBy("d")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_cells"))
-        .crossJoin(F.broadcast(k))
-        .filter(F.col("n_cells") == F.col("k_t"))
-        .select("d")
-    )
-    obs = cell.join(full_days, "d")
+    _, full_days, obs = _type_day_obs(spark, sf_dir)
     tie = obs.groupBy("d", "x").agg(F.count(F.lit(1)).alias("t"))
-    wday = (
-        Window.partitionBy("d")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rk = tie.select(
-        "d",
-        "x",
-        "t",
-        (2 * F.coalesce(F.sum("t").over(wday), F.lit(0)) + F.col("t") + 1)
-        .cast("long")
-        .alias("s2"),
-    )
-    ranked = obs.join(rk.select("d", "x", "s2"), ["d", "x"])
+    ranked = obs.join(_day_midranks(obs), ["d", "x"])
     rsum = ranked.groupBy("event_type").agg(
         F.sum("s2").cast("long").alias("s2_j")
     )
@@ -1349,24 +1317,8 @@ def stats_kendall_w(spark, sf_dir):
 # model score), a fixed per-value double expression nano-quantized to
 # BIGINT, and a DECIMAL re-sum. Under H0, E[T] = (1 + 1/N)/6 ~ 1/6.
 
-_CVM_ORACLE = """
-WITH v AS (
-  SELECT value,
-         CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS ma,
-         CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS mb
-  FROM events GROUP BY 1
-),
-sc AS (
-  SELECT ma, mb, ma + mb AS t,
-         sum(ma) OVER w AS cum_a,
-         sum(ma + mb) OVER w AS cum_t,
-         sum(ma) OVER () AS n1,
-         sum(ma + mb) OVER () AS n
-  FROM v
-  WINDOW w AS (ORDER BY value ROWS UNBOUNDED PRECEDING)
-),
+_CVM_ORACLE = f"""
+WITH {_AB_VALUE_SCAN_CTES},
 q AS (
   SELECT n1, n - n1 AS n2, n,
          CAST(round(1e9 * t *
@@ -1405,23 +1357,7 @@ def stats_cvm_2s(spark, sf_dir):
     sums + totals from ONE hierarchical ordered_scan (model-score
     lineage — near-unique DOUBLE domains never serialize), a fixed
     per-value double expression nano-quantized into a DECIMAL sum."""
-    from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
-
-    ev = load_table(spark, sf_dir, "events")
-    is_a = (F.col("user_id") % 2 == 0).cast("long")
-    v = ev.groupBy("value").agg(
-        F.sum(is_a).alias("ma"),
-        F.sum(1 - is_a).alias("mb"),
-    )
-    vt = v.select(
-        "ma", "mb", (F.col("ma") + F.col("mb")).alias("t"), "value"
-    )
-    sc = ordered_scan(
-        vt,
-        ["value"],
-        running=[("cum_a", "ma", "sum"), ("cum_t", "t", "sum")],
-        with_totals=True,
-    )
+    sc = _ab_value_scan(spark, sf_dir)
     n1 = F.col("cum_a_total")
     n = F.col("cum_t_total")
     n2 = n - n1

@@ -254,14 +254,15 @@ def stats_cochran_armitage_trend(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Nelson–Aalen cumulative hazard (customer lifetime, right-censored)
+# Customer-lifetime risk table (right-censored), shared by the Nelson–Aalen
+# and RMST curves here and by orders_survival_curve (finance_queries)
 # ---------------------------------------------------------------------------
-# Additive sibling of orders_survival_curve's Kaplan–Meier product:
-# Ĥ(t) = Σ dᵢ/nᵢ with Poisson variance Σ dᵢ/nᵢ² — already a prefix sum,
-# no log transform needed; each per-time quotient ships nano-quantized.
+# duration = months between a customer's first and last order; churn = no
+# order within 6 months of dataset end (later customers are censored).
+# One row per distinct duration: d churned, n_at_risk still observed.
 
-_NA_ORACLE = """
-WITH cust AS (
+LIFETIME_RISK_CTES = """
+cust AS (
   SELECT o_custkey,
          min(year(o_orderdate) * 12 + month(o_orderdate)) AS first_m,
          max(year(o_orderdate) * 12 + month(o_orderdate)) AS last_m
@@ -287,7 +288,51 @@ risk AS (
                                    AND 1 PRECEDING), 0) AS BIGINT)
            AS n_at_risk
   FROM at_t
-),
+)"""
+
+
+def lifetime_risk(spark, sf_dir):
+    """(duration_m, d, n_at_risk) per distinct duration: the Spark side
+    of ``LIFETIME_RISK_CTES``. The at-risk depletion rides
+    ``ordered_scan``, never an unpartitioned window."""
+    from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
+
+    o = load_table(spark, sf_dir, "orders")
+    mth = F.year("o_orderdate") * 12 + F.month("o_orderdate")
+    cust = o.groupBy("o_custkey").agg(
+        F.min(mth).alias("first_m"), F.max(mth).alias("last_m")
+    )
+    bounds = cust.agg(F.max("last_m").alias("data_end"))
+    obs = cust.crossJoin(F.broadcast(bounds)).select(
+        (F.col("last_m") - F.col("first_m")).alias("duration_m"),
+        F.when(F.col("data_end") - F.col("last_m") > 6, 1)
+        .otherwise(0)
+        .alias("churned"),
+    )
+    n_total = obs.agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
+    at_t = obs.groupBy("duration_m").agg(
+        F.sum("churned").cast("long").alias("d"),
+        F.count(F.lit(1)).cast("long").alias("c"),
+    )
+    dep = ordered_scan(
+        at_t, ["duration_m"], running=[("cum_c", "c", "sum")]
+    ).crossJoin(F.broadcast(n_total))
+    return dep.select(
+        "duration_m",
+        "d",
+        (F.col("n_obs") - (F.col("cum_c") - F.col("c"))).alias("n_at_risk"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Nelson–Aalen cumulative hazard (customer lifetime, right-censored)
+# ---------------------------------------------------------------------------
+# Additive sibling of orders_survival_curve's Kaplan–Meier product:
+# Ĥ(t) = Σ dᵢ/nᵢ with Poisson variance Σ dᵢ/nᵢ² — already a prefix sum,
+# no log transform needed; each per-time quotient ships nano-quantized.
+
+_NA_ORACLE = f"""
+WITH {LIFETIME_RISK_CTES},
 terms AS (
   SELECT duration_m, d, n_at_risk,
          CAST(round(1000000000.0 * CAST(d AS DOUBLE)
@@ -331,31 +376,7 @@ def orders_nelson_aalen_hazard(spark, sf_dir):
     and drop only at the final projection."""
     from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
 
-    o = load_table(spark, sf_dir, "orders")
-    mth = F.year("o_orderdate") * 12 + F.month("o_orderdate")
-    cust = o.groupBy("o_custkey").agg(
-        F.min(mth).alias("first_m"), F.max(mth).alias("last_m")
-    )
-    bounds = cust.agg(F.max("last_m").alias("data_end"))
-    obs = cust.crossJoin(F.broadcast(bounds)).select(
-        (F.col("last_m") - F.col("first_m")).alias("duration_m"),
-        F.when(F.col("data_end") - F.col("last_m") > 6, 1)
-        .otherwise(0)
-        .alias("churned"),
-    )
-    n_total = obs.agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-    at_t = obs.groupBy("duration_m").agg(
-        F.sum("churned").cast("long").alias("d"),
-        F.count(F.lit(1)).cast("long").alias("c"),
-    )
-    dep = ordered_scan(
-        at_t, ["duration_m"], running=[("cum_c", "c", "sum")]
-    ).crossJoin(F.broadcast(n_total))
-    risk = dep.select(
-        "duration_m",
-        "d",
-        (F.col("n_obs") - (F.col("cum_c") - F.col("c"))).alias("n_at_risk"),
-    )
+    risk = lifetime_risk(spark, sf_dir)
     nr = F.col("n_at_risk").cast("double")
     terms = risk.select(
         "duration_m",
@@ -832,33 +853,7 @@ def stats_hill_tail_index(spark, sf_dir):
 _RMST_TAU = 12
 
 _RMST_ORACLE = f"""
-WITH cust AS (
-  SELECT o_custkey,
-         min(year(o_orderdate) * 12 + month(o_orderdate)) AS first_m,
-         max(year(o_orderdate) * 12 + month(o_orderdate)) AS last_m
-  FROM orders GROUP BY o_custkey
-),
-bounds AS (SELECT max(last_m) AS data_end FROM cust),
-obs AS (
-  SELECT last_m - first_m AS duration_m,
-         CASE WHEN data_end - last_m > 6 THEN 1 ELSE 0 END AS churned
-  FROM cust, bounds
-),
-at_t AS (
-  SELECT duration_m,
-         CAST(sum(churned) AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM obs GROUP BY duration_m
-),
-risk AS (
-  SELECT duration_m, d,
-         CAST((SELECT count(*) FROM obs)
-           - coalesce(sum(c) OVER (ORDER BY duration_m
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND 1 PRECEDING), 0) AS BIGINT)
-           AS n_at_risk
-  FROM at_t
-),
+WITH {LIFETIME_RISK_CTES},
 terms AS (
   SELECT duration_m,
          CASE WHEN d < n_at_risk
@@ -903,33 +898,7 @@ def orders_rmst(spark, sf_dir):
     S(j) — 'expected active months out of the first 12'. See the
     section comment for the grid-join construction; both global prefix
     sums (at-risk depletion, log-survival) ride `ordered_scan`."""
-    from wikipedia_data_pipeline_spark.operators.ranks import ordered_scan
-
-    o = load_table(spark, sf_dir, "orders")
-    mth = F.year("o_orderdate") * 12 + F.month("o_orderdate")
-    cust = o.groupBy("o_custkey").agg(
-        F.min(mth).alias("first_m"), F.max(mth).alias("last_m")
-    )
-    bounds = cust.agg(F.max("last_m").alias("data_end"))
-    obs = cust.crossJoin(F.broadcast(bounds)).select(
-        (F.col("last_m") - F.col("first_m")).alias("duration_m"),
-        F.when(F.col("data_end") - F.col("last_m") > 6, 1)
-        .otherwise(0)
-        .alias("churned"),
-    )
-    n_total = obs.agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-    at_t = obs.groupBy("duration_m").agg(
-        F.sum("churned").cast("long").alias("d"),
-        F.count(F.lit(1)).cast("long").alias("c"),
-    )
-    dep = ordered_scan(
-        at_t, ["duration_m"], running=[("cum_c", "c", "sum")]
-    ).crossJoin(F.broadcast(n_total))
-    risk = dep.select(
-        "duration_m",
-        "d",
-        (F.col("n_obs") - (F.col("cum_c") - F.col("c"))).alias("n_at_risk"),
-    )
+    risk = lifetime_risk(spark, sf_dir)
     terms = risk.select(
         "duration_m",
         F.when(

@@ -427,6 +427,28 @@ def events_bootstrap_ci(spark, sf_dir):
     )
 
 
+def type_dow_cells(spark, sf_dir):
+    """(event_type, dow, o): the event type x day-of-week contingency
+    table, one hash aggregate. The weekday bucket is epoch-day mod 7
+    (engine-free arithmetic, not locale-dependent dayofweek); shared
+    with stats_g_test_type_dow (statscontrast_queries)."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy(
+            "event_type",
+            (
+                F.unix_date(
+                    F.date_trunc(
+                        "day", F.timestamp_micros(F.col("ts"))
+                    ).cast("date")
+                ).cast("long")
+                % 7
+            ).alias("dow"),
+        )
+        .agg(F.count(F.lit(1)).alias("o"))
+    )
+
+
 @register(
     "events_chi2_type_dow",
     oracle="""
@@ -463,21 +485,7 @@ def events_chi2_type_dow(spark, sf_dir):
     dayofweek functions), and per-cell terms round through
     DECIMAL(18,6) before summing so the statistic is bit-identical
     under any parallel addition order."""
-    cells = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            (
-                F.unix_date(
-                    F.date_trunc(
-                        "day", F.timestamp_micros(F.col("ts"))
-                    ).cast("date")
-                ).cast("long")
-                % 7
-            ).alias("dow"),
-        )
-        .agg(F.count(F.lit(1)).alias("o"))
-    )
+    cells = type_dow_cells(spark, sf_dir)
     from pyspark.sql import Window
 
     m = (

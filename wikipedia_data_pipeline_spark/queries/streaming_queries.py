@@ -10,6 +10,9 @@ plain batch SQL over the same events parquet.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
 from wikipedia_data_pipeline_spark.functions import sql_dec_sum
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.streaming import pipeline as P
@@ -111,8 +114,6 @@ def events_view_click_join(spark, sf_dir):
     same-user clicks within the following hour. The range predicate
     rides a user_id equi-join, so Catalyst hash-joins on user and
     evaluates the interval as a residual — no broadcast-NL blowup."""
-    from pyspark.sql import functions as F
-
     from wikipedia_data_pipeline_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
@@ -189,9 +190,10 @@ from wikipedia_data_pipeline_spark.operators.sampling import (  # noqa: E402
 )
 
 
-@register(
-    "streaming_sprt_monitor",
-    oracle=f"""
+# The Wald SPRT monitor's oracle and decision layer, shared by the
+# streaming deployment below and the batch events_sprt_ab
+# (statsdrift_queries): both must give the same rows.
+SPRT_ORACLE = f"""
 WITH obs AS (
   SELECT epoch_us(ts) // 86400000000 AS day,
          CAST(({_DH.format(col="user_id")}) % 2 AS BIGINT) AS x
@@ -223,23 +225,15 @@ SELECT CAST(day AS BIGINT) AS day, n_cum, k_cum,
        END AS decision
 FROM cum
 ORDER BY day
-""",
-)
-def streaming_sprt_monitor(spark, sf_dir):
-    """Streaming deployment of the Wald SPRT sequential A/B monitor:
-    the treated arm's per-day (n, conversions) counters run as a
-    STATEFUL streaming aggregation (streaming.pipeline.
-    run_sprt_daily_counts — the state a deployed monitor keeps between
-    micro-batches), then the decision layer — cumulative LLR in frozen
-    nano-nat BIGINT arithmetic against the ln(19) boundaries — reads
-    the day-spine-sized state table as a batch post-pass. Must equal
-    events_sprt_ab's batch result row-for-row (identical oracle SQL):
-    the streaming counters and the batch GROUP BY see the same events,
-    so stream/batch parity of the whole monitor is what is asserted."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+"""
 
-    daily = P.run_sprt_daily_counts(spark, sf_dir)
+
+def sprt_decisions(daily):
+    """Cumulative LLR and decision per day from the treated arm's
+    (day, n_day, k_day) counters: both transcendentals are frozen
+    nano-nat BIGINT literals, so the running statistic and the
+    boundary comparisons against ln(19) are exact integer arithmetic.
+    The window runs over the day spine, never over events."""
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     cum = daily.select(
         "day",
@@ -259,3 +253,18 @@ def streaming_sprt_monitor(spark, sf_dir):
         .otherwise(F.lit("continue"))
         .alias("decision"),
     ).orderBy("day")
+
+
+@register("streaming_sprt_monitor", oracle=SPRT_ORACLE)
+def streaming_sprt_monitor(spark, sf_dir):
+    """Streaming deployment of the Wald SPRT sequential A/B monitor:
+    the treated arm's per-day (n, conversions) counters run as a
+    STATEFUL streaming aggregation (streaming.pipeline.
+    run_sprt_daily_counts — the state a deployed monitor keeps between
+    micro-batches), then the decision layer — cumulative LLR in frozen
+    nano-nat BIGINT arithmetic against the ln(19) boundaries — reads
+    the day-spine-sized state table as a batch post-pass. Must equal
+    events_sprt_ab's batch result row-for-row (identical oracle SQL):
+    the streaming counters and the batch GROUP BY see the same events,
+    so stream/batch parity of the whole monitor is what is asserted."""
+    return sprt_decisions(P.run_sprt_daily_counts(spark, sf_dir))

@@ -1121,20 +1121,11 @@ def text_ngram_novelty_rate(spark, sf_dir):
     second scan. Exact oracle: same construction over gram STRINGS
     (counts are hash-invariant under equality)."""
     from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-    from wikipedia_data_pipeline_spark.operators.text import (
-        NORMALIZE_PATTERN,
-        TOKEN_DELIMITER,
-    )
+    from wikipedia_data_pipeline_spark.operators.text import token_array
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = F.filter(
-        F.transform(
-            F.split(F.col("text"), TOKEN_DELIMITER),
-            lambda w: F.lower(F.regexp_replace(w, NORMALIZE_PATTERN, "")),
-        ),
-        lambda w: F.length(w) > 0,
-    )
+    toks = token_array()
     d = docs.select(
         toks.alias("toks"),
         (det_hash("doc_id") % 10 < 8).alias("is_train"),
@@ -1195,8 +1186,12 @@ def text_ngram_novelty_rate(spark, sf_dir):
 # fact-sized DECIMAL re-sum (the AD/CvM discipline — the vocabulary
 # relation is Heaps-bounded but not driver-sized at 100 TB).
 
-_JS_ORACLE = """
-WITH wc AS (
+# Per-(source pair, word) counts: each word's count in both sources of
+# every pair, with the pair's token totals, enumerated by a bounded
+# source-pair fan-out (never a vocab self-join). Shared with the
+# Hellinger distance (textprofile_queries).
+SOURCE_PAIR_COUNTS_CTES = """
+wc AS (
   SELECT source, x AS word, CAST(count(*) AS BIGINT) AS n
   FROM documents, unnest(string_split(text, ' ')) AS u(x)
   GROUP BY 1, 2
@@ -1214,7 +1209,47 @@ contrib AS (
               AS BIGINT) AS nb
   FROM wc w JOIN pairs p ON w.source IN (p.sa, p.sb)
   GROUP BY 1, 2, 3, 4, 5
-),
+)"""
+
+
+def source_pair_counts(spark, sf_dir):
+    """(sa, sb, na_tot, nb_tot, word, na, nb): the Spark side of
+    ``SOURCE_PAIR_COUNTS_CTES``."""
+    from wikipedia_data_pipeline_spark.sources.tables import fan_out
+
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    wc = (
+        docs.select("source", F.explode(F.split("text", " ")).alias("word"))
+        .groupBy("source", "word")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
+    tot = wc.groupBy("source").agg(F.sum("n").cast("long").alias("n_s"))
+    a, b = tot.alias("a"), tot.alias("b")
+    pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
+        F.col("a.source").alias("sa"),
+        F.col("a.n_s").alias("na_tot"),
+        F.col("b.source").alias("sb"),
+        F.col("b.n_s").alias("nb_tot"),
+    )
+    return (
+        wc.join(
+            F.broadcast(pairs),
+            (F.col("source") == F.col("sa")) | (F.col("source") == F.col("sb")),
+        )
+        .groupBy("sa", "sb", "na_tot", "nb_tot", "word")
+        .agg(
+            F.sum(F.when(F.col("source") == F.col("sa"), F.col("n")).otherwise(0))
+            .cast("long")
+            .alias("na"),
+            F.sum(F.when(F.col("source") == F.col("sb"), F.col("n")).otherwise(0))
+            .cast("long")
+            .alias("nb"),
+        )
+    )
+
+
+_JS_ORACLE = f"""
+WITH {SOURCE_PAIR_COUNTS_CTES},
 terms AS (
   SELECT sa, sb,
          CAST(round(1e9 * (
@@ -1242,39 +1277,7 @@ def text_js_divergence_sources(spark, sf_dir):
     unigram distributions — the symmetric, always-finite distance a
     mixture designer reads before weighting sources. See the section
     comment for the bounded-fan-out + nano-quantized-sum construction."""
-    from wikipedia_data_pipeline_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    wc = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    tot = wc.groupBy("source").agg(F.sum("n").cast("long").alias("n_s"))
-    a, b = tot.alias("a"), tot.alias("b")
-    pairs = a.join(
-        b, F.col("a.source") < F.col("b.source")
-    ).select(
-        F.col("a.source").alias("sa"),
-        F.col("a.n_s").alias("na_tot"),
-        F.col("b.source").alias("sb"),
-        F.col("b.n_s").alias("nb_tot"),
-    )
-    contrib = (
-        wc.join(
-            F.broadcast(pairs),
-            (F.col("source") == F.col("sa")) | (F.col("source") == F.col("sb")),
-        )
-        .groupBy("sa", "sb", "na_tot", "nb_tot", "word")
-        .agg(
-            F.sum(F.when(F.col("source") == F.col("sa"), F.col("n")).otherwise(0))
-            .cast("long")
-            .alias("na"),
-            F.sum(F.when(F.col("source") == F.col("sb"), F.col("n")).otherwise(0))
-            .cast("long")
-            .alias("nb"),
-        )
-    )
+    contrib = source_pair_counts(spark, sf_dir)
     pa = F.col("na").cast("double") / F.col("na_tot")
     pb = F.col("nb").cast("double") / F.col("nb_tot")
     m = (pa + pb) / 2

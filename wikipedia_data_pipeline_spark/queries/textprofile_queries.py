@@ -18,6 +18,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators.ranks import pin
+from wikipedia_data_pipeline_spark.queries.textcorpus_queries import (
+    SOURCE_PAIR_COUNTS_CTES,
+    source_pair_counts,
+)
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -221,26 +225,8 @@ def text_log_odds_sources(spark, sf_dir):
 # distance. Same bounded source-pair fan-out, same nano-quantized
 # per-(pair, word) terms re-summed in DECIMAL.
 
-_HELLINGER_ORACLE = """
-WITH wc AS (
-  SELECT source, x AS word, CAST(count(*) AS BIGINT) AS n
-  FROM documents, unnest(string_split(text, ' ')) AS u(x)
-  GROUP BY 1, 2
-),
-tot AS (SELECT source, CAST(sum(n) AS BIGINT) AS n_s FROM wc GROUP BY 1),
-pairs AS (
-  SELECT a.source AS sa, a.n_s AS na_tot, b.source AS sb, b.n_s AS nb_tot
-  FROM tot a JOIN tot b ON a.source < b.source
-),
-contrib AS (
-  SELECT p.sa, p.sb, p.na_tot, p.nb_tot, w.word,
-         CAST(sum(CASE WHEN w.source = p.sa THEN w.n ELSE 0 END)
-              AS BIGINT) AS na,
-         CAST(sum(CASE WHEN w.source = p.sb THEN w.n ELSE 0 END)
-              AS BIGINT) AS nb
-  FROM wc w JOIN pairs p ON w.source IN (p.sa, p.sb)
-  GROUP BY 1, 2, 3, 4, 5
-),
+_HELLINGER_ORACLE = f"""
+WITH {SOURCE_PAIR_COUNTS_CTES},
 terms AS (
   SELECT sa, sb,
          CAST(round(1e9 * sqrt((CAST(na AS DOUBLE) / na_tot)
@@ -265,37 +251,7 @@ def text_hellinger_sources(spark, sf_dir):
     between every two sources' unigram distributions — the true-metric
     sibling of `text_js_divergence_sources` (see its section comment
     for why the fan-out is pair-bounded, never a vocab self-join)."""
-    from wikipedia_data_pipeline_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    wc = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    tot = wc.groupBy("source").agg(F.sum("n").cast("long").alias("n_s"))
-    a, b = tot.alias("a"), tot.alias("b")
-    pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
-        F.col("a.source").alias("sa"),
-        F.col("a.n_s").alias("na_tot"),
-        F.col("b.source").alias("sb"),
-        F.col("b.n_s").alias("nb_tot"),
-    )
-    contrib = (
-        wc.join(
-            F.broadcast(pairs),
-            (F.col("source") == F.col("sa")) | (F.col("source") == F.col("sb")),
-        )
-        .groupBy("sa", "sb", "na_tot", "nb_tot", "word")
-        .agg(
-            F.sum(F.when(F.col("source") == F.col("sa"), F.col("n")).otherwise(0))
-            .cast("long")
-            .alias("na"),
-            F.sum(F.when(F.col("source") == F.col("sb"), F.col("n")).otherwise(0))
-            .cast("long")
-            .alias("nb"),
-        )
-    )
+    contrib = source_pair_counts(spark, sf_dir)
     term = F.sqrt(
         (F.col("na").cast("double") / F.col("na_tot"))
         * (F.col("nb").cast("double") / F.col("nb_tot"))

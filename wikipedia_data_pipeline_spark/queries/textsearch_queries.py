@@ -46,8 +46,10 @@ def text_phrase_search(spark, sf_dir):
 
 # ---- sparse TF-IDF document-similarity join ------------------------------
 
-from wikipedia_data_pipeline_spark.queries.tfidf_queries import DOC_TF_CTES
-
+from wikipedia_data_pipeline_spark.queries.tfidf_queries import (  # noqa: E402
+    DOC_TF_CTES,
+    IDF_OF_TOKS_CTES,
+)
 
 
 @register(
@@ -134,16 +136,7 @@ _SEARCH_TERMS = ["hash", "join", "spark", "dup"]
     "text_search_tfidf",
     oracle=f"""
 WITH {DOC_TF_CTES},
-dfreq AS (
-    SELECT word, count(*) AS df
-    FROM (SELECT DISTINCT doc_id, word FROM toks) GROUP BY word
-),
-ndocs AS (SELECT count(*) AS n_docs FROM documents),
-idf AS (
-    SELECT word, round(log10(CAST(n_docs AS DOUBLE) / df), 2) AS idf
-    FROM dfreq, ndocs
-    WHERE round(log10(CAST(n_docs AS DOUBLE) / df), 2) > 0
-),
+{IDF_OF_TOKS_CTES},
 tfidf AS (
     SELECT t.doc_id, t.word, round(t.tf * i.idf, 2) AS tf_idf
     FROM doc_tf t JOIN idf i ON t.word = i.word
@@ -183,12 +176,9 @@ def text_search_tfidf(spark, sf_dir):
 
 _BM25_K1 = 1.2
 _BM25_B = 0.75
-
-
-@register(
-    "text_search_bm25",
-    oracle=f"""
-WITH {TOKS_CTE},
+# The BM25 per-posting scores (tf, doc length, Lucene-style idf), shared
+# by text_search_bm25 and the lexical side of text_search_rrf_hybrid.
+_BM25_SCORED_CTES = f"""
 tf AS (SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY doc_id, word),
 dl AS (SELECT doc_id, count(*) AS len FROM toks GROUP BY doc_id),
 stats AS (
@@ -212,28 +202,13 @@ scored AS (
   FROM tf t
   JOIN dl d ON t.doc_id = d.doc_id
   JOIN widf ON t.word = widf.word, stats
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_terms_hit,
-       CAST(sum(s) AS DOUBLE) AS score
-FROM scored
-WHERE word IN ({", ".join(f"'{w}'" for w in _SEARCH_TERMS)})
-GROUP BY doc_id
-ORDER BY score DESC, n_terms_hit DESC, doc_id ASC
-LIMIT 20
-""",
-)
-def text_search_bm25(spark, sf_dir):
-    """BM25 ranked retrieval (k1=1.2, b=0.75, the Lucene-style
-    +1-inside-the-log idf so no term scores negative) — the standard
-    keyword-search ranking, with raw term frequency saturating and
-    document-length normalization, which plain TF-IDF summing lacks.
-    Determinism: idf is rounded once per VOCAB word, the per-posting
-    score once per (doc, word) — every input to those expressions
-    (tf, len ints; avglen one exact division) is identical on both
-    engines, and the doc-level sum rides DECIMAL. Same pushdown shape
-    as text_search_tfidf: the IN-set prunes postings before scoring at
-    the final filter, top-k is TakeOrdered."""
+)"""
+
+
+def _bm25_hits(spark, sf_dir):
+    """Per-document BM25 hits for the search terms: n_terms_hit and the
+    DECIMAL-summed score (the Spark side of ``_BM25_SCORED_CTES`` plus
+    its IN-set aggregate), unordered."""
     from wikipedia_data_pipeline_spark.operators.text import tokenize
 
     toks = tokenize(load_table(spark, sf_dir, "documents"))
@@ -269,11 +244,7 @@ def text_search_bm25(spark, sf_dir):
                 / (
                     F.col("tf")
                     + _BM25_K1
-                    * (
-                        1
-                        - _BM25_B
-                        + _BM25_B * F.col("len") / F.col("avglen")
-                    )
+                    * (1 - _BM25_B + _BM25_B * F.col("len") / F.col("avglen"))
                 ),
                 6,
             )
@@ -281,12 +252,40 @@ def text_search_bm25(spark, sf_dir):
             .alias("s"),
         )
     )
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_terms_hit"),
+        F.sum("s").cast("double").alias("score"),
+    )
+
+
+@register(
+    "text_search_bm25",
+    oracle=f"""
+WITH {TOKS_CTE},
+{_BM25_SCORED_CTES}
+SELECT doc_id,
+       CAST(count(*) AS BIGINT) AS n_terms_hit,
+       CAST(sum(s) AS DOUBLE) AS score
+FROM scored
+WHERE word IN ({", ".join(f"'{w}'" for w in _SEARCH_TERMS)})
+GROUP BY doc_id
+ORDER BY score DESC, n_terms_hit DESC, doc_id ASC
+LIMIT 20
+""",
+)
+def text_search_bm25(spark, sf_dir):
+    """BM25 ranked retrieval (k1=1.2, b=0.75, the Lucene-style
+    +1-inside-the-log idf so no term scores negative) — the standard
+    keyword-search ranking, with raw term frequency saturating and
+    document-length normalization, which plain TF-IDF summing lacks.
+    Determinism: idf is rounded once per VOCAB word, the per-posting
+    score once per (doc, word) — every input to those expressions
+    (tf, len ints; avglen one exact division) is identical on both
+    engines, and the doc-level sum rides DECIMAL. Same pushdown shape
+    as text_search_tfidf: the IN-set prunes postings before scoring at
+    the final filter, top-k is TakeOrdered."""
     return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_hit"),
-            F.sum("s").cast("double").alias("score"),
-        )
+        _bm25_hits(spark, sf_dir)
         .orderBy(F.desc("score"), F.desc("n_terms_hit"), F.asc("doc_id"))
         .limit(20)
     )
@@ -308,30 +307,7 @@ _COS0_SQL = (
     "text_search_rrf_hybrid",
     oracle=f"""
 WITH {TOKS_CTE},
-tf AS (SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY doc_id, word),
-dl AS (SELECT doc_id, count(*) AS len FROM toks GROUP BY doc_id),
-stats AS (
-  SELECT CAST(sum(len) AS DOUBLE) / count(*) AS avglen,
-         count(*) AS n_docs
-  FROM dl
-),
-dfreq AS (SELECT word, count(*) AS df FROM tf GROUP BY word),
-widf AS (
-  SELECT word,
-         CAST(round(ln((n_docs - df + 0.5) / (df + 0.5) + 1), 6)
-              AS DECIMAL(18,6)) AS idf
-  FROM dfreq, stats
-),
-scored AS (
-  SELECT t.doc_id, t.word,
-         CAST(round(CAST(idf AS DOUBLE) * (t.tf * ({_BM25_K1} + 1))
-               / (t.tf + {_BM25_K1} * (1 - {_BM25_B}
-                  + {_BM25_B} * d.len / avglen)), 6)
-              AS DECIMAL(18,6)) AS s
-  FROM tf t
-  JOIN dl d ON t.doc_id = d.doc_id
-  JOIN widf ON t.word = widf.word, stats
-),
+{_BM25_SCORED_CTES},
 lex_top AS (
   SELECT doc_id,
          CAST(count(*) AS BIGINT) AS n_terms_hit,
@@ -394,64 +370,14 @@ def text_search_rrf_hybrid(spark, sf_dir):
     from pyspark.sql import Window
 
     from wikipedia_data_pipeline_spark.functions import cosine_similarity
-    from wikipedia_data_pipeline_spark.operators.text import tokenize
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
-    toks = tokenize(load_table(spark, sf_dir, "documents"))
-    tf = toks.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("len"))
-    stats = dl.agg(
-        (F.sum("len").cast("double") / F.count(F.lit(1))).alias("avglen"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    widf = dfreq.crossJoin(F.broadcast(stats)).select(
-        "word",
-        F.round(
-            F.log(
-                (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1
-            ),
-            6,
-        )
-        .cast("decimal(18,6)")
-        .alias("idf"),
-    )
-    scored = (
-        tf.filter(F.col("word").isin(_SEARCH_TERMS))
-        .join(dl, "doc_id")
-        .join(F.broadcast(widf), "word")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.round(
-                F.col("idf").cast("double")
-                * (F.col("tf") * (_BM25_K1 + 1))
-                / (
-                    F.col("tf")
-                    + _BM25_K1
-                    * (1 - _BM25_B + _BM25_B * F.col("len") / F.col("avglen"))
-                ),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("s"),
-        )
-    )
     lex_order = [
         F.desc("score"),
         F.desc("n_terms_hit"),
         F.asc("doc_id"),
     ]
-    lex_top = (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_hit"),
-            F.sum("s").cast("double").alias("score"),
-        )
-        .orderBy(*lex_order)
-        .limit(_RRF_DEPTH)
-    )
+    lex_top = _bm25_hits(spark, sf_dir).orderBy(*lex_order).limit(_RRF_DEPTH)
     lex = lex_top.select(
         "doc_id",
         F.row_number()

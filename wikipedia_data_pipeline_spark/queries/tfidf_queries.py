@@ -50,8 +50,9 @@ doc_tf AS (
 )
 """
 
-IDF_CTES = f"""
-{TOKS_CTE},
+# Shared DuckDB CTEs: document frequency -> idf = round(log10(N/df), 2),
+# kept when > 0, over the ``toks`` CTE.
+IDF_OF_TOKS_CTES = """
 dfreq AS (
     SELECT word, count(*) AS df
     FROM (SELECT DISTINCT doc_id, word FROM toks) GROUP BY word
@@ -61,7 +62,11 @@ idf AS (
     SELECT word, round(log10(CAST(n_docs AS DOUBLE) / df), 2) AS idf
     FROM dfreq, ndocs
     WHERE round(log10(CAST(n_docs AS DOUBLE) / df), 2) > 0
-)
+)"""
+
+IDF_CTES = f"""
+{TOKS_CTE},
+{IDF_OF_TOKS_CTES}
 """
 
 
@@ -108,16 +113,7 @@ def idf(spark, sf_dir):
     "tfidf_full",
     oracle=f"""
 WITH {DOC_TF_CTES},
-dfreq AS (
-    SELECT word, count(*) AS df
-    FROM (SELECT DISTINCT doc_id, word FROM toks) GROUP BY word
-),
-ndocs AS (SELECT count(*) AS n_docs FROM documents),
-idf AS (
-    SELECT word, round(log10(CAST(n_docs AS DOUBLE) / df), 2) AS idf
-    FROM dfreq, ndocs
-    WHERE round(log10(CAST(n_docs AS DOUBLE) / df), 2) > 0
-)
+{IDF_OF_TOKS_CTES}
 SELECT t.doc_id, t.word, t.count, t.tf, round(t.tf * i.idf, 2) AS tf_idf
 FROM doc_tf t JOIN idf i ON t.word = i.word
 """,

@@ -826,6 +826,21 @@ def events_rolling_median_value(spark, sf_dir):
     )
 
 
+def _daily_event_counts(spark, sf_dir):
+    """(d, n): events per epoch day, the only fact-sized work of the
+    seasonal-naive forecast evaluations."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy(
+            F.unix_date(
+                F.date_trunc("day", F.timestamp_micros(F.col("ts")))
+                .cast("date")
+            ).cast("long").alias("d")
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
 @register(
     "events_seasonal_naive_eval",
     oracle="""
@@ -864,16 +879,7 @@ def events_seasonal_naive_eval(spark, sf_dir):
     counts rows like orders_yoy_growth, noted there."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.unix_date(
-                F.date_trunc("day", F.timestamp_micros(F.col("ts")))
-                .cast("date")
-            ).cast("long").alias("d")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    daily = _daily_event_counts(spark, sf_dir)
     w = Window.orderBy("d")
     lagd = daily.select(
         "d",
@@ -1189,16 +1195,7 @@ def ml_eval_regression_panel(spark, sf_dir):
     driver-tiny (same dense-day note as events_seasonal_naive_eval)."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.unix_date(
-                F.date_trunc("day", F.timestamp_micros(F.col("ts")))
-                .cast("date")
-            ).cast("long").alias("d")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    daily = _daily_event_counts(spark, sf_dir)
     w = Window.orderBy("d")
     lagd = daily.select("d", "n", F.lag("n", 7).over(w).alias("f"))
     err = F.col("n") - F.col("f")

@@ -16,11 +16,10 @@ from pyspark.sql import SparkSession
 
 def get_spark(app_name: str = "wikipedia-data-pipeline-spark") -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_parts = int(os.environ.get("WDP_SHUFFLE_PARTITIONS", str(max(cpus, 8))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_parts))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -38,10 +37,7 @@ def get_spark(app_name: str = "wikipedia-data-pipeline-spark") -> SparkSession:
         # scan parallelism with local[32]; on a real cluster, where
         # inputs arrive thousands of files wide, revert to the default
         # (tiny splits there only inflate scheduling overhead).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("WDP_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         # Engine-wide type policy: parquet TIMESTAMP(NANOS) (which Spark
         # cannot map to a timestamp) reads as BIGINT nanoseconds; time
         # arithmetic happens in the exact integer domain (functions.ts_us).

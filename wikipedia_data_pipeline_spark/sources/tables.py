@@ -29,6 +29,21 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
+
+def duckdb_catalog(sf_dir: str):
+    """A DuckDB connection with one view per table of TABLE_NAMES over
+    the parquet files in ``sf_dir``: the catalog the oracle SQL runs
+    against."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
 # Event time is normalized to ONE engine-wide domain at scan time:
 # BIGINT microseconds since the epoch. Everything downstream (window
 # frames, sessionization, streaming buckets, as-of joins) does exact

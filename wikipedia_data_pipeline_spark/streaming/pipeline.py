@@ -271,17 +271,13 @@ def run_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("wdp_stream_dedup")
 
 
-def run_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval inner join: each view joined to the same
-    user's clicks within the following hour, both sides watermarked.
-
-    The watermarks bound the join state: Spark retains only 2 hours of
-    each stream (watermark + interval span) instead of the full history
-    — the property that makes a stream-stream join runnable forever at
-    production event rates. With an availableNow run the emitted pairs
-    equal the batch interval self-join exactly, so the same SQL oracle
-    checks both.
-    """
+def _view_click_stream_join(
+    spark: SparkSession, sf_dir: str, how: str
+) -> DataFrame:
+    """Views joined (``how``) to the same user's clicks within the
+    following hour, both streams watermarked at 2 hours: the state
+    bound shared by the inner and the left-outer interval join.
+    Columns: view_id, click_id, user_id, view_us, click_us."""
     views = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -300,7 +296,7 @@ def run_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_micros(F.col("ts")).alias("click_time"),
         )
     )
-    joined = (
+    return (
         views.withWatermark("view_time", "2 hours")
         .join(
             clicks.withWatermark("click_time", "2 hours"),
@@ -308,7 +304,7 @@ def run_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "v_user = c_user AND click_time BETWEEN view_time "
                 "AND view_time + interval 1 hour"
             ),
-            "inner",
+            how,
         )
         .select(
             "view_id",
@@ -318,6 +314,20 @@ def run_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("click_time").alias("click_us"),
         )
     )
+
+
+def run_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval inner join: each view joined to the same
+    user's clicks within the following hour, both sides watermarked.
+
+    The watermarks bound the join state: Spark retains only 2 hours of
+    each stream (watermark + interval span) instead of the full history
+    — the property that makes a stream-stream join runnable forever at
+    production event rates. With an availableNow run the emitted pairs
+    equal the batch interval self-join exactly, so the same SQL oracle
+    checks both.
+    """
+    joined = _view_click_stream_join(spark, sf_dir, "inner")
     _run_to_memory(
         joined,
         "wdp_stream_vc_join",
@@ -700,42 +710,7 @@ def run_view_click_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream), which is exactly the semantics the batch oracle encodes
     via the final-watermark predicate.
     """
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.timestamp_micros(F.col("ts")).alias("view_time"),
-        )
-    )
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.timestamp_micros(F.col("ts")).alias("click_time"),
-        )
-    )
-    joined = (
-        views.withWatermark("view_time", "2 hours")
-        .join(
-            clicks.withWatermark("click_time", "2 hours"),
-            F.expr(
-                "v_user = c_user AND click_time BETWEEN view_time "
-                "AND view_time + interval 1 hour"
-            ),
-            "left_outer",
-        )
-        .select(
-            "view_id",
-            F.col("click_id"),
-            F.col("v_user").alias("user_id"),
-            F.unix_micros("view_time").alias("view_us"),
-            F.unix_micros("click_time").alias("click_us"),
-        )
-    )
+    joined = _view_click_stream_join(spark, sf_dir, "left_outer")
     _run_to_memory(
         joined,
         "wdp_stream_vc_left_join",
