@@ -1,11 +1,13 @@
 """Guards for the one-session, one-timing-loop design of bench.py and
 tools/: every script gets its SparkSession from ``session.get_spark``,
 imports the engine of its own checkout, and every A/B experiment
-declares pairs that tools/ab.py can check.
+declares pairs that tools/ab.py can check. Guards on the package's own
+shape: no block is written twice, and no parameter goes unset.
 Needs no 100x replica."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import importlib
 import os
@@ -47,7 +49,7 @@ def _files_containing(literal: str) -> list[str]:
 # A line that carries no decision on its own: blank, a comment, a lone
 # bracket or a docstring fence.
 _NOISE_LINE = re.compile(r'^(#.*|[()\[\]{}]|"""|)$')
-CLONE_MIN_LINES = 12
+CLONE_MIN_LINES = 10
 
 
 def _normalized_lines(path: str) -> list[tuple[int, str]]:
@@ -89,6 +91,71 @@ def test_no_block_of_package_code_is_written_twice():
     )
     regions = _repeated_regions(package_files, CLONE_MIN_LINES)
     assert not regions, f"{len(regions)} repeated regions: {regions}"
+
+
+# Deployment settings: where a run's data lands or which store it talks
+# to. The caller that sets them runs the engine, not code in this repo.
+DEPLOYMENT_SETTINGS = {
+    ("streaming/pipeline.py", "run_foreach_batch_compaction", "store_dir"),
+    ("streaming/pipeline.py", "run_streaming_mv", "store_dir"),
+    ("sources/objectstore.py", "configure_object_store", "extra"),
+    ("sources/maintenance.py", "compact", "fmt"),
+}
+
+
+def _defaulted_parameters(tree: ast.Module):
+    """(function, parameter, position or None) for each defaulted
+    parameter of each undecorated module-level function in ``tree``."""
+    for node in tree.body:
+        if not isinstance(node, ast.FunctionDef) or node.decorator_list:
+            continue
+        a = node.args
+        positional = a.posonlyargs + a.args
+        first = len(positional) - len(a.defaults)
+        for i, arg in enumerate(positional[first:], first):
+            yield node.name, arg.arg, i
+        for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+            if default is not None:
+                yield node.name, arg.arg, None
+
+
+def test_every_defaulted_parameter_has_a_caller_that_sets_it():
+    """A default that no call overrides is a constant with a setting
+    nobody uses: each one doubles the configurations tests and benchmarks
+    would have to cover. So every defaulted parameter of a package
+    function is passed, by position or keyword, by some call of that
+    function's name in the package, tools/, tests/, perfbench/,
+    bench.py or __spark_entry__.py. Deployment settings are exempt."""
+    files = list(_python_files()) + glob.glob(
+        os.path.join(ROOT, "perfbench", "**", "*.py"), recursive=True
+    )
+    files.append(os.path.join(ROOT, "__spark_entry__.py"))
+    n_positional: dict[str, int] = {}
+    keywords: dict[str, set[str]] = {}
+    defaulted = []
+    for path in sorted(files):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        if path.startswith(PACKAGE + os.sep):
+            rel = os.path.relpath(path, PACKAGE)
+            defaulted += [(rel, *d) for d in _defaulted_parameters(tree)]
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = getattr(fn, "id", None) or getattr(fn, "attr", None)
+            if name is None:
+                continue
+            n_positional[name] = max(n_positional.get(name, 0), len(node.args))
+            keywords.setdefault(name, set()).update(k.arg for k in node.keywords)
+    never_set = [
+        f"{rel}: {fn}({param})"
+        for rel, fn, param, pos in defaulted
+        if (rel, fn, param) not in DEPLOYMENT_SETTINGS
+        and not (pos is not None and n_positional.get(fn, 0) > pos)
+        and param not in keywords.get(fn, ())
+    ]
+    assert not never_set, f"{len(never_set)} never-set parameters: {never_set}"
 
 
 def test_only_session_py_builds_a_spark_session():

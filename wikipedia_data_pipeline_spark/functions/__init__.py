@@ -110,14 +110,21 @@ def round2(col: Column) -> Column:
     return F.round(col * 100, 0) / 100
 
 
-def ts_us(col: str = "ts") -> Column:
+# The engine's 30-minute event-time window: the gap of the batch and
+# streaming session windows and the slide of the 1-hour sliding rollups,
+# as epoch-µs for SQL and Column arithmetic and as a Spark interval.
+EVENT_WINDOW_US = 30 * 60 * 1_000_000
+EVENT_WINDOW = f"{EVENT_WINDOW_US // 60_000_000} minutes"
+
+
+def ts_us() -> Column:
     """events.ts in the engine's event-time domain: BIGINT µs since the
     epoch. ``sources.tables.load_table`` / ``streaming.pipeline.read_events_stream``
     normalize the parquet column (whatever its physical encoding — BIGINT
     ns, TIMESTAMP, TIMESTAMP_NTZ) to that domain at scan time, so this is
     a plain column reference. Kept as the single named accessor so the
     domain can move again without touching 17 call sites."""
-    return F.col(col)
+    return F.col("ts")
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:

@@ -29,6 +29,11 @@ PII_RULES: list[tuple[str, str]] = [
     (PHONE_RE, "<PHONE>"),
 ]
 
+# Length gates shared by curate() and curation_funnel(): shorter texts
+# are junk, longer ones pathological.
+MIN_CHARS = 20
+MAX_CHARS = 1_000_000
+
 
 def scrub_pii(col: Column) -> Column:
     """Ordered regex rewrite chain. Email before phone: an address like
@@ -41,16 +46,14 @@ def scrub_pii(col: Column) -> Column:
 
 
 def curate(
-    documents: DataFrame,
-    languages: list[str] | None = None,
-    min_chars: int = 20,
-    max_chars: int = 1_000_000,
+    documents: DataFrame, languages: list[str] | None = None
 ) -> DataFrame:
     """The end-to-end curation pipeline:
 
-    1. language gate (metadata column — swap in ``textstats.language_id``
-       when labels are absent);
-    2. length gates (junk / pathological documents);
+    1. language gate on ``languages`` (default English; metadata column —
+       swap in ``textstats.language_id`` when labels are absent);
+    2. length gates, ``MIN_CHARS`` to ``MAX_CHARS`` (junk / pathological
+       documents);
     3. exact-dedup keep: one representative (min doc_id) per distinct
        content — the composite's single shuffle;
     4. PII scrub on the surviving text.
@@ -63,8 +66,8 @@ def curate(
     langs = languages or ["en"]
     gated = documents.filter(
         F.col("lang").isin(langs)
-        & (F.length("text") >= min_chars)
-        & (F.length("text") <= max_chars)
+        & (F.length("text") >= MIN_CHARS)
+        & (F.length("text") <= MAX_CHARS)
     )
     w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
     return (
@@ -173,7 +176,7 @@ def quality_percentile_gate(
 
 
 def quality_threshold_gate(
-    documents: DataFrame, drop_below: float = 0.1, accuracy: int = 10000
+    documents: DataFrame, drop_below: float = 0.1
 ) -> DataFrame:
     """Scale variant of ``quality_percentile_gate``: instead of ranking
     inside each language (hot-language window partitions), compute each
@@ -187,7 +190,7 @@ def quality_threshold_gate(
         "doc_id", "lang", (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr")
     )
     cuts = scored.groupBy("lang").agg(
-        F.percentile_approx("ttr", drop_below, accuracy).alias("ttr_cut")
+        F.percentile_approx("ttr", drop_below, 10000).alias("ttr_cut")
     )
     return (
         scored.join(F.broadcast(cuts), "lang")
@@ -222,13 +225,8 @@ def cap_per_group(
     )
 
 
-def curation_funnel(
-    documents: DataFrame,
-    languages: list[str] | None = None,
-    min_chars: int = 20,
-    max_chars: int = 1_000_000,
-) -> DataFrame:
-    """Rejection accounting for the curate() pipeline: every document
+def curation_funnel(documents: DataFrame) -> DataFrame:
+    """Rejection accounting for the English curate() pipeline: every document
     classified by the FIRST gate that drops it (language -> too_short
     -> too_long -> duplicate) or 'kept' — the funnel report a curation
     run publishes so corpus shrinkage is attributable.
@@ -240,11 +238,11 @@ def curation_funnel(
     """
     from pyspark.sql import Window
 
-    langs = languages or ["en"]
+    langs = ["en"]
     gated = documents.filter(
         F.col("lang").isin(langs)
-        & (F.length("text") >= min_chars)
-        & (F.length("text") <= max_chars)
+        & (F.length("text") >= MIN_CHARS)
+        & (F.length("text") <= MAX_CHARS)
     )
     w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
     dup_rank = gated.select(
@@ -252,8 +250,8 @@ def curation_funnel(
     )
     reason = (
         F.when(~F.col("lang").isin(langs), "lang_rejected")
-        .when(F.length("text") < min_chars, "too_short")
-        .when(F.length("text") > max_chars, "too_long")
+        .when(F.length("text") < MIN_CHARS, "too_short")
+        .when(F.length("text") > MAX_CHARS, "too_long")
         .when(F.col("_rn") > 1, "duplicate")
         .otherwise("kept")
     )

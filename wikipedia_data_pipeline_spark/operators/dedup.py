@@ -37,6 +37,7 @@ from wikipedia_data_pipeline_spark.operators.ranks import pin
 MERSENNE_61 = (1 << 61) - 1
 MINHASH_K = 128
 LSH_BANDS = 32  # 32 bands x 4 rows
+SHINGLE_N = 3  # words per shingle
 SIMHASH_BITS = 64
 SIMHASH_BAND_BITS = 4  # 16 bands x 4 bits
 
@@ -48,41 +49,42 @@ MINHASH_A = [_rng.randrange(1, 1 << 31) for _ in range(MINHASH_K)]
 MINHASH_B = [_rng.randrange(0, 1 << 31) for _ in range(MINHASH_K)]
 
 
-def shingles(documents: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
-    """(doc_id, shingles array<string>) — distinct n-grams of consecutive
-    whitespace tokens. The transformation is narrow; ``fan_out`` first
-    spreads an under-split scan across the cluster so the downstream
-    minhash/simhash signature math parallelizes (no-op on wide inputs)."""
+def shingles(documents: DataFrame) -> DataFrame:
+    """(doc_id, shingles array<string>) — distinct ``SHINGLE_N``-grams of
+    consecutive whitespace tokens of ``text``. The transformation is
+    narrow; ``fan_out`` first spreads an under-split scan across the
+    cluster so the downstream minhash/simhash signature math
+    parallelizes (no-op on wide inputs)."""
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
     documents = fan_out(documents)
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     size = F.size(toks)
     grams = F.transform(
-        F.sequence(F.lit(0), size - n),
+        F.sequence(F.lit(0), size - SHINGLE_N),
         lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
+            " ", *[F.element_at(toks, i + j + 1) for j in range(SHINGLE_N)]
         ),
     )
     return documents.select(
         "doc_id",
-        F.when(size >= n, F.array_distinct(grams))
+        F.when(size >= SHINGLE_N, F.array_distinct(grams))
         .otherwise(F.array().cast("array<string>"))
         .alias("shingles"),
     )
 
 
-def exact_duplicates(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact dedup via hash group-by: one row per distinct content with
+def exact_duplicates(documents: DataFrame) -> DataFrame:
+    """Exact dedup via hash group-by: one row per distinct ``text`` with
     the representative (min doc_id) and copy count."""
-    return documents.groupBy(F.md5(F.col(text_col)).alias("content_hash")).agg(
+    return documents.groupBy(F.md5(F.col("text")).alias("content_hash")).agg(
         F.min("doc_id").alias("doc_id_kept"),
         F.count("*").alias("n_copies"),
     )
 
 
 def hashed_shingles(
-    documents: DataFrame, n: int = 3, text_col: str = "text"
+    documents: DataFrame, n: int = SHINGLE_N, text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, hsh array<bigint>) — the distinct n-gram shingle set as
     64-bit xxhash64 fingerprints of the token-array slices.
@@ -120,11 +122,10 @@ def hashed_shingles(
     )
 
 
-def band_signatures(
-    hashed: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
-) -> DataFrame:
-    """(doc_id, bh array<bigint> of length ``bands``) — the k minhashes
-    folded straight into per-band bucket keys, entirely JVM-side.
+def band_signatures(hashed: DataFrame) -> DataFrame:
+    """(doc_id, bh array<bigint> of length ``LSH_BANDS``) — the
+    ``MINHASH_K`` minhashes folded straight into per-band bucket keys,
+    entirely JVM-side.
 
     One ``aggregate`` walks the shingle set once, keeping the running
     k-vector of minima via ``zip_with`` against the let-bound (a, b)
@@ -150,10 +151,10 @@ def band_signatures(
     explode time: two empty docs have Jaccard 0 here (see
     ``jaccard``), so they can never be near-dups and pruning them
     early is semantics-preserving."""
-    rows_per_band = k // bands
+    rows_per_band = MINHASH_K // LSH_BANDS
     ab = ", ".join(
         f"named_struct('a', {MINHASH_A[i]}L, 'b', {MINHASH_B[i]}L)"
-        for i in range(k)
+        for i in range(MINHASH_K)
     )
     bh = F.expr(
         f"""
@@ -161,11 +162,11 @@ def band_signatures(
           element_at(transform(array(array({ab})), cs ->
             element_at(transform(array(
                 aggregate(transform(hsh, x -> pmod(x, 2147483648L)),
-                          array_repeat({MERSENNE_61}L, {k}),
+                          array_repeat({MERSENNE_61}L, {MINHASH_K}),
                           (acc, x) -> zip_with(acc, cs,
                             (m, c) -> least(m, pmod(c.a * x + c.b,
                                                     {MERSENNE_61}L))))),
-              mins -> transform(sequence(0, {bands - 1}),
+              mins -> transform(sequence(0, {LSH_BANDS - 1}),
                                 band -> xxhash64(
                                   slice(mins, band * {rows_per_band} + 1,
                                         {rows_per_band})))), 1)), 1)
@@ -189,9 +190,7 @@ def _pairs_within(ids_col: Column) -> Column:
     )
 
 
-def lsh_candidate_pairs(
-    hashed: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
-) -> DataFrame:
+def lsh_candidate_pairs(hashed: DataFrame) -> DataFrame:
     """Band the minhash signatures, emit distinct (doc_a, doc_b),
     doc_a < doc_b, for docs sharing any band hash.
 
@@ -203,7 +202,7 @@ def lsh_candidate_pairs(
     hot bucket (everyone identical) would call for the join form plus
     salting — at that point the data is one giant dup-cluster and
     candidate pruning is moot anyway."""
-    buckets = _band_buckets(hashed, bands, k)
+    buckets = _band_buckets(hashed)
     grouped = (
         buckets.groupBy("band", "bhash")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
@@ -403,15 +402,13 @@ def incremental_lsh_pairs(
     )
 
 
-def _band_buckets(
-    hashed: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
-) -> DataFrame:
+def _band_buckets(hashed: DataFrame) -> DataFrame:
     """(doc_id, band, bhash) bucket table from hashed shingles (via the
     fused ``band_signatures``) — shared by the self-dedup grouped
     expansion and the incremental bipartite join. posexplode of a
-    ``bands``-length array: the band ordinal IS the position, so no
+    ``LSH_BANDS``-length array: the band ordinal IS the position, so no
     struct packing is needed."""
-    sigs = band_signatures(hashed, bands, k)
+    sigs = band_signatures(hashed)
     return sigs.select(
         "doc_id", F.posexplode("bh").alias("band", "bhash")
     )
@@ -533,9 +530,7 @@ def simhash_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
     return verify_pairs_jaccard(cands, sh, threshold)
 
 
-def near_dup_clusters(
-    documents: DataFrame, pairs: DataFrame, max_iters: int = 15
-) -> DataFrame:
+def near_dup_clusters(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected components over the near-dup pair graph → dedup
     selection: ``(doc_id, cluster_id, keep)`` where ``cluster_id`` is
     the minimum doc_id reachable through near-dup edges and ``keep``
@@ -547,7 +542,7 @@ def near_dup_clusters(
     of its own label and its neighbors' labels (edges materialized both
     directions), until a fixpoint — O(cluster diameter) rounds, and
     verified near-dup clusters are near-cliques (diameter ≤ ~2), so the
-    loop terminates in 2-3 rounds in practice with ``max_iters`` as a
+    loop terminates in 2-3 rounds in practice, with 15 rounds as a
     pathological-chain backstop. Each round is one shuffle (the
     groupBy-min); ``localCheckpoint`` truncates the growing lineage so
     round N's plan does not replay rounds 1..N-1 — on a cluster this is
@@ -571,7 +566,7 @@ def near_dup_clusters(
         .select(F.col("src").alias("doc_id"), F.col("src").alias("cluster_id"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iters):
+    for _ in range(15):
         prop = labels.join(edges, labels["doc_id"] == edges["src"]).select(
             edges["dst"].alias("doc_id"), F.col("cluster_id")
         )

@@ -1,7 +1,7 @@
 """Graph operators expressed as DataFrame programs.
 
 PageRank here is the *fixed-point integer* formulation: ranks live in
-scaled integer units (1.0 == ``scale``), per-edge contributions use
+scaled integer units (1.0 == ``SCALE``), per-edge contributions use
 integer floor division, and the damping step is integer multiply-then-
 divide. Two reasons, both scale-motivated:
 
@@ -13,8 +13,8 @@ divide. Two reasons, both scale-motivated:
   also makes it exactly checkable against a SQL oracle.
 * **No precision cliff.** At web-graph scale the float variant needs
   Kahan-style compensation for high-in-degree nodes; scaled-integer
-  arithmetic has a fixed, known quantization (1e-6 with the default
-  scale) everywhere.
+  arithmetic has a fixed, known quantization (1e-6 at ``SCALE``)
+  everywhere.
 
 The iteration itself is the classic Spark shape (cf. the PageRank
 examples shipped with Spark since the RDD era, re-expressed on
@@ -31,26 +31,22 @@ from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.operators.ranks import pin
 
-DEFAULT_SCALE = 1_000_000  # rank 1.0 in fixed-point units
-DEFAULT_DAMPING_PCT = 85  # 0.85 damping as an integer percentage
+SCALE = 1_000_000  # rank 1.0 in fixed-point units
+DAMPING_PCT = 85  # 0.85 damping as an integer percentage
 
 
 def pagerank_fixed_point(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 3,
-    scale: int = DEFAULT_SCALE,
-    damping_pct: int = DEFAULT_DAMPING_PCT,
     weight: str | None = None,
 ) -> DataFrame:
-    """Fixed-point PageRank over a directed edge list.
+    """Fixed-point PageRank over a directed ``(src, dst)`` edge list.
 
     Semantics (exact, engine-portable):
-      rank_0(v)   = scale                       (i.e. 1.0)
+      rank_0(v)   = SCALE                       (i.e. 1.0)
       contrib(u→v) = rank_t(u) div outdeg(u)    (integer floor division)
-      rank_{t+1}(v) = base + (damping_pct * Σ contrib) div 100
-    where base = scale*(100-damping_pct) div 100. Nodes with no
+      rank_{t+1}(v) = base + (DAMPING_PCT * Σ contrib) div 100
+    where base = SCALE*(100-DAMPING_PCT) div 100. Nodes with no
     in-edges hold the base rank; dangling nodes (no out-edges) simply
     contribute nothing (their mass is not redistributed — the bounded
     "leaky" variant, standard when ranks need not sum to N).
@@ -67,32 +63,32 @@ def pagerank_fixed_point(
     many-iteration runs, checkpoint ``ranks`` every ~5 rounds to cut
     lineage — at 3 iterations the plan is shallow enough not to bother.
     """
-    base = scale * (100 - damping_pct) // 100
+    base = SCALE * (100 - DAMPING_PCT) // 100
 
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     w_expr = (
         F.col(weight).cast("long") if weight is not None else F.lit(1).cast("long")
     )
-    outdeg = edges.groupBy(src).agg(F.sum(w_expr).alias("outdeg"))
+    outdeg = edges.groupBy("src").agg(F.sum(w_expr).alias("outdeg"))
     # One shuffle up front: co-locate edges with their out-degree and
     # keep them partitioned by src so every iteration's rank join is a
     # local (no re-shuffle of the big side) hash join under AQE.
     e = pin(
-        edges.join(outdeg, src)
+        edges.join(outdeg, "src")
         .select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
+            F.col("src").alias("src"),
+            F.col("dst").alias("dst"),
             w_expr.alias("w"),
             "outdeg",
         )
         .repartition("src")
     )
 
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
+    ranks = nodes.select("node", F.lit(SCALE).cast("long").alias("rank"))
     for _ in range(iterations):
         contrib = e.join(
             ranks, e["src"] == ranks["node"]
@@ -108,22 +104,22 @@ def pagerank_fixed_point(
             (
                 F.lit(base)
                 + F.coalesce(
-                    F.expr(f"({damping_pct} * mass) div 100"), F.lit(0)
+                    F.expr(f"({DAMPING_PCT} * mass) div 100"), F.lit(0)
                 )
             ).cast("long").alias("rank"),
         )
     return ranks
 
 
-def degree_profile(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Per-node (out_degree, in_degree) — the first diagnostic run on
-    any new graph (skew in either column predicts shuffle hot spots in
-    every downstream graph op). One aggregate per direction, full outer
-    merged on the node id."""
-    out_d = edges.groupBy(F.col(src).alias("node")).agg(
+def degree_profile(edges: DataFrame) -> DataFrame:
+    """Per-node (out_degree, in_degree) of a ``(src, dst)`` edge list —
+    the first diagnostic run on any new graph (skew in either column
+    predicts shuffle hot spots in every downstream graph op). One
+    aggregate per direction, full outer merged on the node id."""
+    out_d = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("out_degree")
     )
-    in_d = edges.groupBy(F.col(dst).alias("node")).agg(
+    in_d = edges.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).alias("in_degree")
     )
     return (
@@ -136,15 +132,10 @@ def degree_profile(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 2,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
     """Synchronous majority-label propagation (community detection) on
-    the undirected view of an edge list, with a fully deterministic
-    spec: every node starts labeled with its own id; each round it
+    the undirected view of a ``(src, dst)`` edge list, with a fully
+    deterministic spec: every node starts labeled with its own id; each round it
     adopts the most frequent label among its neighbors, ties broken by
     the smallest label. Deterministic tie-breaks are what make a graph
     heuristic exactly reproducible (and SQL-checkable) — the classic
@@ -161,8 +152,8 @@ def label_propagation(
     from pyspark.sql import Window
 
     und = pin(
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-        .union(edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
+        edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
+        .union(edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr")))
         .distinct()
         .repartition("nbr")
     )
@@ -184,10 +175,10 @@ def label_propagation(
     return labels
 
 
-def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Global triangle census of an undirected graph given as oriented
-    edges (src < dst, deduplicated): one row with node/edge/triangle/
-    wedge counts and the global clustering coefficient
+    ``(src, dst)`` edges (src < dst, deduplicated): one row with
+    node/edge/triangle/wedge counts and the global clustering coefficient
     3·triangles / wedges.
 
     Triangle enumeration is the oriented two-hop join — e₁(a,b) ⋈
@@ -201,7 +192,7 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     never enumerated.
     """
     e = pin(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a") < F.col("b"))
         .distinct()
     )
@@ -240,19 +231,13 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     )
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int,
-    rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Fixed-round k-core peeling on the undirected view of an edge
-    list: each round drops every node whose CURRENT degree is below k,
-    along with its incident edges (which lowers its neighbors' degrees
-    — the cascade that defines the k-core). After enough rounds the
-    edge set is the exact k-core; a bounded round count is the
-    production form (full convergence is a loop-until-fixpoint over the
+def kcore_peel(edges: DataFrame, k: int, rounds: int = 3) -> DataFrame:
+    """Fixed-round k-core peeling on the undirected view of a
+    ``(src, dst)`` edge list: each round drops every node whose CURRENT
+    degree is below k, along with its incident edges (which lowers its
+    neighbors' degrees — the cascade that defines the k-core). After
+    enough rounds the edge set is the exact k-core; a bounded round
+    count is the production form (full convergence is a loop-until-fixpoint over the
     same plan, checkpointing every few rounds).
 
     Per round: one degree aggregate + two semi-joins of the surviving
@@ -268,8 +253,8 @@ def kcore_peel(
     ``unpersist()`` the result when done.
     """
     und = (
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-        .union(edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
+        edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
+        .union(edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr")))
         .distinct()
         .persist()
     )
@@ -311,14 +296,9 @@ def kcore_peel(
     return out
 
 
-def bfs_hops(
-    edges: DataFrame,
-    seeds: list,
-    max_hops: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Fixed-depth BFS on the undirected view: (node, hops) with the
+def bfs_hops(edges: DataFrame, seeds: list, max_hops: int = 3) -> DataFrame:
+    """Fixed-depth BFS on the undirected view of a ``(src, dst)`` edge
+    list: (node, hops) with the
     MINIMUM hop distance from any seed, for hops ≤ max_hops.
 
     Each level is one join of the (node-sized) frontier against the
@@ -337,8 +317,8 @@ def bfs_hops(
     """
     spark = edges.sparkSession
     und = (
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-        .union(edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
+        edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
+        .union(edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr")))
         .distinct()
         .repartition("node")
         .persist()
@@ -380,10 +360,7 @@ def bfs_hops(
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 15,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Hash-min connected components on the undirected view: every
     node's label converges to the MINIMUM node id in its component —
@@ -395,7 +372,7 @@ def connected_components(
     pure min-propagation, exact after diameter(G) rounds and detected
     by an unchanged-label count. Dedup/linkage graphs have tiny
     diameters (clusters are near-cliques), so the loop terminates in
-    2-3 rounds; for adversarial long-path graphs the same loop takes
+    2-3 rounds (15 at most); for adversarial long-path graphs the same loop takes
     the large-star/small-star (Kiveris et al.) pointer-doubling form —
     documented here as the scale escape hatch, not implemented because
     every consumer graph in this engine is short-diameter.
@@ -425,7 +402,7 @@ def connected_components(
         .persist()
     )
     labels.count()
-    for _ in range(max_rounds):
+    for _ in range(15):
         nbr_min = (
             und.join(
                 labels.select(

@@ -94,16 +94,14 @@ def merge_distinct_states(
     )
 
 
-def hll_distinct_state(
-    df: DataFrame, keys: list[str], member: str, lg_k: int = 14
-) -> DataFrame:
+def hll_distinct_state(df: DataFrame, keys: list[str], member: str) -> DataFrame:
     """Mergeable approximate-distinct state: a DataSketches HLL sketch
     per key (hll_sketch_agg). Unlike the exact membership-set state,
-    the sketch is O(2^lg_k) bytes per key REGARDLESS of cardinality —
+    the lg_k = 14 sketch is O(2^14) bytes per key REGARDLESS of cardinality —
     the representation that keeps incremental count-distinct viable at
     100 TB when the exact state itself would be the big table."""
     return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(member, F.lit(lg_k)).alias("hll_state")
+        F.hll_sketch_agg(member, F.lit(14)).alias("hll_state")
     )
 
 

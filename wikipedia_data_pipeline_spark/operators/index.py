@@ -22,19 +22,18 @@ from pyspark.sql import functions as F
 from wikipedia_data_pipeline_spark.operators.text import token_array
 
 
-def positional_postings(
-    documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def positional_postings(documents: DataFrame) -> DataFrame:
     """(word, doc_id, pos) postings with 0-based token positions over
-    the normalized token stream (empty-normalized tokens dropped, so
-    positions index REAL words — phrase adjacency survives punctuation
-    tokens). posexplode keeps it one narrow projection, no shuffle."""
+    the normalized token stream of ``text`` (empty-normalized tokens
+    dropped, so positions index REAL words — phrase adjacency survives
+    punctuation tokens). posexplode keeps it one narrow projection, no
+    shuffle."""
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
-    toks = token_array(text_col)
+    toks = token_array()
     return (
         fan_out(documents)
-        .select(F.col(id_col).alias("doc_id"), F.posexplode(toks))
+        .select(F.col("doc_id").alias("doc_id"), F.posexplode(toks))
         .select("doc_id", F.col("col").alias("word"), F.col("pos").cast("long").alias("pos"))
     )
 

@@ -83,6 +83,10 @@ def key_skew_report(
     )
 
 
+# Bits per dimension of the rescaled grid zorder_skipping_report keys on.
+ZORDER_GRID_BITS = 16
+
+
 def zorder_key(cols: list[Column], bits: int = 16) -> Column:
     """Z-value (Morton code) of non-negative integer columns: bit i of
     column j lands at position ``i * n_cols + j``. A range-partition +
@@ -215,7 +219,6 @@ def zorder_skipping_report(
     ybox: tuple[int, int],
     out_dir: str,
     n_files: int = 16,
-    bits: int = 16,
 ) -> DataFrame:
     """Measure what the Z-order layout buys: write ``df`` under three
     layouts (round-robin, linearly sorted on ``ycol``, Z-ordered on
@@ -244,7 +247,7 @@ def zorder_skipping_report(
     # Interleaving raw values wastes the narrower column: if x spans 8
     # significant bits and y spans 10, every 2^16-wide Z-range fixes
     # only y's high bits and x never prunes. Rescale BOTH dims onto the
-    # same 2^bits grid first (min/max from one tiny agg — rank/range
+    # same 2^ZORDER_GRID_BITS grid first (min/max from one tiny agg — rank/range
     # normalization, exactly what lakehouse OPTIMIZE ZORDER does with
     # per-column range ids) so each dimension contributes equally to
     # the key's high bits.
@@ -254,7 +257,7 @@ def zorder_skipping_report(
         F.min(ycol).alias("y0"),
         F.max(ycol).alias("y1"),
     ).collect()[0]
-    top = (1 << bits) - 1
+    top = (1 << ZORDER_GRID_BITS) - 1
 
     def grid(col: str, lo: int, hi: int) -> Column:
         span = max(1, int(hi) - int(lo))
@@ -264,7 +267,7 @@ def zorder_skipping_report(
 
     zkey = zorder_key(
         [grid(xcol, mm["x0"], mm["x1"]), grid(ycol, mm["y0"], mm["y1"])],
-        bits=bits,
+        bits=ZORDER_GRID_BITS,
     )
     layouts = {
         "unordered": df.repartition(n_files),

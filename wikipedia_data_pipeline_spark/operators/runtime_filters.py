@@ -25,6 +25,10 @@ from pyspark.sql import functions as F
 
 __all__ = ["build_bloom_bits", "bloom_might_contain", "bloom_prefilter_join"]
 
+# The sketch bloom_prefilter_join builds: m = 2^20 bits (128 KB), k = 5.
+BLOOM_BITS = 1 << 20
+BLOOM_HASHES = 5
+
 
 def _positions(key: Column, n_hashes: int, n_bits: int) -> list[Column]:
     # Double hashing: pos_i = (h1 + i*h2) mod m, from two independent
@@ -52,7 +56,10 @@ def _pow2(exponent: Column) -> Column:
 
 
 def build_bloom_bits(
-    keys: DataFrame, key_col: str, n_bits: int = 1 << 20, n_hashes: int = 5
+    keys: DataFrame,
+    key_col: str,
+    n_bits: int = BLOOM_BITS,
+    n_hashes: int = BLOOM_HASHES,
 ) -> list[int]:
     """Distributed Bloom build: returns the m-bit array as m/64 longs.
 
@@ -99,19 +106,18 @@ def bloom_prefilter_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    n_bits: int = 1 << 20,
-    n_hashes: int = 5,
 ) -> DataFrame:
     """Exact inner join with a Bloom prefilter on the fact side.
 
-    Build the sketch from the dim keys (one tiny aggregation), ship it
-    as a one-row broadcast array<long>, drop fact rows whose key
+    Build the ``BLOOM_BITS``/``BLOOM_HASHES`` sketch from the dim keys
+    (one tiny aggregation), ship it as a one-row broadcast array<long>,
+    drop fact rows whose key
     cannot be in dim BEFORE the join shuffle, then run the ordinary
     exact join — false positives vanish there, so the result equals
     ``fact.join(dim, ...)`` exactly.
     """
     spark = fact.sparkSession
-    bits = build_bloom_bits(dim, dim_key, n_bits, n_hashes)
+    bits = build_bloom_bits(dim, dim_key)
     bloom = spark.createDataFrame(
         [(bits,)], schema="_bloom_bits array<bigint>"
     )
@@ -119,7 +125,7 @@ def bloom_prefilter_join(
         fact.crossJoin(F.broadcast(bloom))
         .where(
             bloom_might_contain(
-                F.col(fact_key), F.col("_bloom_bits"), n_bits, n_hashes
+                F.col(fact_key), F.col("_bloom_bits"), BLOOM_BITS, BLOOM_HASHES
             )
         )
         .drop("_bloom_bits")

@@ -40,26 +40,22 @@ def det_hash(col: Column | str) -> Column:
     ) % F.lit(HASH_MOD)
 
 
-def assign_splits(
-    documents: DataFrame,
-    id_col: str = "doc_id",
-    train_pct: int = 90,
-    val_pct: int = 5,
-) -> DataFrame:
-    """Hash-bucket train/val/test assignment (train_pct/val_pct/rest).
+def assign_splits(documents: DataFrame) -> DataFrame:
+    """Hash-bucket train/val/test assignment of each doc_id (90% / 5% /
+    the remaining 5%).
 
     One narrow projection — the split column costs nothing at any
     scale and is stable against re-partitioning and retries.
     """
-    h = det_hash(id_col)
+    h = det_hash("doc_id")
     bucket = h % 100
     return documents.select(
-        id_col,
+        "doc_id",
         "lang",
         "source",
         h.alias("sample_hash"),
-        F.when(bucket < train_pct, "train")
-        .when(bucket < train_pct + val_pct, "val")
+        F.when(bucket < 90, "train")
+        .when(bucket < 95, "val")
         .otherwise("test")
         .alias("split"),
     )
@@ -69,10 +65,9 @@ def stratified_sample(
     documents: DataFrame,
     group_col: str = "lang",
     fraction: float = 0.2,
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Keep ceil(fraction × group size) docs per group, chosen by hash
-    order (deterministic, uniform within the group).
+    """Keep ceil(fraction × group size) docs per group, chosen by
+    doc_id hash order (deterministic, uniform within the group).
 
     One shuffle on the group key. The per-group count rides the same
     window partition as the rank — no second aggregation pass. Group
@@ -80,60 +75,53 @@ def stratified_sample(
     group size; for a heavy group the window sort is the cost, which
     is the floor for exact per-group quotas.
     """
-    h = det_hash(id_col)
+    h = det_hash("doc_id")
     w = Window.partitionBy(group_col)
     ranked = documents.select(
-        id_col,
+        "doc_id",
         group_col,
         h.alias("sample_hash"),
     ).withColumn(
         "rnk",
         F.row_number().over(
-            Window.partitionBy(group_col).orderBy("sample_hash", id_col)
+            Window.partitionBy(group_col).orderBy("sample_hash", "doc_id")
         ).cast("long"),
     ).withColumn("group_n", F.count("*").over(w))
     return ranked.filter(
         F.col("rnk") <= F.ceil(F.col("group_n") * F.lit(fraction))
-    ).select(id_col, group_col, "sample_hash", "rnk")
+    ).select("doc_id", group_col, "sample_hash", "rnk")
 
 
 def weighted_mixture(
     documents: DataFrame,
     weights: dict[str, float],
     default_weight: float,
-    group_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-source sampling quota — the "data mixture" step of a
-    training pipeline: each source keeps ceil(weight × source size)
-    docs, selected by hash order. Same single-window plan as
+    training pipeline: each ``source`` keeps ceil(weight × source size)
+    docs, selected by doc_id hash order. Same single-window plan as
     stratified_sample, with a per-group fraction."""
     frac = F.lit(default_weight)
     for src, wgt in sorted(weights.items()):
-        frac = F.when(F.col(group_col) == src, F.lit(wgt)).otherwise(frac)
-    w = Window.partitionBy(group_col)
+        frac = F.when(F.col("source") == src, F.lit(wgt)).otherwise(frac)
+    w = Window.partitionBy("source")
     ranked = documents.select(
-        id_col,
-        group_col,
-        det_hash(id_col).alias("sample_hash"),
+        "doc_id",
+        "source",
+        det_hash("doc_id").alias("sample_hash"),
         frac.alias("keep_frac"),
     ).withColumn(
         "rnk",
         F.row_number().over(
-            Window.partitionBy(group_col).orderBy("sample_hash", id_col)
+            Window.partitionBy("source").orderBy("sample_hash", "doc_id")
         ).cast("long"),
     ).withColumn("group_n", F.count("*").over(w))
     return ranked.filter(
         F.col("rnk") <= F.ceil(F.col("group_n") * F.col("keep_frac"))
-    ).select(id_col, group_col, "sample_hash", "rnk")
+    ).select("doc_id", "source", "sample_hash", "rnk")
 
 
-def pack_sequences(
-    documents: DataFrame,
-    token_budget: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_sequences(documents: DataFrame, token_budget: int = 512) -> DataFrame:
     """Greedy sequential sequence packing: within each language, walk
     documents in doc_id order and cut a new pack every time the
     running token total passes the budget — the standard
@@ -148,26 +136,23 @@ def pack_sequences(
     (Docs longer than the budget span packs; real pipelines split
     those upstream — see documents_curation_pipeline's length gate.)
     """
-    n_tok = F.size(F.split(F.col(text_col), " ")).cast("long")
+    n_tok = F.size(F.split(F.col("text"), " ")).cast("long")
     return documents.select(
-        id_col, "lang", n_tok.alias("n_tok")
+        "doc_id", "lang", n_tok.alias("n_tok")
     ).withColumn(
         "pack_id",
-        F.expr(f"(sum(n_tok) over (partition by lang order by {id_col} "
+        F.expr(f"(sum(n_tok) over (partition by lang order by doc_id "
                f"rows between unbounded preceding and current row) - n_tok) "
                f"div {token_budget}"),
     )
 
 
 def shuffle_order(
-    documents: DataFrame,
-    id_col: str = "doc_id",
-    seed: int = 0,
-    shards: int = 64,
+    documents: DataFrame, seed: int = 0, shards: int = 64
 ) -> DataFrame:
     """Deterministic global training shuffle, sharded so it scales.
 
-    Every example gets a pseudo-random sort key md5(seed ":" id) — a
+    Every example gets a pseudo-random sort key md5(seed ":" doc_id) — a
     seeded, engine-portable permutation (training reproducibility:
     rerunning the pipeline yields byte-identical epoch order). A single
     global rank would serialize on one task, so the order is expressed
@@ -178,29 +163,26 @@ def shuffle_order(
     repartitionByRange(shard) + sortWithinPartitions(shard_pos), making
     each output file one contiguous slice of the epoch.
     """
-    key = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
-    shard = det_hash(id_col) % F.lit(shards)
-    w = Window.partitionBy("shard").orderBy("skey", id_col)
+    key = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("doc_id").cast("string")))
+    shard = det_hash("doc_id") % F.lit(shards)
+    w = Window.partitionBy("shard").orderBy("skey", "doc_id")
     return (
         documents.select(
-            F.col(id_col), shard.alias("shard"), key.alias("skey")
+            F.col("doc_id"), shard.alias("shard"), key.alias("skey")
         )
         .withColumn("shard_pos", F.row_number().over(w).cast("bigint"))
-        .select(id_col, "shard", "shard_pos")
+        .select("doc_id", "shard", "shard_pos")
     )
 
 
 def token_budget_cut(
     documents: DataFrame,
     budget: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 0,
     shards: int = 64,
 ) -> DataFrame:
-    """Prefix of the deterministic training shuffle holding at most
-    ``budget`` tokens — "assemble tonight's mix to N tokens" without a
-    global sort.
+    """Prefix of the deterministic (seed 0) training shuffle holding at
+    most ``budget`` tokens — "assemble tonight's mix to N tokens"
+    without a global sort.
 
     The epoch order is (shard_pos, shard) over shuffle_order's sharded
     ranks. The running token total over that order is computed
@@ -213,13 +195,11 @@ def token_budget_cut(
     """
     n_tokens = F.size(
         F.filter(
-            F.split(F.col(text_col), " "), lambda w: F.length(w) > 0
+            F.split(F.col("text"), " "), lambda w: F.length(w) > 0
         )
     ).cast("long")
-    t = shuffle_order(
-        documents, id_col=id_col, seed=seed, shards=shards
-    ).join(
-        documents.select(id_col, n_tokens.alias("n_tokens")), id_col
+    t = shuffle_order(documents, shards=shards).join(
+        documents.select("doc_id", n_tokens.alias("n_tokens")), "doc_id"
     )
     block_w = Window.orderBy("shard_pos").rowsBetween(
         Window.unboundedPreceding, -1
@@ -245,16 +225,11 @@ def token_budget_cut(
             F.col("_before_block") + F.sum("n_tokens").over(in_block_w),
         )
         .where(F.col("cum_tokens") <= budget)
-        .select(id_col, "shard", "shard_pos", "n_tokens", "cum_tokens")
+        .select("doc_id", "shard", "shard_pos", "n_tokens", "cum_tokens")
     )
 
 
-def token_mask(
-    documents: DataFrame,
-    rate_den: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def token_mask(documents: DataFrame, rate_den: int = 5) -> DataFrame:
     """Deterministic MLM-style token masking: position i of document d
     is masked iff det_hash(d + i) % rate_den == 0 (expected rate
     1/rate_den). The mask pattern derives from the portable arithmetic
@@ -268,7 +243,7 @@ def token_mask(
     """
     from wikipedia_data_pipeline_spark.operators.text import token_array
 
-    toks = token_array(text_col)
+    toks = token_array()
 
     def masked(doc_id: Column, i: Column) -> Column:
         h = (
@@ -276,7 +251,7 @@ def token_mask(
         ) * F.lit(KNUTH) + F.lit(12345)
         return (h % F.lit(HASH_MOD)) % rate_den == 0
 
-    d = F.col(id_col).cast("long")
+    d = F.col("doc_id").cast("long")
     out = F.transform(
         F.col("_toks"),
         lambda w, i: F.when(masked(d, i), F.lit("<MASK>")).otherwise(w),
@@ -288,10 +263,10 @@ def token_mask(
         lambda w: w.isNotNull(),
     )
     return (
-        documents.select(F.col(id_col), toks.alias("_toks"))
+        documents.select(F.col("doc_id"), toks.alias("_toks"))
         .where(F.size("_toks") > 0)
         .select(
-            id_col,
+            "doc_id",
             F.size("_toks").cast("long").alias("n_tokens"),
             F.size(targets).cast("long").alias("n_masked"),
             F.array_join(out, " ").alias("masked_text"),
@@ -300,9 +275,7 @@ def token_mask(
     )
 
 
-def negative_samples(
-    documents: DataFrame, k: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
+def negative_samples(documents: DataFrame, k: int = 4) -> DataFrame:
     """Deterministic contrastive negatives: candidate j for anchor d is
     det_hash(d * 31 + j) % (max_id + 1), kept only if that id exists
     and differs from the anchor — so pairs are reproducible under any
@@ -313,12 +286,12 @@ def negative_samples(
     per anchor (self-hits and id gaps drop out), which contrastive
     training tolerates by design.
     """
-    ids = documents.select(F.col(id_col).cast("long").alias("_nid"))
+    ids = documents.select(F.col("doc_id").cast("long").alias("_nid"))
     max_id = documents.select(
-        F.max(F.col(id_col)).cast("long").alias("_max_id")
+        F.max(F.col("doc_id")).cast("long").alias("_max_id")
     )
     cand = (
-        documents.select(F.col(id_col).cast("long").alias("anchor_id"))
+        documents.select(F.col("doc_id").cast("long").alias("anchor_id"))
         .crossJoin(F.broadcast(max_id))
         .select(
             "anchor_id",

@@ -300,6 +300,15 @@ def kmeans_centroids(
     return centroids
 
 
+def _mod_sampled_centroids(embeddings: DataFrame, centroid_mod: int) -> DataFrame:
+    """(centroid_id, c_emb): every ``centroid_mod``-th vector as a
+    centroid — the deterministic, training-free quantizer."""
+    return embeddings.filter(F.col("vec_id") % centroid_mod == 0).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("c_emb"),
+    )
+
+
 def ann_ivf_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -324,12 +333,7 @@ def ann_ivf_topk(
     construction → rows-only correctness check, like the LSH variant.
     """
     if centroids is None:
-        centroids = embeddings.filter(
-            F.col("vec_id") % centroid_mod == 0
-        ).select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("c_emb"),
-        )
+        centroids = _mod_sampled_centroids(embeddings, centroid_mod)
 
     corpus = _nearest_centroids(embeddings, centroids, 1, "cell")
     queries = _nearest_centroids(
@@ -397,7 +401,8 @@ def embedding_near_dup_pairs(
 # vectors — it reads the code table (32-64x smaller than the corpus) and
 # sums per-subspace distances out of a broadcast lookup table.
 
-PQ_M = 16       # subspaces (code bytes per vector); d_sub = dim/m = 4
+PQ_DIM = 64     # embedding width the PQ path is built for
+PQ_M = 16       # subspaces (code bytes per vector); d_sub = PQ_DIM/PQ_M = 4
 PQ_K = 32       # codewords per subspace
 PQ_ITERS = 3    # Lloyd iterations per subspace codebook
 PQ_RERANK = 4   # ADC shortlist = PQ_RERANK × k, then exact rerank
@@ -485,7 +490,7 @@ def _nearest_code(sub_rows: DataFrame, codebooks: DataFrame) -> DataFrame:
 
 def pq_codebooks(
     embeddings: DataFrame,
-    dim: int = 64,
+    dim: int = PQ_DIM,
     m: int = PQ_M,
     k: int = PQ_K,
     iters: int = PQ_ITERS,
@@ -550,7 +555,10 @@ def pq_codebooks(
 
 
 def pq_encode(
-    embeddings: DataFrame, codebooks: DataFrame, dim: int = 64, m: int = PQ_M
+    embeddings: DataFrame,
+    codebooks: DataFrame,
+    dim: int = PQ_DIM,
+    m: int = PQ_M,
 ) -> DataFrame:
     """(vec_id, codes array<int>): the PQ compressed corpus — m bytes of
     payload per vector. One broadcast assignment scan + one shuffle back
@@ -568,7 +576,6 @@ def ann_pq_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    dim: int = 64,
     m: int = PQ_M,
     kcode: int = PQ_K,
     iters: int = PQ_ITERS,
@@ -576,9 +583,10 @@ def ann_pq_topk(
     codebooks: DataFrame | None = None,
     codes: DataFrame | None = None,
 ) -> DataFrame:
-    """PQ ANN via asymmetric distance computation (ADC) + exact rerank:
-    per query, precompute an m×kcode lookup table of squared distances
-    from the query sub-vectors to every codeword, score the whole corpus
+    """PQ ANN via asymmetric distance computation (ADC) + exact rerank
+    over ``PQ_DIM``-wide embeddings: per query, precompute an m×kcode
+    lookup table of squared distances from the query sub-vectors to
+    every codeword, score the whole corpus
     by summing m table lookups per vector — the scan reads ONLY the code
     table (no raw vectors) and runs as pure higher-order expressions
     inside codegen against a broadcast of the per-query tables — then
@@ -605,12 +613,12 @@ def ann_pq_topk(
     cb = (
         codebooks
         if codebooks is not None
-        else pin(pq_codebooks(embeddings, dim, m, kcode, iters))
+        else pin(pq_codebooks(embeddings, PQ_DIM, m, kcode, iters))
     )
     if codes is None:
-        codes = pq_encode(embeddings, cb, dim, m)
+        codes = pq_encode(embeddings, cb, PQ_DIM, m)
     qsubs = _subspace_rows(
-        embeddings.filter(F.col("vec_id").isin(query_ids)), dim, m
+        embeddings.filter(F.col("vec_id").isin(query_ids)), PQ_DIM, m
     ).select(F.col("vec_id").alias("query_id"), "subspace", "sub")
     dtab = qsubs.join(F.broadcast(cb), "subspace").select(
         "query_id",
@@ -679,7 +687,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     tau: float = 0.45,
     centroid_mod: int = IVF_CENTROID_MOD,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): coarse-cluster the corpus, then inside each
@@ -688,25 +695,18 @@ def semantic_dedup(
     the paper's keep-one-per-group choice).
 
     Scale shape: the pair search is an equi-join on the cluster id —
-    never all-pairs over the corpus. At 100 TB pass
-    ``centroids=kmeans_centroids(sample, k)`` with BOUNDED k (≈√n):
-    assignment cost is |corpus|×k cosines, so k must not grow linearly
-    with the corpus the way the default mod-sampled quantizer does —
-    that default exists because it is deterministic and therefore
-    exactly oracle-checkable at test SFs, not because it scales. One
-    broadcast of the centroid table for the assignment scan, one
+    never all-pairs over the corpus. The centroids are every
+    ``centroid_mod``-th vector: deterministic and therefore exactly
+    oracle-checkable at test SFs, but k grows linearly with the corpus.
+    At 100 TB the quantizer would be ``kmeans_centroids(sample, k)``
+    with BOUNDED k (≈√n), because assignment costs |corpus|×k cosines.
+    One broadcast of the centroid table for the assignment scan, one
     cell-keyed shuffle for the pair join.
 
     Returns (vec_id, cell, keep): ``keep=false`` rows are the semantic
     duplicates a curation pipeline would drop before training.
     """
-    if centroids is None:
-        centroids = embeddings.filter(
-            F.col("vec_id") % centroid_mod == 0
-        ).select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("c_emb"),
-        )
+    centroids = _mod_sampled_centroids(embeddings, centroid_mod)
 
     # Persisted: `cells` feeds both sides of the pair join — without a
     # shared materialization each branch re-runs the assignment scan
@@ -739,22 +739,22 @@ def semantic_dedup(
 def build_pq_index(
     embeddings: DataFrame,
     path: str,
-    dim: int = 64,
     m: int = PQ_M,
     k: int = PQ_K,
     iters: int = PQ_ITERS,
 ) -> None:
-    """Persist the PQ model as parquet artifacts: the trained codebooks
-    and the encoded corpus (m small ints per vector — the 32-64× space
-    reduction that makes the ADC scan cheap). This is the once-amortized
+    """Persist the PQ model of ``PQ_DIM``-wide embeddings as parquet
+    artifacts: the trained codebooks and the encoded corpus (m small
+    ints per vector — the 32-64× space reduction that makes the ADC
+    scan cheap). This is the once-amortized
     train+encode job; serving (``ann_pq_topk(codebooks=..., codes=...)``)
     then never trains, never encodes, and never reads raw vectors except
     for the rerank shortlist."""
     import os
 
-    cb = pq_codebooks(embeddings, dim, m, k, iters).persist()
+    cb = pq_codebooks(embeddings, PQ_DIM, m, k, iters).persist()
     cb.write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
-    pq_encode(embeddings, cb, dim, m).write.mode("overwrite").parquet(
+    pq_encode(embeddings, cb, PQ_DIM, m).write.mode("overwrite").parquet(
         os.path.join(path, "codes")
     )
     cb.unpersist()
@@ -810,15 +810,14 @@ def ann_ivf_topk_indexed(
     path: str,
     queries: DataFrame,
     k: int = 10,
-    nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
     """Answer ANN queries from the persisted index: probe the broadcast
-    centroid table for each query's ``nprobe`` cells, equi-join the
+    centroid table for each query's ``IVF_NPROBE`` cells, equi-join the
     cell-partitioned corpus on cell, exact-rerank inside. No assignment
     pass, no full-corpus scan — the query-time path a serving job runs.
     ``queries``: (vec_id, embedding)."""
     cents, cells = load_ivf_index(spark, path)
-    probes = _nearest_centroids(queries, cents, nprobe, "cell").select(
+    probes = _nearest_centroids(queries, cents, IVF_NPROBE, "cell").select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         "cell",
@@ -828,14 +827,9 @@ def ann_ivf_topk_indexed(
 
 # --- Distributed PCA -----------------------------------------------------
 
-def pca_project(
-    embeddings: DataFrame,
-    k: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Principal-component projection of an embedding corpus to k
-    dimensions — the embedding-QA / visualization reduction.
+def pca_project(embeddings: DataFrame, k: int = 2) -> DataFrame:
+    """Principal-component projection of an ``(vec_id, embedding)``
+    corpus to k dimensions — the embedding-QA / visualization reduction.
 
     Distributed shape: the only data-sized work is accumulating the
     d-vector of sums and the d×d Gram matrix, done as NumPy partials
@@ -859,7 +853,7 @@ def pca_project(
 
     from pyspark.sql import types as T
 
-    d = len(embeddings.select(vec_col).first()[0])
+    d = len(embeddings.select("embedding").first()[0])
 
     part_schema = T.StructType(
         [
@@ -871,7 +865,7 @@ def pca_project(
 
     def moments(batches):
         for pdf in batches:
-            x = np.vstack(pdf[vec_col].to_numpy())
+            x = np.vstack(pdf["embedding"].to_numpy())
             gram = x.T @ x  # d×d partial
             sums = x.sum(axis=0)  # d partial
             ii, jj = np.meshgrid(range(d), range(d), indexing="ij")
@@ -886,7 +880,7 @@ def pca_project(
             )
 
     agg = (
-        embeddings.select(vec_col)
+        embeddings.select("embedding")
         .mapInPandas(moments, part_schema)
         .groupBy("i", "j")
         .agg(F.sum("v").alias("v"))
@@ -915,25 +909,21 @@ def pca_project(
         carr = F.array(*[F.lit(float(w)) for w in comp])
         dot = F.aggregate(
             F.zip_with(
-                F.col(vec_col), carr, lambda x, w: x.cast("double") * w
+                F.col("embedding"), carr, lambda x, w: x.cast("double") * w
             ),
             F.lit(0.0),
             lambda acc, t: acc + t,
         )
         mu_dot = float(np.dot(mu, comp))
         proj_cols.append((dot - F.lit(mu_dot)).alias(f"pc{ci + 1}"))
-    return embeddings.select(id_col, *proj_cols)
+    return embeddings.select("vec_id", *proj_cols)
 
 
-def frequent_directions(
-    embeddings: DataFrame,
-    ell: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Frequent Directions matrix sketch (Liberty 2013): an ℓ×d matrix
-    B with the deterministic guarantee ‖AᵀA − BᵀB‖₂ ≤ ‖A‖²_F / ℓ —
-    the streaming/mergeable low-rank summary of an embedding corpus.
+def frequent_directions(embeddings: DataFrame, ell: int = 8):
+    """Frequent Directions matrix sketch (Liberty 2013) of the
+    ``embedding`` column: an ℓ×d matrix B with the deterministic
+    guarantee ‖AᵀA − BᵀB‖₂ ≤ ‖A‖²_F / ℓ — the streaming/mergeable
+    low-rank summary of an embedding corpus.
 
     Where ``pca_project`` ships the exact d×d Gram (right answer while
     d² rows are small), FD is the scale path when d grows: every task
@@ -951,7 +941,7 @@ def frequent_directions(
 
     from pyspark.sql import types as T
 
-    d = len(embeddings.select(vec_col).first()[0])
+    d = len(embeddings.select("embedding").first()[0])
     buf_rows = 2 * ell
 
     part_schema = T.StructType(
@@ -977,7 +967,7 @@ def frequent_directions(
         B = np.zeros((0, d))
         frob = 0.0
         for pdf in batches:
-            X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
             frob += float((X**2).sum())
             B = np.vstack([B, X])
             while B.shape[0] > buf_rows:
@@ -998,7 +988,7 @@ def frequent_directions(
         )
 
     parts = (
-        embeddings.select(vec_col)
+        embeddings.select("embedding")
         .mapInPandas(fd_partial, part_schema)
         .collect()
     )

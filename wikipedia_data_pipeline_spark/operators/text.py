@@ -26,29 +26,31 @@ def normalize_word(col: Column) -> Column:
     return F.lower(F.regexp_replace(col, NORMALIZE_PATTERN, ""))
 
 
-def token_array(text_col: str = "text") -> Column:
-    """The document's tokens as an array column: split on
+def token_array() -> Column:
+    """The ``text`` column's tokens as an array column: split on
     TOKEN_DELIMITER, each normalized by ``normalize_word``, empties
     dropped."""
     return F.filter(
-        F.transform(F.split(F.col(text_col), TOKEN_DELIMITER), normalize_word),
+        F.transform(F.split(F.col("text"), TOKEN_DELIMITER), normalize_word),
         lambda w: F.length(w) > 0,
     )
 
 
-def with_raw_token_count(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add ``raw_token_count`` = whitespace-token count BEFORE normalization.
+def with_raw_token_count(documents: DataFrame) -> DataFrame:
+    """Add ``raw_token_count`` = whitespace-token count of ``text`` BEFORE
+    normalization.
 
     This is the reference's TF denominator (DocInfo.java:26,89): tokens
     that normalize to empty still inflate it.
     """
     return documents.withColumn(
-        "raw_token_count", F.size(F.split(F.col(text_col), TOKEN_DELIMITER)).cast("long")
+        "raw_token_count", F.size(F.split(F.col("text"), TOKEN_DELIMITER)).cast("long")
     )
 
 
-def tokenize(documents: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """corpus → one row per (doc_id, word), normalized, empties dropped.
+def tokenize(documents: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """corpus → one row per (doc_id, word) of ``text``, normalized,
+    empties dropped; ``id_col`` becomes ``doc_id``.
 
     Reference P2–P4. The explode itself is narrow; ``fan_out`` first
     spreads an under-split scan (small parquet = one row group = one
@@ -60,21 +62,17 @@ def tokenize(documents: DataFrame, id_col: str = "doc_id", text_col: str = "text
     return (
         fan_out(documents).select(
             F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.col(text_col), TOKEN_DELIMITER)).alias("raw_word"),
+            F.explode(F.split(F.col("text"), TOKEN_DELIMITER)).alias("raw_word"),
         )
         .select("doc_id", normalize_word(F.col("raw_word")).alias("word"))
         .filter(F.length("word") > 0)
     )
 
 
-def ngrams(
-    documents: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Word n-grams per document: (doc_id, ngram) with document order
-    preserved inside each gram.
+def ngrams(documents: DataFrame, n: int = 3, id_col: str = "doc_id") -> DataFrame:
+    """Word n-grams of ``text`` per document: (doc_id, ngram) with
+    document order preserved inside each gram; ``id_col`` becomes
+    ``doc_id``.
 
     Pure higher-order functions — build the normalized token array once,
     then ``transform(sequence(...))`` materializes each window as a
@@ -83,7 +81,7 @@ def ngrams(
     """
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
-    toks = token_array(text_col)
+    toks = token_array()
     grams = F.transform(
         F.sequence(F.lit(1), F.size(F.col("toks")) - (n - 1)),
         lambda i: F.concat_ws(
@@ -98,8 +96,9 @@ def ngrams(
     )
 
 
-def parse_wiki_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """Parse the reference's raw corpus format: one pseudo-XML doc per line.
+def parse_wiki_lines(lines: DataFrame) -> DataFrame:
+    """Parse the reference's raw corpus format: one pseudo-XML doc per
+    ``value`` line.
 
     ``<doc id="429180" url="..." title="...">body text</doc>`` →
     ``(doc_id STRING, text STRING)``. Mirrors DocInfo.java:23-26 semantics
@@ -107,7 +106,7 @@ def parse_wiki_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     so the closing ``</doc>`` never leaks into the last token (the
     reference's ``includedoc`` artifact, SURVEY.md §1.1).
     """
-    c = F.col(value_col)
+    c = F.col("value")
     return lines.select(
         F.regexp_extract(c, r'<doc id="([^"]*)"', 1).alias("doc_id"),
         F.trim(
@@ -120,8 +119,9 @@ def parse_wiki_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     ).filter(F.length("doc_id") > 0)
 
 
-def parse_wiki_lines_compat(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """Bit-compatible replay of the reference's parser (DocInfo.java:22-26).
+def parse_wiki_lines_compat(lines: DataFrame) -> DataFrame:
+    """Bit-compatible replay of the reference's parser (DocInfo.java:22-26)
+    over the ``value`` lines.
 
     ``line.split(">")[1]`` keeps everything between the first and second
     ``>`` — i.e. the body with a dangling ``</doc`` glued to the last
@@ -132,7 +132,7 @@ def parse_wiki_lines_compat(lines: DataFrame, value_col: str = "value") -> DataF
     TF-IDF-Docs/418298.csv:5). Use :func:`parse_wiki_lines` for clean
     ingestion; use this only to replay golden outputs bit-for-bit.
     """
-    c = F.col(value_col)
+    c = F.col("value")
     return lines.select(
         F.regexp_extract(c, r'<doc id="([^"]*)" url="', 1).alias("doc_id"),
         F.trim(
@@ -142,15 +142,11 @@ def parse_wiki_lines_compat(lines: DataFrame, value_col: str = "value") -> DataF
 
 
 def chunk_documents(
-    documents: DataFrame,
-    chunk_tokens: int = 64,
-    stride: int = 48,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    documents: DataFrame, chunk_tokens: int = 64, stride: int = 48
 ) -> DataFrame:
-    """Fixed-size token chunking with overlap (stride < chunk_tokens)
-    — the RAG-indexing / long-document-training split. One narrow
-    sequence+explode+slice projection, no UDF, no shuffle: chunk
+    """Fixed-size token chunking of ``text`` with overlap (stride <
+    chunk_tokens) — the RAG-indexing / long-document-training split. One
+    narrow sequence+explode+slice projection, no UDF, no shuffle: chunk
     starts are sequence(0, n-1, stride), each chunk is
     slice(tokens, start+1, chunk_tokens) rejoined with spaces.
 
@@ -158,11 +154,11 @@ def chunk_documents(
     Chunks preserve document order; the final chunk may be short.
     Empty documents produce no chunks.
     """
-    toks = token_array(text_col)
+    toks = token_array()
     from wikipedia_data_pipeline_spark.sources.tables import fan_out
 
     with_toks = fan_out(documents).select(
-        F.col(id_col).alias("doc_id"), toks.alias("_toks")
+        F.col("doc_id").alias("doc_id"), toks.alias("_toks")
     ).where(F.size("_toks") > 0)
     starts = F.sequence(
         F.lit(0), F.size("_toks") - 1, F.lit(stride)

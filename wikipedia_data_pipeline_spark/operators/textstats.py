@@ -554,12 +554,11 @@ def winnow_fingerprints(
     documents: DataFrame,
     k: int = 4,
     w: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """MOSS winnowing (Schleimer, Wilkerson & Aiken, SIGMOD 2003):
-    per document, hash every k-word gram with a two-level polynomial
+    per document (``doc_id``, ``text``, plus any ``keep_cols`` carried
+    through), hash every k-word gram with a two-level polynomial
     hash (chars -> word hash, word hashes -> gram hash, base 131 mod
     2^31-1 — portable: plain integer ops both engines evaluate
     identically, and each character is hashed once per document), then
@@ -582,7 +581,7 @@ def winnow_fingerprints(
 
     # the pipeline projects fixed intermediate names below; a caller
     # column with one of these names would be silently shadowed
-    clash = {"toks", "whs", "fingerprint"} & ({id_col} | set(keep_cols))
+    clash = {"toks", "whs", "fingerprint"} & set(keep_cols)
     if clash:
         raise ValueError(
             f"winnow_fingerprints: column(s) {sorted(clash)} collide with "
@@ -590,7 +589,7 @@ def winnow_fingerprints(
             "rename or drop them before calling"
         )
 
-    toks = token_array(text_col)
+    toks = token_array()
     # word char-hashes once -> gram hashes fold k WORD hashes (each
     # character is hashed exactly once per document, instead of ~k
     # times through concatenated gram strings) -> per-window minima,
@@ -631,7 +630,7 @@ def winnow_fingerprints(
     )
     return (
         fan_out(documents)
-        .select(id_col, *keep_cols, toks.alias("toks"))
-        .select(id_col, *keep_cols, word_hashes.alias("whs"))
-        .select(id_col, *keep_cols, F.explode(fps).alias("fingerprint"))
+        .select("doc_id", *keep_cols, toks.alias("toks"))
+        .select("doc_id", *keep_cols, word_hashes.alias("whs"))
+        .select("doc_id", *keep_cols, F.explode(fps).alias("fingerprint"))
     )

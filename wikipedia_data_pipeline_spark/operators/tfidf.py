@@ -58,12 +58,9 @@ def doc_term_counts(documents: DataFrame) -> DataFrame:
     )
 
 
-def doc_tf(
-    documents: DataFrame,
-    cap: int = PER_DOC_VOCAB_CAP,
-    counts: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, word, count, tf) with the per-doc top-K cap and TF>0 filter.
+def doc_tf(documents: DataFrame, counts: DataFrame | None = None) -> DataFrame:
+    """(doc_id, word, count, tf) with the per-doc top-``PER_DOC_VOCAB_CAP``
+    cap and TF>0 filter.
 
     The raw-token denominator joins back onto the counts by doc_id; Spark
     plans this doc_id-keyed join alongside the agg shuffle, and at scale
@@ -77,7 +74,7 @@ def doc_tf(
     w = Window.partitionBy("doc_id").orderBy(F.desc("count"), F.asc("word"))
     return (
         counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= cap)
+        .filter(F.col("rn") <= PER_DOC_VOCAB_CAP)
         .drop("rn")
         .join(denom, "doc_id")
         .withColumn("tf", round2(F.col("count") / F.col("raw_token_count")))
@@ -146,11 +143,13 @@ def tfidf(documents: DataFrame) -> DataFrame:
     )
 
 
-def task1_dictionary(documents: DataFrame, cap: int = DICTIONARY_CAP) -> DataFrame:
-    """(word UPPER, rank 0-based, count) — corpus top-K dictionary.
+def task1_dictionary(documents: DataFrame) -> DataFrame:
+    """(word UPPER, rank 0-based, count) — corpus top-``DICTIONARY_CAP``
+    dictionary.
 
     orderBy+limit lowers to TakeOrderedAndProject (partial top-K per
-    partition, no full sort); the rank window then runs over ≤ cap rows.
+    partition, no full sort); the rank window then runs over ≤
+    DICTIONARY_CAP rows.
     """
     counts = (
         tokenize(documents).groupBy("word").agg(F.count("*").alias("count"))
@@ -158,7 +157,7 @@ def task1_dictionary(documents: DataFrame, cap: int = DICTIONARY_CAP) -> DataFra
     w = Window.orderBy(F.desc("count"), F.asc("word"))
     return (
         counts.orderBy(F.desc("count"), F.asc("word"))
-        .limit(cap)
+        .limit(DICTIONARY_CAP)
         .withColumn("rank", (F.row_number().over(w) - 1).cast("long"))
         .select(F.upper(F.col("word")).alias("word"), "rank", "count")
     )

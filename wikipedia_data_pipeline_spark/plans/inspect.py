@@ -68,10 +68,10 @@ def _walk_plan(node):
         yield from _walk_plan(k)
 
 
-def global_windows(df: DataFrame, run: bool = True) -> list[dict]:
-    """Every WindowExec in the executed plan with an EMPTY partition
-    spec (the SinglePartition-serializing kind), as
-    ``{"node": str, "guarded": bool}``.
+def global_windows(df: DataFrame) -> list[dict]:
+    """Every WindowExec in the executed plan (after running ``df``, so
+    AQE has settled it) with an EMPTY partition spec (the
+    SinglePartition-serializing kind), as ``{"node": str, "guarded": bool}``.
 
     ``guarded`` is True iff the window's input subtree contains an
     aggregate keyed on ``operators.ranks``' block id (``_os_pid``) —
@@ -79,8 +79,7 @@ def global_windows(df: DataFrame, run: bool = True) -> list[dict]:
     (≤ num_partitions rows, driver-sized by construction), which is the
     one place a global window is legal at any scale. Tests for queries
     migrated to the hierarchical scan assert all(guarded)."""
-    if run:
-        df.collect()
+    df.collect()
     root = df._jdf.queryExecution().executedPlan()
     out = []
     for node in _walk_plan(root):
@@ -99,10 +98,10 @@ def global_windows(df: DataFrame, run: bool = True) -> list[dict]:
     return out
 
 
-def plan_summary(df: DataFrame, run: bool = True) -> PlanSummary:
-    """Parse the final plan (AQE Final section only, so nodes are not
-    double-counted against the Initial Plan echo)."""
-    plan = executed_plan(df, run=run).split("== Initial Plan ==")[0]
+def plan_summary(df: DataFrame) -> PlanSummary:
+    """Run ``df`` and parse its final plan (AQE Final section only, so
+    nodes are not double-counted against the Initial Plan echo)."""
+    plan = executed_plan(df).split("== Initial Plan ==")[0]
     out = PlanSummary(
         n_shuffles=plan.count("Exchange hashpartitioning"),
         n_broadcast_joins=plan.count("BroadcastHashJoin"),

@@ -15,13 +15,17 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.functions import (
+    EVENT_WINDOW,
     cents_sum,
     dec_sum,
     sql_cents_sum,
     sql_dec_sum,
     ts_us,
 )
-from wikipedia_data_pipeline_spark.queries.relational_queries import SESSION_GAP_US
+from wikipedia_data_pipeline_spark.queries.streaming_queries import (
+    SESSION_WINDOW_ORACLE,
+    SLIDING_WINDOW_ROWS_SQL,
+)
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
@@ -483,13 +487,7 @@ def merge_upsert_orders(spark, sf_dir):
     oracle=f"""
 SELECT ws, event_type, count(*) AS n_events,
        {sql_cents_sum('value', 'total_value')}
-FROM (
-  SELECT (epoch_us(ts) // 1800000000) * 1800 AS ws, event_type, value
-  FROM events
-  UNION ALL
-  SELECT ((epoch_us(ts) // 1800000000) - 1) * 1800 AS ws, event_type, value
-  FROM events
-) GROUP BY ws, event_type
+FROM ({SLIDING_WINDOW_ROWS_SQL}) GROUP BY ws, event_type
 """,
 )
 def events_sliding_window(spark, sf_dir):
@@ -500,7 +498,7 @@ def events_sliding_window(spark, sf_dir):
     return (
         ev.withColumn("event_time", F.timestamp_micros(ts_us()))
         .groupBy(
-            F.window("event_time", "1 hour", "30 minutes").alias("win"),
+            F.window("event_time", "1 hour", EVENT_WINDOW).alias("win"),
             "event_type",
         )
         .agg(
@@ -516,34 +514,7 @@ def events_sliding_window(spark, sf_dir):
     )
 
 
-@register(
-    "events_session_window",
-    oracle=f"""
-WITH ordered AS (
-  SELECT user_id, epoch_us(ts) AS t,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                 ORDER BY epoch_us(ts)) AS prev_t
-  FROM events
-),
-flagged AS (
-  SELECT user_id, t,
-         CASE WHEN prev_t IS NULL OR t - prev_t >= {SESSION_GAP_US}
-              THEN 1 ELSE 0 END AS new_session
-  FROM ordered
-),
-sessions AS (
-  SELECT user_id, t,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY t
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM flagged
-)
-SELECT user_id, min(t) AS session_start_us,
-       max(t) + {SESSION_GAP_US} AS session_end_us,
-       count(*) AS n_events
-FROM sessions GROUP BY user_id, session_id
-""",
-)
+@register("events_session_window", oracle=SESSION_WINDOW_ORACLE)
 def events_session_window(spark, sf_dir):
     """Native session_window (gap-merged event-time sessions) in batch
     mode. Spark starts a NEW session when the inter-event gap is >= the
@@ -555,7 +526,7 @@ def events_session_window(spark, sf_dir):
         ev.withColumn("event_time", F.timestamp_micros(ts_us()))
         .groupBy(
             "user_id",
-            F.session_window("event_time", "30 minutes").alias("sw"),
+            F.session_window("event_time", EVENT_WINDOW).alias("sw"),
         )
         .agg(F.count("*").alias("n_events"))
         .select(

@@ -64,6 +64,10 @@ def market_basket_pairs(spark, sf_dir):
 
 # --- Graph family (round 5): fixed-point PageRank + degree profile ------
 
+# Rounds of both PageRank queries, shared by the Spark loop and the
+# unrolled oracle so the two cannot drift.
+_PR_ITERATIONS = 3
+
 _PR_EDGES_SQL = """
   SELECT DISTINCT 'p:' || CAST(l_partkey AS VARCHAR) AS src,
                   's:' || CAST(l_suppkey AS VARCHAR) AS dst
@@ -71,21 +75,18 @@ _PR_EDGES_SQL = """
 """
 
 
-def _pagerank_oracle(
-    edges_sql: str, outdeg_sql: str, share_sql: str, iterations: int = 3
-) -> str:
+def _pagerank_oracle(edges_sql: str, outdeg_sql: str, share_sql: str) -> str:
     """Unrolled-CTE DuckDB twin of the fixed-point PageRank loops
-    (scale 1e6, damping 85%) over the edge relation ``edges_sql``:
-    ``outdeg_sql`` aggregates a source's out-weight, ``share_sql`` is
-    the mass one edge passes on. Kept programmatic so the Spark loop
-    and the SQL unrolling can't drift on iteration count."""
+    (``_PR_ITERATIONS`` rounds, scale 1e6, damping 85%) over the edge
+    relation ``edges_sql``: ``outdeg_sql`` aggregates a source's
+    out-weight, ``share_sql`` is the mass one edge passes on."""
     ctes = [
         f"edges AS ({edges_sql})",
         "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
         f"outdeg AS (SELECT src, {outdeg_sql} AS outdeg FROM edges GROUP BY src)",
         "r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS pr FROM nodes)",
     ]
-    for i in range(1, iterations + 1):
+    for i in range(1, _PR_ITERATIONS + 1):
         ctes.append(
             f"""r{i} AS (
   SELECT n.node,
@@ -102,7 +103,7 @@ def _pagerank_oracle(
     return (
         "WITH "
         + ",\n".join(ctes)
-        + f"\nSELECT node, pr AS pr_rank FROM r{iterations}"
+        + f"\nSELECT node, pr AS pr_rank FROM r{_PR_ITERATIONS}"
         "\nORDER BY pr_rank DESC, node ASC"
     )
 
@@ -126,7 +127,7 @@ def graph_pagerank_partsupp(spark, sf_dir):
         F.concat(F.lit("p:"), F.col("l_partkey").cast("string")).alias("src"),
         F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("dst"),
     ).distinct()
-    ranks = G.pagerank_fixed_point(edges, iterations=3)
+    ranks = G.pagerank_fixed_point(edges, iterations=_PR_ITERATIONS)
     return ranks.select("node", F.col("rank").alias("pr_rank")).orderBy(
         F.desc("pr_rank"), F.asc("node")
     )
@@ -287,7 +288,7 @@ def graph_pagerank_weighted(spark, sf_dir):
         F.concat(F.lit("p:"), F.col("l_partkey").cast("string")).alias("src"),
         F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("dst"),
     ).agg(F.count(F.lit(1)).alias("w"))
-    ranks = G.pagerank_fixed_point(edges, iterations=3, weight="w")
+    ranks = G.pagerank_fixed_point(edges, iterations=_PR_ITERATIONS, weight="w")
     return ranks.select("node", F.col("rank").alias("pr_rank")).orderBy(
         F.desc("pr_rank"), F.asc("node")
     )

@@ -18,6 +18,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from wikipedia_data_pipeline_spark.functions import (
+    EVENT_WINDOW_US,
     cents_sum,
     dec_avg,
     dec_sum,
@@ -29,8 +30,6 @@ from wikipedia_data_pipeline_spark.functions import (
 from wikipedia_data_pipeline_spark.operators.sampling import SQL_DET_HASH
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
 
 
 # ---------------------------------------------------------------------------
@@ -946,7 +945,7 @@ WITH ordered AS (
 ),
 flagged AS (
   SELECT user_id, event_id, t,
-         CASE WHEN prev_t IS NULL OR t - prev_t > {SESSION_GAP_US}
+         CASE WHEN prev_t IS NULL OR t - prev_t > {EVENT_WINDOW_US}
               THEN 1 ELSE 0 END AS new_session
   FROM ordered
 ),
@@ -970,7 +969,7 @@ def _sessionize(ev):
         "new_session",
         F.when(
             F.lag("t").over(w).isNull()
-            | (F.col("t") - F.lag("t").over(w) > SESSION_GAP_US),
+            | (F.col("t") - F.lag("t").over(w) > EVENT_WINDOW_US),
             1,
         ).otherwise(0),
     )

@@ -15,12 +15,12 @@ from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.sources.tables import load_table
 
 
-def _zvalue_sql(xe: str, ye: str, bits: int = 16) -> str:
-    """Unrolled Morton interleave in ANSI/DuckDB bit arithmetic — the
-    oracle twin of operators.profiling.zorder_key (bit i of column j at
-    position i * n_cols + j, x first)."""
+def _zvalue_sql(xe: str, ye: str) -> str:
+    """Unrolled 16-bit Morton interleave in ANSI/DuckDB bit arithmetic —
+    the oracle twin of operators.profiling.zorder_key (bit i of column j
+    at position i * n_cols + j, x first)."""
     terms = []
-    for i in range(bits):
+    for i in range(16):
         terms.append(f"((({xe}) >> {i}) & 1) << {2 * i}")
         terms.append(f"((({ye}) >> {i}) & 1) << {2 * i + 1}")
     return " | ".join(f"({t})" for t in terms)

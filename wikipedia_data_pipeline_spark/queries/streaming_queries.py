@@ -1,6 +1,8 @@
 """Streaming query registrations (streaming.pipeline).
 
-Session-gap constant mirrors queries.relational_queries.SESSION_GAP_US.
+The session gap and the sliding slide are ``functions.EVENT_WINDOW_US``;
+the batch twins in queries.advanced_queries share this module's
+``SESSION_WINDOW_ORACLE`` and ``SLIDING_WINDOW_ROWS_SQL``.
 
 Each callable runs a real Structured Streaming job (availableNow
 trigger → memory sink) to completion and returns the result table, so
@@ -13,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from wikipedia_data_pipeline_spark.functions import sql_dec_sum
+from wikipedia_data_pipeline_spark.functions import EVENT_WINDOW_US, sql_dec_sum
 from wikipedia_data_pipeline_spark.registry import register
 from wikipedia_data_pipeline_spark.streaming import pipeline as P
 
@@ -34,18 +36,25 @@ def streaming_hourly_rollup(spark, sf_dir):
     )
 
 
+_SLIDE_S = EVENT_WINDOW_US // 1_000_000
+
+# Each event at both starts (epoch seconds) of the two 1-hour windows
+# sliding by EVENT_WINDOW_US that hold it.
+SLIDING_WINDOW_ROWS_SQL = f"""
+  SELECT (epoch_us(ts) // {EVENT_WINDOW_US}) * {_SLIDE_S} AS ws, event_type, value
+  FROM events
+  UNION ALL
+  SELECT ((epoch_us(ts) // {EVENT_WINDOW_US}) - 1) * {_SLIDE_S} AS ws, event_type, value
+  FROM events
+"""
+
+
 @register(
     "streaming_sliding_rollup",
     oracle=f"""
 SELECT ws, event_type, count(*) AS n_events,
        {sql_dec_sum('value', 'total_value')}
-FROM (
-  SELECT (epoch_us(ts) // 1800000000) * 1800 AS ws, event_type, value
-  FROM events
-  UNION ALL
-  SELECT ((epoch_us(ts) // 1800000000) - 1) * 1800 AS ws, event_type, value
-  FROM events
-) GROUP BY ws, event_type
+FROM ({SLIDING_WINDOW_ROWS_SQL}) GROUP BY ws, event_type
 """,
 )
 def streaming_sliding_rollup(spark, sf_dir):
@@ -53,9 +62,9 @@ def streaming_sliding_rollup(spark, sf_dir):
     return P.run_sliding_rollup(spark, sf_dir)
 
 
-@register(
-    "streaming_session_window",
-    oracle="""
+# Gaps-and-islands sessions as Spark's session_window forms them: a new
+# session when the gap is >= EVENT_WINDOW_US, ending last event + gap.
+SESSION_WINDOW_ORACLE = f"""
 WITH ordered AS (
   SELECT user_id, epoch_us(ts) AS t,
          lag(epoch_us(ts)) OVER (PARTITION BY user_id
@@ -64,7 +73,7 @@ WITH ordered AS (
 ),
 flagged AS (
   SELECT user_id, t,
-         CASE WHEN prev_t IS NULL OR t - prev_t >= 1800000000
+         CASE WHEN prev_t IS NULL OR t - prev_t >= {EVENT_WINDOW_US}
               THEN 1 ELSE 0 END AS new_session
   FROM ordered
 ),
@@ -76,11 +85,13 @@ sessions AS (
   FROM flagged
 )
 SELECT user_id, min(t) AS session_start_us,
-       max(t) + 1800000000 AS session_end_us,
+       max(t) + {EVENT_WINDOW_US} AS session_end_us,
        count(*) AS n_events
 FROM sessions GROUP BY user_id, session_id
-""",
-)
+"""
+
+
+@register("streaming_session_window", oracle=SESSION_WINDOW_ORACLE)
 def streaming_session_window(spark, sf_dir):
     """Streaming session_window (complete mode); equals the batch
     gaps-and-islands sessionization exactly."""

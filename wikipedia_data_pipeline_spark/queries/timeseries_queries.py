@@ -1441,9 +1441,6 @@ def events_hurst_rs(spark, sf_dir):
 # over those four identical-in-both-engines doubles, unrolled
 # identically in Spark and SQL — no iteration, no quantization.
 
-_PACF_ORACLE = None  # assembled below (needs statsnonparam's CTE)
-
-
 def _pacf_oracle() -> str:
     from wikipedia_data_pipeline_spark.queries.statsseries_queries import (
         _HOURLY_CNT,

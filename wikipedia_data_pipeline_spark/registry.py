@@ -202,57 +202,26 @@ def _load_all() -> None:
         tpch_queries,
         analytics_queries,
         profiling_queries,
-        # round-12 split of profiling_queries: operational event
-        # analytics / incremental maintenance moved out before the
-        # 2,000-line threshold (keys and oracles unchanged)
         opsevents_queries,
         timeseries_queries,
         sequence_queries,
-        # round-7 split of the former 8.4k-line profiling grab-bag
-        # along SURVEY family lines (registration order after the
-        # driver prefix is cosmetic — the ~50-slot window is addressed
-        # by NAME via _PINNED/_ROTATION):
         textcorpus_queries,
-        # round-12 split of textcorpus_queries: retrieval/search +
-        # curation-mixing moved out before the 2,000-line threshold
         textsearch_queries,
-        # round-12 session-6 ADDITIONS (not a split — textcorpus was
-        # near the 2,000-line threshold, so the new lexical-diversity /
-        # source-profile queries landed in their own module)
         textprofile_queries,
         sketch_queries,
         stats_queries,
-        # round-9 split of stats_queries along screens-vs-tests lines;
-        # round-11 split again along fixed-horizon-vs-drift/sequential
         statstests_queries,
-        # round-13 split of statstests_queries at the 2,000-line
-        # threshold: survival / stratified-contingency contrasts and
-        # effect sizes moved out (keys and oracles unchanged)
         statscontrast_queries,
         statsdrift_queries,
-        # round-12: rank-based / ordered-category tests (new module —
-        # statstests sits against the 2,000-line split threshold)
         statsrank_queries,
-        # round-12 session 4: nonparametric location/dispersion tests
-        # and regression-residual diagnostics
         statsnonparam_queries,
-        # round-12 session-6 split of statsnonparam_queries: hourly-
-        # series diagnostics (runs/Ljung-Box/Durbin-Watson) moved out
-        # past the 2,000-line threshold (keys and oracles unchanged)
         statsseries_queries,
-        # round-12 session 6: parametric moment-based tests (Grubbs,
-        # Jarque-Bera, Poisson rate ratio) — statstests/statsnonparam
-        # both sit against the 2,000-line split threshold
         statsparam_queries,
         mleval_queries,
-        # round-10 split of mleval_queries along family lines
         features_queries,
         embedding_queries,
         mleval_paired_queries,
-        # round-12 session 6: calibration tests + rater reliability
-        # (mleval_queries / mleval_paired_queries both near threshold)
         mleval_reliability_queries,
-        # round-11 session-2 split: generation metrics (BLEU/ROUGE)
         generation_queries,
         finance_queries,
         graph_queries,

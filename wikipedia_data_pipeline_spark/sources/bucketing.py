@@ -24,14 +24,14 @@ def write_bucketed(
     bucket_cols: list[str],
     num_buckets: int,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
     path: str | None = None,
 ) -> None:
     """Persist ``df`` as a bucketed (optionally bucket-sorted) parquet
-    table — managed by default, external at ``path`` when given.
+    table, overwriting any earlier one — managed by default, external at
+    ``path`` when given.
     Joins/aggregations keyed on ``bucket_cols`` between tables sharing
     a bucket count then plan with zero exchanges."""
-    w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, *bucket_cols)
+    w = df.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     if path is not None:

@@ -78,7 +78,7 @@ BUCKET_SPECS: dict[str, list[str]] = {
 SORT_SPECS: dict[str, list[str]] = {
     "events": ["user_id", "ts", "event_id"],
 }
-DEFAULT_BUCKETS = 32
+TWIN_BUCKETS = 32
 
 
 def bucketed_table_name(sf_dir: str, table: str, num_buckets: int) -> str:
@@ -95,16 +95,15 @@ def ensure_bucketed_twins(
     spark: SparkSession,
     sf_dir: str,
     tables: tuple[str, ...] = ("lineitem", "orders"),
-    num_buckets: int = DEFAULT_BUCKETS,
 ) -> dict[str, str]:
     """Maintenance path for the measured 3x bucketed-join win
     (SCALE_PROBE_r10.bucketed_join_ab: 9.97 s -> 3.06 s, exchanges
     3 -> 1 on the 60M-row lineitem x orders SMJ): write each fact
-    table ONCE as a full-schema parquet table bucketed+sorted by its
-    join key, then every orderkey-keyed join/aggregation over the
-    twins plans with zero shuffle exchanges (the scan reports the
-    bucket hash-partitioning; parquet column pruning still applies,
-    so one bucketed copy serves every consumer).
+    table ONCE as a full-schema parquet table bucketed (``TWIN_BUCKETS``
+    buckets) and sorted by its join key, then every orderkey-keyed
+    join/aggregation over the twins plans with zero shuffle exchanges
+    (the scan reports the bucket hash-partitioning; parquet column
+    pruning still applies, so one bucketed copy serves every consumer).
 
     This is the pay-the-shuffle-once-at-write-time trade: at 100 TB
     the write is a scheduled maintenance job, here it runs lazily the
@@ -124,7 +123,7 @@ def ensure_bucketed_twins(
     out: dict[str, str] = {}
     for t in tables:
         keys = BUCKET_SPECS[t]
-        name = bucketed_table_name(sf_dir, t, num_buckets)
+        name = bucketed_table_name(sf_dir, t, TWIN_BUCKETS)
         if not spark.catalog.tableExists(name):
             from wikipedia_data_pipeline_spark.sources.bucketing import (
                 write_bucketed,
@@ -142,7 +141,7 @@ def ensure_bucketed_twins(
                 df,
                 name,
                 keys,
-                num_buckets,
+                TWIN_BUCKETS,
                 sort_cols=SORT_SPECS.get(t, keys),
                 path=os.path.join(root, name),
             )

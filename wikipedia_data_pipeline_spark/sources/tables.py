@@ -56,26 +56,26 @@ def duckdb_catalog(sf_dir: str):
 _EPOCH_NTZ = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 
 
-def event_time_us(df: DataFrame, col: str = "ts") -> F.Column:
-    """Column expression converting ``col`` to BIGINT epoch-µs, keyed on
+def event_time_us(df: DataFrame) -> F.Column:
+    """Column expression converting ``ts`` to BIGINT epoch-µs, keyed on
     the column's loaded dtype. timestampdiff on NTZ operands is
     timezone-independent (verified vs DuckDB epoch_us under a non-UTC
     session timezone)."""
-    dtype = df.schema[col].dataType
+    dtype = df.schema["ts"].dataType
     if isinstance(dtype, T.LongType):
         # parquet TIMESTAMP(NANOS) read as BIGINT ns (nanosAsLong).
         # Must be int64 div — epoch-ns exceeds double's 2^53.
-        return F.expr(f"{col} div 1000")
+        return F.expr("ts div 1000")
     if isinstance(dtype, T.TimestampNTZType):
-        return F.expr(f"timestampdiff(MICROSECOND, {_EPOCH_NTZ}, {col})")
+        return F.expr(f"timestampdiff(MICROSECOND, {_EPOCH_NTZ}, ts)")
     if isinstance(dtype, T.TimestampType):
-        return F.unix_micros(F.col(col))
-    raise TypeError(f"cannot normalize event time column {col!r} of type {dtype}")
+        return F.unix_micros(F.col("ts"))
+    raise TypeError(f"cannot normalize event time column 'ts' of type {dtype}")
 
 
-def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Replace ``col`` with its BIGINT epoch-µs form (position kept)."""
-    return df.withColumn(col, event_time_us(df, col).cast("long"))
+def normalize_event_time(df: DataFrame) -> DataFrame:
+    """Replace ``ts`` with its BIGINT epoch-µs form (position kept)."""
+    return df.withColumn("ts", event_time_us(df).cast("long"))
 
 
 def _ensure_nanos_as_long(spark: SparkSession) -> None:
@@ -146,8 +146,9 @@ def _est_scan_splits(df: DataFrame) -> int:
         return n
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition a narrow input up to cluster parallelism before
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition a narrow input up to cluster parallelism (the
+    context's ``defaultParallelism``) before
     CPU-heavy per-row work (shingling, minhashing, tokenization).
 
     A small parquet file arrives as ONE input split (a row group cannot
@@ -161,7 +162,7 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     100 TB inputs arrive thousands of splits wide and this is a
     guaranteed no-op.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if _est_scan_splits(df) >= max(1, target // 4):
         return df
     return df.repartition(target)

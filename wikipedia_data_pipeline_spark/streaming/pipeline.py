@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from wikipedia_data_pipeline_spark.functions import EVENT_WINDOW
 from wikipedia_data_pipeline_spark.operators.ranks import pin
 
 
@@ -189,7 +190,7 @@ def run_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_time", F.timestamp_micros(F.col("ts"))
         )
         .groupBy(
-            F.window("event_time", "1 hour", "30 minutes").alias("win"),
+            F.window("event_time", "1 hour", EVENT_WINDOW).alias("win"),
             "event_type",
         )
         .agg(
@@ -226,7 +227,7 @@ def run_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(
             "user_id",
-            F.session_window("event_time", "30 minutes").alias("sw"),
+            F.session_window("event_time", EVENT_WINDOW).alias("sw"),
         )
         .agg(F.count("*").alias("n_events"))
         .select(
