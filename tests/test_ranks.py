@@ -479,7 +479,6 @@ ALLOWED = {
     # edge relation materialized once, released after connected_components
     ("wikipedia_data_pipeline_spark/queries/dedup_queries.py",
      "dedup_connected_components"),
-    ("tools/ab_cc_star.py", "cc_star_variant"),
     # dimension side persisted per arm, released after each timing
     ("tools/scale_probe.py", "skew_join_ab"),
 }

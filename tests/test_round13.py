@@ -1,13 +1,12 @@
 """Round-13 coverage: the chrF numpy-partials kernel's two hashing
-modes (injective shift vs multiplier fallback), the Hodges-Lehmann
-declared-domain guard, and the Moran's I tracked-persist contract."""
+modes (injective shift vs multiplier fallback) and the Moran's I
+tracked-persist contract."""
 
 from __future__ import annotations
 
 from collections import Counter
 
 import pandas as pd
-import pytest
 
 from wikipedia_data_pipeline_spark.queries.generation_queries import (
     _chrf_partials_kernel,
@@ -87,14 +86,6 @@ def test_chrf_kernel_mixed_batch_modes():
             ("重複重複", "重複"),
         ]
     )
-
-
-def test_hodges_lehmann_domain_guard(spark, sf_dir, monkeypatch):
-    from wikipedia_data_pipeline_spark.queries import statsnonparam_queries
-
-    monkeypatch.setattr(statsnonparam_queries, "_HL_GRID_MAX", 10)
-    with pytest.raises(ValueError, match="declared"):
-        statsnonparam_queries.stats_hodges_lehmann(spark, sf_dir)
 
 
 def test_moran_cells_persist_is_tracked(spark, sf_dir, queries):

@@ -1,6 +1,7 @@
-"""Round-14 tests: the measured Hodges-Lehmann job count (r13 verdict
-#6) and the operator-internal equivalences the r14 rewrites rely on.
-The persist guard lives with the cache owner, in tests/test_ranks.py.
+"""Round-14 tests: the operator-internal equivalences the r14 rewrites
+rely on. The persist guard lives with the cache owner, in
+tests/test_ranks.py; the Hodges-Lehmann job count with its other
+tests, in tests/test_statsnonparam.py.
 """
 
 from __future__ import annotations
@@ -8,22 +9,6 @@ from __future__ import annotations
 import pytest
 
 from wikipedia_data_pipeline_spark.operators.ranks import pin
-
-
-def test_hl_job_count_is_measured(spark, sf_dir):
-    """r13 verdict #6: the HL job count must be a statusTracker
-    measurement, not a constant. One hash-agg collect runs as a small
-    constant number of scheduler jobs (>= 1; AQE materializes the
-    shuffle stage as its own job) — the structural claim is ONE scan
-    of the fact, pinned here as a tight bound on the job count."""
-    from wikipedia_data_pipeline_spark.queries import statsnonparam_queries as S
-
-    S.stats_hodges_lehmann(spark, sf_dir)
-    first = S._HL_LAST_COUNT_JOBS
-    assert 1 <= first <= 3, first
-    # measured, not hardcoded: a second run re-measures (same bound)
-    S.stats_hodges_lehmann(spark, sf_dir)
-    assert 1 <= S._HL_LAST_COUNT_JOBS <= 3
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,10 @@
 """Guards for the one-session, one-timing-loop design of bench.py and
 tools/: every script gets its SparkSession from ``session.get_spark``,
-imports the engine of its own checkout, and every A/B experiment
-declares pairs that tools/ab.py can check. Guards on the package's own
-shape: no block is written twice, and no parameter goes unset.
-Needs no 100x replica."""
+imports the engine of its own checkout, every A/B experiment declares
+pairs that tools/ab.py can check, and every A/B decision the code cites
+is a row of artifacts/ab/DECISIONS.md. Guards on the shape of the
+package and tools/: no block is written twice, and no parameter goes
+unset. Needs no 100x replica."""
 
 from __future__ import annotations
 
@@ -12,6 +13,8 @@ import glob
 import importlib
 import os
 import re
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,7 +23,9 @@ from wikipedia_data_pipeline_spark import registry
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "wikipedia_data_pipeline_spark")
+TOOLS = os.path.join(ROOT, "tools")
 SESSION_PY = os.path.join(PACKAGE, "session.py")
+DECISIONS_MD = os.path.join(ROOT, "artifacts", "ab", "DECISIONS.md")
 BUILDER = "SparkSession" + ".builder"  # split so this file does not match
 
 
@@ -84,12 +89,14 @@ def _repeated_regions(paths, n: int) -> list[str]:
 def test_no_block_of_package_code_is_written_twice():
     """Each shared relation, SQL fragment or helper has one definition:
     no run of CLONE_MIN_LINES normalized lines appears twice in the
-    package. tools/ is not scanned: its A/B baselines copy registered
-    code on purpose."""
-    package_files = sorted(
-        p for p in _python_files() if p.startswith(PACKAGE + os.sep)
+    package and tools/. A decided A/B variant is a row of
+    artifacts/ab/DECISIONS.md, not a copy of a registered query kept in
+    tools/."""
+    scanned = sorted(
+        p for p in _python_files()
+        if p.startswith((PACKAGE + os.sep, TOOLS + os.sep))
     )
-    regions = _repeated_regions(package_files, CLONE_MIN_LINES)
+    regions = _repeated_regions(scanned, CLONE_MIN_LINES)
     assert not regions, f"{len(regions)} repeated regions: {regions}"
 
 
@@ -172,6 +179,21 @@ def test_no_file_names_a_fixed_checkout():
     assert not offenders, offenders
 
 
+def test_python_workers_import_the_engine_from_any_directory(sf_dir, tmp_path):
+    """Python workers import the engine too (here: the Python data
+    source behind source_wikidoc_roundtrip), so session.get_spark puts
+    the checkout on their path: the gate passes when started from a
+    directory outside the checkout with no PYTHONPATH."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["WDP_DRIVER_MEMORY"] = "2g"  # one sf0.001 key beside this session
+    run = subprocess.run(
+        [sys.executable, os.path.join(TOOLS, "check_oracle.py"),
+         sf_dir, "source_wikidoc_roundtrip"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stdout[-2000:] + run.stderr[-2000:]
+
+
 def test_ab_experiments_are_found():
     assert _experiments()
 
@@ -181,10 +203,43 @@ def test_ab_experiment_pairs_name_registered_queries(name):
     exp = importlib.import_module(f"tools.ab_{name}")
     queries = registry.spark_queries()
     assert exp.ARTIFACT.startswith("AB_") and exp.ARTIFACT.endswith(".json")
+    assert exp.ARTIFACT[: -len(".json")] in _decision_ids()
     assert exp.PAIRS
     for registered, variant in exp.PAIRS:
         assert registered in queries, registered
         assert callable(variant)
+
+
+# An A/B citation: the artifact stem of a decision, e.g. AB_KMV_r11 in
+# "AB_KMV_r11.json"; \b keeps names like _AB_VALUE_SCAN_CTES out.
+_AB_CITATION = re.compile(r"\bAB_\w+")
+
+
+def _decision_ids() -> set[str]:
+    """First cell of each row of the decision table: the row id."""
+    with open(DECISIONS_MD, encoding="utf-8") as f:
+        return {
+            line.split("|")[1].strip().strip("`")
+            for line in f
+            if line.startswith("| `")
+        }
+
+
+def test_every_cited_ab_decision_is_a_row_of_the_decision_table():
+    """The package and tools/ cite A/B decisions by artifact stem; each
+    one must name a row of artifacts/ab/DECISIONS.md, so a decision
+    stays citable after its experiment is deleted."""
+    ids = _decision_ids()
+    cited = {}
+    for path in _python_files():
+        if not path.startswith((PACKAGE + os.sep, TOOLS + os.sep)):
+            continue
+        with open(path, encoding="utf-8") as f:
+            for token in _AB_CITATION.findall(f.read()):
+                cited.setdefault(token, os.path.relpath(path, ROOT))
+    assert cited
+    missing = {t: where for t, where in cited.items() if t not in ids}
+    assert not missing, missing
 
 
 def test_ab_equivalence_accepts_a_real_pair_and_rejects_a_wrong_variant(

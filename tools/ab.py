@@ -3,10 +3,22 @@
 
 Usage: python tools/ab.py NAME [rounds]   (default 3 rounds)
 
-Each experiment module holds its rationale (docstring), its variant
-query function(s), ``ARTIFACT`` (the JSON file written at the repo
-root) and ``PAIRS``, its ``(registered query, variant)`` tuples. This
-runner owns everything else:
+An experiment is a module ``tools/ab_<name>.py`` that holds:
+
+- its rationale and decision rule, as the module docstring;
+- the variant query function(s), each ``fn(spark, sf_dir) -> DataFrame``
+  returning exactly the registered query's rows;
+- ``ARTIFACT``, the JSON file it writes under artifacts/ab/;
+- ``PAIRS``, its ``(registered query, variant)`` tuples.
+
+``tools/ab_hourly_twostep.py`` is the worked example: one variant of
+``events_hourly_rollup`` in ~30 lines. Once a question is decided,
+record it as one row of ``artifacts/ab/DECISIONS.md`` (forms, best,
+median and spread, session config, decision, commit) and delete the
+module: the table keeps the decision citable, the module would only
+copy a registered query's code.
+
+This runner owns everything else:
 
 1. equivalence — every pair's sorted rows are compared exactly (float
    bits, Decimal scale and column names included) at sf0.01 before any
@@ -36,6 +48,7 @@ import bench  # noqa: E402
 from tools.scale_probe import SRC_SF  # noqa: E402
 
 CHECK_SF = os.path.join(os.path.dirname(SRC_SF), "sf0.01")
+ARTIFACTS = os.path.join(ROOT, "artifacts", "ab")
 
 
 def sorted_rows(df) -> tuple[list[str], list[str]]:
@@ -129,7 +142,7 @@ def main() -> None:
         "session": session_info(spark),
     }
     print(json.dumps(out))
-    with open(os.path.join(ROOT, exp.ARTIFACT), "w") as f:
+    with open(os.path.join(ARTIFACTS, exp.ARTIFACT), "w") as f:
         json.dump(out, f, indent=1)
         f.write("\n")
     spark.stop()

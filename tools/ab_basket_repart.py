@@ -1,90 +1,56 @@
-"""Companion to ab_recs_repart.py: the SAME repartition-before-distinct
-flip applies to the other two consumers of the basket `op` relation
-(market_basket_pairs, recs_item_item_cosine — identical distinct +
-self-join head). This times the pre-flip form (reconstructed inline:
-no repartition, distinct exchanges on both columns) against the
-flipped registered form, with exact-equality assertions, so each
-touched query has its own before/after numbers.
+"""Interleaved A/B: registered market_basket_pairs and
+recs_item_item_cosine (plain distinct over (l_orderkey, l_partkey),
+then the basket self-join) vs the repartition-before-distinct form that
+ships on recs_catalog_coverage: hash-partition the scanned pairs on
+l_orderkey first, so the distinct aggregates co-located behind one
+plain shuffle instead of a map-side partial agg that reduces nothing on
+near-unique pairs.
+
+Each variant is the registered query itself, built while its module's
+``load_table`` hands it the lineitem pairs already repartitioned: the
+registered ``.select(...).distinct()`` then runs on top, so the forms
+differ only by that one exchange.
+
+Kept at 18-19% (row AB_BASKET_REPART_r14 of artifacts/ab/DECISIONS.md,
+inside the 20% band). Open: the re-run under the shipped session config
+has the repartitioned form ahead of both registered queries.
 
 Usage: python tools/ab.py basket_repart [rounds]
+Flip iff >20% at the 100x replica.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from wikipedia_data_pipeline_spark.queries import graph_queries as GQ
+from wikipedia_data_pipeline_spark.sources.tables import load_table
 
-from wikipedia_data_pipeline_spark.operators.ranks import pin
 
-
-def _op_old(spark, sf_dir):
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    return pin(
-        load_table(spark, sf_dir, "lineitem")
+def _lineitem_pairs_by_orderkey(spark, sf_dir, name):
+    assert name == "lineitem", name
+    return (
+        load_table(spark, sf_dir, name)
         .select("l_orderkey", "l_partkey")
-        .distinct()
+        .repartition("l_orderkey")
     )
 
 
-def market_basket_pairs_old(spark, sf_dir):
-    op = _op_old(spark, sf_dir)
-    a = op.alias("a")
-    b = op.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy(F.desc("n_orders"), F.asc("part_a"), F.asc("part_b"))
-        .limit(100)
-    )
+def _repartitioned(query):
+    def form(spark, sf_dir):
+        GQ.load_table = _lineitem_pairs_by_orderkey
+        try:
+            return query(spark, sf_dir)
+        finally:
+            GQ.load_table = load_table
+
+    form.__name__ = f"{query.__name__}_repart"
+    return form
 
 
-def recs_item_item_cosine_old(spark, sf_dir):
-    op = _op_old(spark, sf_dir)
-    ic = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
-    a = op.alias("a")
-    b = op.alias("b")
-    co = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 3)
-    )
-    ia = ic.select(F.col("l_partkey").alias("pa"), F.col("n").alias("na"))
-    ib = ic.select(F.col("l_partkey").alias("pb"), F.col("n").alias("nb"))
-    return (
-        co.join(F.broadcast(ia), "pa")
-        .join(F.broadcast(ib), "pb")
-        .select(
-            "pa",
-            "pb",
-            F.col("c").alias("n_co"),
-            (
-                F.col("c")
-                / F.sqrt(F.col("na").cast("double") * F.col("nb"))
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("pa"), F.asc("pb"))
-        .limit(100)
-    )
-
+market_basket_pairs_repart = _repartitioned(GQ.market_basket_pairs)
+recs_item_item_cosine_repart = _repartitioned(GQ.recs_item_item_cosine)
 
 ARTIFACT = "AB_BASKET_REPART_r14.json"
 PAIRS = [
-    ("market_basket_pairs", market_basket_pairs_old),
-    ("recs_item_item_cosine", recs_item_item_cosine_old),
+    ("market_basket_pairs", market_basket_pairs_repart),
+    ("recs_item_item_cosine", recs_item_item_cosine_repart),
 ]

@@ -3,8 +3,7 @@
 r8 verdict items #3 and #5).
 
 Runs the headline family, the round-6/7 novelties, the streaming batch
-twins, and the three round-9 grouped-selection quantile consumers
-(paired with their round-8 window-baseline formulations as an A/B) on
+twins, and the three round-9 grouped-selection quantile consumers on
 the 100x replica of the driver's sf0.1 data (~sf10 facts: 60M
 lineitem, 10M events), best-of-3 warm each, and times the DuckDB
 oracle twin of every oracle-bearing query on the same replica, so the
@@ -12,6 +11,11 @@ micro-aggregate family has a ratio at a scale where the scheduling
 floor is fully amortized. Also re-establishes the controlled
 decimal-tax figure (q1 dec_sum vs BIGINT-cents) the r8 bench artifact
 clouded.
+
+The replaced or rejected formulations this probe once timed beside
+their registered queries (window baselines, ntile_by_cuts variants,
+the multipass KMV and two-pass truncation-recall forms) are decided:
+each is a ``SCALE_PROBE_r14:<name>`` row of artifacts/ab/DECISIONS.md.
 
 DuckDB twins that exceed a per-query budget are recorded as "timeout"
 (the brute-force-oracle twins are DELIBERATELY quadratic; timing them
@@ -29,8 +33,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from wikipedia_data_pipeline_spark.operators.ranks import pin  # noqa: E402
 
 SRC_SF = "/root/testdata/sf0.1"
 DUCK_BUDGET_S = 120.0
@@ -85,7 +87,7 @@ PROBE = [
     # twin of the interval join instead:
     "events_view_click_join",
     # r9: the three per-type quantile consumers moved to grouped exact
-    # SELECTION this round — paired with __window_baseline A/Bs below
+    # SELECTION this round
     "events_quantile_table",
     "events_winsorized",
     "events_mad_outliers",
@@ -321,515 +323,6 @@ def duck_time(sql, sf_dir):
         p.join()
         return "timeout"
     return q.get() if not q.empty() else "error"
-
-
-def _win_quantile_table(spark, sf_dir):
-    """Round-8 formulation of events_quantile_table (per-type window
-    ranking every row) — kept here ONLY as the A/B baseline for the
-    round-9 grouped-selection rewrite; same output, same oracle."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(
-        F.asc("value"), F.asc("event_id")
-    )
-    wn = Window.partitionBy("event_type")
-    ranked = ev.select(
-        "event_type",
-        "value",
-        F.row_number().over(w).cast("long").alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
-    qs = ranked.select(
-        "event_type",
-        "value",
-        "rn",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("p50").alias("q"),
-                    F.expr("(n + 1) div 2").alias("pos"),
-                ),
-                F.struct(
-                    F.lit("p90").alias("q"),
-                    F.expr("(9 * n + 9) div 10").alias("pos"),
-                ),
-                F.struct(
-                    F.lit("p99").alias("q"),
-                    F.expr("(99 * n + 99) div 100").alias("pos"),
-                ),
-            )
-        ).alias("qp"),
-    )
-    return qs.filter(F.col("rn") == F.col("qp.pos")).select(
-        "event_type",
-        F.col("qp.q").alias("q"),
-        F.col("value").alias("quantile_value"),
-    )
-
-
-def _win_winsorized(spark, sf_dir):
-    """Round-8 window formulation of events_winsorized (A/B baseline)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    cw = Window.partitionBy("event_type")
-    ranked = ev.select(
-        "event_id",
-        "event_type",
-        "value",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(cw).alias("cnt"),
-    )
-    p99 = (
-        ranked.where(F.col("rn") >= F.ceil(0.99 * F.col("cnt")).cast("long"))
-        .groupBy("event_type")
-        .agg(F.min("value").alias("p99_v"))
-    )
-    return ranked.join(F.broadcast(p99), "event_type").select(
-        "event_id",
-        "event_type",
-        "value",
-        F.least(F.col("value"), F.col("p99_v")).alias("value_capped"),
-    )
-
-
-def _win_mad_outliers(spark, sf_dir):
-    """Round-8 window formulation of events_mad_outliers (A/B baseline)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-
-    def rank_select(df, order_col, out_name):
-        w = Window.partitionBy("event_type").orderBy(
-            F.asc(order_col), F.asc("event_id")
-        )
-        wn = Window.partitionBy("event_type")
-        return (
-            df.select(
-                "event_type",
-                F.col(order_col),
-                F.row_number().over(w).alias("rn"),
-                F.count(F.lit(1)).over(wn).alias("n"),
-            )
-            .filter(F.col("rn") == F.expr("(n + 1) div 2"))
-            .select("event_type", F.col(order_col).alias(out_name))
-        )
-
-    med = rank_select(ev, "value", "med")
-    d = ev.join(F.broadcast(med), "event_type").select(
-        "event_id",
-        "event_type",
-        "value",
-        "med",
-        (F.abs(F.col("value") - F.col("med"))).alias("dev"),
-    )
-    mad = rank_select(d, "dev", "mad")
-    return (
-        d.join(F.broadcast(mad), "event_type")
-        .filter(F.col("dev") > 3 * F.col("mad"))
-        .select("event_id", "event_type", "value", "med", "mad")
-    )
-
-
-def _ntile_rfm_variant(spark, sf_dir):
-    """ntile_by_cuts (boundary-selection) formulation of
-    customer_rfm_segments — the round-9 rewrite CANDIDATE that was
-    measured and REJECTED: at the 100× probe the three chained cuts
-    over the persisted customer aggregate ran 6.59 s vs 1.88 s for the
-    registered global_ntile form. exact_quantiles' fixed per-cut job
-    count (count + slim range exchange + boundary window + broadcast
-    back) dominates when the entity-sized relation block-sorts
-    cheaply; kept here so the A/B stays in SCALE_PROBE artifacts."""
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.functions import cents_sum
-    from wikipedia_data_pipeline_spark.operators.ranks import ntile_by_cuts
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    agg = orders.groupBy("o_custkey").agg(
-        F.max(F.col("o_orderdate").cast("date")).alias("last_order"),
-        F.count(F.lit(1)).alias("frequency"),
-        cents_sum("o_totalprice", "monetary"),
-    )
-    agg = pin(agg)
-    seg = ntile_by_cuts(
-        agg,
-        [("last_order", "desc"), ("o_custkey", "asc")],
-        4,
-        "r_quartile",
-    )
-    seg = ntile_by_cuts(
-        seg,
-        [("frequency", "desc"), ("o_custkey", "asc")],
-        4,
-        "f_quartile",
-    )
-    seg = ntile_by_cuts(
-        seg,
-        [("monetary", "desc"), ("o_custkey", "asc")],
-        4,
-        "m_quartile",
-    )
-    return seg.select(
-        "o_custkey", "last_order", "frequency", "monetary",
-        "r_quartile", "f_quartile", "m_quartile",
-    )
-
-
-def _ntile_deciles_variant(spark, sf_dir):
-    """ntile_by_cuts formulation of revenue_concentration_deciles —
-    measured and REJECTED (100× probe: 1.71 s vs 0.87 s for the
-    registered global_ntile form; same reasoning as
-    _ntile_rfm_variant)."""
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.functions import UNIT, cents_units
-    from wikipedia_data_pipeline_spark.operators.ranks import ntile_by_cuts
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    cust = orders.groupBy("o_custkey").agg(
-        F.sum(cents_units("o_totalprice")).alias("rev_u")
-    )
-    cust = pin(cust)
-    dec = ntile_by_cuts(
-        cust, [("rev_u", "desc"), ("o_custkey", "asc")], 10, "decile"
-    )
-    total = dec.agg(F.sum("rev_u").alias("total_u"))
-    return (
-        dec.groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum("rev_u").alias("dec_u"),
-        )
-        .crossJoin(F.broadcast(total))
-        .select(
-            "decile",
-            "n_customers",
-            (F.col("dec_u").cast("double") / UNIT).alias("revenue_total"),
-            (
-                F.col("dec_u").cast("double")
-                / F.col("total_u").cast("double")
-            ).alias("revenue_share"),
-        )
-    )
-
-
-def _ntile_gains_variant(spark, sf_dir):
-    """ntile_by_cuts formulation of ml_eval_gains_table — measured and
-    REJECTED (100× probe: 4.93 s vs 4.18 s for the registered
-    global_ntile form — boundary selection re-scans the fact
-    projection and still loses to the hierarchical rank pass)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.operators.ranks import ntile_by_cuts
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    scored = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.col("value").alias("score"),
-        (det_hash("user_id") % 2).cast("long").alias("label"),
-    )
-    deciled = ntile_by_cuts(
-        scored, [("score", "desc"), ("event_id", "asc")], 10, "decile"
-    )
-    per = deciled.groupBy("decile").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("label").cast("long").alias("n_pos"),
-    )
-    tot = per.agg(F.sum("n").alias("nn"), F.sum("n_pos").alias("np"))
-    w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .withColumn("cum_pos", F.sum("n_pos").over(w).cast("long"))
-        .select(
-            "decile",
-            "n",
-            "n_pos",
-            "cum_pos",
-            (F.col("cum_pos").cast("double") / F.col("np")).alias("gain"),
-            (
-                (F.col("n_pos").cast("double") / F.col("n"))
-                / (F.col("np").cast("double") / F.col("nn"))
-            ).alias("lift"),
-        )
-    )
-
-
-def _ntile_woe_variant(spark, sf_dir):
-    """ntile_by_cuts formulation of features_woe_binning — measured
-    and REJECTED (100× probe: 4.30 s vs 3.34 s for the registered
-    global_ntile form; same reasoning as _ntile_gains_variant)."""
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.operators.ranks import ntile_by_cuts
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    scored = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "value",
-        (det_hash("user_id") % 2).cast("long").alias("label"),
-    )
-    binned = ntile_by_cuts(
-        scored, [("value", "asc"), ("event_id", "asc")], 10, "bin"
-    )
-    per = binned.groupBy("bin").agg(
-        F.sum("label").cast("long").alias("n_pos"),
-        (F.count(F.lit(1)) - F.sum("label")).cast("long").alias("n_neg"),
-    )
-    tot = per.agg(
-        F.sum("n_pos").cast("long").alias("p"),
-        F.sum("n_neg").cast("long").alias("n"),
-    )
-    woe_q = (
-        F.round(
-            F.log(
-                (F.col("n_pos").cast("double") * F.col("n"))
-                / (F.col("n_neg").cast("double") * F.col("p"))
-            )
-            * 1_000_000_000
-        )
-    ).cast("long")
-    dp = F.col("n_pos").cast("double") / F.col("p") - F.col(
-        "n_neg"
-    ).cast("double") / F.col("n")
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .filter((F.col("n_pos") > 0) & (F.col("n_neg") > 0))
-        .select(
-            "bin",
-            "n_pos",
-            "n_neg",
-            (woe_q.cast("double") / 1_000_000_000).alias("woe"),
-            (dp * (woe_q.cast("double") / 1_000_000_000)).alias("iv_term"),
-        )
-    )
-
-
-def _kmv_distinct_multipass_baseline(spark, sf_dir):
-    """The pre-round-11 registered form of sketch_kmv_distinct_users:
-    every exact-audit branch runs its own countDistinct / flags pass
-    over the raw fact table (4 independent fact scans) instead of
-    sharing one persisted distinct (type, user) pair relation. r9's
-    sequential A/B kept this form (3.45 s vs 3.85 s); r10's sequential
-    probe reversed it (3.08 s vs 1.98 s); the r11 INTERLEAVED
-    same-process best-of-3 (AB_KMV_r11.json: 3.32 s vs 2.45 s)
-    adjudicated the contradiction for the shared form, which is now
-    registered. Kept so both sides of the measured decision stay
-    probed (ntile_by_cuts discipline)."""
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.operators import profiling as P
-    from wikipedia_data_pipeline_spark.operators.sampling import det_hash
-    from wikipedia_data_pipeline_spark.queries.sketch_queries import _KMV_K
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    K, MOD = _KMV_K, (1 << 31) - 1
-    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    hsh = ev.select("event_type", det_hash("user_id").alias("h"))
-    sk = pin(P.kmv_min_hashes(hsh, "event_type", "h", k=K))
-    pertype = sk.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("cnt"), F.max("h").alias("hk")
-    )
-    exact_t = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_exact")
-    )
-    est = F.when(
-        F.col("cnt") < K, F.col("cnt").cast("double")
-    ).otherwise(F.lit((K - 1) * MOD) / F.col("hk"))
-    t_rows = (
-        pertype.join(exact_t, "event_type")
-        .select(
-            F.col("event_type").alias("segment"),
-            "n_exact",
-            est.alias("est_kmv"),
-        )
-    )
-    usk = (
-        sk.select("h").distinct().orderBy("h").limit(K)
-        .agg(F.count(F.lit(1)).alias("cnt"), F.max("h").alias("hk"))
-    )
-    u_exact = ev.agg(F.countDistinct("user_id").alias("n_exact"))
-    u_row = (
-        usk.crossJoin(F.broadcast(u_exact))
-        .select(
-            F.lit("__union_all__").alias("segment"),
-            "n_exact",
-            est.alias("est_kmv"),
-        )
-    )
-
-    def theta_of(t):
-        return (
-            sk.filter(F.col("event_type") == t)
-            .agg(
-                F.when(F.count(F.lit(1)) >= K, F.max("h"))
-                .otherwise(F.lit(MOD))
-                .alias("th")
-            )
-        )
-
-    th = (
-        theta_of("view")
-        .crossJoin(theta_of("click").withColumnRenamed("th", "th2"))
-        .select(F.least("th", "th2").alias("theta"))
-    )
-    va = sk.filter(F.col("event_type") == "view").select("h")
-    cb = sk.filter(F.col("event_type") == "click").select("h")
-    common = (
-        va.join(cb, "h")
-        .crossJoin(F.broadcast(th))
-        .filter(F.col("h") < F.col("theta"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    i_exact = (
-        ev.groupBy("user_id")
-        .agg(
-            F.max((F.col("event_type") == "view").cast("int")).alias("v"),
-            F.max((F.col("event_type") == "click").cast("int")).alias("c"),
-        )
-        .filter((F.col("v") == 1) & (F.col("c") == 1))
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-    )
-    i_row = (
-        common.crossJoin(F.broadcast(th))
-        .crossJoin(F.broadcast(i_exact))
-        .select(
-            F.lit("__intersect_view_click__").alias("segment"),
-            "n_exact",
-            (
-                F.col("c").cast("double") * F.lit(MOD) / F.col("theta")
-            ).alias("est_kmv"),
-        )
-    )
-    donly = (
-        va.join(cb, "h", "left_anti")
-        .crossJoin(F.broadcast(th))
-        .filter(F.col("h") < F.col("theta"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    d_exact = (
-        ev.groupBy("user_id")
-        .agg(
-            F.max((F.col("event_type") == "view").cast("int")).alias("v"),
-            F.max((F.col("event_type") == "click").cast("int")).alias("c"),
-        )
-        .filter((F.col("v") == 1) & (F.col("c") == 0))
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-    )
-    d_row = (
-        donly.crossJoin(F.broadcast(th))
-        .crossJoin(F.broadcast(d_exact))
-        .select(
-            F.lit("__view_minus_click__").alias("segment"),
-            "n_exact",
-            (
-                F.col("c").cast("double") * F.lit(MOD) / F.col("theta")
-            ).alias("est_kmv"),
-        )
-    )
-    return (
-        t_rows.unionByName(u_row).unionByName(i_row).unionByName(d_row)
-    )
-
-
-def _trunc_recall_twopass_baseline(spark, sf_dir):
-    """Pre-session-4 formulation of ann_dim_truncation_recall: TWO
-    passes over the query x corpus pairs (full-dim ranking branch +
-    per-dim sliced-cosine branch) joined on (query_id, vec_id). Kept
-    as the A/B baseline for the one-pass prefix-dot rewrite."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.functions import cosine_similarity
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id").isin([0, 1, 2, 3, 4])).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    pairs = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    w_full = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("vec_id")
-    )
-    full_rank = (
-        pairs.select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("q_emb"), F.col("embedding")).alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w_full).cast("long"))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "vec_id")
-    )
-    dims = spark.range(1).select(
-        F.explode(F.array(F.lit(64), F.lit(32), F.lit(16))).alias("dim_kept")
-    )
-    w_trunc = Window.partitionBy("dim_kept", "query_id").orderBy(
-        F.desc("cos"), F.asc("vec_id")
-    )
-    trunc_rank = (
-        pairs.crossJoin(F.broadcast(dims))
-        .select(
-            "dim_kept",
-            "query_id",
-            "vec_id",
-            cosine_similarity(
-                F.expr("slice(q_emb, 1, dim_kept)"),
-                F.expr("slice(embedding, 1, dim_kept)"),
-            ).alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w_trunc).cast("long"))
-        .filter(F.col("rnk") <= 10)
-        .select("dim_kept", "query_id", "vec_id")
-    )
-    return (
-        trunc_rank.join(full_rank, ["query_id", "vec_id"])
-        .groupBy("dim_kept", "query_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_overlap"),
-            (F.count(F.lit(1)).cast("double") / F.lit(10)).alias(
-                "recall_at_10"
-            ),
-        )
-        .orderBy("dim_kept", "query_id")
-    )
-
-
-# A/B twins: timed like PROBE entries, no DuckDB twin of their own
-# (their output IS the registered query's — identical oracle). The
-# __window_baseline rows are the REPLACED formulations (selection won);
-# the __ntile_by_cuts_variant rows are REJECTED candidates (ranking
-# won) — kept so both sides of each measured decision stay probed.
-BASELINES = {
-    "ann_dim_truncation_recall__twopass_baseline": _trunc_recall_twopass_baseline,
-    "events_quantile_table__window_baseline": _win_quantile_table,
-    "events_winsorized__window_baseline": _win_winsorized,
-    "events_mad_outliers__window_baseline": _win_mad_outliers,
-    "sketch_kmv_distinct_users__multipass_baseline": _kmv_distinct_multipass_baseline,
-    "customer_rfm_segments__ntile_by_cuts_variant": _ntile_rfm_variant,
-    "revenue_concentration_deciles__ntile_by_cuts_variant": _ntile_deciles_variant,
-    "ml_eval_gains_table__ntile_by_cuts_variant": _ntile_gains_variant,
-    "features_woe_binning__ntile_by_cuts_variant": _ntile_woe_variant,
-}
 
 
 def skew_join_ab(spark, dir100):
@@ -1104,11 +597,6 @@ def main() -> None:
     # results are merged into out_path if it already exists)
     only = os.environ.get("SPARK_GRAFT_PROBE_ONLY")
     probe = [n for n in PROBE if n in set(only.split(","))] if only else PROBE
-    baselines = (
-        {k: v for k, v in BASELINES.items() if k in set(only.split(","))}
-        if only
-        else BASELINES
-    )
 
     from bench import _cpu_ticks, run_spark, steal_guard
     from tools.make_benchdata import ensure
@@ -1165,9 +653,6 @@ def main() -> None:
         if name in oracles and name not in DUCK_SKIP:
             duck_t[name] = duck_time(oracles[name], dir100)
             print(f"duckdb {name}: {duck_t[name]}", flush=True)
-    for name in baselines:
-        spark_t[name] = best_of_3(baselines, name)
-        print(f"spark  {name}: {spark_t[name]}s", flush=True)
 
     # floor-adjusted ratios for the worst sub-3s rows (r12 verdict #6);
     # resumable by name like the A/B sections
@@ -1239,13 +724,7 @@ def main() -> None:
             "gate-proven oracle SQL, best-of-2, %ss total budget. "
             "q1_pricing_summary_cents is the BIGINT-cents A/B of the "
             "DECIMAL q1 (dec_over_cents = %s). q3/q5 run BIGINT-cents "
-            "revenue as of round 9. *__window_baseline entries are the "
-            "round-8 per-type-window formulations of the three quantile "
-            "consumers, timed as A/B against the round-9 grouped exact "
-            "selection. *__ntile_by_cuts_variant entries are the "
-            "REJECTED round-9 boundary-selection rewrites of the four "
-            "global_ntile consumers (measured slower at this scale; "
-            "registered queries keep the hierarchical rank form)."
+            "revenue as of round 9."
             % (
                 spark.sparkContext.defaultParallelism,
                 int(DUCK_BUDGET_S),

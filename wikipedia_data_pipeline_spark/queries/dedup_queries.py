@@ -260,40 +260,10 @@ ORDER BY n_pairs DESC, source_lo, source_hi
 """
 
 
-@register("dedup_cross_source_matrix", oracle=_CROSS_SOURCE_SQL)
-def dedup_cross_source_matrix(spark, sf_dir):
-    """Cross-source near-duplicate contamination matrix: the TRUE
-    near-dup pairs (exact Jaccard ≥ 0.5 via the zero-false-negative
-    prefix-filter join — dedup_lsh_recall_planner's ground truth)
-    attributed to their (source, source) cell — the audit that tells a
-    curation pipeline WHERE its duplication comes from: mirror sites
-    (cross-source cells), re-crawls (within-source), and which source
-    pair to decontaminate first. Per cell: pair count, mean Jaccard
-    (per-pair nano-quantized once, associative BIGINT sum), and share
-    of all near-dup pairs.
-
-    Scale design — EXACT-FIRST COLLAPSE (the canonical pipeline
-    ordering): the expensive near-dup join runs over DISTINCT texts
-    only; doc-level pair counts are then reconstructed arithmetically —
-    a text pair (ta, tb, j) contributes cnt_a·cnt_b doc pairs per
-    (source_a, source_b) combination, and a text with c verbatim
-    copies contributes C(c,2) within-source (c_i·c_j cross-source)
-    exact-duplicate pairs at j = 1. Output is bit-identical to the
-    naive per-doc join (the unchanged quadratic oracle proves it), but
-    the join cost no longer scales with the square of the duplication
-    factor — on the 100× verbatim-replica the naive form generates
-    ~10⁴× the candidate pairs and ran unboundedly; this form does the
-    same shingle work ONCE per distinct text. Texts shorter than one
-    shingle (no 3-gram) produce no pairs in either engine and are
-    excluded from the copy decomposition to match.
-
-    Scale shape: heavy work = prefix-filtered pair join over distinct
-    texts (rare-shingle-posting-bounded, never all-pairs); the
-    source-count decomposition joins onto the PAIRS relation, and the
-    matrix is a |sources|²-bounded aggregate. Quadratic form lives
-    only in the ORACLE (dedup_ngram_jaccard_brute convention)."""
-    from pyspark.sql import functions as F
-
+def _cross_source_texts(spark, sf_dir):
+    """(tmap, pairs) of dedup_cross_source_matrix: per (distinct text,
+    source) the text's rep id, copy count and whether it shingles; and
+    the near-dup pairs over distinct texts."""
     docs = load_table(spark, sf_dir, "documents")
     # per (distinct text, source): copy counts; per text: stable rep id
     ts = docs.groupBy("text", "source").agg(
@@ -307,6 +277,12 @@ def dedup_cross_source_matrix(spark, sf_dir):
     tmap = reps.join(ts, "text").select(
         F.col("doc_id").alias("t_id"), "source", "cnt", has_sh.alias("ok")
     )
+    return tmap, pairs
+
+
+def _cross_source_weights(tmap, pairs):
+    """One (source_lo, source_hi, cross_source, w, j_nano) row per
+    weighted doc-pair class: ``w`` doc pairs at nano-Jaccard ``j_nano``."""
     # (a) cross-text pairs: decompose over both sides' source counts
     a = tmap.select(
         F.col("t_id").alias("doc_a"),
@@ -357,17 +333,22 @@ def dedup_cross_source_matrix(spark, sf_dir):
         )
         .filter(F.col("w") > 0)
     )
-    lab = cross_text.unionByName(within)
-    tot = lab.agg(F.sum("w").cast("long").alias("n_total"))
+    return cross_text.unionByName(within)
+
+
+def _cross_source_cells(lab):
+    """Per (source, source) cell: doc-pair count and nano-Jaccard sum."""
+    return lab.groupBy("source_lo", "source_hi", "cross_source").agg(
+        F.sum("w").cast("long").alias("n_pairs"),
+        F.sum(F.col("w") * F.col("j_nano")).cast("long").alias("j_nano_sum"),
+    )
+
+
+def _cross_source_matrix(cells, tot):
+    """The output rows: each cell's pairs, mean Jaccard and share of
+    ``tot``'s n_total."""
     return (
-        lab.groupBy("source_lo", "source_hi", "cross_source")
-        .agg(
-            F.sum("w").cast("long").alias("n_pairs"),
-            F.sum(F.col("w") * F.col("j_nano"))
-            .cast("long")
-            .alias("j_nano_sum"),
-        )
-        .crossJoin(F.broadcast(tot))
+        cells.crossJoin(F.broadcast(tot))
         .select(
             "source_lo",
             "source_hi",
@@ -384,6 +365,43 @@ def dedup_cross_source_matrix(spark, sf_dir):
         )
         .orderBy(F.desc("n_pairs"), F.asc("source_lo"), F.asc("source_hi"))
     )
+
+
+@register("dedup_cross_source_matrix", oracle=_CROSS_SOURCE_SQL)
+def dedup_cross_source_matrix(spark, sf_dir):
+    """Cross-source near-duplicate contamination matrix: the TRUE
+    near-dup pairs (exact Jaccard ≥ 0.5 via the zero-false-negative
+    prefix-filter join — dedup_lsh_recall_planner's ground truth)
+    attributed to their (source, source) cell — the audit that tells a
+    curation pipeline WHERE its duplication comes from: mirror sites
+    (cross-source cells), re-crawls (within-source), and which source
+    pair to decontaminate first. Per cell: pair count, mean Jaccard
+    (per-pair nano-quantized once, associative BIGINT sum), and share
+    of all near-dup pairs.
+
+    Scale design — EXACT-FIRST COLLAPSE (the canonical pipeline
+    ordering): the expensive near-dup join runs over DISTINCT texts
+    only; doc-level pair counts are then reconstructed arithmetically —
+    a text pair (ta, tb, j) contributes cnt_a·cnt_b doc pairs per
+    (source_a, source_b) combination, and a text with c verbatim
+    copies contributes C(c,2) within-source (c_i·c_j cross-source)
+    exact-duplicate pairs at j = 1. Output is bit-identical to the
+    naive per-doc join (the unchanged quadratic oracle proves it), but
+    the join cost no longer scales with the square of the duplication
+    factor — on the 100× verbatim-replica the naive form generates
+    ~10⁴× the candidate pairs and ran unboundedly; this form does the
+    same shingle work ONCE per distinct text. Texts shorter than one
+    shingle (no 3-gram) produce no pairs in either engine and are
+    excluded from the copy decomposition to match.
+
+    Scale shape: heavy work = prefix-filtered pair join over distinct
+    texts (rare-shingle-posting-bounded, never all-pairs); the
+    source-count decomposition joins onto the PAIRS relation, and the
+    matrix is a |sources|²-bounded aggregate. Quadratic form lives
+    only in the ORACLE (dedup_ngram_jaccard_brute convention)."""
+    lab = _cross_source_weights(*_cross_source_texts(spark, sf_dir))
+    tot = lab.agg(F.sum("w").cast("long").alias("n_total"))
+    return _cross_source_matrix(_cross_source_cells(lab), tot)
 
 
 # ---------------------------------------------------------------------------

@@ -37,8 +37,8 @@ def market_basket_pairs(spark, sf_dir):
     # the same repartition-before-distinct flip that ships on
     # recs_catalog_coverage (AB_RECS_REPART_r14) measured 18-19% here
     # (AB_BASKET_REPART_r14) - inside the pre-registered 20% band, so
-    # the registered form is kept (the rejected variant stays in the
-    # A/B tool)
+    # the registered form is kept; open, the variant stays in
+    # tools/ab_basket_repart.py
     op = pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -448,8 +448,8 @@ def recs_item_item_cosine(spark, sf_dir):
     # the same repartition-before-distinct flip that ships on
     # recs_catalog_coverage (AB_RECS_REPART_r14) measured 18-19% here
     # (AB_BASKET_REPART_r14) - inside the pre-registered 20% band, so
-    # the registered form is kept (the rejected variant stays in the
-    # A/B tool)
+    # the registered form is kept; open, the variant stays in
+    # tools/ab_basket_repart.py
     op = pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")

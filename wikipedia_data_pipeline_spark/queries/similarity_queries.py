@@ -381,8 +381,9 @@ def ann_dim_truncation_recall(spark, sf_dir):
     same (cos DESC, vec_id ASC) order — a superset of the global
     top-10, so the downstream window rank / pivot / overlap logic is
     unchanged but runs over ~150 rows per batch instead of |pairs|×3
-    exploded rows (the r9 two-pass form is kept as the probe's
-    __twopass_baseline). EAGER: the 5 query vectors are collected at
+    exploded rows (the r9 two-pass form is row
+    SCALE_PROBE_r14:ann_dim_truncation_recall__twopass_baseline of
+    artifacts/ab/DECISIONS.md). EAGER: the 5 query vectors are collected at
     construction — bounded by the literal IN-list, the HL class of
     driver-sized collect.
 

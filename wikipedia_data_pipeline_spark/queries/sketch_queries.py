@@ -371,9 +371,9 @@ def sketch_kmv_distinct_users(spark, sf_dir):
     multipass form's four independent fact scans. Adjudicated by an
     interleaved same-process best-of-3 A/B at the 100× replica
     (AB_KMV_r11.json: 2.45 s vs 3.32 s, a 26% win beyond the measured
-    20% noise band) after r9 and r10 sequential probes disagreed; the
-    multipass form stays probed as
-    sketch_kmv_distinct_users__multipass_baseline."""
+    20% noise band) after r9 and r10 sequential probes disagreed; both
+    rows, and a re-run under the shipped session, are in
+    artifacts/ab/DECISIONS.md."""
     from wikipedia_data_pipeline_spark.operators.sampling import det_hash
 
     K, MOD = _KMV_K, (1 << 31) - 1

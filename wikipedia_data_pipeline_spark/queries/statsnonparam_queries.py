@@ -1062,17 +1062,20 @@ def stats_ansari_bradley(spark, sf_dir):
 # Spark jobs; the r13 fused form batched _HL_PROBES probe points per
 # job (~6 count jobs). Both shapes were O(jobs) with every job paying
 # the ~0.3-0.5 s scheduling floor, because the iterative state — the
-# count_le(d) oracle — only ever touches the GRID-BOUNDED histograms,
+# count_le(d) oracle — only ever touches the small cents histograms,
 # never the fact. Final form takes that argument to its conclusion:
-# ONE combined fact scan builds both cents histograms (<= 2*grid rows
-# by the declared domain, asserted loudly below), they are collected,
-# and the entire integer bisection runs driver-side in NumPy
+# ONE combined fact scan builds both cents histograms (one row per
+# distinct cents value per side), they are collected, and the entire
+# integer bisection runs driver-side in NumPy
 # (count_le(d) = one searchsorted against the y suffix-cumulative,
 # microseconds per probe). Distributed work is exactly one hash-agg
 # scan of the fact — O(data) with zero iterative jobs; the driver
-# state is the same <=60k-cent histogram the previous forms already
-# broadcast every round. Same boundary class as the BPE vocab merge
-# loop and the PCA d x d solve: distributed moments, central solve.
+# state is the same cents histogram the previous forms already
+# broadcast every round. The bisection searches the exact difference
+# range [min(x) - max(y), max(x) - min(y)] of the collected supports,
+# so no value domain is assumed. Same boundary class as the BPE vocab
+# merge loop and the PCA d x d solve: distributed moments, central
+# solve.
 # _HL_LAST_COUNT_JOBS records the MEASURED Spark job count of the most
 # recent run (r14: counted via statusTracker around the collect, not
 # hardcoded — the r13 report cited a test assertion that did not
@@ -1081,7 +1084,6 @@ def stats_ansari_bradley(spark, sf_dir):
 # own job), but only ONE of them scans the fact — the bound the test
 # pins is the job count, the structural claim is the single scan.
 
-_HL_GRID_MAX = 60_000  # cents; events.value <= ~500.00 (asserted on collect)
 _HL_LAST_COUNT_JOBS = 0  # measured Spark jobs in the most recent run
 _HL_GROUP_SEQ = 0  # unique job-group id per run (statusTracker window)
 
@@ -1123,14 +1125,17 @@ def stats_hodges_lehmann(spark, sf_dir):
     median of all n1*n2 pairwise differences, WITHOUT materializing
     any pair (see the section comment). The oracle pays the O(|X
     domain| * |Y domain|) convolution; the engine runs ONE combined
-    hash-agg scan of the fact to the two grid-bounded cents
-    histograms, collects them (<= 2*grid rows, asserted), and solves
-    the integer bisection for both middle order statistics driver-side
+    hash-agg scan of the fact to the two cents histograms, collects
+    them, and solves the integer bisection for both middle order
+    statistics driver-side over the exact difference range
     (count_le(d) = searchsorted against the y suffix-cumulative).
+    With no view or no click rows there is no pair: the row carries
+    the side counts (NULL for an empty side, as SQL's sum) and NULL
+    t_pairs / estimate, as the oracle returns.
     EAGER; exactly one scan of the fact, no iterative jobs (the
     collect itself runs as <= 3 scheduler jobs under AQE — measured
     via statusTracker, recorded in _HL_LAST_COUNT_JOBS, pinned in
-    tests/test_round14.py::test_hl_job_count_is_measured)."""
+    tests/test_statsnonparam.py::test_hl_job_count_is_measured)."""
     global _HL_LAST_COUNT_JOBS, _HL_GROUP_SEQ
     import numpy as np
 
@@ -1155,23 +1160,19 @@ def stats_hodges_lehmann(spark, sf_dir):
     _HL_LAST_COUNT_JOBS = len(
         sc.statusTracker().getJobIdsForGroup(group)
     )
-    # Declared-domain guard: the search interval below is only correct
-    # for |c| <= grid; a wider value domain must fail loudly, not
-    # return a clamped estimate (same rule as the Gram batch bound).
-    bad = [r for r in hist if abs(r["c"]) > _HL_GRID_MAX]
-    if bad:
-        raise ValueError(
-            f"events.value outside the declared +-{_HL_GRID_MAX}-cent "
-            f"grid (saw cents={bad[0]['c']}); raise _HL_GRID_MAX"
-        )
     hx = sorted((r["c"], r["n"]) for r in hist if r["event_type"] == "view")
     hy = sorted((r["c"], r["n"]) for r in hist if r["event_type"] == "click")
+    schema = "n1 long, n2 long, t_pairs long, hl_cents2 long, hl_shift double"
+    if not hx or not hy:
+        n1 = sum(n for _, n in hx) if hx else None
+        n2 = sum(n for _, n in hy) if hy else None
+        return spark.createDataFrame([(n1, n2, None, None, None)], schema)
     xc = np.array([c for c, _ in hx], dtype=np.int64)
     xn = np.array([n for _, n in hx], dtype=np.int64)
     yc = np.array([c for c, _ in hy], dtype=np.int64)
     yn = np.array([n for _, n in hy], dtype=np.int64)
-    n1 = int(xn.sum()) if xn.size else 0
-    n2 = int(yn.sum()) if yn.size else 0
+    n1 = int(xn.sum())
+    n2 = int(yn.sum())
     t_pairs = n1 * n2
     # suffix[i] = #{y >= yc[i]}; NYge(v) = suffix[first support >= v]
     suffix = np.concatenate(
@@ -1184,7 +1185,8 @@ def stats_hodges_lehmann(spark, sf_dir):
         return int((xn * suffix[idx]).sum())
 
     def order_stat(k: int) -> int:
-        lo, hi = -_HL_GRID_MAX, _HL_GRID_MAX
+        # every pairwise difference lies in [lo, hi]
+        lo, hi = int(xc[0] - yc[-1]), int(xc[-1] - yc[0])
         while lo < hi:
             mid = (lo + hi) // 2
             if count_le(mid) >= k:
@@ -1196,8 +1198,7 @@ def stats_hodges_lehmann(spark, sf_dir):
     d_lo = order_stat((t_pairs + 1) // 2)
     d_hi = order_stat(t_pairs // 2 + 1)
     return spark.createDataFrame(
-        [(n1, n2, t_pairs, d_lo + d_hi, (d_lo + d_hi) / 200.0)],
-        "n1 long, n2 long, t_pairs long, hl_cents2 long, hl_shift double",
+        [(n1, n2, t_pairs, d_lo + d_hi, (d_lo + d_hi) / 200.0)], schema
     )
 
 

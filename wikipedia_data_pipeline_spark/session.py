@@ -5,6 +5,11 @@ single JVM). On a real cluster the same SQL configs apply; only
 master/memory flags change. Unlike the reference (which embeds AWS
 credentials in source, Main.java:36), object-store access is left to the
 standard s3a credential-provider chain — never hardcoded.
+
+Python workers (UDFs, pandas/Arrow maps, Python data sources) import
+the engine too, so the directory that holds this package goes on their
+PYTHONPATH: a script started from any working directory runs the
+checkout it was loaded from.
 """
 
 from __future__ import annotations
@@ -12,6 +17,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding the wikipedia_data_pipeline_spark package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "wikipedia-data-pipeline-spark") -> SparkSession:
@@ -27,6 +35,7 @@ def get_spark(app_name: str = "wikipedia-data-pipeline-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("WDP_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         .config("spark.ui.showConsoleProgress", "false")
         # dims (region/nation/customer/supplier/part, idf vocab) stay well
         # under this at every SF we target — prefer broadcast joins.
