@@ -136,22 +136,6 @@ def test_quality_percentile_gate_drops_bottom_decile_per_lang(spark):
         assert 0.0 <= r.pctl <= 1.0
 
 
-def test_quality_threshold_gate_agrees_with_exact_gate(spark, sf_dir):
-    from wikipedia_data_pipeline_spark.operators.curation import (
-        quality_percentile_gate,
-        quality_threshold_gate,
-    )
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    exact = {r.doc_id for r in quality_percentile_gate(docs, 0.1).collect()}
-    approx = {r.doc_id for r in quality_threshold_gate(docs, 0.1).collect()}
-    n = docs.count()
-    # symmetric difference bounded by the sketch's rank error (generous
-    # 2% of corpus at accuracy 10k)
-    assert len(exact ^ approx) <= max(2, int(0.02 * n)), len(exact ^ approx)
-
-
 def test_cap_per_group_keeps_top_rows_deterministically(spark):
     rows = [("a", i, 100 - i) for i in range(10)] + [("b", 100, 5)]
     df = spark.createDataFrame(rows, "grp string, doc_id long, score long")

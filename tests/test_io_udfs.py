@@ -50,12 +50,12 @@ def test_text_corpus_source(spark):
 
 
 def test_udf_paths_agree(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    fast = {(r.doc_id, r.ws_tokens) for r in U.token_counts_pandas(docs).collect()}
-    slow = {
-        (r.doc_id, r.ws_tokens) for r in U.token_counts_python_udf(docs).collect()
-    }
-    assert fast == slow
+    src = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # limit() may pick other rows on another action: pin the collected ones
+    rows = src.limit(50).collect()
+    docs = spark.createDataFrame(rows, src.schema)
+    got = {(r.doc_id, r.ws_tokens) for r in U.token_counts_pandas(docs).collect()}
+    assert got == {(r.doc_id, len(r.text.split(" "))) for r in rows}
 
 
 def test_grouped_map_top_word(spark):
@@ -76,16 +76,6 @@ def test_multimodal_stub_plumbing(spark, sf_dir):
     r = meta.first()
     assert r.n_pixels == r.width * r.height
     assert 1 <= r.width <= 640 and 1 <= r.height <= 480
-    import pytest
-
-    try:
-        import PIL  # noqa: F401
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if not has_pil:
-        with pytest.raises(NotImplementedError):
-            MM.decode_image_real(media)
 
 
 def test_file_uri_roundtrip_with_options(spark, tmp_path):
@@ -135,15 +125,6 @@ def test_image_header_decode_real_formats(spark):
     assert got[2] == ("gif", 3, 2)
     assert got[3] == ("jpeg", 5, 7)
     assert got[4] == (None, None, None)
-
-
-def test_pil_decode_real_when_codec_present(spark):
-    import pytest
-
-    pytest.importorskip("PIL")
-    media = spark.createDataFrame([(1, bytearray(PNG_1x1))], "doc_id long, payload binary")
-    r = MM.decode_image_real(media).first()
-    assert (r.format, r.width, r.height) == ("png", 1, 1)
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):

@@ -414,37 +414,6 @@ def test_exact_quantiles_rejects_name_collisions(spark):
         )
 
 
-@pytest.mark.parametrize(
-    "nrows,n",
-    [(3, 5), (7, 10), (37, 5), (37, 10), (200, 7), (1, 4), (2, 2)],
-)
-def test_ntile_by_cuts_matches_builtin(spark, nrows, n):
-    """ntile_by_cuts == built-in ntile row-for-row, INCLUDING N < n
-    (r7 advisory: boundary ranks collapse to min(i, N) when q == 0 and
-    must be deduped before selection)."""
-    from wikipedia_data_pipeline_spark.operators.ranks import (
-        ntile_by_cuts,
-    )
-
-    rng = random.Random(81_000 + 100 * nrows + n)
-    rows = [(i, rng.randint(0, 5)) for i in range(nrows)]
-    sdf = spark.createDataFrame(rows, ["id", "v"]).repartition(4)
-    w = Window.orderBy(F.desc("v"), F.asc("id"))
-    ref = {
-        r["id"]: r["b"]
-        for r in sdf.select(
-            "id", F.ntile(n).over(w).cast("long").alias("b")
-        ).collect()
-    }
-    got = {
-        r["id"]: r["b"]
-        for r in ntile_by_cuts(
-            sdf, [("v", "desc"), ("id", "asc")], n, "b", num_partitions=4
-        ).collect()
-    }
-    assert got == ref
-
-
 def test_pin_caches_deserialized_and_registers(spark):
     from wikipedia_data_pipeline_spark.operators import ranks
 
@@ -479,8 +448,6 @@ ALLOWED = {
     # edge relation materialized once, released after connected_components
     ("wikipedia_data_pipeline_spark/queries/dedup_queries.py",
      "dedup_connected_components"),
-    # dimension side persisted per arm, released after each timing
-    ("tools/scale_probe.py", "skew_join_ab"),
 }
 
 

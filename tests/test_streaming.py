@@ -220,28 +220,6 @@ def test_foreach_batch_compaction_multibatch_and_replay(spark, tmp_path):
     assert {d: os.path.getmtime(os.path.join(store, d)) for d in os.listdir(store)} == mtimes
 
 
-def test_tws_user_totals_gated_on_protobuf(spark):
-    # transformWithState (stateful v2) needs google.protobuf for its
-    # state-server protocol; the sandbox image lacks it, so the
-    # operator must raise the declared NotImplementedError. Where
-    # protobuf exists this test instead runs the stream and checks it
-    # against the batch aggregate.
-    import pytest
-
-    from wikipedia_data_pipeline_spark.streaming import pipeline as SP
-
-    if not SP.tws_available():
-        with pytest.raises(NotImplementedError):
-            SP.run_tws_user_totals(spark, "/root/testdata/sf0.001")
-        return
-    got = SP.run_tws_user_totals(spark, "/root/testdata/sf0.001")
-    from wikipedia_data_pipeline_spark.sources.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = ev.groupBy("user_id").count()
-    assert got.count() == want.count()
-
-
 def test_streaming_mv_multibatch_equals_batch_aggregate(spark, tmp_path):
     # 3-file maxFilesPerTrigger=1 run: per-batch O(batch) state folds
     # must reproduce the one-shot batch aggregate exactly.

@@ -211,8 +211,11 @@ def test_ab_experiment_pairs_name_registered_queries(name):
 
 
 # An A/B citation: the artifact stem of a decision, e.g. AB_KMV_r11 in
-# "AB_KMV_r11.json"; \b keeps names like _AB_VALUE_SCAN_CTES out.
-_AB_CITATION = re.compile(r"\bAB_\w+")
+# "AB_KMV_r11.json"; \b keeps names like _AB_VALUE_SCAN_CTES out. A
+# probe citation names a section of a SCALE_PROBE artifact, e.g.
+# SCALE_PROBE_r10:bucketed_join_ab; the older dotted form
+# (SCALE_PROBE_rNN.<section>) names no row, so it is caught too.
+_AB_CITATION = re.compile(r"\bAB_\w+|\bSCALE_PROBE_r\d+(?::|\.(?!json\b))\w+")
 
 
 def _decision_ids() -> set[str]:
@@ -226,9 +229,9 @@ def _decision_ids() -> set[str]:
 
 
 def test_every_cited_ab_decision_is_a_row_of_the_decision_table():
-    """The package and tools/ cite A/B decisions by artifact stem; each
-    one must name a row of artifacts/ab/DECISIONS.md, so a decision
-    stays citable after its experiment is deleted."""
+    """The package and tools/ cite A/B decisions by artifact stem or
+    probe section; each one must name a row of artifacts/ab/DECISIONS.md,
+    so a decision stays citable after its experiment is deleted."""
     ids = _decision_ids()
     cited = {}
     for path in _python_files():
@@ -250,7 +253,7 @@ def test_ab_equivalence_accepts_a_real_pair_and_rejects_a_wrong_variant(
 
     registered = registry.spark_queries()["events_hourly_rollup"]
     ok = ab.check_pair(spark, registered, hourly_twostep, sf_dir)
-    assert ok["equivalent"] and ok["rows"] > 0
+    assert ok["equivalent"] and ok["rows"] > 0 and not ok["same_plan"]
 
     def one_event_too_many(spark, sf_dir):
         return hourly_twostep(spark, sf_dir).withColumn(
@@ -260,3 +263,21 @@ def test_ab_equivalence_accepts_a_real_pair_and_rejects_a_wrong_variant(
     assert not ab.check_pair(spark, registered, one_event_too_many, sf_dir)[
         "equivalent"
     ]
+    # a variant that is the registered query itself is no experiment
+    assert ab.check_pair(spark, registered, registered, sf_dir)["same_plan"]
+
+
+def test_query_lists_of_the_tools_are_distinct_registered_keys():
+    """The plan dumper and the probe each name a query once, and only
+    registered queries: a duplicate repeats its row in PLANS.md or its
+    timing in the probe."""
+    import bench
+    from tools import dump_plans, scale_probe
+
+    keys = set(registry.spark_queries())
+    for names in (bench.HEADLINE + dump_plans.EXTRA, scale_probe.PROBE,
+                  scale_probe.FLOOR_ROWS):
+        assert len(names) == len(set(names)), [
+            n for n in set(names) if names.count(n) > 1
+        ]
+        assert set(names) <= keys, sorted(set(names) - keys)

@@ -23,7 +23,10 @@ This runner owns everything else:
 1. equivalence — every pair's sorted rows are compared exactly (float
    bits, Decimal scale and column names included) at sf0.01 before any
    timing; a mismatch aborts the run, so no variant is ever timed
-   against a query it does not reproduce;
+   against a query it does not reproduce. So does a variant whose
+   optimized plan is the registered query's: after a decision is
+   applied, the module's other form is a copy and timing it compares
+   the query with itself;
 2. timing — every form is warmed once, then timed interleaved through
    ``bench.run_spark`` at the 100x replica (tools/make_benchdata.py)
    and at sf0.1, on the engine's own session (``session.get_spark``);
@@ -38,6 +41,7 @@ from __future__ import annotations
 import importlib
 import json
 import os
+import re
 import statistics
 import sys
 
@@ -58,15 +62,27 @@ def sorted_rows(df) -> tuple[list[str], list[str]]:
     return df.columns, sorted(repr(tuple(r)) for r in df.collect())
 
 
-def check_pair(spark, registered_fn, variant, sf_dir) -> dict:
-    """Compare one pair's rows exactly at ``sf_dir``."""
+# Expression and plan ids differ between two builds of the same query.
+_PLAN_IDS = re.compile(r"#\d+|plan_id=\d+")
+
+
+def _rows_and_plan(fn, spark, sf_dir) -> tuple[tuple, str]:
     from wikipedia_data_pipeline_spark.operators import ranks
 
-    a = sorted_rows(registered_fn(spark, sf_dir))
+    df = fn(spark, sf_dir)
+    rows = sorted_rows(df)
+    plan = _PLAN_IDS.sub("", df._jdf.queryExecution().optimizedPlan().toString())
     ranks.unpersist_all()
-    b = sorted_rows(variant(spark, sf_dir))
-    ranks.unpersist_all()
-    return {"equivalent": a == b, "rows": len(a[1])}
+    return rows, plan
+
+
+def check_pair(spark, registered_fn, variant, sf_dir) -> dict:
+    """Compare one pair's rows exactly at ``sf_dir``, and their
+    optimized plans with expression and plan ids stripped."""
+    a, plan_a = _rows_and_plan(registered_fn, spark, sf_dir)
+    b, plan_b = _rows_and_plan(variant, spark, sf_dir)
+    return {"equivalent": a == b, "same_plan": plan_a == plan_b,
+            "rows": len(a[1])}
 
 
 def _spread(runs: list[float]) -> float:
@@ -109,9 +125,10 @@ def main() -> None:
         res = check_pair(spark, queries[reg], variant, CHECK_SF)
         print(f"equivalence {reg} vs {variant.__name__} at sf0.01: {res}",
               flush=True)
-        if not res["equivalent"]:
+        if not res["equivalent"] or res["same_plan"]:
             spark.stop()
-            sys.exit(f"{variant.__name__} diverges from {reg} at {CHECK_SF}")
+            why = "has the plan of" if res["same_plan"] else "diverges from"
+            sys.exit(f"{variant.__name__} {why} {reg} at {CHECK_SF}")
         pairs.append({"registered": reg, "variant": variant.__name__, **res})
 
     dir100 = ensure(SRC_SF, os.path.join(ROOT, "benchdata", "sf10r"), 100)

@@ -92,7 +92,6 @@ EXTRA = [
     "text_infer_stopwords",
     "privacy_k_anonymity",
     "text_bigram_surprisal",
-    "events_mad_outliers",
     "graph_triangle_census",
     "graph_pagerank_weighted",
     "orders_open_backlog_daily",

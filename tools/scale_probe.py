@@ -13,15 +13,22 @@ decimal-tax figure (q1 dec_sum vs BIGINT-cents) the r8 bench artifact
 clouded.
 
 The replaced or rejected formulations this probe once timed beside
-their registered queries (window baselines, ntile_by_cuts variants,
-the multipass KMV and two-pass truncation-recall forms) are decided:
-each is a ``SCALE_PROBE_r14:<name>`` row of artifacts/ab/DECISIONS.md.
+their registered queries (window baselines, boundary-selection ntile
+variants, the multipass KMV and two-pass truncation-recall forms) and
+its one-off join A/Bs (skew mitigation, bucketed layout) are decided:
+each is a ``SCALE_PROBE_rNN:<name>`` row of artifacts/ab/DECISIONS.md.
 
-DuckDB twins that exceed a per-query budget are recorded as "timeout"
-(the brute-force-oracle twins are DELIBERATELY quadratic; timing them
-measures oracle design, not engines — same exclusion rule as bench.py).
+DuckDB twins run through ``bench.run_duckdb`` (best-of-2) in a child
+process; one that exceeds the per-query budget is recorded as
+"timeout" (the brute-force-oracle twins are DELIBERATELY quadratic;
+timing them measures oracle design, not engines — same exclusion rule
+as bench.py).
 
-Usage: python tools/scale_probe.py [out_json]
+Usage: python tools/scale_probe.py OUT_JSON
+
+Results merge into OUT_JSON when it exists. SPARK_GRAFT_PROBE_ONLY=a,b
+re-probes only the named queries (and ``floor_adjusted`` when listed),
+carrying the other timings over from OUT_JSON.
 """
 
 from __future__ import annotations
@@ -30,7 +37,6 @@ import json
 import multiprocessing
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -299,16 +305,12 @@ FLOOR_ROWS = [
     "stats_cvm_2s",
 ]
 
-def _duck_worker(sql, sf_dir, q):
-    from wikipedia_data_pipeline_spark.sources.tables import duckdb_catalog
 
-    con = duckdb_catalog(sf_dir)
-    best = float("inf")
-    for _ in range(2):  # best-of-2: first run doubles as page-cache warmup
-        t0 = time.perf_counter()
-        con.execute(sql).fetchall()
-        best = min(best, time.perf_counter() - t0)
-    q.put(round(best, 2))
+def _duck_worker(sql, sf_dir, q):
+    from bench import run_duckdb
+
+    # best-of-2: the first run doubles as page-cache warmup
+    q.put(run_duckdb({"q": sql}, sf_dir, ["q"], warmups=0, iters=2)["q"])
 
 
 def duck_time(sql, sf_dir):
@@ -325,274 +327,10 @@ def duck_time(sql, sf_dir):
     return q.get() if not q.empty() else "error"
 
 
-def skew_join_ab(spark, dir100):
-    """Adversarial skew shape (r9 verdict #6): a shuffle join on a
-    deliberately Zipfian key — 90% of the 10M-row fact collapses onto
-    ONE key, the rest spread over ~1M tail keys — against a ~1M-row
-    dim NOT eligible for broadcast (autoBroadcastJoinThreshold=-1 for
-    the section, the honest stand-in for a dim too big to ship at
-    100 TB). Three variants, best-of-2 warm:
-
-      * aqe_skew_off  — plain sort-merge join, AQE skew split disabled:
-        the hot key's ~9M rows land in ONE task (the straggler bar).
-      * aqe_skew_on   — AQE skewJoin enabled (thresholds lowered to
-        engage on this replica's ~150 MB hot partition; at real 100 TB
-        scale the DEFAULT 256 MB threshold fires on its own): Spark
-        splits the skewed partition at runtime. Plan evidence captured:
-        the final adaptive plan must contain 'skew=true'.
-      * salted_32     — operators.skew.salted_join with 32 salts: the
-        engine-level mitigation for the cases AQE can't fix (both
-        sides skewed, or non-SMJ shapes).
-
-    All three must agree on (row count, exact grouped sum) — asserted,
-    not assumed. Returns the timing/evidence dict for the artifact."""
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.operators.skew import salted_join
-
-    ev = spark.read.parquet(os.path.join(dir100, "events.parquet"))
-    big = ev.select(
-        F.when(F.col("event_id") % 10 < 9, F.lit(0))
-        .otherwise(F.col("event_id"))
-        .alias("k"),
-        (F.col("value") * 100).cast("long").alias("v_c"),
-    )
-    # The dim is persisted ROUND-ROBIN on purpose: deriving it with
-    # distinct() leaves the cached relation hash-partitioned on the
-    # join key, ensureRequirements then skips the dim-side exchange,
-    # and OptimizeSkewedJoin CANNOT fire — it requires shuffle stages
-    # on BOTH sides (found the hard way in this probe's first run; a
-    # real dim loaded from storage has no such co-partitioning). That
-    # planner interaction is itself a scale lesson: a cached relation
-    # that "helpfully" satisfies the join distribution disables the
-    # runtime skew mitigation.
-    dim = (
-        big.select("k")
-        .distinct()
-        .select(F.col("k").alias("dk"), (F.pmod(F.xxhash64("k"), F.lit(97))).alias("w"))
-        .repartition(32)
-    )
-    dim.persist()
-    dim.count()
-
-    def joined(b):
-        j = b.join(dim, b["k"] == dim["dk"])
-        return j.groupBy().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("v_c") * F.col("w")).alias("s"),
-        )
-
-    def salted():
-        j = salted_join(big, dim, "k", "dk", num_salts=32)
-        return j.groupBy().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("v_c") * F.col("w")).alias("s"),
-        )
-
-    conf = spark.conf
-    saved = {
-        "spark.sql.autoBroadcastJoinThreshold": conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-        "spark.sql.adaptive.skewJoin.enabled": conf.get(
-            "spark.sql.adaptive.skewJoin.enabled"
-        ),
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": conf.get(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        ),
-    }
-    results = {}
-    checks = {}
-
-    def run(name, fn):
-        best, row = float("inf"), None
-        for _ in range(2):
-            df = fn()
-            t0 = time.perf_counter()
-            row = df.collect()[0]
-            best = min(best, time.perf_counter() - t0)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        results[name] = round(best, 2)
-        checks[name] = (row["n"], row["s"])
-        return plan
-
-    try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-        conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        run("aqe_skew_off", lambda: joined(big))
-
-        conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            str(8 * 1024 * 1024),
-        )
-        conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            str(4 * 1024 * 1024),
-        )
-        plan_on = run("aqe_skew_on", lambda: joined(big))
-        skew_engaged = "skew=true" in plan_on
-
-        conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        run("salted_32", salted)
-
-        # --- cache-suppressed rows (r11 verdict #8): the dim cached
-        # HASH-PARTITIONED ON THE JOIN KEY — ensureRequirements reuses
-        # the cache's partitioning, the dim-side shuffle stage
-        # disappears, and OptimizeSkewedJoin cannot fire even with
-        # skewJoin enabled (it requires shuffle stages on BOTH sides).
-        # This is the measured case that justifies salted_join's
-        # existence: the salt changes the join key to (k, salt), which
-        # the cache partitioning does NOT satisfy, so both sides
-        # exchange again and the hot key spreads over 32 tasks.
-        dim_cp = (
-            big.select("k")
-            .distinct()
-            .select(
-                F.col("k").alias("dk"),
-                (F.pmod(F.xxhash64("k"), F.lit(97))).alias("w"),
-            )
-        )
-        dim_cp.persist()
-        dim_cp.count()
-
-        def joined_cp():
-            j = big.join(dim_cp, big["k"] == dim_cp["dk"])
-            return j.groupBy().agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("v_c") * F.col("w")).alias("s"),
-            )
-
-        def salted_cp():
-            j = salted_join(big, dim_cp, "k", "dk", num_salts=32)
-            return j.groupBy().agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("v_c") * F.col("w")).alias("s"),
-            )
-
-        try:
-            conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-            plan_cp = run("aqe_on_cache_suppressed", joined_cp)
-            skew_engaged_cp = "skew=true" in plan_cp
-            run("salted_32_cache_suppressed", salted_cp)
-        finally:
-            dim_cp.unpersist()
-    finally:
-        for k_, v_ in saved.items():
-            conf.set(k_, v_)
-        dim.unpersist()
-
-    assert len(set(checks.values())) == 1, f"variant results differ: {checks}"
-    return {
-        "shape": (
-            "10M-row fact, 90% of rows on ONE key, ~1M tail keys; "
-            "~1M-row dim persisted round-robin (the shape where AQE "
-            "skew split CAN fire), broadcast disabled; exact "
-            "grouped-sum checksum identical across variants. The "
-            "*_cache_suppressed rows re-run the join with the dim "
-            "cached hash-partitioned ON the key — the dim-side "
-            "exchange disappears, AQE skew split cannot fire, and "
-            "salting is the only mitigation left (the decision rule "
-            "documented in operators/skew.py)"
-        ),
-        "times_sec": results,
-        "aqe_skew_split_engaged": skew_engaged,
-        "aqe_skew_split_engaged_cache_suppressed": skew_engaged_cp,
-        "checksum": list(checks.values())[0],
-    }
-
-
-def bucketed_join_ab(spark, dir100):
-    """Bucketed-layout A/B (the shuffle-free fact-fact join path the
-    100 TB design leans on): lineitem ⋈ orders on orderkey → per-
-    priority revenue rollup, timed (a) over plain parquet — both sides
-    exchange — and (b) over the same data written bucketed+sorted by
-    the join key, where the scan's reported partitioning lets the
-    planner drop BOTH exchanges (and sorts). The one-time bucketed
-    write is priced too: that is the real trade — pay the shuffle at
-    write time once instead of at every query. Plan evidence: exchange
-    counts captured from the executed plans; results checksum-asserted
-    identical."""
-    from pyspark.sql import functions as F
-
-    from wikipedia_data_pipeline_spark.sources.bucketing import (
-        drop_table,
-        write_bucketed,
-    )
-
-    li = spark.read.parquet(os.path.join(dir100, "lineitem.parquet"))
-    o = spark.read.parquet(os.path.join(dir100, "orders.parquet"))
-
-    def q(li_rel, o_rel):
-        j = li_rel.join(o_rel, li_rel["l_orderkey"] == o_rel["o_orderkey"])
-        return j.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                    * 1_000_000
-                ).cast("long")
-            ).alias("rev_u"),
-        )
-
-    def run(mk):
-        # rebuild the DataFrame per iteration: re-collecting one DF
-        # object reuses its already-materialized AQE query stages and
-        # times ~0 (bit us on this probe's first run)
-        best, rows, df = float("inf"), None, None
-        for _ in range(2):
-            df = mk()
-            t0 = time.perf_counter()
-            rows = sorted(tuple(r) for r in df.collect())
-            best = min(best, time.perf_counter() - t0)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0]
-        return round(best, 2), rows, plan.count("Exchange ")
-
-    # force the SMJ path on both variants so the A/B isolates the
-    # exchanges (orders at 100x exceeds the broadcast threshold anyway)
-    conf = spark.conf
-    saved = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plain_t, plain_rows, plain_ex = run(lambda: q(li, o))
-
-        t0 = time.perf_counter()
-        write_bucketed(li.select("l_orderkey", "l_extendedprice", "l_discount"),
-                       "wdp_probe_li_b", ["l_orderkey"], 32,
-                       sort_cols=["l_orderkey"])
-        write_bucketed(o.select("o_orderkey", "o_orderpriority"),
-                       "wdp_probe_o_b", ["o_orderkey"], 32,
-                       sort_cols=["o_orderkey"])
-        write_t = round(time.perf_counter() - t0, 2)
-
-        lib = spark.table("wdp_probe_li_b")
-        ob = spark.table("wdp_probe_o_b")
-        buck_t, buck_rows, buck_ex = run(lambda: q(lib, ob))
-    finally:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        drop_table(spark, "wdp_probe_li_b")
-        drop_table(spark, "wdp_probe_o_b")
-
-    assert plain_rows == buck_rows, "bucketed join changed the result"
-    return {
-        "shape": ("60M-row lineitem x 15M-row orders SMJ + rollup at the "
-                  "100x replica; bucketed = both sides bucketBy(32, "
-                  "orderkey) sortBy(orderkey), exchanges elided at scan"),
-        "plain_join_sec": plain_t,
-        "bucketed_join_sec": buck_t,
-        "one_time_bucketed_write_sec": write_t,
-        "exchanges_plain": plain_ex,
-        "exchanges_bucketed": buck_ex,
-    }
-
-
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "SCALE_PROBE_r09.json"
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
+    out_path = sys.argv[1]
     # restrict to a comma-separated subset (resume after an aborted run;
     # results are merged into out_path if it already exists)
     only = os.environ.get("SPARK_GRAFT_PROBE_ONLY")
@@ -655,7 +393,7 @@ def main() -> None:
             print(f"duckdb {name}: {duck_t[name]}", flush=True)
 
     # floor-adjusted ratios for the worst sub-3s rows (r12 verdict #6);
-    # resumable by name like the A/B sections
+    # resumable by name like the query rows
     floor_section = prior.get("floor_adjusted")
     if (not only) or ("floor_adjusted" in set(only.split(","))):
         floor_section = {}
@@ -692,20 +430,6 @@ def main() -> None:
             floor_section[name] = row
             print(f"floor  {name}: {row}", flush=True)
 
-    # adversarial skew-join A/B (r9 verdict #6); resumable by name
-    skew_section = prior.get("skew_join_ab")
-    if (not only) or ("skew_join_ab" in set(only.split(","))):
-        skew_section = skew_join_ab(spark, dir100)
-        print(f"skew_join_ab: {skew_section['times_sec']} "
-              f"(AQE split engaged: {skew_section['aqe_skew_split_engaged']})",
-              flush=True)
-
-    # bucketed-layout fact-fact join A/B (r10); resumable by name
-    bucket_section = prior.get("bucketed_join_ab")
-    if (not only) or ("bucketed_join_ab" in set(only.split(","))):
-        bucket_section = bucketed_join_ab(spark, dir100)
-        print(f"bucketed_join_ab: {bucket_section}", flush=True)
-
     ratios = {
         n: round(spark_t[n] / duck_t[n], 2)
         for n in duck_t
@@ -740,10 +464,6 @@ def main() -> None:
     }
     if floor_section is not None:
         out["floor_adjusted"] = floor_section
-    if skew_section is not None:
-        out["skew_join_ab"] = skew_section
-    if bucket_section is not None:
-        out["bucketed_join_ab"] = bucket_section
     out.update(steal_guard(ticks0, _cpu_ticks()))
     for k, v in prior.items():
         out.setdefault(k, v)

@@ -158,10 +158,7 @@ def quality_percentile_gate(
     percent_rank over a (lang)-partitioned window — every language
     ranks in parallel, and the rank arithmetic is integer-derived, so
     the cut is bit-deterministic. At 100 TB a single giant language
-    would make its window partition hot; the scale variant computes the
-    per-lang ttr threshold with approx_percentile (one aggregation,
-    broadcast back) and filters — same selection within the sketch's
-    rank error, no per-group sort.
+    would make its window partition hot.
     """
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)) / F.size(toks)
@@ -172,30 +169,6 @@ def quality_percentile_gate(
         documents.select("doc_id", "lang", ttr.alias("ttr"))
         .withColumn("pctl", F.percent_rank().over(w))
         .filter(F.col("pctl") >= drop_below)
-    )
-
-
-def quality_threshold_gate(
-    documents: DataFrame, drop_below: float = 0.1
-) -> DataFrame:
-    """Scale variant of ``quality_percentile_gate``: instead of ranking
-    inside each language (hot-language window partitions), compute each
-    language's ttr cut-point once with approx_percentile (t-digest
-    sketch, mergeable → one aggregation pass), broadcast the tiny
-    per-lang threshold table back, and filter. Selection agrees with the
-    exact gate within the sketch's rank error; at 100 TB this is the
-    form that runs, because no task ever sorts a whole language."""
-    toks = F.split(F.col("text"), " ")
-    scored = documents.select(
-        "doc_id", "lang", (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr")
-    )
-    cuts = scored.groupBy("lang").agg(
-        F.percentile_approx("ttr", drop_below, 10000).alias("ttr_cut")
-    )
-    return (
-        scored.join(F.broadcast(cuts), "lang")
-        .filter(F.col("ttr") >= F.col("ttr_cut"))
-        .select("doc_id", "lang", "ttr")
     )
 
 

@@ -12,13 +12,12 @@ Decode depth, by format:
   arithmetically.
 * **Header-level**: PNG/GIF/JPEG container headers
   (``parse_image_header``).
-* **Stub / gated**: ``decode_image_meta`` (deterministic fake dims —
-  kept as the plumbing-shape demo) and ``decode_image_real``
-  (Pillow-gated breadth path: JPEG pixels, interlacing, 16-bit). The
-  container ships no codec libs, so compressed image/audio codecs stay
-  declared out; swapping in PIL/libvips changes only inner function
-  bodies — the binary schema, Arrow batch shape, and mapInPandas
-  iterator contract are identical.
+* **Stub**: ``decode_image_meta`` (deterministic fake dims — kept as
+  the plumbing-shape demo). Compressed image/audio codecs (JPEG
+  pixels, interlacing, 16-bit) are out of scope: they need codec
+  libraries, and swapping in PIL/libvips would change only inner
+  function bodies — the binary schema, Arrow batch shape, and
+  mapInPandas iterator contract are identical.
 
 Scale notes: binary payloads ride in the same parquet row groups;
 mapInPandas streams Arrow batches so peak memory is one batch per task,
@@ -215,51 +214,6 @@ def decode_image_headers(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(decode, schema=IMAGE_HEADER_SCHEMA)
-
-
-PIL_IMAGE_SCHEMA = (
-    "doc_id bigint, n_bytes bigint, format string, mode string, "
-    "width bigint, height bigint"
-)
-
-
-def decode_image_real(media: DataFrame) -> DataFrame:
-    """Full pixel-capable decoder via Pillow when present (optional
-    dependency — VERDICT.md round-1 item 9). Raises NotImplementedError
-    if no codec is installed; ``decode_image_headers`` is the
-    dependency-free metadata path and ``decode_image_meta`` the
-    deterministic plumbing stub."""
-    try:
-        import PIL  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image decoding requires an image codec (e.g. Pillow); "
-            "not available in this environment — use decode_image_headers "
-            "(header-level, dependency-free) or decode_image_meta (stub)"
-        ) from exc
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        from PIL import Image
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    with Image.open(io.BytesIO(payload)) as img:
-                        rows.append(
-                            (doc_id, len(payload), (img.format or "").lower(),
-                             img.mode, img.width, img.height)
-                        )
-                except Exception:
-                    rows.append((doc_id, len(payload or b""), None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_bytes", "format", "mode", "width", "height"],
-            )
-
-    return media.mapInPandas(decode, schema=PIL_IMAGE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

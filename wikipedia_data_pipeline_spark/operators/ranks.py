@@ -38,13 +38,12 @@ feeds the blocks-relation window ABOVE a per-block aggregate.
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
     "ordered_scan",
     "global_ntile",
-    "ntile_by_cuts",
     "exact_quantiles",
     "grouped_exact_quantiles",
     "pin",
@@ -588,126 +587,4 @@ def grouped_exact_quantiles(
     ).select(
         *[F.col(c) for c in df.columns],
         F.col("_gq_tag").alias(tag_col),
-    )
-
-
-def ntile_by_cuts(
-    df: DataFrame,
-    order_spec,
-    n: int,
-    out_col: str,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """``ntile(n) OVER (ORDER BY ...)`` via boundary SELECTION instead
-    of ranking every row: pick the n-1 tile-boundary rows with
-    ``exact_quantiles`` (per-block counts + a local sort of only the
-    boundary blocks), fold them into ONE broadcast row, and assign each
-    row's bucket as ``1 + #(boundaries strictly before it)`` in a pure
-    map pass — no per-row window, no rank join.
-
-    Identical to SQL ntile under a TOTAL order: tile i ends at global
-    rank i*q + min(i, r) (q = N div n, r = N mod n); a row is in tile i
-    iff exactly i-1 boundary rows precede it, and "precedes" is the
-    same lexicographic order the ranks were computed under, so the two
-    definitions coincide row-for-row (asserted against the built-in in
-    tests/test_ranks.py::test_ntile_by_cuts_matches_builtin, which
-    parametrizes n above and below N).
-
-    When N < n the boundary ranks i*q + min(i, r) collapse to
-    min(i, N), duplicating rank N for every i >= N; duplicates are
-    dropped before selection — a cut AT rank N is the last row, which
-    strictly precedes nothing, so each distinct boundary is needed at
-    most once and the duplicates contribute zero to every bucket count.
-
-    Parameters
-    ----------
-    order_spec : list of ``name`` (asc) or ``(name, "asc"|"desc")``
-        defining a total order over NON-NULL keys. Explicit tuples, not
-        ``F.desc(...)`` columns, because the lexicographic comparator
-        below needs each key's direction, which a resolved sort Column
-        no longer exposes.
-    n : tile count, capped at 4096 — the boundary tuples ride in one
-        collect_list row (same bounded-fold discipline as
-        FOLD_MAX_CENTROIDS in operators.similarity).
-
-    Cost vs ``global_ntile`` on the same input: drops the per-block
-    window sort and the blocks-relation broadcast join back over every
-    row, keeping one slim range exchange (sort keys only) plus a
-    map-side comparison against n-1 literals. The input is scanned
-    twice (count + final map) — persist it at the call site when it is
-    itself expensive to produce, as customer_rfm_segments does.
-    """
-    from functools import reduce
-    from operator import and_, or_
-
-    if n > 4096:
-        raise ValueError(
-            f"ntile_by_cuts folds n-1 boundary rows into one broadcast "
-            f"row; n={n} exceeds the 4096 cap — use global_ntile"
-        )
-    spec = [
-        (s, "asc") if isinstance(s, str) else (s[0], s[1])
-        for s in order_spec
-    ]
-    for _name, d in spec:
-        if d not in ("asc", "desc"):
-            raise ValueError(f"bad direction {d!r}")
-    names = [s[0] for s in spec]
-    order_cols = [
-        F.asc(c) if d == "asc" else F.desc(c) for c, d in spec
-    ]
-    spark = df.sparkSession
-
-    # boundary ranks: end of tile i (i = 1..n-1) = i*q + min(i, r).
-    # Integer-exact at any N via the same DECIMAL(38,0) idiv discipline
-    # as global_ntile.
-    nrow = df.agg(F.count(F.lit(1)).alias("_N"))
-    big_n = F.col("_N")
-    q = ((big_n - big_n % n).cast("decimal(38,0)") / n).cast("long")
-    ks = (
-        spark.range(1, n)
-        .select(F.col("id").alias("_i"))
-        .crossJoin(F.broadcast(nrow))
-        .select(
-            "_i",
-            (F.col("_i") * q + F.least(F.col("_i"), big_n % n)).alias(
-                "k"
-            ),
-        )
-        .filter(F.col("k") >= 1)  # N = 0: no boundaries, 1 bucket
-        .select("k")
-        .distinct()  # N < n duplicates rank N — see docstring
-    )
-
-    # the n-1 boundary key tuples, folded into one broadcast row
-    cut_struct = F.struct(
-        *[F.col(c).alias(f"c{j}") for j, c in enumerate(names)]
-    )
-    cuts_one = (
-        exact_quantiles(
-            df.select(*names), order_cols, ks, num_partitions
-        )
-        .select(cut_struct.alias("_cut"))
-        .agg(F.collect_list("_cut").alias("_cuts"))
-    )
-
-    def _before(cut):
-        # cut strictly precedes the current row in the total order —
-        # lexicographic with per-key direction; keys must be non-null
-        conds, eqs = [], []
-        for j, (name, d) in enumerate(spec):
-            cj, rj = cut[f"c{j}"], F.col(name)
-            lt = (cj > rj) if d == "desc" else (cj < rj)
-            conds.append(reduce(and_, eqs + [lt]))
-            eqs.append(cj == rj)
-        return reduce(or_, conds)
-
-    bucket = F.lit(1) + F.aggregate(
-        F.col("_cuts"),
-        F.lit(0),
-        lambda acc, c: acc + F.when(_before(c), 1).otherwise(0),
-    )
-    return df.crossJoin(F.broadcast(cuts_one)).select(
-        *[F.col(c) for c in df.columns],
-        bucket.cast("long").alias(out_col),
     )

@@ -13,9 +13,9 @@ S copies of small_side — choose S ≈ (hot-key rows / rows-per-task);
 16-64 covers most real skew. Salting is wasted work when no key is hot,
 so it's an explicit operator here, not a default.
 
-DECISION RULE (measured, SCALE_PROBE r10/r11 skew_join_ab — 10M-row
-fact with 90% of rows on one key joining a ~1M-row non-broadcastable
-dim):
+DECISION RULE (measured, SCALE_PROBE_r10:skew_join_ab and
+SCALE_PROBE_r11:skew_join_ab — 10M-row fact with 90% of rows on one
+key joining a ~1M-row non-broadcastable dim):
 
 1. DEFAULT: leave AQE skew-join enabled and do nothing. When both join
    inputs arrive through shuffle stages, the runtime split wins —

@@ -1,11 +1,11 @@
-"""User-extensibility surface (SURVEY.md §2.9): scalar Python UDF,
-vectorized pandas UDF, and grouped-map applyInPandas.
+"""User-extensibility surface (SURVEY.md §2.9): vectorized pandas UDF,
+Arrow-optimized Python UDF, grouped-map applyInPandas and a Python UDTF.
 
 The reference has no user extension points; its per-document unit
 (DocInfo.run) is behaviorally a grouped-map UDF, reproduced here as
 ``doc_top_word`` via applyInPandas. Rule of thumb encoded in these
 implementations: built-ins > pandas UDF (Arrow-batched) > row-at-a-time
-UDF (kept only as a documented slow-path example — ~10-100× slower).
+Python (~10-100× slower; no registered query uses a pickled scalar UDF).
 """
 
 from __future__ import annotations
@@ -17,13 +17,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType
 
 
-@F.udf(returnType=LongType())
-def py_token_count(text: str) -> int:
-    """Row-at-a-time Python UDF — the SLOW path; exists to demonstrate
-    the API. Per-row Python round-trip; never use in hot paths."""
-    return len(text.split(" ")) if text is not None else 0
-
-
 @F.pandas_udf(LongType())
 def pd_token_count(text: pd.Series) -> pd.Series:
     """Vectorized pandas UDF (Arrow batches): whitespace token count."""
@@ -33,12 +26,6 @@ def pd_token_count(text: pd.Series) -> pd.Series:
 def token_counts_pandas(documents: DataFrame) -> DataFrame:
     return documents.select(
         "doc_id", pd_token_count(F.col("text")).alias("ws_tokens")
-    )
-
-
-def token_counts_python_udf(documents: DataFrame) -> DataFrame:
-    return documents.select(
-        "doc_id", py_token_count(F.col("text")).alias("ws_tokens")
     )
 
 

@@ -165,7 +165,7 @@ def q18_large_orders(spark, sf_dir):
 @register("q18_bucketed_colocated", oracle=_Q18_ORACLE, eager=True)
 def q18_bucketed_colocated(spark, sf_dir):
     """Q18 over the BUCKETED twin layout — the registered consumer of
-    the measured 3x layout win (SCALE_PROBE_r10.bucketed_join_ab:
+    the measured 3x layout win (SCALE_PROBE_r10:bucketed_join_ab:
     9.97 s -> 3.06 s, exchanges 3 -> 1 at the 100x replica). lineitem
     and orders are read from full-schema twins bucketed+sorted by
     orderkey (sources/maintenance.ensure_bucketed_twins — the one-time
@@ -207,8 +207,8 @@ def q3_bucketed_colocated(spark, sf_dir):
 
     eager=True: construction triggers the lazy first-time twin write
     (q18_bucketed_colocated note); at 100 TB the write is a scheduled
-    maintenance job, priced separately in SCALE_PROBE's
-    bucketed_join_ab row."""
+    maintenance job, priced separately in the
+    SCALE_PROBE_r10:bucketed_join_ab row."""
     from wikipedia_data_pipeline_spark.sources.maintenance import (
         ensure_bucketed_twins,
     )

@@ -173,7 +173,7 @@ def multimodal_png_pixel_stats(spark, sf_dir):
     arithmetically — the hash matches only if the full compress →
     chunk → parse → inflate → defilter round trip is bit-exact. This
     retires the 'decode step is stubbed' gap for PNG; JPEG/audio/video
-    remain header-level + Pillow-gated as declared."""
+    remain header-level."""
     docs = load_table(spark, sf_dir, "documents")
     return MM.decode_png_pixel_stats(MM.synth_png_corpus(docs))
 

@@ -97,7 +97,7 @@ def ensure_bucketed_twins(
     tables: tuple[str, ...] = ("lineitem", "orders"),
 ) -> dict[str, str]:
     """Maintenance path for the measured 3x bucketed-join win
-    (SCALE_PROBE_r10.bucketed_join_ab: 9.97 s -> 3.06 s, exchanges
+    (SCALE_PROBE_r10:bucketed_join_ab: 9.97 s -> 3.06 s, exchanges
     3 -> 1 on the 60M-row lineitem x orders SMJ): write each fact
     table ONCE as a full-schema parquet table bucketed (``TWIN_BUCKETS``
     buckets) and sorted by its join key, then every orderkey-keyed

@@ -532,90 +532,6 @@ def run_foreach_batch_compaction(
     return out
 
 
-def tws_available() -> bool:
-    """transformWithState's Python state protocol speaks protobuf; the
-    sandbox image ships no google.protobuf, so the v2 stateful API is
-    declared-but-gated here (same policy as the Pillow image decoder):
-    the operator below is the real implementation and activates
-    wherever protobuf exists."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _tws_processor():
-    """StatefulProcessor (transformWithState, the Spark 4 arbitrary-state
-    API superseding applyInPandasWithState): per-user running count and
-    EXACT value total. The total is carried as integer cents (input
-    values are 2-decimal), so state merge order cannot perturb low
-    bits; the serve-time cents/100 division is one exact IEEE op."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n BIGINT, cents BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):
-            cur = self._state.get()
-            n, cents = (cur[0], cur[1]) if cur is not None else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(
-                    pdf["value"].mul(100).round().astype("int64").sum()
-                )
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [cents / 100.0],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return UserTotals()
-
-
-def run_tws_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transformWithStateInPandas over the event stream — the v2
-    stateful API (explicit named state variables on a handle, timers,
-    TTL) exercised with a ValueState running aggregate. Requires the
-    RocksDB state store provider and google.protobuf (see
-    tws_available)."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithState needs google.protobuf, which this "
-            "environment does not provide"
-        )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    events = read_events_stream(spark, sf_dir)
-    result = events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_tws_processor(),
-        outputStructType="user_id BIGINT, n_events BIGINT, total_value DOUBLE",
-        outputMode="Update",
-        timeMode="None",
-    )
-    _run_to_memory(
-        result,
-        "wdp_stream_tws_totals",
-        "update",
-        partitions=_input_sized_partitions(spark, sf_dir),
-    )
-    return spark.table("wdp_stream_tws_totals")
-
-
 def versioned_sink(store_dir: str, merge_fn):
     """Generalized exactly-once foreachBatch sink: ``merge_fn(prev, batch)``
     produces the next immutable version from the previous committed
